@@ -10,7 +10,9 @@ transformation:
 
 - lookup   = TTL-filtered broadcast semi/inner join on the key
 - upsert   = unionByName + keep-latest window dedup + atomic bucket swap
-- cleanup  = liveness filter rewrite (delete-pred as anti-filter)
+- cleanup  = per-bucket census (rows, expired rows) in one aggregate,
+             then a liveness-filter rewrite of only the buckets that
+             hold expired rows
 - stats    = conditional aggregates
 - nearby   = bounded-radius θ-join (operators.joins.nearby_join)
 
@@ -29,20 +31,24 @@ removed by the next commit's vacuum) and the table stays authoritative
 at the previous manifest — readers never observe a partial commit.
 
 Scale posture: the key space is bucketed by a 2-hex-char prefix (256
-buckets) so point lookups read exactly one bucket directory and upserts
-rewrite only touched buckets — cost follows the WRITE SET, not the
-table size (the parquet analog of the reference's B-tree index on
-query_hash, cache_manager.py:51-53).
+buckets) so point lookups read exactly one bucket directory, upserts
+rewrite only touched buckets and cleanup rewrites only buckets holding
+expired rows — cost follows the WRITE SET, not the table size (the
+parquet analog of the reference's B-tree index on query_hash,
+cache_manager.py:51-53). Cleanup hard-links the untouched buckets'
+files into its new version directory (no byte rewritten), so the
+version directories that puts accumulate collapse back into one.
 
 Deployment contract: `path` must be a LOCAL filesystem path — the
-manifest flip (os.replace) and vacuum (os.listdir/shutil.rmtree) are
-local-FS operations. On an object store or HDFS, use a real table
-format with a commit log (Delta/Iceberg) instead; this class is the
-single-node/NFS twin of that design.
+manifest flip (os.replace), vacuum (os.listdir/shutil.rmtree) and
+cleanup's relink (os.link) are local-FS operations. On an object store
+or HDFS, use a real table format with a commit log (Delta/Iceberg)
+instead; this class is the single-node/NFS twin of that design.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
@@ -50,6 +56,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ocean_data_pipeline_spark.operators.merge import merge_keep_latest
 
@@ -76,7 +84,10 @@ class ResultCache:
     ttl_hours: int = DEFAULT_TTL_HOURS
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], CACHE_SCHEMA)
+        """Zero-row cache frame built from an empty Arrow table: a local
+        relation, so a miss scans no Python RDD (no Python workers)."""
+        schema = to_arrow_schema(StructType.fromDDL(CACHE_SCHEMA))
+        return self.spark.createDataFrame(schema.empty_table())
 
     # -- manifest (the commit log) -------------------------------------
 
@@ -215,65 +226,105 @@ class ResultCache:
         (operators.merge.merge_keep_latest). Oversized payloads are
         admission-rejected (cache_manager.py:148-150).
 
+        The input is read ONCE: the admitted rows are persisted for the
+        commit (the bucket probe fills the cache, the merge write reads
+        it) and released on the way out, so a caller's Python-backed
+        frame or a streaming micro-batch is not recomputed per job.
+
         Commit protocol: merge the touched buckets' current data with
         the incoming rows, write the result ONCE into a fresh version
         directory, flip the manifest atomically, vacuum superseded
         dirs. Untouched buckets are never read or rewritten; a crash at
         any point leaves the previous manifest authoritative."""
-        admitted = entries.filter(F.col("file_size_bytes") <= MAX_ENTRY_BYTES)
-        buckets = [
-            r["key_bucket"]
-            for r in admitted.select(
-                F.substring("query_hash", 1, 2).alias("key_bucket")
-            ).distinct().collect()
-        ]
-        if not buckets:
-            return
-        manifest = self._read_manifest()
-        existing = self._read_buckets(manifest, buckets)
-        deduped = merge_keep_latest(existing, admitted, ["query_hash"], "fetched_at")
-        out = deduped.withColumn("key_bucket", F.substring("query_hash", 1, 2))
-        version = self._next_version()
-        out.write.mode("overwrite").partitionBy("key_bucket").parquet(
-            os.path.join(self.path, version)
-        )
-        new_manifest = {**manifest, **{b: version for b in buckets}}
-        self._write_manifest(new_manifest)
-        self._vacuum(new_manifest)
+        admitted = entries.filter(F.col("file_size_bytes") <= MAX_ENTRY_BYTES).persist()
+        try:
+            buckets = [
+                r["key_bucket"]
+                for r in admitted.select(
+                    F.substring("query_hash", 1, 2).alias("key_bucket")
+                ).distinct().collect()
+            ]
+            if not buckets:
+                return
+            manifest = self._read_manifest()
+            existing = self._read_buckets(manifest, buckets)
+            deduped = merge_keep_latest(existing, admitted, ["query_hash"], "fetched_at")
+            version = self._next_version()
+            self._write(deduped, version)
+        finally:
+            admitted.unpersist()
+        self._commit({**manifest, **{b: version for b in buckets}})
+
+    def _write(self, rows: DataFrame, version: str) -> None:
+        """Write rows, partitioned by key bucket, into a fresh version
+        directory. Nothing references it until a manifest flip does."""
+        rows.withColumn("key_bucket", F.substring("query_hash", 1, 2)).write.mode(
+            "overwrite"
+        ).partitionBy("key_bucket").parquet(os.path.join(self.path, version))
+
+    def _link(self, manifest: dict[str, str], buckets, version: str) -> None:
+        """Hard-link the buckets' current files into `version`: same
+        inodes, no data rewritten. The old names stay until the vacuum,
+        so a crash before the flip leaves the table intact."""
+        for b in buckets:
+            src = os.path.join(self.path, manifest[b], f"key_bucket={b}")
+            dst = os.path.join(self.path, version, f"key_bucket={b}")
+            os.makedirs(dst)
+            for name in os.listdir(src):
+                os.link(os.path.join(src, name), os.path.join(dst, name))
+
+    def _commit(self, manifest: dict[str, str]) -> None:
+        self._write_manifest(manifest)
+        self._vacuum(manifest)
 
     # -- maintenance ---------------------------------------------------
 
     def cleanup(self, now: F.Column | None = None) -> int:
         """Drop expired rows; returns number removed
-        (cache_manager.py:179-196). Rewrite-as-filter, no row deletes;
-        same commit protocol as put (write survivors once, flip)."""
-        now = F.current_timestamp() if now is None else now
+        (cache_manager.py:179-196).
+
+        One census aggregate counts rows and expired rows per bucket. A
+        row is expired unless `expires_at > now` holds, so a NULL
+        expires_at counts as expired. Only buckets holding expired rows
+        are rewritten: their survivors are written once into a fresh
+        version, a bucket with no survivors leaves the manifest, and the
+        other buckets are hard-linked into the same version, so the
+        table ends in one version directory. Then the same manifest flip
+        and vacuum as put. `now` defaults to the wall clock, pinned once
+        so the census and the rewrite agree."""
+        if now is None:
+            now = F.lit(dt.datetime.now(dt.timezone.utc))
         manifest = self._read_manifest()
         if not manifest:
             return 0
-        df = self._read_buckets(manifest, manifest.keys())
-        before = df.count()
-        kept = df.filter(F.col("expires_at") > now).withColumn(
-            "key_bucket", F.substring("query_hash", 1, 2)
+        live = F.coalesce(F.col("expires_at") > now, F.lit(False))
+        census = (
+            self._read_buckets(manifest, manifest.keys())
+            .groupBy(F.substring("query_hash", 1, 2).alias("b"))
+            .agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.count(F.when(~live, F.lit(1))).alias("expired"),
+            )
+            .filter(F.col("expired") > 0)
+            .collect()
         )
+        if not census and len(set(manifest.values())) == 1:
+            return 0
+        dirty = {r["b"] for r in census}
+        survivors = [r["b"] for r in census if r["rows"] > r["expired"]]
+        clean = [b for b in manifest if b not in dirty]
         version = self._next_version()
-        kept.write.mode("overwrite").partitionBy("key_bucket").parquet(
-            os.path.join(self.path, version)
-        )
-        kept_buckets = [
-            r["key_bucket"] for r in kept.select("key_bucket").distinct().collect()
-        ]
-        new_manifest = {b: version for b in kept_buckets}
-        self._write_manifest(new_manifest)
-        self._vacuum(new_manifest)
-        return before - self.read().count()
+        if survivors:
+            self._write(self._read_buckets(manifest, survivors).filter(live), version)
+        self._link(manifest, clean, version)
+        self._commit({b: version for b in survivors + clean})
+        return sum(r["expired"] for r in census)
 
     def clear(self) -> None:
         """Full clear (cache_manager.py:283-293): empty manifest flip,
         vacuum reclaims every version directory."""
         os.makedirs(self.path, exist_ok=True)
-        self._write_manifest({})
-        self._vacuum({})
+        self._commit({})
 
     def stats(self, now: F.Column | None = None) -> DataFrame:
         """Cache stats: total/active/expired counts, bytes, age extremes

@@ -211,10 +211,12 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort — Catalyst plans ONE exchange + one sort, reused by both."""
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
+    # Microsecond gap: a whole-second cast would fold a 30 min + 0.5 s
+    # gap into one session where the oracle's interval compare splits it.
+    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
     flagged = ev.withColumn(
         "new_session",
-        F.when(gap.isNull() | (gap > 30 * 60), F.lit(1)).otherwise(F.lit(0)),
+        F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), F.lit(1)).otherwise(F.lit(0)),
     )
     sessions = flagged.withColumn(
         "session_seq",

@@ -15,7 +15,9 @@ indices (`var[t0:t1][d][y][x]`). The connector:
 - parses the returned units-row CSV through the same cleaning pass as
   the file source.
 
-Driver-side fetch feeding `spark.createDataFrame` is the right shape
+Driver-side fetch whose response becomes a DataFrame through Arrow (an
+all-string Arrow table, which Spark turns into a local relation: no
+Python RDD, so no Python workers start to scan it) is the right shape
 here: one query returns ≤72 rows (a monthly series at one grid point,
 reference config.py:188-190) — the parallelism belongs to the many-
 query layer (one fetch per grid point, distributed via the cache
@@ -32,6 +34,7 @@ import time
 import urllib.request
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ocean_data_pipeline_spark.functions import grid as g
@@ -177,9 +180,13 @@ class ErddapSource:
         url = build_hyperslab_url(self.ds, lat, lon, start_date, end_date, variables)
         text = self._fetch_text(url)
         lines = [ln for ln in text.splitlines() if ln.strip()]
+        header = lines[0].split(",")
+        cells = [ln.split(",") for ln in lines[1:]]
         raw = self.spark.createDataFrame(
-            [tuple(ln.split(",")) for ln in lines[1:]],
-            schema=lines[0].split(","),
+            pa.table(
+                [pa.array([r[i] for r in cells], pa.string()) for i in range(len(header))],
+                names=header,
+            )
         )
         cleaned = clean_raw(raw)
         y, x = lat_index(lat, self.ds.grid), lon_index(lon, self.ds.grid)

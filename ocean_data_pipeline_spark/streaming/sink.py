@@ -24,8 +24,7 @@ def cache_upsert_writer(cache: ResultCache):
     """foreachBatch function: upsert each micro-batch into the cache."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            cache.put(batch_df)
+        cache.put(batch_df)  # an empty batch is a no-op inside put
 
     return write_batch
 

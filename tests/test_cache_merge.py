@@ -45,10 +45,12 @@ def test_merge_delete_tombstones(spark):
     assert got == ["a", "c"]
 
 
-def _entry(h: str, fetched: str):
+def _entry(
+    h: str, fetched: str = "2024-01-01 00:00:00", expires: str | None = "2100-01-01 00:00:00"
+):
     return (
         h, 30.0, -80.0, "1955-01-01", "1955-12-31", '["temperature"]',
-        "[]", 0, fetched, "2100-01-01 00:00:00", 10,
+        "[]", 0, fetched, expires, 10,
     )
 
 
@@ -151,3 +153,113 @@ def test_cleanup_and_clear_reclaim_space(spark, tmp_path):
     cache.clear()
     assert not glob.glob(os.path.join(cache.path, "v_*"))
     assert cache.read().count() == 0
+
+
+def _now_2050():
+    return F.lit("2050-01-01").cast("timestamp")
+
+
+def _file_ids(cache, bucket):
+    """basename -> (inode, mtime): equal before and after means the
+    bucket's bytes were not rewritten, wherever its directory lives."""
+    return {
+        os.path.basename(f): (os.stat(f).st_ino, os.stat(f).st_mtime_ns)
+        for f in _bucket_files(cache, bucket)
+    }
+
+
+def test_cleanup_rewrites_only_expired_buckets(spark, tmp_path):
+    """Cleanup cost follows the expired set: a bucket with no expired
+    rows keeps its files (same inodes, same mtimes), the partly expired
+    bucket keeps its survivor, and the table ends in one version."""
+    cache = ResultCache(spark, str(tmp_path / "cache"))
+    cache.put(_entries_df(spark, [_entry("aa" + "0" * 14, expires="2100-01-01 00:00:00")]))
+    cache.put(_entries_df(spark, [
+        _entry("bb" + "0" * 14, expires="2000-01-01 00:00:00"),
+        _entry("bb" + "1" * 14, expires="2100-01-01 00:00:00"),
+    ]))
+    aa_files = _file_ids(cache, "aa")
+    assert aa_files and len(glob.glob(os.path.join(cache.path, "v_*"))) == 2
+
+    assert cache.cleanup(now=_now_2050()) == 1
+    assert _file_ids(cache, "aa") == aa_files
+    assert len(glob.glob(os.path.join(cache.path, "v_*"))) == 1
+    assert {r["query_hash"] for r in cache.read().collect()} == {
+        "aa" + "0" * 14, "bb" + "1" * 14,
+    }
+
+
+def test_cleanup_drops_fully_expired_bucket(spark, tmp_path):
+    cache = ResultCache(spark, str(tmp_path / "cache"))
+    cache.put(_entries_df(spark, [
+        _entry("aa" + "0" * 14, expires="2100-01-01 00:00:00"),
+        _entry("bb" + "0" * 14, expires="2000-01-01 00:00:00"),
+    ]))
+    assert cache.cleanup(now=_now_2050()) == 1
+    assert set(cache._read_manifest()) == {"aa"}
+    assert not glob.glob(os.path.join(cache.path, "v_*", "key_bucket=bb"))
+    # nothing left to expire: no commit, no new version directory
+    versions = sorted(glob.glob(os.path.join(cache.path, "v_*")))
+    assert cache.cleanup(now=_now_2050()) == 0
+    assert sorted(glob.glob(os.path.join(cache.path, "v_*"))) == versions
+
+
+def test_cleanup_counts_null_expiry_as_expired(spark, tmp_path):
+    """`expires_at > now` is not true for a NULL expiry, so the row is
+    dropped, and the returned count includes it."""
+    cache = ResultCache(spark, str(tmp_path / "cache"))
+    cache.put(_entries_df(spark, [
+        _entry("aa" + "0" * 14, expires=None),
+        _entry("aa" + "1" * 14, expires="2100-01-01 00:00:00"),
+        _entry("cc" + "0" * 14, expires=None),
+    ]))
+    assert cache.cleanup(now=_now_2050()) == 2
+    assert [r["query_hash"] for r in cache.read().collect()] == ["aa" + "1" * 14]
+    assert set(cache._read_manifest()) == {"aa"}
+
+
+def test_cleanup_returns_rows_removed(spark, tmp_path):
+    cache = ResultCache(spark, str(tmp_path / "cache"))
+    rows = [
+        _entry(f"{b}{i:014d}", expires=exp)
+        for b in ("aa", "bb", "cc", "dd")
+        for i, exp in enumerate(["2000-01-01 00:00:00", "2100-01-01 00:00:00", None])
+    ]
+    cache.put(_entries_df(spark, rows))
+    before = cache.read().count()
+    removed = cache.cleanup(now=_now_2050())
+    assert removed == before - cache.read().count() == 8
+
+
+def test_put_leaves_no_persistent_rdds(spark, tmp_path):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    cache = ResultCache(spark, str(tmp_path / "cache"))
+    cache.put(_entries_df(spark, [_entry("aa" + "0" * 14, "2024-01-01 00:00:00")]))
+    cache.put(spark.createDataFrame([], CACHE_SCHEMA))  # the early-return path
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+def test_put_scans_its_input_once(spark, tmp_path):
+    """The bucket probe and the merge write share one evaluation of the
+    caller's frame: a counting UDF over the entries sees each row once."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(h):
+        seen.add(1)
+        return h
+
+    counted = F.udf(count, "string")
+    rows = [_entry(f"{b}" + "0" * 14, "2024-01-01 00:00:00") for b in ("aa", "bb", "cc")]
+    entries = _entries_df(spark, rows).withColumn("query_hash", counted("query_hash"))
+    cache = ResultCache(spark, str(tmp_path / "cache"))
+    cache.put(entries)
+    assert seen.value == len(rows)
+    assert cache.read().count() == len(rows)
+
+
+def test_empty_frame_has_no_python_rdd(spark, tmp_path):
+    empty = ResultCache(spark, str(tmp_path / "cache"))._empty()
+    assert empty.schema == spark.createDataFrame([], CACHE_SCHEMA).schema
+    assert "PythonRDD" not in empty._jdf.queryExecution().toRdd().toDebugString()
+    assert empty.count() == 0

@@ -5,6 +5,7 @@ index pushdown math, rate limiting, retry, file:// fetch end-to-end.
 
 from __future__ import annotations
 
+import datetime as dt
 import time
 
 import pytest
@@ -135,3 +136,44 @@ def test_fetch_many_failed_request_yields_null_row(spark, served_csv):
     ).collect()
     assert len(rows) == 1  # dead point survives as a NULL-data row
     assert rows[0]["req_lat"] == 32.5 and rows[0]["time"] is None
+
+
+def _serve(spark, tmp_path, body: str) -> ErddapSource:
+    root = tmp_path / "griddap"
+    root.mkdir()
+    (root / "test_ds.csv").write_text(body)
+    ds = ErddapDataset(base_url=f"file://{tmp_path}", dataset_id="test_ds")
+    return ErddapSource(spark, ds, FetchPolicy(min_interval_s=0.0))
+
+
+FETCH_SCHEMA = (
+    "struct<time:timestamp,depth:double,latitude:double,longitude:double,"
+    "temperature:double,salinity:double>"
+)
+HEADER = "time,depth,latitude,longitude,Temperature,Salinity\n"
+UNITS = "UTC,m,degrees_north,degrees_east,degree_C,PSU\n"
+
+
+def test_fetch_blank_measure_cells(spark, tmp_path):
+    """Blank cells coerce to NULL; a row with every measure blank is
+    dropped; the frame is built without a Python RDD."""
+    src = _serve(spark, tmp_path, HEADER + UNITS + (
+        "1955-01-16T00:00:00Z,0.0,32.5,-70.0,19.5,\n"
+        "1955-02-16T00:00:00Z,0.0,32.5,-70.0,,36.2\n"
+        "1955-03-16T00:00:00Z,0.0,32.5,-70.0,,\n"
+    ))
+    df, _meta = src.fetch(32.5, -70.0, "1955-01-01", "1955-12-31")
+    assert df.schema.simpleString() == FETCH_SCHEMA
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    got = [tuple(r) for r in df.collect()]
+    assert got == [
+        (dt.datetime(1955, 1, 16), 0.0, 32.5, -70.0, 19.5, None),
+        (dt.datetime(1955, 2, 16), 0.0, 32.5, -70.0, None, 36.2),
+    ]
+
+
+def test_fetch_header_and_units_only(spark, tmp_path):
+    src = _serve(spark, tmp_path, HEADER + UNITS)
+    df, _meta = src.fetch(32.5, -70.0, "1955-01-01", "1955-12-31")
+    assert df.schema.simpleString() == FETCH_SCHEMA
+    assert df.collect() == []
