@@ -432,45 +432,19 @@ def main() -> None:
     samples: dict[str, list[float]] = {name: [] for name in names}
     import gc
 
-    def _hygiene() -> None:
-        # Session hygiene between measurement blocks. Measured round 9:
-        # GC alone does NOT reclaim leftover localCheckpoint blocks in
-        # time (the ContextCleaner is async — LP stayed 53-61 s after
-        # gc.collect + System.gc), but a SYNCHRONOUS unpersist of every
-        # persistent RDD recovers most of the inflation (60.7 -> 43.7 s
-        # vs ~35 s isolated-warm; the residue is session aging that no
-        # cleanup reverses, documented in ROUND_NOTES). Unpersist is
-        # safe here: every query builds its own plan from the parquet
-        # scans, so no cross-query state is shared.
-        try:
-            jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-            it = jmap.iterator()
-            while it.hasNext():
-                it.next()._2().unpersist(True)
-        except Exception as e:
-            # If the py4j Scala-map iteration breaks (e.g. a Spark
-            # upgrade), hygiene silently degrading to GC-only would
-            # shift bench numbers across rounds with no signal
-            # (ADVICE r09) — warn once so the drift is attributable.
-            if not getattr(_hygiene, "_warned", False):
-                _hygiene._warned = True
-                print(
-                    f"bench: unpersist hygiene unavailable ({type(e).__name__}: {e}); "
-                    "falling back to GC-only — in-pass numbers may inflate",
-                    file=sys.stderr,
-                )
-        gc.collect()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-
     def _unpersist_all() -> None:
-        # Per-QUERY hygiene (round 12, VERDICT r11 item 3a): the
-        # synchronous-unpersist half of _hygiene only. The r11 per-pass
-        # cadence let checkpoint/storage state accumulate over the
-        # ~268-query pass and grow across repeats — the driver's r27
-        # spread shows medians far above clean minima
+        # Per-QUERY hygiene (round 12, VERDICT r11 item 3a): a
+        # SYNCHRONOUS unpersist of every persistent RDD. Measured round
+        # 9: GC alone does NOT reclaim leftover localCheckpoint blocks in
+        # time (the ContextCleaner is async — LP stayed 53-61 s after
+        # gc.collect + System.gc), but this unpersist recovers most of
+        # the inflation (60.7 -> 43.7 s vs ~35 s isolated-warm; the
+        # residue is session aging that no cleanup reverses, documented
+        # in ROUND_NOTES). Unpersist is safe here: every query builds its
+        # own plan from the parquet scans, so no cross-query state is
+        # shared. The r11 per-pass cadence let checkpoint/storage state
+        # accumulate over the ~268-query pass and grow across repeats —
+        # the driver's r27 spread shows medians far above clean minima
         # (link_prediction_capped [9.57, 21.33] median 15.0 vs 9.6
         # clean; huber [2.97, 7.65]). A per-query FULL _hygiene was
         # measured too (BENCH_SPREAD_r30): the big aged queries
@@ -483,8 +457,27 @@ def main() -> None:
             it = jmap.iterator()
             while it.hasNext():
                 it.next()._2().unpersist(True)
+        except Exception as e:
+            # If the py4j Scala-map iteration breaks (e.g. a Spark
+            # upgrade), hygiene silently degrading to GC-only would
+            # shift bench numbers across rounds with no signal
+            # (ADVICE r09) — warn once so the drift is attributable.
+            if not getattr(_unpersist_all, "_warned", False):
+                _unpersist_all._warned = True
+                print(
+                    f"bench: unpersist hygiene unavailable ({type(e).__name__}: {e}); "
+                    "falling back to GC-only — in-pass numbers may inflate",
+                    file=sys.stderr,
+                )
+
+    def _hygiene() -> None:
+        # Session hygiene between measurement blocks: unpersist, then GC.
+        _unpersist_all()
+        gc.collect()
+        try:
+            spark.sparkContext._jvm.System.gc()
         except Exception:
-            pass  # _hygiene's per-pass warning covers the drift signal
+            pass
 
     # Host-normalization canary (VERDICT r09 item 3): the same code
     # measured 402 -> 481 s across four same-day runs under shared-host

@@ -47,8 +47,17 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: relation. A new session therefore always builds fresh; conf changes
 #: that alter scan behavior at plan time (e.g. nanosAsLong) must be
 #: set before that session's first `table()` call, which
-#: `session.tune_for_oracle` guarantees.
+#: `session.tune_for_oracle` guarantees. Entries of a session whose
+#: SparkContext has stopped are dropped on the next miss, so the cache
+#: stays bounded by the live sessions.
 _SCAN_CACHE: dict[tuple[str, str, str, bool], DataFrame] = {}
+
+
+def _stopped(df: DataFrame) -> bool:
+    """True once the SparkContext behind `df` has stopped
+    (`SparkContext.stop` clears `_jsc`): the relation can never run again."""
+    sc = getattr(df.sparkSession, "_sc", None)  # absent on Spark Connect
+    return sc is not None and sc._jsc is None
 
 
 def _session_key(spark: SparkSession) -> str:
@@ -78,6 +87,8 @@ def table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> 
     cached = _SCAN_CACHE.get(key)
     if cached is not None:
         return cached
+    for k in [k for k, v in _SCAN_CACHE.items() if _stopped(v)]:
+        del _SCAN_CACHE[k]
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         # events.ts is parquet TIMESTAMP(NANOS) read as int64 (see

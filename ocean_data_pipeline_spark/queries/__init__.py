@@ -7,6 +7,12 @@ parquet tables. Column names are aliased identically on both sides
 (the driver's compare hashes values after sorting columns by name).
 Oracle=None marks non-SQL-expressible ops (streaming, LSH, connector
 behavior) — the driver records a rows-only check for those.
+
+`load_all()` returns the registry in driver order, by one rule: the
+names in `_FRONT` (code changed since the last driver check) come first,
+rows-only queries come last, and everything else keeps registration
+order. The driver hash-checks only the first 50 entries, so the
+changed queries get checked and no rows-only query takes one of them.
 """
 
 from __future__ import annotations
@@ -44,223 +50,21 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# Queries with a driver-green CORRECTNESS row through round 9. The driver
-# verifies only the first 50 registry entries per round, so `load_all`
-# rotates this long-green set to the back and surfaces never-driver-verified
-# queries (plus queries whose oracle is new this round) in the front slots.
-# Local oracle parity (tests/test_oracle_parity.py) still covers everything.
-_DRIVER_VERIFIED = frozenset({
-    # green through round 2
-    "q1_pricing", "describe_lineitem", "quartiles_exact", "null_counts_events",
-    "events_type_profile", "conditional_agg_events", "value_ranges_quality",
-    "distinct_counts", "rollup_revenue", "grouping_sets_revenue",
-    "cube_revenue", "grouped_mad_acctbal", "approx_distinct_counts",
-    "approx_quartiles", "cache_upsert_keep_latest", "cache_ttl_stats",
-    "cache_key_lookup", "cache_cleanup_expired", "monthly_series",
-    "grid_snap", "bbox_validation", "month_index", "cache_key_hash",
-    "daterange_validation", "revenue_by_nation", "semi_join_customers",
-    "anti_join_customers", "left_join_parts", "nearby_points",
-    "asof_policy_join", "salted_join_segments", "shipping_priority",
-    "local_supplier_volume", "dedup_exact_documents", "text_stats",
-    "top_tokens", "lang_id_heuristic", "doc_quality_score", "minhash_bands",
-    "simhash_documents", "ngram_jaccard_pairs", "sim_topk_bruteforce",
-    "embedding_stats", "props_json_extract", "minhash_lsh_near_dup",
-    "sim_topk_lsh", "token_counts_bpe", "doc_fingerprint_rolling",
-    "winnow_shared_pairs",
-    # green in round 3 (CORRECTNESS_r03.json, 49/49 oracle-backed pass)
-    "dedup_pipeline_end2end", "multimodal_features", "embedding_near_dup",
-    "sim_topk_ivf", "sim_topk_ivf_multiprobe", "tfidf_top_terms",
-    "near_dup_components", "daily_series_gapfill", "unpivot_measures",
-    "pivot_status_by_year", "union_batches_dedup", "intersect_customers",
-    # sql_series_ordered: retired from the registry in round 9 (slot
-    # given to link_prediction_capped); covered by
-    # tests/test_sql_surface_retired.py.
-    "except_customers", "sql_revenue_by_nation",
-    "sql_above_avg_balance", "stream_tumbling_counts", "stream_sliding_counts",
-    "stream_session_counts", "stream_join_conversions",
-    "order_priority_late_ship", "nation_volume_shipping",
-    "small_qty_order_revenue", "large_order_customers", "min_cost_supplier",
-    "supplier_cnt_by_part", "disjunctive_promo_revenue", "sole_late_supplier",
-    "idle_customer_balance", "top_revenue_supplier", "nation_value_share",
-    "forecast_revenue_change", "nation_market_share",
-    "product_profit_by_nation", "returned_item_customers",
-    "late_shipment_priority", "customer_order_distribution",
-    "promo_revenue_share", "dominant_part_suppliers", "chunk_documents",
-    "train_test_split_deterministic", "pack_token_budget", "top_orders",
-    "latest_order_per_customer", "monthly_revenue_delta",
-    "rolling_avg_monthly", "running_total_per_customer", "sessionize_events",
-    "order_value_deciles",
-    # NOT listed: sim_topk_ivf_kmeans — rows-only in r03; it stays in the
-    # front block to earn a hash row with the frozen-centroid oracle.
-    # green in round 6 (CORRECTNESS_r06.json, 49/50 pass; the one red row,
-    # nation_top_balances_array, was a driver-canonicalizer limitation on
-    # top-level array columns — it stays in the front block with its output
-    # re-serialized to text so round 7 earns the green row).
-    "anova_oneway_event_values", "bh_fdr_segment_tests", "bpe_learn_merges",
-    "calibration_reliability_bins", "candidate_key_profile",
-    "cochran_armitage_trend", "contamination_ngram_census",
-    "conversion_latency_percentiles", "cuped_variance_reduction",
-    "decision_stump_totalprice", "diff_in_diff_estimator",
-    "dq_constraint_census", "dtw_nation_profiles", "eb_shrinkage_segments",
-    "embedding_int8_quant_error", "embedding_isotropy_audit",
-    "embedding_top_component", "event_funnel_conversion",
-    "event_type_markov_transitions", "event_value_run_lengths",
-    "events_hourly_heatmap", "isotonic_calibration_pava",
-    "isotonic_pava_grouped", "jackknife_ratio_variance", "kendall_tau_b",
-    "kruskal_wallis_event_values", "ks_test_price_by_year",
-    "lineitem_corr_stats", "logistic_glm_irls", "mannwhitney_u_event_values",
-    "mantel_haenszel_or", "matryoshka_prefix_quality", "ols_price_regression",
-    "peak_event_per_user", "poisson_glm_irls", "power_sample_size",
-    "propensity_stratified_ate", "pyds_sensor_feed_profile",
-    "pyds_stream_feed_rollup", "reciprocal_nn_pairs",
-    "retrieval_metrics_eval", "revenue_trend_by_nation",
-    "segment_priority_chisq", "spearman_rank_correlation",
-    "target_encoding_loo", "value_histogram_events",
-    "weekly_retention_cohorts", "welch_ttest_event_values",
-    "wilson_proportion_intervals",
-    # green in round 7 (CORRECTNESS_r07.json, 50/50 pass — including
-    # nation_top_balances_array after its text re-serialization, and
-    # clustering_coefficient_census / the graph family first-timers).
-    "nation_top_balances_array", "daily_ohlc_bars",
-    "kaplan_meier_user_lifetime", "attribution_credit", "session_path_topn",
-    "mutual_information_census", "entropy_rate_markov", "nelson_aalen_hazard",
-    "rmst_survival", "logrank_test", "edit_distance_name_join",
-    "snm_near_dup_pairs", "benford_digit_census", "mahalanobis_outliers",
-    "k_anonymity_census", "impute_missing_values",
-    "erasure_propagation_census", "dp_noise_calibration",
-    "fd_violation_census", "copurchase_triangle_census",
-    "part_degree_distribution", "pagerank_copurchase_top20",
-    "kcore_copurchase", "association_rules_copurchase", "bfs_reachability",
-    "item_item_cosine_topk", "frequent_triples_apriori",
-    "bellman_ford_distances", "degree_assortativity",
-    "clustering_coefficient_census", "monthly_climatology",
-    "climatology_anomalies", "zorder_layout_stats", "haversine_nearby",
-    "grid_hotspot_clusters", "point_in_polygon_census",
-    "incremental_agg_merge", "mv_incremental_refresh",
-    "scd2_priority_history", "scd2_point_in_time_join",
-    "snapshot_diff_census", "cdc_apply_changes", "hierarchical_time_rollup",
-    "shipment_overlap_pairs", "fiscal_window_rollup",
-    "interval_coverage_days", "fifo_lot_allocation", "asof_forward_deadline",
-    "asof_nearest_event", "bloom_join_urgent_revenue",
-    # green in round 8 (CORRECTNESS_r08.json, 50/50 pass — waves 25-32
-    # statistics/forecasting/graph names plus the r08 SQL-surface adds).
-    "ljung_box_monthly", "jarque_bera_price", "brown_forsythe_event_values",
-    "hits_bipartite_authorities", "exact_percentile_cutpoints",
-    "doc_repetition_census", "seasonal_mann_kendall", "dedup_savings_census",
-    "embedding_norm_audit", "open_order_backlog_monthly", "clv_cohort_matrix",
-    "new_vs_returning_monthly", "sql_group_by_all", "grouped_percentile_bands",
-    "cramers_v_matrix", "source_ngram_overlap", "length_drift_by_source",
-    "mixed_language_margin", "rolling_30day_revenue", "lorenz_curve_deciles",
-    "user_interevent_burstiness", "corpus_datasheet", "link_prediction_scores",
-    "holt_winters_additive", "ridge_price_regression", "readability_census",
-    "t_closeness_census", "adf_unit_root_lite", "ccf_lead_lag",
-    "newey_west_se", "hurst_exponent_rs", "quantile_regression_lad",
-    "modularity_brand_partition", "fisher_exact_monthly", "mcnemar_doc_rules",
-    "huber_regression_irls", "sax_monthly_revenue", "page_hinkley_revenue",
-    "pca_axis_lineitem", "friedman_nations_monthly", "ransac_line_fit",
-    "gumbel_block_maxima", "process_capability_cpk", "imr_control_chart",
-    "burrows_delta_sources", "theta_method_forecast", "haar_energy_monthly",
-    "binseg_changepoint_monthly", "cohens_kappa_rules",
-    "partial_correlation_lineitem",
-    # green in round 9 (CORRECTNESS_r09.json, 50/50 pass — the enforced-cap
-    # link-prediction headline, waves 32-34 eval/training ops, the
-    # entity-resolution family, curation/similarity/multimodal first-timers).
-    "link_prediction_capped", "vif_lineitem_regressors",
-    "knn_label_noise_audit", "binary_embedding_quant", "pass_at_k_estimator",
-    "bradley_terry_nations", "ece_reliability_bins", "chunk_overlap_census",
-    "absorbing_chain_steps", "trend_seasonal_strength",
-    "information_gain_ranking", "newsvendor_quantile", "permutation_test_lite",
-    "fuzzy_name_pairs", "full_outer_nation_presence", "compaction_plan",
-    "shuffle_bucket_histogram", "encoding_advisor", "join_cardinality_audit",
-    "skew_salting_advisor", "zonemap_pruning_audit", "jaro_winkler_toppairs",
-    "phonetic_block_census", "winnow_robust_census", "sim_topk_ivf_kmeans",
-    "near_dup_components_star", "dedup_normalized_documents",
-    "repeated_ngrams", "corpus_curation_funnel", "benchmark_decontamination",
-    "source_mixture_report", "sim_topk_pq", "span_dedup_census",
-    "quality_decile_filter", "zipf_token_slope", "perplexity_filter_unigram",
-    "label_centroid_confusion", "char_entropy_quality",
-    "contamination_ngram_sweep", "multimodal_av_metadata",
-    "token_js_divergence", "hyperplane_lsh_census", "hard_negative_mining",
-    "simhash_hamming_pairs", "fellegi_sunter_weights", "er_pipeline_end2end",
-    "video_frame_sample", "image_resize_nn", "audio_energy_census",
-    "skew_kurtosis_exact",
-    # green in round 10 (CORRECTNESS_r10.json, 50/50 pass — the curation/
-    # retrieval/statistics tail, the recursive-CTE SQL family, and the
-    # stateful-streaming pair all first-time driver-green).
-    "acf_monthly_revenue", "bigram_perplexity_interp", "bm25_topk",
-    "cell_label_purity", "chao1_vocab_richness", "cluster_balanced_sampling",
-    "conformal_interval_calibration", "countmin_heavy_hitters",
-    "cv_fold_stability", "doc_length_percentile_trim",
-    "dsir_importance_weights", "equi_depth_histogram", "gaussian_kde_grid",
-    "gopher_repetition_filter", "heaps_law_fit", "inverted_index_conjunctive",
-    "kneser_ney_bigram_ppl", "lexical_quality_rules", "locf_forward_fill",
-    "market_concentration_hhi", "minhash_band_tuning_curve",
-    "minhash_jaccard_calibration", "mixture_temperature_weights",
-    "nb_lang_signal_probe", "neyman_allocation", "ngram_novelty_census",
-    "nucleus_vocab_census", "pandas_udf_segment_stats",
-    "pii_redaction_census", "rrf_hybrid_retrieval", "semantic_dedup_cells",
-    "split_leakage_audit", "sql_funnel_conversion", "sql_group_order_by_all",
-    "sql_recursive_capped_balance", "sql_recursive_holt_smoothing",
-    "sql_recursive_month_spine", "sql_recursive_supplier_chain",
-    "stratified_sample_events", "stream_ewma_monthly", "stream_funnel_stages",
-    "token_burstiness", "tokenizer_fertility", "url_domain_census",
-    "variant_props_profile", "weighted_median_price",
-    "weighted_sample_deterministic", "winsorized_trimmed_mean",
-    "woe_iv_price_bins", "zipf_slope_fit",
-    # green in round 11 (CORRECTNESS_r11.json, 50/50 pass — the SQL
-    # parser-surface family, the streaming twins, the window-frame pair,
-    # the time-series statistics tail, the sketch/estimation family, and
-    # the segmentation/retrieval/training remainder).
-    "sql_top_spenders_window", "sql_grouping_sets_revenue",
-    "sql_exists_customers", "sql_pivot_priority_by_year",
-    "sql_lateral_explode_tokens", "sql_named_window_rollup",
-    "sql_udtf_chunk_documents", "sql_filter_clause_agg",
-    "sql_pipe_priority_revenue", "sql_parameterized_revenue",
-    "sql_lateral_topn_per_region", "stream_join_funnel_outer",
-    "stream_static_enrich", "watermark_design_census", "stream_dedup_keys",
-    "stream_file_session_cache", "stream_countmin_user_events",
-    "stream_hll_registers", "order_frame_values", "order_percentile_ranks",
-    "ewma_monthly_revenue", "daily_zscore_anomalies", "cusum_changepoint",
-    "mann_kendall_trend", "seasonal_indices_monthly",
-    "leadlag_crosscorr_events", "yule_walker_ar2_forecast",
-    "rolling_ols_trend", "theil_sen_monthly_trend", "holt_linear_smoothing",
-    "periodogram_monthly", "pacf_durbin_levinson", "forecast_backtest_mape",
-    "runs_test_monthly", "kmv_set_operations", "hll_portable_distinct",
-    "cms_join_size_estimate", "poisson_bootstrap_ci", "token_pmi_pairs",
-    "prefix_filter_jaccard_join", "mmr_diversified_topk",
-    "gini_customer_spend", "abc_pareto_classes", "psi_drift_price",
-    "cohort_ltv_curves", "quantile_normalize_doclen",
-    "length_bucketing_efficiency", "epoch_shuffle_balance",
-    "session_concurrency_profile", "pareto_skyline_orders",
-})
-
-# Queries added after the round's front block was already full (the
-# driver checks exactly 50): parked at the back so they don't displace
-# a never-verified query; promote them next round when the rotation
-# frees slots. Local oracle parity covers them meanwhile.
-# Round 4: empty — the rotation freed 49 slots, so every previously
-# deferred query now rides in the front block.
-_DEFER_TO_BACK: frozenset[str] = frozenset()
-
-# Names lifted to the very head of the front block this round. VERDICT r11
-# item 7: the last 9 never-driver-checked names ride r12's front block,
-# draining the correctness backlog to zero. (r11's front-50 — the sql_*
-# parser family, stream_* twins, window-frame pair, time-series tail,
-# sketches, and segmentation remainder — went 50/50 green in
-# CORRECTNESS_r11.json and rotated into _DRIVER_VERIFIED above.)
-_FRONT_PRIORITY: tuple[str, ...] = (
-    "leakage_safe_group_split", "time_weighted_avg",
-    "ship_latency_percentiles", "rfm_segmentation", "kmv_distinct_estimate",
-    "training_example_pipeline", "variant_row_shred",
-    "theil_index_decomposition", "ipf_survey_raking",
+# Queries whose code changed since their last driver check; they lead the
+# driver order (module docstring). Empty it once the driver has checked them.
+_FRONT: tuple[str, ...] = (
+    "dtw_nation_profiles",
+    "sql_recursive_capped_balance",
+    "sql_recursive_holt_smoothing",
 )
 
 
 def load_all() -> dict[str, RegisteredQuery]:
     """Import every query module; return the registry in driver order.
 
-    Driver order = never-driver-verified queries first (registration
-    order preserved within each block), long-green queries last.
+    Driver order is one rule: `_FRONT` names first (in `_FRONT` order),
+    rows-only (oracle=None) queries last, everything else in
+    registration order.
     """
     from ocean_data_pipeline_spark.queries import (  # noqa: F401
         aggregates,
@@ -320,49 +124,19 @@ def load_all() -> dict[str, RegisteredQuery]:
         windows,
     )
 
-    rotated = _DRIVER_VERIFIED | _DEFER_TO_BACK
-    # Guard against silent drift: a renamed or deleted query left in the
-    # rotation sets would otherwise be ignored and shift the front block.
-    unknown = rotated - REGISTRY.keys()
+    # Guard against silent drift: a renamed or deleted query left in
+    # _FRONT would otherwise be ignored.
+    unknown = set(_FRONT) - REGISTRY.keys()
     if unknown:
         raise AssertionError(
-            f"rotation sets name unregistered queries: {sorted(unknown)}"
+            f"_FRONT names unregistered queries: {sorted(unknown)}"
         )
-    overlap = _DRIVER_VERIFIED & _DEFER_TO_BACK
-    if overlap:
-        raise AssertionError(
-            f"queries in both rotation sets: {sorted(overlap)}"
-        )
-    front = {n: rq for n, rq in REGISTRY.items() if n not in rotated}
-    back = {n: rq for n, rq in REGISTRY.items() if n in rotated}
-    # Least-proven first: queries from the newest wave modules are the
-    # least-exercised code, so they ride at the head of the front block
-    # to land inside the driver's 50-query check this round (VERDICT r07
-    # item 6). Within each tier, registration order is preserved.
-    newest = tuple(
-        f"ocean_data_pipeline_spark.queries.{m}"
-        for m in (
-            "wave34_ops",
-            "wave33_ops",
-            "wave32_ops",
-            "wave31_ops",
-            "wave30_ops",
-            "wave29_ops",
-            "wave25_ops",
-            "wave26_ops",
-            "wave27_ops",
-            "wave28_ops",
-        )
-    )
-    lifted = {n: front[n] for n in _FRONT_PRIORITY if n in front}
-    prioritized = {
-        n: rq
-        for n, rq in front.items()
-        if rq.fn.__module__ in newest and n not in lifted
-    }
-    rest = {
-        n: rq
-        for n, rq in front.items()
-        if n not in prioritized and n not in lifted
-    }
-    return {**lifted, **prioritized, **rest, **back}
+    # One stable sort: _FRONT names in _FRONT order, then every oracle-backed
+    # query, then the rows-only ones; ties keep registration order.
+    rank = {n: i for i, n in enumerate(_FRONT)}
+    back = len(_FRONT)
+
+    def key(name: str) -> int:
+        return rank.get(name, back + (REGISTRY[name].oracle is None))
+
+    return {n: REGISTRY[n] for n in sorted(REGISTRY, key=key)}

@@ -130,15 +130,6 @@ def _fill(months, arrayagg, mklist1, step, lastcell, arrty) -> str:
     )
 
 
-SPARK_DTW_SQL = _fill(
-    "SELECT CAST(mo AS INT) AS mo FROM (SELECT explode(sequence(1, 12)) AS mo)",
-    "transform(array_sort(collect_list(struct(x.mo, x.v))), s -> s.v)",
-    "array(abs(element_at(xs, 1) - element_at(ys, 1)))",
-    _step("transform", "sequence", "element_at"),
-    "element_at(cur, 1)",
-    "ARRAY<DOUBLE>",
-)
-
 # Round 12: the Spark execution unrolls the 23 wavefront steps as
 # chained projections instead of running them through UnionLoopExec.
 # The recursion's serial depth here is CALENDAR-bounded (12 months →

@@ -50,34 +50,6 @@ def sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SQL_REVENUE)
 
 
-# The reference dashboard's literal access pattern — full-row scan in
-# time order (dashboard/app.py:103) — bounded and totally ordered
-# (event_id tiebreak) so the result set is deterministic on both
-# engines. The `value IS NOT NULL` predicate must reach the parquet
-# scan (PushedFilters); LIMIT lowers to TakeOrderedAndProject.
-_SQL_SERIES = """
-SELECT event_id, ts, user_id, event_type, value
-FROM events
-WHERE value IS NOT NULL
-ORDER BY ts, event_id
-LIMIT 500
-"""
-
-
-def sql_series_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`SELECT * FROM series ORDER BY time` — the reference's literal
-    dashboard query shape, via spark.sql.
-
-    Retired from the driver registry in round 9 (VERDICT r08 item 7:
-    hold net registry growth while the rotation backlog drains —
-    `link_prediction_capped` took its slot). The shape stays covered:
-    §2 scan-table-ordered is driver-green via `queries/flagship.py`,
-    and tests/test_sql_surface_retired.py pins this function's oracle
-    parity + TakeOrderedAndProject plan."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SQL_SERIES)
-
-
 # Scalar subquery through Catalyst (SubqueryExec → reused broadcast
 # scalar). The threshold is computed as exact-decimal sum ÷ count cast
 # through DOUBLE identically on both engines, so the > comparison is

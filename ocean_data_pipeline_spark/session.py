@@ -14,6 +14,7 @@ in the reference) and the DuckDB oracle.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -47,16 +48,30 @@ _RUNTIME_CONF = {
 }
 
 
+#: Conf keys this process has already warned it could not apply.
+_UNAPPLIED: set[str] = set()
+
+
 def tune_for_oracle(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to any session (including driver-provided).
 
-    Idempotent; only touches runtime-mutable keys.
+    Idempotent; only touches runtime-mutable keys. A key the session
+    refuses (immutable in this deployment) is skipped with a warning
+    that names the key and the error, once per key per process: the
+    driver contract calls this for every query.
     """
     for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # immutable in this deployment — keep going
-            pass
+        except Exception as e:  # immutable in this deployment — keep going
+            if k not in _UNAPPLIED:
+                _UNAPPLIED.add(k)
+                warnings.warn(
+                    f"tune_for_oracle could not set {k}={v}: "
+                    f"{type(e).__name__}: {e}",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
     return spark
 
 

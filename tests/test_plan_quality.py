@@ -14,18 +14,6 @@ from tools.explain_audit import AUDIT
 
 REGISTRY = load_all()
 
-# Queries retired from the driver registry (round 9) keep their plan
-# gates: resolve them straight from their module.
-from ocean_data_pipeline_spark.queries.sql_surface import (  # noqa: E402
-    sql_series_ordered,
-)
-
-RETIRED = {"sql_series_ordered": sql_series_ordered}
-
-
-def _query_fn(name):
-    return REGISTRY[name].fn if name in REGISTRY else RETIRED[name]
-
 
 def _formatted_plan(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
@@ -36,7 +24,7 @@ def _formatted_plan(spark, df) -> str:
 @pytest.mark.parametrize("name", sorted(AUDIT))
 def test_plan_quality(spark, name):
     must, must_not = AUDIT[name]
-    plan = _formatted_plan(spark, _query_fn(name)(spark, SF_ORACLE))
+    plan = _formatted_plan(spark, REGISTRY[name].fn(spark, SF_ORACLE))
     for frag in must:
         assert frag in plan, f"{name}: plan lost {frag!r}\n{plan}"
     for frag in must_not:
@@ -53,7 +41,7 @@ _PLAN_SIZE_CAP = {"absorbing_chain_steps": 1000}
 
 @pytest.mark.parametrize("name", sorted(_PLAN_SIZE_CAP))
 def test_plan_size_cap(spark, name):
-    plan = _formatted_plan(spark, _query_fn(name)(spark, SF_ORACLE))
+    plan = _formatted_plan(spark, REGISTRY[name].fn(spark, SF_ORACLE))
     n = plan.count("\n") + 1
     assert n < _PLAN_SIZE_CAP[name], (
         f"{name}: formatted plan blew up to {n} lines — an iterative "

@@ -1,31 +1,26 @@
-"""Registry-rotation contract: the driver verifies only the first 50
-entries of ``queries()``, so a stale rotation set silently burns a whole
-driver round re-checking long-green queries. These tests make that a CI
-failure instead (VERDICT r03 item 4).
+"""Registry driver-order contract: the driver hash-checks only the
+first 50 entries of ``queries()``, so the order decides what it checks.
+These tests make a wrong order a CI failure (VERDICT r03 item 4).
 
-Contract:
-  * every name in the rotation sets is a registered query (no drift on
-    rename/delete);
-  * the two rotation blocks are disjoint;
-  * every never-driver-verified query rides in the front-50 window
-    (when there are more than 50, the window must be entirely
-    never-verified — no verified name may displace an unverified one);
-  * driver order is deterministic and registration-order-stable.
+The rule, one stable sort in ``load_all``:
+  * names in ``_FRONT`` (code changed since their last driver check)
+    come first, in ``_FRONT`` order, and every one is registered;
+  * rows-only (``oracle=None``) queries come last, so none takes a
+    hash-checked slot;
+  * everything else keeps registration order.
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from ocean_data_pipeline_spark.queries import (
-    _DEFER_TO_BACK,
-    _DRIVER_VERIFIED,
-    REGISTRY,
-    load_all,
-)
+from ocean_data_pipeline_spark.queries import _FRONT, REGISTRY, load_all
 from tests.conftest import SF_SMOKE
 
 DRIVER_WINDOW = 50
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -33,47 +28,65 @@ def registry():
     return load_all()
 
 
-def test_rotation_sets_are_registered(registry):
-    unknown = (_DRIVER_VERIFIED | _DEFER_TO_BACK) - registry.keys()
-    assert not unknown, f"rotation sets name unregistered queries: {sorted(unknown)}"
-
-
-def test_rotation_sets_disjoint():
-    overlap = _DRIVER_VERIFIED & _DEFER_TO_BACK
-    assert not overlap, f"queries in both rotation blocks: {sorted(overlap)}"
+def test_front_names_are_registered(registry):
+    unknown = set(_FRONT) - registry.keys()
+    assert not unknown, f"_FRONT names unregistered queries: {sorted(unknown)}"
+    assert len(set(_FRONT)) == len(_FRONT), "duplicate _FRONT names"
 
 
 def test_unverified_queries_occupy_front_window(registry):
-    names = list(registry)
-    unverified = [n for n in names if n not in (_DRIVER_VERIFIED | _DEFER_TO_BACK)]
-    window = set(names[:DRIVER_WINDOW])
-    missed = [n for n in unverified[:DRIVER_WINDOW] if n not in window]
+    """Every `_FRONT` name (changed since its last driver check) rides
+    in the driver's hash-checked window."""
+    window = list(registry)[:DRIVER_WINDOW]
+    missed = [n for n in _FRONT if n not in window]
     assert not missed, (
-        "never-driver-verified queries pushed outside the driver's "
-        f"front-{DRIVER_WINDOW} window: {missed} — advance the rotation sets"
+        f"_FRONT names pushed outside the driver's front-{DRIVER_WINDOW} "
+        f"window: {missed}"
     )
 
 
 def test_front_window_prefers_unverified(registry):
-    """If >window unverified queries exist, no verified name may appear
-    in the window; otherwise the window starts with ALL unverified."""
+    """The window leads with `_FRONT` in order and holds no rows-only
+    query (the driver can only row-count those)."""
     names = list(registry)
-    unverified = [n for n in names if n not in (_DRIVER_VERIFIED | _DEFER_TO_BACK)]
-    k = min(len(unverified), DRIVER_WINDOW)
-    assert names[:k] == unverified[:k], (
-        "driver window does not lead with never-verified queries; "
-        f"expected {unverified[:k]}, got {names[:k]}"
+    assert names[: len(_FRONT)] == list(_FRONT)
+    rows_only = [
+        n for n in names[:DRIVER_WINDOW] if registry[n].oracle is None
+    ]
+    assert not rows_only, f"rows-only queries in the driver window: {rows_only}"
+
+
+def test_driver_order_is_one_stable_sort(registry):
+    """Past `_FRONT`: oracle-backed queries in registration order, then
+    rows-only queries in registration order — nothing else moves."""
+    rest = [n for n in REGISTRY if n not in _FRONT]
+    expected = (
+        list(_FRONT)
+        + [n for n in rest if REGISTRY[n].oracle is not None]
+        + [n for n in rest if REGISTRY[n].oracle is None]
     )
+    assert list(registry) == expected
+    assert sorted(registry) == sorted(REGISTRY)
 
 
 def test_load_all_rejects_unknown_rotation_names(monkeypatch):
     import ocean_data_pipeline_spark.queries as q
 
-    monkeypatch.setattr(
-        q, "_DRIVER_VERIFIED", frozenset({"no_such_query_xyz"})
-    )
+    monkeypatch.setattr(q, "_FRONT", ("no_such_query_xyz",))
     with pytest.raises(AssertionError, match="no_such_query_xyz"):
         q.load_all()
+
+
+def test_plan_snapshots_name_registered_queries(registry):
+    """Every top-level ``plans/*.txt`` snapshot belongs to a registered
+    query; a retired or renamed query must take its snapshot with it."""
+    plans = os.path.join(REPO, "plans")
+    orphans = sorted(
+        f
+        for f in os.listdir(plans)
+        if f.endswith(".txt") and f[: -len(".txt")] not in registry
+    )
+    assert not orphans, f"plan snapshots without a registered query: {orphans}"
 
 
 def test_registry_names_unique_and_callable(registry):
@@ -154,7 +167,6 @@ def test_bench_headline_names_registered():
     """A typo'd HEADLINE entry silently drops out of the bench (the
     list is filtered against the registry) — fail loudly instead."""
     import bench
-    from ocean_data_pipeline_spark.queries import load_all
 
     reg = load_all()
     missing = [n for n in bench.HEADLINE + bench.SPREAD_ONLY if n not in reg]
@@ -164,11 +176,8 @@ def test_bench_headline_names_registered():
 
 
 def test_audit_names_registered():
-    from ocean_data_pipeline_spark.queries import load_all
-    from tools.explain_audit import AUDIT, RETIRED_AUDIT_NAMES
+    from tools.explain_audit import AUDIT
 
     reg = load_all()
-    missing = [
-        n for n in AUDIT if n not in reg and n not in RETIRED_AUDIT_NAMES
-    ]
+    missing = [n for n in AUDIT if n not in reg]
     assert not missing, f"plan-audit names not registered: {missing}"

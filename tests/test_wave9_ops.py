@@ -195,19 +195,18 @@ def test_tws_gate_or_equivalence(spark):
 
 
 def test_dtw_matches_python_reference(spark):
-    """The wavefront-recursion DTW equals a classic nested-loop DP on
-    the same extracted series (independent recompute, not the oracle)."""
+    """The shipped wavefront DTW (`dtw_nation_profiles`, unrolled
+    diagonals) equals a classic nested-loop DP on the same extracted
+    series (independent recompute, not the oracle)."""
     import math
 
-    from ocean_data_pipeline_spark.queries.dtw_ops import SPARK_DTW_SQL
     from ocean_data_pipeline_spark.catalog import register_views
-    from pyspark.sql import functions as F
 
-    register_views(spark, SF_SMOKE)
     got = {
         (r.nation_a, r.nation_b): r.dtw_dist
-        for r in spark.sql(SPARK_DTW_SQL).collect()
+        for r in REGISTRY["dtw_nation_profiles"].fn(spark, SF_SMOKE).collect()
     }
+    register_views(spark, SF_SMOKE)
     # rebuild the gap-filled series independently
     rev = spark.sql(
         """SELECT n.n_name AS nation,

@@ -33,11 +33,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 #: render WholeStageCodegen spans, so JVM-side-ness is asserted as the
 #: ABSENCE of Python eval operators (BatchEvalPython / ArrowEvalPython /
 #: MapInPandas would appear if an expression fell off the codegen path).
-#: AUDIT names retired from the driver registry (round 9) but still
-#: plan-gated — tests resolve these from their module instead of
-#: load_all().
-RETIRED_AUDIT_NAMES = frozenset({"sql_series_ordered"})
-
 AUDIT: dict[str, tuple[list[str], list[str]]] = {
     # pushdown reached the scan + column pruning (7 of 16 lineitem cols)
     "q1_pricing": (
@@ -189,10 +184,6 @@ AUDIT: dict[str, tuple[list[str], list[str]]] = {
     "sql_revenue_by_nation": (
         ["BroadcastHashJoin"],
         ["CartesianProduct", "BatchEvalPython"],
-    ),
-    "sql_series_ordered": (
-        ["TakeOrderedAndProject", "PushedFilters: [IsNotNull(value)]"],
-        ["CartesianProduct", "BatchEvalPython", "GlobalLimit"],
     ),
     "sql_above_avg_balance": (
         ["Subquery", "HashAggregate"],
