@@ -56,6 +56,11 @@ _FRONT: tuple[str, ...] = (
     "dtw_nation_profiles",
     "sql_recursive_capped_balance",
     "sql_recursive_holt_smoothing",
+    "poisson_glm_irls",
+    "logistic_glm_irls",
+    "propensity_stratified_ate",
+    "quantile_regression_lad",
+    "huber_regression_irls",
 )
 
 

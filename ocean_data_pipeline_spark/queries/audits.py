@@ -10,10 +10,17 @@ aggregates, so audit cost is scan-bound at any corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.irls import (
+    Step,
+    dec9,
+    irls_fit,
+    irls_sql,
+    null_fit,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- constraint-violation census (expectation suite) ------------------
@@ -2058,11 +2065,6 @@ _IRLS_ROUNDS = 4
 
 
 def _poisson_oracle() -> str:
-    """Unrolled IRLS: one MATERIALIZED CTE pair per round (the
-    `ipf_survey_raking` discipline — default CTE inlining goes
-    exponential on chained self-references). Per-row weighted terms
-    round ONCE into DECIMAL(38,9) so the normal-equation sums are
-    exactly associative; the 2x2 solve is a fixed IEEE chain."""
     head = """
 WITH base AS MATERIALIZED (
   SELECT c.c_custkey,
@@ -2078,38 +2080,15 @@ b0r AS MATERIALIZED (
          CAST(0.0 AS DOUBLE) AS b1
   FROM base
 )"""
-    rounds = []
-    prev = "b0r"
-    for r in range(1, _IRLS_ROUNDS + 1):
-        rounds.append(f""",
-s{r} AS MATERIALIZED (
-  SELECT sum(CAST(round(mu, 9) AS DECIMAL(38,9))) AS sw,
-         sum(CAST(round(mu * x, 9) AS DECIMAL(38,9))) AS swx,
-         sum(CAST(round(mu * x * x, 9) AS DECIMAL(38,9))) AS swxx,
-         sum(CAST(round(mu * z, 9) AS DECIMAL(38,9))) AS swz,
-         sum(CAST(round(mu * x * z, 9) AS DECIMAL(38,9))) AS swxz
-  FROM (
-    SELECT x, exp(p.b0 + p.b1 * x) AS mu,
-           (p.b0 + p.b1 * x) + (y - exp(p.b0 + p.b1 * x))
-             / exp(p.b0 + p.b1 * x) AS z
-    FROM base, {prev} p
-  )
-),
-b{r} AS MATERIALIZED (
-  SELECT (CAST(swxx AS DOUBLE) * CAST(swz AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swxz AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b0,
-         (CAST(sw AS DOUBLE) * CAST(swxz AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swz AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b1
-  FROM s{r}
-)""")
-        prev = f"b{r}"
+    rounds, prev = irls_sql(
+        _IRLS_ROUNDS,
+        w="exp(p.b0 + p.b1 * x)",
+        z="""(p.b0 + p.b1 * x) + (y - exp(p.b0 + p.b1 * x))
+             / exp(p.b0 + p.b1 * x)""",
+    )
     return (
         head
-        + "".join(rounds)
+        + rounds
         + f"""
 SELECT (SELECT count(*) FROM base) AS n_customers,
        round(p.b0, 6) AS intercept,
@@ -2126,14 +2105,13 @@ FROM {prev} p"""
 @register("poisson_glm_irls", oracle=_poisson_oracle())
 def poisson_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson regression of per-customer order counts on account
-    balance (log link), fit by {rounds} unrolled IRLS rounds — the GLM
+    balance (log link), fit by 4 unrolled IRLS rounds (w = mu,
+    z = eta + (y-mu)/mu; the device is operators/irls.py) — the GLM
     the OLS family (`ols_price_regression`) can't express for count
-    outcomes. Each round is ONE aggregate over the per-customer
-    relation (weighted normal-equation sums, rounded once into
-    DECIMAL(38,9)) followed by a 1-row 2x2 solve; zero-order customers
-    enter via the LEFT JOIN with y=0, exactly as the likelihood
-    requires. Reports the fitted coefficients, the rate ratio per 10k
-    balance, and the model deviance.
+    outcomes. Zero-order customers enter via the LEFT JOIN with y=0,
+    exactly as the likelihood requires. Reports the fitted
+    coefficients, the rate ratio per 10k balance, and the model
+    deviance.
 
     Determinism: b0 seeds at ln(mean y) from an exact decimal sum;
     each round's per-row exp/z chains run on identical doubles because
@@ -2141,10 +2119,10 @@ def poisson_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sums — the engines stay in lockstep round by round.
 
     Plan shape: orders collapse to per-customer counts once
-    (localCheckpointed base, consumed by {rounds}+2 subtrees), then
-    {rounds} scans of the customer-sized relation each ending in a
-    5-cell aggregate broadcast back as scalars. At 100 TB: IRLS cost
-    is {rounds} x (scan + tiny shuffle) — the aggregate-only GLM."""
+    (localCheckpointed base, consumed by 4+2 subtrees), then 4 scans
+    of the customer-sized relation each ending in a 5-cell aggregate
+    whose coefficients come back as scalars. At 100 TB: IRLS cost is
+    4 x (scan + tiny shuffle) — the aggregate-only GLM."""
     y_counts = (
         table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey"))
@@ -2159,18 +2137,7 @@ def poisson_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    dec = lambda c: F.round(c, 9).cast("decimal(38,9)")  # noqa: E731
-    # Round-11 loop shape (guide §1.2 + the absorbing_chain_steps
-    # lesson): each round executes EAGERLY and feeds its two
-    # coefficients back as DoubleType literals. The lazy
-    # crossJoin(broadcast(coeffs)) chain re-built the whole prior-round
-    # subtree per round on the driver (~hundreds of py4j calls + a
-    # nested broadcast-exchange cascade); .first() returns the exact
-    # JVM doubles and F.lit re-embeds the same bits, so every per-row
-    # exp/z chain sees identical inputs and the engines stay in
-    # lockstep bit-for-bit. Job count is unchanged (one 5-cell
-    # aggregate per round); only driver-side plan construction shrinks.
-    mean_y = F.sum(dec(F.col("y"))).cast("double") / F.count(F.lit(1))
+    mean_y = F.sum(dec9(F.col("y"))).cast("double") / F.count(F.lit(1))
     # log seed guarded: an all-zero outcome column would hit ANSI
     # log(0); when() returns NULL and the degenerate branch below
     # takes over
@@ -2178,56 +2145,27 @@ def poisson_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(mean_y > 0, F.log(mean_y)).alias("b0"),
         F.count(F.lit(1)).alias("n_customers"),
     ).first()
-    if seed["b0"] is None:  # empty input: propagate NULLs like the lazy chain did
-        return base.agg(F.count(F.lit(1)).cast("bigint").alias("n_customers")).select(
+    if seed["b0"] is None:
+        return null_fit(
+            base,
             "n_customers",
-            *[
-                F.lit(None).cast("double").alias(a)
-                for a in ("intercept", "slope_per_10k", "rate_ratio_per_10k", "deviance")
-            ],
+            ("intercept", "slope_per_10k", "rate_ratio_per_10k", "deviance"),
         )
-    b0, b1 = float(seed["b0"]), 0.0
-    n_customers = int(seed["n_customers"])
-    for _ in range(_IRLS_ROUNDS):
-        eta = F.lit(b0) + F.lit(b1) * F.col("x")
+
+    def step(b0: Column, b1: Column) -> tuple[Column, Column]:
+        eta = b0 + b1 * F.col("x")
         mu = F.exp(eta)
-        z = eta + (F.col("y") - mu) / mu
-        s = base.agg(
-            F.sum(dec(mu)).cast("double").alias("sw"),
-            F.sum(dec(mu * F.col("x"))).cast("double").alias("swx"),
-            F.sum(dec(mu * F.col("x") * F.col("x"))).cast("double").alias("swxx"),
-            F.sum(dec(mu * z)).cast("double").alias("swz"),
-            F.sum(dec(mu * F.col("x") * z)).cast("double").alias("swxz"),
-        )
-        # the 2x2 solve stays a JVM expression chain on the summed
-        # doubles (identical IEEE order to the former lazy select)
-        det = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
-        # det==0 (collinear/degenerate input) guard: ANSI double
-        # division throws on /0; the when() skips the division and the
-        # loop stops at the current coefficients. Real inputs have
-        # det != 0 (the former lazy chain collected through the same
-        # division on every driver run), so values are unchanged.
-        nxt = s.select(
-            F.when(
-                det != 0.0,
-                (F.col("swxx") * F.col("swz") - F.col("swx") * F.col("swxz")) / det,
-            ).alias("b0"),
-            F.when(
-                det != 0.0,
-                (F.col("sw") * F.col("swxz") - F.col("swx") * F.col("swz")) / det,
-            ).alias("b1"),
-        ).first()
-        if nxt["b0"] is None or nxt["b1"] is None:
-            break
-        b0, b1 = float(nxt["b0"]), float(nxt["b1"])
+        return mu, eta + (F.col("y") - mu) / mu
+
+    b0, b1 = irls_fit(base, float(seed["b0"]), _IRLS_ROUNDS, step)
     eta_f = F.lit(b0) + F.lit(b1) * F.col("x")
     mu_f = F.exp(eta_f)
     dev_term = (
         F.when(F.col("y") > 0, F.col("y") * F.log(F.col("y") / mu_f)).otherwise(0.0)
         - (F.col("y") - mu_f)
     )
-    return base.agg((2 * F.sum(dec(dev_term)).cast("double")).alias("dev")).select(
-        F.lit(n_customers).cast("bigint").alias("n_customers"),
+    return base.agg((2 * F.sum(dec9(dev_term)).cast("double")).alias("dev")).select(
+        F.lit(int(seed["n_customers"])).cast("bigint").alias("n_customers"),
         F.round(F.lit(b0), 6).alias("intercept"),
         F.round(F.lit(b1), 6).alias("slope_per_10k"),
         F.round(F.exp(F.lit(b1)), 6).alias("rate_ratio_per_10k"),
@@ -2235,16 +2173,35 @@ def poisson_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-poisson_glm_irls.__doc__ = poisson_glm_irls.__doc__.format(rounds=_IRLS_ROUNDS)
-
-
 # --- logistic GLM via unrolled IRLS --------------------------------------
+
+#: The logit-link round as `irls_sql` terms: eta and mu from the
+#: previous coefficients, w = mu(1-mu), z = eta + (outcome - mu)/w.
+_LOGIT_TERMS = """p.b0 + p.b1 * x AS eta,
+                 1 / (1 + exp(-(p.b0 + p.b1 * x))) AS mu"""
+
+
+def _logit_step(outcome: str) -> Step:
+    """The engine twin of `_LOGIT_TERMS` for `irls_fit`."""
+
+    def step(b0: Column, b1: Column) -> tuple[Column, Column]:
+        eta = b0 + b1 * F.col("x")
+        mu = 1 / (1 + F.exp(-eta))
+        w = mu * (1 - mu)
+        return w, eta + (F.col(outcome) - mu) / w
+
+    return step
+
+
+def _logit_seed(outcome: str) -> Column:
+    """b0 at the exact-decimal log-odds of the outcome's base rate,
+    guarded: a degenerate rate (p in {0, 1} — every row one class)
+    would hit ANSI /0 or log(0), so it yields NULL instead."""
+    p_base = F.sum(dec9(F.col(outcome))).cast("double") / F.count(F.lit(1))
+    return F.when((p_base > 0) & (p_base < 1), F.log(p_base / (1 - p_base)))
 
 
 def _logistic_oracle() -> str:
-    """Unrolled logit-link IRLS, same MATERIALIZED-CTE and
-    round-once-into-DECIMAL discipline as `poisson_glm_irls` (w =
-    mu(1-mu), z = eta + (y-mu)/w)."""
     head = """
 WITH base AS MATERIALIZED (
   SELECT CASE WHEN o_orderstatus = 'F' THEN 1.0 ELSE 0.0 END AS y,
@@ -2259,41 +2216,15 @@ b0r AS MATERIALIZED (
          CAST(0.0 AS DOUBLE) AS b1
   FROM base
 )"""
-    rounds = []
-    prev = "b0r"
-    for r in range(1, _IRLS_ROUNDS + 1):
-        rounds.append(f""",
-s{r} AS MATERIALIZED (
-  SELECT sum(CAST(round(w, 9) AS DECIMAL(38,9))) AS sw,
-         sum(CAST(round(w * x, 9) AS DECIMAL(38,9))) AS swx,
-         sum(CAST(round(w * x * x, 9) AS DECIMAL(38,9))) AS swxx,
-         sum(CAST(round(w * z, 9) AS DECIMAL(38,9))) AS swz,
-         sum(CAST(round(w * x * z, 9) AS DECIMAL(38,9))) AS swxz
-  FROM (
-    SELECT x, mu * (1 - mu) AS w,
-           eta + (y - mu) / (mu * (1 - mu)) AS z
-    FROM (
-      SELECT x, y, p.b0 + p.b1 * x AS eta,
-             1 / (1 + exp(-(p.b0 + p.b1 * x))) AS mu
-      FROM base, {prev} p
+    rounds, prev = irls_sql(
+        _IRLS_ROUNDS,
+        w="mu * (1 - mu)",
+        z="eta + (y - mu) / (mu * (1 - mu))",
+        terms=_LOGIT_TERMS,
     )
-  )
-),
-b{r} AS MATERIALIZED (
-  SELECT (CAST(swxx AS DOUBLE) * CAST(swz AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swxz AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b0,
-         (CAST(sw AS DOUBLE) * CAST(swxz AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swz AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b1
-  FROM s{r}
-)""")
-        prev = f"b{r}"
     return (
         head
-        + "".join(rounds)
+        + rounds
         + f"""
 SELECT (SELECT count(*) FROM base) AS n_orders,
        round(p.b0, 6) AS intercept,
@@ -2311,18 +2242,18 @@ FROM {prev} p"""
 @register("logistic_glm_irls", oracle=_logistic_oracle())
 def logistic_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Logistic regression of order completion (status = 'F') on total
-    price, fit by {rounds} unrolled IRLS rounds — the logit-link
-    sibling of `poisson_glm_irls` completing the GLM pair (OLS /
-    Poisson / logistic) as aggregate-only passes. Reports
-    coefficients, the odds ratio per 100k price, and mean log-loss.
+    price, fit by 4 unrolled IRLS rounds (w = mu(1-mu); the device is
+    operators/irls.py) — the logit-link sibling of `poisson_glm_irls`
+    completing the GLM pair (OLS / Poisson / logistic) as
+    aggregate-only passes. Reports coefficients, the odds ratio per
+    100k price, and mean log-loss.
 
     Determinism: b0 seeds at the exact-decimal log-odds of the base
-    rate; per-round weighted sums (w = mu(1-mu)) round once into
-    DECIMAL(38,9); sigmoid chains run on identical doubles both
-    engines.
+    rate; per-round weighted sums round once into DECIMAL(38,9);
+    sigmoid chains run on identical doubles both engines.
 
     Plan shape: one scan to the (y, x) projection (localCheckpointed),
-    then {rounds} scans each ending in a 5-cell aggregate — IRLS as
+    then 4 scans each ending in a 5-cell aggregate — IRLS as
     map-reduce, nothing row-scale retained between rounds. The scan
     rides `spread=True`: DECIMAL(38,9) partials are CPU-bound and the
     checkpoint inherits the scan's partitioning, so a row-group-starved
@@ -2335,82 +2266,28 @@ def logistic_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    dec = lambda c: F.round(c, 9).cast("decimal(38,9)")  # noqa: E731
-    # Eager-literal IRLS loop — see poisson_glm_irls for the device
-    # (exact-double round-trip per round, identical JVM expression
-    # chains, driver plan-construction cost removed).
-    p_base = F.sum(dec(F.col("y"))).cast("double") / F.count(F.lit(1))
-    # logit seed guarded: a degenerate base rate (p in {0, 1} — every
-    # row one class) hits ANSI /0 or log(0); when() returns NULL and
-    # the empty/degenerate branch below takes over (the former lazy
-    # chain deferred the same expressions under count()-only actions)
     seed = base.agg(
-        F.when(
-            (p_base > 0) & (p_base < 1), F.log(p_base / (1 - p_base))
-        ).alias("b0"),
-        F.count(F.lit(1)).alias("n_orders"),
+        _logit_seed("y").alias("b0"), F.count(F.lit(1)).alias("n_orders")
     ).first()
-    if seed["b0"] is None:  # empty input: propagate NULLs like the lazy chain did
-        return base.agg(F.count(F.lit(1)).cast("bigint").alias("n_orders")).select(
+    if seed["b0"] is None:
+        return null_fit(
+            base,
             "n_orders",
-            *[
-                F.lit(None).cast("double").alias(a)
-                for a in (
-                    "intercept",
-                    "slope_per_100k",
-                    "odds_ratio_per_100k",
-                    "mean_log_loss",
-                )
-            ],
+            ("intercept", "slope_per_100k", "odds_ratio_per_100k", "mean_log_loss"),
         )
-    b0, b1 = float(seed["b0"]), 0.0
-    n_orders = int(seed["n_orders"])
-    for _ in range(_IRLS_ROUNDS):
-        eta = F.lit(b0) + F.lit(b1) * F.col("x")
-        mu = 1 / (1 + F.exp(-eta))
-        w = mu * (1 - mu)
-        z = eta + (F.col("y") - mu) / w
-        s = base.agg(
-            F.sum(dec(w)).cast("double").alias("sw"),
-            F.sum(dec(w * F.col("x"))).cast("double").alias("swx"),
-            F.sum(dec(w * F.col("x") * F.col("x"))).cast("double").alias("swxx"),
-            F.sum(dec(w * z)).cast("double").alias("swz"),
-            F.sum(dec(w * F.col("x") * z)).cast("double").alias("swxz"),
-        )
-        det = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
-        # det==0 (collinear/degenerate input) guard: ANSI double
-        # division throws on /0; the when() skips the division and the
-        # loop stops at the current coefficients. Real inputs have
-        # det != 0 (the former lazy chain collected through the same
-        # division on every driver run), so values are unchanged.
-        nxt = s.select(
-            F.when(
-                det != 0.0,
-                (F.col("swxx") * F.col("swz") - F.col("swx") * F.col("swxz")) / det,
-            ).alias("b0"),
-            F.when(
-                det != 0.0,
-                (F.col("sw") * F.col("swxz") - F.col("swx") * F.col("swz")) / det,
-            ).alias("b1"),
-        ).first()
-        if nxt["b0"] is None or nxt["b1"] is None:
-            break
-        b0, b1 = float(nxt["b0"]), float(nxt["b1"])
+    b0, b1 = irls_fit(base, float(seed["b0"]), _IRLS_ROUNDS, _logit_step("y"))
     eta_f = F.lit(b0) + F.lit(b1) * F.col("x")
     mu_f = 1 / (1 + F.exp(-eta_f))
     ll_term = F.col("y") * F.log(mu_f) + (1 - F.col("y")) * F.log(1 - mu_f)
     return base.agg(
-        (-F.sum(dec(ll_term)).cast("double") / F.count(F.lit(1))).alias("mll")
+        (-F.sum(dec9(ll_term)).cast("double") / F.count(F.lit(1))).alias("mll")
     ).select(
-        F.lit(n_orders).cast("bigint").alias("n_orders"),
+        F.lit(int(seed["n_orders"])).cast("bigint").alias("n_orders"),
         F.round(F.lit(b0), 6).alias("intercept"),
         F.round(F.lit(b1), 6).alias("slope_per_100k"),
         F.round(F.exp(F.lit(b1)), 6).alias("odds_ratio_per_100k"),
         F.round("mll", 6).alias("mean_log_loss"),
     )
-
-
-logistic_glm_irls.__doc__ = logistic_glm_irls.__doc__.format(rounds=_IRLS_ROUNDS)
 
 
 # --- empirical-Bayes shrinkage of segment means ----------------------------
@@ -2562,9 +2439,6 @@ def eb_shrinkage_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _propensity_oracle() -> str:
-    """Unrolled propensity IRLS (logit of treatment on balance) +
-    quintile stratification — the same MATERIALIZED-CTE / DECIMAL
-    disciplines as the GLM queries above."""
     head = """
 WITH base AS MATERIALIZED (
   SELECT c.c_custkey,
@@ -2586,39 +2460,15 @@ b0r AS MATERIALIZED (
          CAST(0.0 AS DOUBLE) AS b1
   FROM base
 )"""
-    rounds = []
-    prev = "b0r"
-    for r in range(1, _IRLS_ROUNDS + 1):
-        rounds.append(f""",
-s{r} AS MATERIALIZED (
-  SELECT sum(CAST(round(w, 9) AS DECIMAL(38,9))) AS sw,
-         sum(CAST(round(w * x, 9) AS DECIMAL(38,9))) AS swx,
-         sum(CAST(round(w * x * x, 9) AS DECIMAL(38,9))) AS swxx,
-         sum(CAST(round(w * z, 9) AS DECIMAL(38,9))) AS swz,
-         sum(CAST(round(w * x * z, 9) AS DECIMAL(38,9))) AS swxz
-  FROM (
-    SELECT x, mu * (1 - mu) AS w, eta + (t - mu) / (mu * (1 - mu)) AS z
-    FROM (SELECT x, t, p.b0 + p.b1 * x AS eta,
-                 1 / (1 + exp(-(p.b0 + p.b1 * x))) AS mu
-          FROM base, {prev} p)
-  )
-),
-b{r} AS MATERIALIZED (
-  SELECT (CAST(swxx AS DOUBLE) * CAST(swz AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swxz AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b0,
-         (CAST(sw AS DOUBLE) * CAST(swxz AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swz AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b1
-  FROM s{r}
-)"""
-        )
-        prev = f"b{r}"
+    rounds, prev = irls_sql(
+        _IRLS_ROUNDS,
+        w="mu * (1 - mu)",
+        z="eta + (t - mu) / (mu * (1 - mu))",
+        terms=_LOGIT_TERMS,
+    )
     return (
         head
-        + "".join(rounds)
+        + rounds
         + f"""
 , scored AS MATERIALIZED (
   SELECT c_custkey, t, y,
@@ -2669,11 +2519,12 @@ ORDER BY propensity_quintile"""
 def propensity_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Propensity-score stratification composite (Rosenbaum & Rubin
     '83): fit a logistic propensity of treatment (BUILDING segment) on
-    account balance by the unrolled-IRLS device of
-    `logistic_glm_irls`, cut the population into propensity quintiles,
-    and report per-stratum treated/control spend means plus the
-    weighted stratified ATE — the standard observational-causal
-    pipeline as ONE lazy plan. (With a single covariate the quintiles
+    account balance by 4 unrolled logit-link IRLS rounds (the
+    operators/irls.py device, shared with `logistic_glm_irls`), cut
+    the population into propensity quintiles, and report per-stratum
+    treated/control spend means plus the weighted stratified ATE —
+    the standard observational-causal pipeline as ONE lazy plan.
+    (With a single covariate the quintiles
     coincide with balance quintiles — the point here is the composed
     machinery: GLM fit -> score -> stratify -> weighted contrast.)
 
@@ -2713,53 +2564,12 @@ def propensity_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    dec9 = lambda c: F.round(c, 9).cast("decimal(38,9)")  # noqa: E731
-    # Eager-literal IRLS loop — see poisson_glm_irls for the device
-    # (exact-double round-trip per round, identical JVM expression
-    # chains, driver plan-construction cost removed).
-    p_base = F.sum(dec9(F.col("t"))).cast("double") / F.count(F.lit(1))
-    # logit seed guarded against degenerate treatment shares — see
-    # logistic_glm_irls
-    seed = base.agg(
-        F.when(
-            (p_base > 0) & (p_base < 1), F.log(p_base / (1 - p_base))
-        ).alias("b0")
-    ).first()
-    # empty input: every downstream relation is empty whatever the
-    # coefficients, so any finite seed reproduces the former output
-    b0, b1 = (0.0 if seed["b0"] is None else float(seed["b0"])), 0.0
-    rounds = 0 if seed["b0"] is None else _IRLS_ROUNDS
-    for _ in range(rounds):
-        eta = F.lit(b0) + F.lit(b1) * F.col("x")
-        mu = 1 / (1 + F.exp(-eta))
-        w = mu * (1 - mu)
-        z = eta + (F.col("t") - mu) / w
-        s = base.agg(
-            F.sum(dec9(w)).cast("double").alias("sw"),
-            F.sum(dec9(w * F.col("x"))).cast("double").alias("swx"),
-            F.sum(dec9(w * F.col("x") * F.col("x"))).cast("double").alias("swxx"),
-            F.sum(dec9(w * z)).cast("double").alias("swz"),
-            F.sum(dec9(w * F.col("x") * z)).cast("double").alias("swxz"),
-        )
-        det = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
-        # det==0 (collinear/degenerate input) guard: ANSI double
-        # division throws on /0; the when() skips the division and the
-        # loop stops at the current coefficients. Real inputs have
-        # det != 0 (the former lazy chain collected through the same
-        # division on every driver run), so values are unchanged.
-        nxt = s.select(
-            F.when(
-                det != 0.0,
-                (F.col("swxx") * F.col("swz") - F.col("swx") * F.col("swxz")) / det,
-            ).alias("b0"),
-            F.when(
-                det != 0.0,
-                (F.col("sw") * F.col("swxz") - F.col("swx") * F.col("swz")) / det,
-            ).alias("b1"),
-        ).first()
-        if nxt["b0"] is None or nxt["b1"] is None:
-            break
-        b0, b1 = float(nxt["b0"]), float(nxt["b1"])
+    seed = base.agg(_logit_seed("t").alias("b0")).first()
+    # no seed means empty input: every downstream relation is then empty
+    # whatever the coefficients, so any finite pair serves
+    b0, b1 = 0.0, 0.0
+    if seed["b0"] is not None:
+        b0, b1 = irls_fit(base, float(seed["b0"]), _IRLS_ROUNDS, _logit_step("t"))
     scored = (
         base.select(
             "c_custkey",
@@ -2944,7 +2754,6 @@ def jackknife_ratio_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_all") - F.col("n_g"))
         ).alias("theta_g"),
     )
-    dec9 = lambda c: F.round(c, 9).cast("decimal(38,9)")  # noqa: E731
     jk = loo.agg(
         (F.sum(dec9(F.col("theta_g"))).cast("double") / F.count(F.lit(1))).alias(
             "theta_bar"

@@ -26,10 +26,13 @@ domain-bounded (PLANS.md round-8 section).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.irls import irls_fit, irls_sql, null_fit
 from ocean_data_pipeline_spark.queries import register
 
 # --- shared SQL fragments ------------------------------------------------
@@ -583,16 +586,18 @@ def hurst_exponent_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- LAD (median) regression by unrolled IRLS --------------------------------
+# --- robust line fits (LAD here, Huber in wave30_ops) by unrolled IRLS ------
 
-_LAD_ROUNDS = 3
+_ROBUST_ROUNDS = 3
+#: the oracle's per-row residual from the previous round's line `p`
+_RESID_SQL = "y - p.b0 - p.b1 * x"
 
 
-def _lad_oracle() -> str:
-    """Unrolled IRLS for least-absolute-deviations (w = 1/max(|r|,1)),
-    the same MATERIALIZED-CTE + round-once-into-DECIMAL discipline as
-    `logistic_glm_irls` (queries/audits.py)."""
-    head = """
+def robust_line_oracle(w_sql: str) -> str:
+    """Oracle of a `robust_line_fit` query; `w_sql` is its weight with
+    ``{r}`` standing for the residual."""
+    rounds, prev = irls_sql(_ROBUST_ROUNDS, w=w_sql.format(r=_RESID_SQL), z="y")
+    return f"""
 WITH base AS MATERIALIZED (
   SELECT CAST(l_quantity AS DOUBLE) AS x,
          CAST(l_extendedprice AS DOUBLE) AS y
@@ -603,122 +608,50 @@ b0r AS MATERIALIZED (
            AS b0,
          CAST(0.0 AS DOUBLE) AS b1
   FROM base
-)"""
-    rounds = []
-    prev = "b0r"
-    for r in range(1, _LAD_ROUNDS + 1):
-        rounds.append(f""",
-s{r} AS MATERIALIZED (
-  SELECT sum(CAST(round(w, 9) AS DECIMAL(38,9))) AS sw,
-         sum(CAST(round(w * x, 9) AS DECIMAL(38,9))) AS swx,
-         sum(CAST(round(w * x * x, 9) AS DECIMAL(38,9))) AS swxx,
-         sum(CAST(round(w * y, 9) AS DECIMAL(38,9))) AS swy,
-         sum(CAST(round(w * x * y, 9) AS DECIMAL(38,9))) AS swxy
-  FROM (
-    SELECT x, y,
-           1.0 / greatest(abs(y - p.b0 - p.b1 * x), 1.0) AS w
-    FROM base, {prev} p
-  )
-),
-b{r} AS MATERIALIZED (
-  SELECT (CAST(swxx AS DOUBLE) * CAST(swy AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swxy AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b0,
-         (CAST(sw AS DOUBLE) * CAST(swxy AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swy AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b1
-  FROM s{r}
-)""")
-        prev = f"b{r}"
-    tail = f"""
+){rounds}
 SELECT (SELECT CAST(count(*) AS BIGINT) FROM base) AS n_rows,
        round(p.b0, 4) AS intercept,
        round(p.b1, 4) AS slope,
-       round(CAST((SELECT sum(CAST(round(abs(y - p.b0 - p.b1 * x), 6)
+       round(CAST((SELECT sum(CAST(round(abs({_RESID_SQL}), 6)
                                    AS DECIMAL(38,6)))
                    FROM base) AS DOUBLE)
              / (SELECT count(*) FROM base), 4) AS mean_abs_resid
 FROM {prev} p"""
-    return head + "".join(rounds) + tail
 
 
-@register("quantile_regression_lad", oracle=_lad_oracle())
-def quantile_regression_lad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median (least-absolute-deviations) regression of extendedprice
-    on quantity via 3 unrolled IRLS rounds (w = 1/max(|r|, 1) — the
-    standard smoothed-LAD reweighting): the outlier-robust twin of
-    `ols_price_regression`, converging to the conditional-median line
-    the L2 fit gets dragged off by price spikes.
+def robust_line_fit(
+    spark: SparkSession, sf_dir: str, weight: Callable[[Column], Column]
+) -> DataFrame:
+    """Robust regression of extendedprice on quantity: `_ROBUST_ROUNDS`
+    IRLS rounds with z = y and w = `weight(residual)`, seeded at the
+    mean price, read out as (n_rows, intercept, slope, mean_abs_resid).
 
-    Determinism: each round's five weighted moments round ONCE into
-    DECIMAL(38,9) before summing (partitioning-invariant); the 2×2
-    solve is a fixed IEEE chain on those doubles; the oracle unrolls
-    the identical rounds as MATERIALIZED CTEs (the logistic_glm_irls
-    device, queries/audits.py).
-
-    Plan shape: _LAD_ROUNDS aggregate-only passes over the fact scan,
-    each a map-side-combining 5-sum reduce against a broadcast 1-row
-    coefficient frame — no per-row state, no sort. At 100 TB this is
-    a handful of scans, nothing else. The scan rides `spread=True`:
-    DECIMAL(38,9) partial sums are CPU-bound, so a row-group-starved
-    scan (3 tasks here) serializes each pass; the spread is a no-op on
-    properly sized cluster files (catalog.table guard)."""
+    Plan shape: `_ROBUST_ROUNDS` aggregate-only passes over the fact
+    scan, each a map-side-combining 5-sum reduce — no per-row state, no
+    sort. At 100 TB this is a handful of scans, nothing else. The scan
+    rides `spread=True`: DECIMAL(38,9) partial sums are CPU-bound, so a
+    row-group-starved scan (3 tasks here) serializes each pass; the
+    spread is a no-op on properly sized cluster files (catalog.table
+    guard)."""
     li = table(spark, sf_dir, "lineitem", spread=True)
+    # One materialization feeds all _ROBUST_ROUNDS+2 aggregate passes:
+    # the projected relation is 2 doubles/row, so checkpointing it beats
+    # re-running scan+spread per pass (same device as operators/ranks.py).
     base = li.select(
         F.col("l_quantity").cast("double").alias("x"),
         F.col("l_extendedprice").cast("double").alias("y"),
-    )
-    # One materialization feeds all _LAD_ROUNDS+2 aggregate passes: the
-    # projected relation is 2 doubles/row, so checkpointing it beats
-    # re-running scan+spread per pass (same device as operators/ranks.py).
-    base = base.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     dec6 = lambda c: F.round(c, 6).cast("decimal(38,6)")  # noqa: E731
-    dec9 = lambda c: F.round(c, 9).cast("decimal(38,9)")  # noqa: E731
-    # Eager-literal IRLS loop — see poisson_glm_irls for the device
-    # (exact-double round-trip per round, identical JVM expression
-    # chains, driver plan-construction cost removed).
     seed = base.agg(
         (F.sum(dec6(F.col("y"))).cast("double") / F.count(F.lit(1))).alias("b0"),
     ).first()
-    if seed["b0"] is None:  # empty input: propagate NULLs like the lazy chain did
-        return base.agg(F.count(F.lit(1)).cast("bigint").alias("n_rows")).select(
-            "n_rows",
-            *[
-                F.lit(None).cast("double").alias(a)
-                for a in ("intercept", "slope", "mean_abs_resid")
-            ],
-        )
-    b0, b1 = float(seed["b0"]), 0.0
-    for _ in range(_LAD_ROUNDS):
-        r = F.col("y") - F.lit(b0) - F.lit(b1) * F.col("x")
-        w = 1.0 / F.greatest(F.abs(r), F.lit(1.0))
-        s = base.agg(
-            F.sum(dec9(w)).cast("double").alias("sw"),
-            F.sum(dec9(w * F.col("x"))).cast("double").alias("swx"),
-            F.sum(dec9(w * F.col("x") * F.col("x"))).cast("double").alias("swxx"),
-            F.sum(dec9(w * F.col("y"))).cast("double").alias("swy"),
-            F.sum(dec9(w * F.col("x") * F.col("y"))).cast("double").alias("swxy"),
-        )
-        det = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
-        # det==0 (collinear/degenerate input) guard — see
-        # poisson_glm_irls: when() skips the ANSI-throwing division and
-        # the loop stops at the current coefficients; real inputs have
-        # det != 0, so values are unchanged.
-        nxt = s.select(
-            F.when(
-                det != 0.0,
-                (F.col("swxx") * F.col("swy") - F.col("swx") * F.col("swxy")) / det,
-            ).alias("b0"),
-            F.when(
-                det != 0.0,
-                (F.col("sw") * F.col("swxy") - F.col("swx") * F.col("swy")) / det,
-            ).alias("b1"),
-        ).first()
-        if nxt["b0"] is None or nxt["b1"] is None:
-            break
-        b0, b1 = float(nxt["b0"]), float(nxt["b1"])
+    if seed["b0"] is None:
+        return null_fit(base, "n_rows", ("intercept", "slope", "mean_abs_resid"))
+
+    def step(b0: Column, b1: Column) -> tuple[Column, Column]:
+        return weight(F.col("y") - b0 - b1 * F.col("x")), F.col("y")
+
+    b0, b1 = irls_fit(base, float(seed["b0"]), _ROBUST_ROUNDS, step)
     resid = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         (
@@ -733,4 +666,25 @@ def quantile_regression_lad(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.lit(b0), 4).alias("intercept"),
         F.round(F.lit(b1), 4).alias("slope"),
         F.round("mar", 4).alias("mean_abs_resid"),
+    )
+
+
+@register(
+    "quantile_regression_lad",
+    oracle=robust_line_oracle("1.0 / greatest(abs({r}), 1.0)"),
+)
+def quantile_regression_lad(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Median (least-absolute-deviations) regression of extendedprice
+    on quantity via 3 unrolled IRLS rounds (w = 1/max(|r|, 1) — the
+    standard smoothed-LAD reweighting): the outlier-robust twin of
+    `ols_price_regression`, converging to the conditional-median line
+    the L2 fit gets dragged off by price spikes.
+
+    Determinism: each round's five weighted moments round ONCE into
+    DECIMAL(38,9) before summing (partitioning-invariant); the 2×2
+    solve is a fixed IEEE chain on those doubles; the oracle unrolls
+    the identical rounds as MATERIALIZED CTEs (the operators/irls.py
+    device). Body and plan shape: `robust_line_fit`."""
+    return robust_line_fit(
+        spark, sf_dir, lambda r: 1.0 / F.greatest(F.abs(r), F.lit(1.0))
     )

@@ -42,6 +42,10 @@ from ocean_data_pipeline_spark.queries.graph_ops import (
     _EDGES_SQL,
     _copurchase_edges,
 )
+from ocean_data_pipeline_spark.queries.wave29_ops import (
+    robust_line_fit,
+    robust_line_oracle,
+)
 
 # --- shared fragments ------------------------------------------------------
 
@@ -424,65 +428,15 @@ def mcnemar_doc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Huber M-estimator regression by unrolled IRLS --------------------------
 
-_HUBER_ROUNDS = 3
 _HUBER_K = 20000.0  # fixed tuning constant on price residuals (docstring)
 
 
-def _huber_oracle() -> str:
-    head = """
-WITH base AS MATERIALIZED (
-  SELECT CAST(l_quantity AS DOUBLE) AS x,
-         CAST(l_extendedprice AS DOUBLE) AS y
-  FROM lineitem
-),
-b0r AS MATERIALIZED (
-  SELECT CAST(sum(CAST(round(y, 6) AS DECIMAL(38,6))) AS DOUBLE) / count(*)
-           AS b0,
-         CAST(0.0 AS DOUBLE) AS b1
-  FROM base
-)"""
-    rounds = []
-    prev = "b0r"
-    for r in range(1, _HUBER_ROUNDS + 1):
-        rounds.append(f""",
-s{r} AS MATERIALIZED (
-  SELECT sum(CAST(round(w, 9) AS DECIMAL(38,9))) AS sw,
-         sum(CAST(round(w * x, 9) AS DECIMAL(38,9))) AS swx,
-         sum(CAST(round(w * x * x, 9) AS DECIMAL(38,9))) AS swxx,
-         sum(CAST(round(w * y, 9) AS DECIMAL(38,9))) AS swy,
-         sum(CAST(round(w * x * y, 9) AS DECIMAL(38,9))) AS swxy
-  FROM (
-    SELECT x, y,
-           least(1.0, {_HUBER_K} / greatest(abs(y - p.b0 - p.b1 * x), 1e-12))
-             AS w
-    FROM base, {prev} p
-  )
-),
-b{r} AS MATERIALIZED (
-  SELECT (CAST(swxx AS DOUBLE) * CAST(swy AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swxy AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b0,
-         (CAST(sw AS DOUBLE) * CAST(swxy AS DOUBLE)
-          - CAST(swx AS DOUBLE) * CAST(swy AS DOUBLE))
-         / (CAST(sw AS DOUBLE) * CAST(swxx AS DOUBLE)
-            - CAST(swx AS DOUBLE) * CAST(swx AS DOUBLE)) AS b1
-  FROM s{r}
-)""")
-        prev = f"b{r}"
-    tail = f"""
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM base) AS n_rows,
-       round(p.b0, 4) AS intercept,
-       round(p.b1, 4) AS slope,
-       round(CAST((SELECT sum(CAST(round(abs(y - p.b0 - p.b1 * x), 6)
-                                   AS DECIMAL(38,6)))
-                   FROM base) AS DOUBLE)
-             / (SELECT count(*) FROM base), 4) AS mean_abs_resid
-FROM {prev} p"""
-    return head + "".join(rounds) + tail
-
-
-@register("huber_regression_irls", oracle=_huber_oracle())
+@register(
+    "huber_regression_irls",
+    oracle=robust_line_oracle(
+        f"least(1.0, {_HUBER_K} / greatest(abs({{r}}), 1e-12))"
+    ),
+)
 def huber_regression_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Huber M-estimator regression of extendedprice on quantity via 3
     unrolled IRLS rounds with w = min(1, K/|r|), K = 20000 (a FIXED
@@ -492,81 +446,15 @@ def huber_regression_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
     `quantile_regression_lad` (L1): quadratic loss near the line,
     linear beyond K.
 
-    Determinism: the `quantile_regression_lad` discipline verbatim —
-    each round's five weighted moments round ONCE into DECIMAL(38,9)
-    (partitioning-invariant), the 2x2 solve is a fixed IEEE chain, the
-    oracle unrolls identical MATERIALIZED CTEs.
-
-    Plan shape: _HUBER_ROUNDS aggregate-only passes over one
-    spread+localCheckpointed (x, y) projection (the LAD device: the
-    DECIMAL partials are CPU-bound, so the scan must not inherit
-    row-group-starved parallelism)."""
-    li = table(spark, sf_dir, "lineitem", spread=True)
-    base = li.select(
-        F.col("l_quantity").cast("double").alias("x"),
-        F.col("l_extendedprice").cast("double").alias("y"),
-    ).localCheckpoint(eager=False)
-    dec6 = lambda c: F.round(c, 6).cast("decimal(38,6)")  # noqa: E731
-    dec9 = lambda c: F.round(c, 9).cast("decimal(38,9)")  # noqa: E731
-    # Eager-literal IRLS loop — see poisson_glm_irls for the device
-    # (exact-double round-trip per round, identical JVM expression
-    # chains, driver plan-construction cost removed).
-    seed = base.agg(
-        (F.sum(dec6(F.col("y"))).cast("double") / F.count(F.lit(1))).alias("b0"),
-    ).first()
-    if seed["b0"] is None:  # empty input: propagate NULLs like the lazy chain did
-        return base.agg(F.count(F.lit(1)).cast("bigint").alias("n_rows")).select(
-            "n_rows",
-            *[
-                F.lit(None).cast("double").alias(a)
-                for a in ("intercept", "slope", "mean_abs_resid")
-            ],
-        )
-    b0, b1 = float(seed["b0"]), 0.0
-    for _ in range(_HUBER_ROUNDS):
-        r = F.col("y") - F.lit(b0) - F.lit(b1) * F.col("x")
-        w = F.least(
+    Determinism, body and plan shape: `quantile_regression_lad` with
+    another weight (`robust_line_fit`, queries/wave29_ops.py, on the
+    operators/irls.py device)."""
+    return robust_line_fit(
+        spark,
+        sf_dir,
+        lambda r: F.least(
             F.lit(1.0), F.lit(_HUBER_K) / F.greatest(F.abs(r), F.lit(1e-12))
-        )
-        s = base.agg(
-            F.sum(dec9(w)).cast("double").alias("sw"),
-            F.sum(dec9(w * F.col("x"))).cast("double").alias("swx"),
-            F.sum(dec9(w * F.col("x") * F.col("x"))).cast("double").alias("swxx"),
-            F.sum(dec9(w * F.col("y"))).cast("double").alias("swy"),
-            F.sum(dec9(w * F.col("x") * F.col("y"))).cast("double").alias("swxy"),
-        )
-        det = F.col("sw") * F.col("swxx") - F.col("swx") * F.col("swx")
-        # det==0 (collinear/degenerate input) guard — see
-        # poisson_glm_irls: when() skips the ANSI-throwing division and
-        # the loop stops at the current coefficients; real inputs have
-        # det != 0, so values are unchanged.
-        nxt = s.select(
-            F.when(
-                det != 0.0,
-                (F.col("swxx") * F.col("swy") - F.col("swx") * F.col("swxy")) / det,
-            ).alias("b0"),
-            F.when(
-                det != 0.0,
-                (F.col("sw") * F.col("swxy") - F.col("swx") * F.col("swy")) / det,
-            ).alias("b1"),
-        ).first()
-        if nxt["b0"] is None or nxt["b1"] is None:
-            break
-        b0, b1 = float(nxt["b0"]), float(nxt["b1"])
-    resid = base.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        (
-            F.sum(
-                dec6(F.abs(F.col("y") - F.lit(b0) - F.lit(b1) * F.col("x")))
-            ).cast("double")
-            / F.count(F.lit(1))
-        ).alias("mar"),
-    )
-    return resid.select(
-        "n_rows",
-        F.round(F.lit(b0), 4).alias("intercept"),
-        F.round(F.lit(b1), 4).alias("slope"),
-        F.round("mar", 4).alias("mean_abs_resid"),
+        ),
     )
 
 

@@ -38,7 +38,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", shuffle_partitions=8)
+    spark = get_spark("tests")
     yield spark
 
 

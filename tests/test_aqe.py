@@ -131,6 +131,10 @@ def test_aqe_splits_measured_skew_from_testdata(spark):
             "spark.sql.adaptive.skewJoin.enabled": "true",
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "128KB",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+            # the test's own partition count: with fewer (e.g. 4 on a
+            # 4-core host) the hot partition is under skewedPartitionFactor
+            # times the median and AQE rightly declines to split it
+            "spark.sql.shuffle.partitions": "8",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64KB",
             "spark.sql.adaptive.coalescePartitions.enabled": "false",
             "spark.sql.autoBroadcastJoinThreshold": "-1",

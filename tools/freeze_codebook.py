@@ -48,7 +48,7 @@ def main() -> None:
     from pyspark.ml.functions import array_to_vector
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark("freeze-codebook", shuffle_partitions=8)
+    spark = get_spark("freeze-codebook")
     emb = table(spark, sf_dir, "embeddings")
     feat = emb.select(
         array_to_vector(F.col("embedding").cast("array<double>")).alias("features")

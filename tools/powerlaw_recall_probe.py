@@ -44,7 +44,7 @@ from ocean_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    spark = get_spark("powerlaw-recall-probe", shuffle_partitions=32)
+    spark = get_spark("powerlaw-recall-probe")
     t0 = time.perf_counter()
     edges = powerlaw_edges(spark).localCheckpoint()
 

@@ -56,7 +56,7 @@ def time_op(build) -> float:
 
 
 def main() -> None:
-    spark = get_spark("scale-probe", shuffle_partitions=32)
+    spark = get_spark("scale-probe")
     docs1 = table(spark, SF_DIR, "documents", spread=True)
     li1 = table(spark, SF_DIR, "lineitem", spread=True)
     docs10 = replicate(docs1, "doc_id", COPIES)
