@@ -61,6 +61,7 @@ _FRONT: tuple[str, ...] = (
     "propensity_stratified_ate",
     "quantile_regression_lad",
     "huber_regression_irls",
+    "bfs_reachability",
 )
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.components import _CC_LOCAL_EDGE_CAP
 from ocean_data_pipeline_spark.queries import register
 
 #: Probe→route broadcast ceilings (round 11, guide §3.1). Checkpointed
@@ -746,29 +747,105 @@ def bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     related-items-expansion query a recommender or recall-expansion
     stage runs. Census rows per hop distance, -1 = unreachable in 3.
 
-    Fixed-depth unrolled BFS (3 frontier joins, each an equi-join on
-    the node key + anti-join against the visited set) — the standard
-    Pregel-free formulation for bounded-hop queries; an unbounded
-    variant would loop with localCheckpoint per round like
-    `kcore_copurchase`. The frontier relation shrinks to O(reached
-    nodes), so each hop shuffles at most the adjacency rows of the
-    current frontier; the census output is O(1)."""
+    Two routes, chosen from measured sizes (guide §3.1 probe→route):
+
+    - Local: with at most `_BCAST_NODES` parts and at most
+      `_CC_LOCAL_EDGE_CAP` lineitem rows, the non-null (orderkey,
+      partkey) incidence and the tagged seed parts go to ONE Arrow
+      task, which walks part → orders → parts three times with
+      `searchsorted` over sorted copies of the incidence (each step
+      keeps the unique keys it reaches, so repeated pairs need no
+      distinct shuffle). A part's
+      co-purchase neighbours are exactly the other parts of its
+      orders, so this reaches the same node sets as the `pa < pb`
+      edge list, with no self-join, edge distinct, per-hop broadcast
+      or checkpoint. The lineitem row count bounds what the task
+      holds (the same per-task bound as the union-find path in
+      `operators/components.py`).
+    - Distributed, above either cap: fixed-depth unrolled BFS (3
+      frontier joins, each an equi-join on the node key + anti-join
+      against the visited set, checkpointed per hop) — the standard
+      Pregel-free formulation for bounded-hop queries. The frontier
+      relation shrinks to O(reached nodes), so each hop shuffles at
+      most the adjacency rows of the current frontier; the census
+      output is O(1)."""
+    part = table(spark, sf_dir, "part")
+    # One parquet-metadata count: the node-domain size routes the
+    # query and the per-hop broadcasts below AND supplies the output's
+    # n_parts / node_share scalars as literals (the frontier and
+    # visited sets are ≤ n_parts rows by construction, so one probe
+    # certifies every hop; above the cap the unchanged shuffled joins
+    # run).
+    n_parts = part.count()
+    seeds = part.filter(F.col("p_partkey") % 97 == 0).select(
+        F.col("p_partkey").alias("node")
+    )
+    lineitem = table(spark, sf_dir, "lineitem")
+    if n_parts <= _BCAST_NODES and lineitem.count() <= _CC_LOCAL_EDGE_CAP:
+        incidence = lineitem.select(
+            F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("node")
+        ).dropna()
+        tagged = incidence.withColumn("seed", F.lit(False)).unionByName(
+            seeds.withColumn("seed", F.lit(True)), allowMissingColumns=True
+        )
+
+        def census(batches):
+            import numpy as np
+            import pyarrow as pa
+            import pyarrow.compute as pc
+
+            k, node, seed_rows = [], [], []
+            for b in batches:
+                tag = b.column("seed")
+                inc, sd = b.filter(pc.invert(tag)), b.filter(tag)
+                k.append(inc.column("k").to_numpy(zero_copy_only=False))
+                node.append(inc.column("node").to_numpy(zero_copy_only=False))
+                seed_rows.append(sd.column("node").to_numpy(zero_copy_only=False))
+            k, node, seed_rows = (
+                np.concatenate(c) if c else np.empty(0, np.int64)
+                for c in (k, node, seed_rows)
+            )
+            by_part, by_order = np.argsort(node), np.argsort(k)
+            part_sorted, order_of_part = node[by_part], k[by_part]
+            order_sorted, part_of_order = k[by_order], node[by_order]
+
+            def expand(keys, sorted_keys, values):
+                # unique values of every sorted_keys slot equal to a key:
+                # the [lo, lo + n) runs, gathered as one index vector
+                lo = np.searchsorted(sorted_keys, keys, "left")
+                n = np.searchsorted(sorted_keys, keys, "right") - lo
+                start = np.repeat(lo - np.cumsum(n) + n, n)
+                return np.unique(values[start + np.arange(n.sum())])
+
+            visited = frontier = np.unique(seed_rows)
+            counts = [len(seed_rows)]
+            for _ in range(3):
+                orders = expand(frontier, part_sorted, order_of_part)
+                reached = expand(orders, order_sorted, part_of_order)
+                frontier = np.setdiff1d(reached, visited, assume_unique=True)
+                visited = np.union1d(visited, frontier)
+                counts.append(len(frontier))
+            n_nodes = [n_parts - sum(counts)] + counts
+            yield pa.RecordBatch.from_pydict(
+                {
+                    "dist": pa.array(range(-1, 4), pa.int32()),
+                    "n_nodes": pa.array(n_nodes, pa.int64()),
+                    "node_share": pa.array(
+                        [float(c) / float(n_parts) if n_parts > 0 else None
+                         for c in n_nodes],
+                        pa.float64(),
+                    ),
+                }
+            )
+
+        return tagged.coalesce(1).mapInArrow(
+            census, "dist int, n_nodes bigint, node_share double"
+        )
     edges = _copurchase_edges(spark, sf_dir, checkpoint=True)
     sym = edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
         edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
     )
-    part = table(spark, sf_dir, "part")
-    # One parquet-metadata count: the node-domain size routes the
-    # per-hop broadcasts below AND supplies the output's n_parts /
-    # node_share scalars as literals (guide §3.1 probe→route — the
-    # frontier and visited sets are ≤ n_parts rows by construction, so
-    # one probe certifies every hop; above the cap the unchanged
-    # shuffled joins run).
-    n_parts = part.count()
     bcast = n_parts <= _BCAST_NODES
-    seeds = part.filter(F.col("p_partkey") % 97 == 0).select(
-        F.col("p_partkey").alias("node")
-    )
     visited = seeds.withColumn("dist", F.lit(0))
     frontier = seeds
     for hop in (1, 2, 3):

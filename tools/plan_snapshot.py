@@ -38,7 +38,8 @@ SKIP = {"near_dup_components", "near_dup_components_star", "dedup_pipeline_end2e
         "stream_hll_registers",
         "er_pipeline_end2end",  # components driver loop
         # wave 7: component-label convergence loop (round count is
-        # data-dependent; bfs_reachability's FIXED 3-hop loop is fine)
+        # data-dependent; bfs_reachability is snapshotted: below its
+        # caps it plans one Arrow task, above them a FIXED 3-hop loop)
         "grid_hotspot_clusters",
         # wave 9/10: BPE's per-round argmax is driver-side state; the
         # pyds stream is a streaming run
