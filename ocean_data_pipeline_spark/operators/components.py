@@ -31,8 +31,6 @@ dedup-near); the reference dedups by exact cache key only
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,9 +45,10 @@ from pyspark.sql import functions as F
 #: checkpoint + convergence action) — 9.2 s of almost pure job-scheduling
 #: overhead vs 0.25 s for the single task, with bit-identical labels.
 #: The threshold is a per-task memory bound (the DSU holds ≤ 2·edges
-#: dict entries), parameterized for real deployments; graphs above it
-#: take the unchanged iterative path, so the 100-TB posture is intact.
-_CC_LOCAL_EDGE_CAP = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "1000000"))
+#: dict entries); `connected_components(local_edge_cap=...)` overrides
+#: it per call. Graphs above it take the unchanged iterative path, so
+#: the 100-TB posture is intact.
+_CC_LOCAL_EDGE_CAP = 1_000_000
 
 
 def _local_union_find(ed: DataFrame) -> DataFrame:

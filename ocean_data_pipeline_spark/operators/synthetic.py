@@ -38,8 +38,8 @@ def powerlaw_edges(
     Defaults give a ~4000-node graph with expected max degree ~dmax,
     median degree well under the link-prediction cap of 64, and ~270
     hub nodes above it — the design-target topology for the hub cap.
-    Column names match `_copurchase_edges` so the wedge-census helpers
-    consume it unchanged.
+    Column names match `operators/graph.py::copurchase_edges` so the
+    graph devices consume it unchanged.
     """
     # sum(w) over i in [1, n]: driver-side scalar from the closed-form
     # weights (exact, no data pass needed)

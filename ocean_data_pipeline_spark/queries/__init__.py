@@ -62,6 +62,15 @@ _FRONT: tuple[str, ...] = (
     "quantile_regression_lad",
     "huber_regression_irls",
     "bfs_reachability",
+    "copurchase_triangle_census",
+    "part_degree_distribution",
+    "pagerank_copurchase_top20",
+    "kcore_copurchase",
+    "bellman_ford_distances",
+    "degree_assortativity",
+    "clustering_coefficient_census",
+    "link_prediction_scores",
+    "link_prediction_capped",
 )
 
 

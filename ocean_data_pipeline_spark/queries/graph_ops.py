@@ -5,47 +5,39 @@ document near-dup graphs, here on the star schema so the oracle is
 pure SQL).
 
 Graph construction: nodes are parts, an (undirected) edge connects two
-parts that appear in the same order. Canonical edge = (pa < pb), built
-by a self equi-join on l_orderkey — per-order fanout is C(items, 2)
-with items ≤ ~13, so edge generation is linear in orders, never
-all-pairs.
-
-Scale design (the part that matters at 100 TB): triangle enumeration
-uses the degree-ordered orientation of Suri & Vassilvitskii ("Counting
-Triangles and the Curse of the Last Reducer", WWW'11): each undirected
-edge is directed from its lower-(degree, id) endpoint to its
-higher-(degree, id) endpoint, so every node's out-degree is O(sqrt(m))
-on any graph and wedge generation is O(m^1.5) worst-case — a skewed
-hub node no longer produces deg² wedges. All stages are equi-joins
-(orderkey, node key, canonical pair), so the whole pipeline shuffles
-on keys and AQE handles residual skew.
+parts that appear in the same order. The edge list, its symmetrized
+form, the degree census, the degree-ordered orientation (Suri &
+Vassilvitskii, WWW'11: out-degree O(sqrt m), wedges O(m^1.5) on any
+graph) and the triangle relation are the shared device in
+`operators/graph.py`. All stages are equi-joins (orderkey, node key,
+canonical pair), so the whole pipeline shuffles on keys and AQE
+handles residual skew.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
 from ocean_data_pipeline_spark.operators.components import _CC_LOCAL_EDGE_CAP
+from ocean_data_pipeline_spark.operators.graph import (
+    _BCAST_EDGES,
+    _BCAST_NODES,
+    copurchase_edges,
+    degree_census,
+    orient_by_degree,
+    oriented_triangles,
+    symmetrize,
+)
 from ocean_data_pipeline_spark.queries import register
-
-#: Probe→route broadcast ceilings (round 11, guide §3.1). Checkpointed
-#: relations carry no stats, so neither the tuned session nor the
-#: driver's vanilla session ever auto-broadcasts them — every broadcast
-#: below is an explicit hint gated on a MEASURED count from a node-scale
-#: probe, so the local plan gets map-side joins while a 100-TB graph
-#: (counts above the cap) falls back to the unchanged shuffled join.
-_BCAST_EDGES = int(os.environ.get("SPARK_GRAFT_GRAPH_BCAST_EDGES", "8000000"))
-_BCAST_NODES = int(os.environ.get("SPARK_GRAFT_GRAPH_BCAST_NODES", "4000000"))
 
 
 def _copurchase_edges(
     spark: SparkSession, sf_dir: str, checkpoint: bool = False
 ) -> DataFrame:
-    """Distinct canonical co-purchase edges (pa < pb).
+    """Distinct canonical co-purchase edges (pa < pb) of the lineitem
+    table (`operators/graph.py::copurchase_edges`).
 
     `checkpoint=True` materializes the edge list once (localCheckpoint,
     same device as `operators/components.py`): the census consumes the
@@ -55,137 +47,8 @@ def _copurchase_edges(
     of the query's runtime. On a multi-executor cluster the same role
     is played by reliable checkpoint/cache; the edge list is O(orders ·
     C(order size, 2)), linear in the corpus."""
-    pl = (
-        table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-    b = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("pa") < F.col("pb"))
-        .select("pa", "pb")
-        .distinct()
-    )
+    edges = copurchase_edges(table(spark, sf_dir, "lineitem"))
     return edges.localCheckpoint() if checkpoint else edges
-
-
-def _oriented_triangles(spark: SparkSession, edges: DataFrame, deg: DataFrame) -> DataFrame:
-    """Exact triangle relation (a, b, c) of the canonical edge list,
-    one row per triangle, via the degree-ordered orientation.
-
-    Plan shape (the `link_prediction_scores` packed-key device applied
-    to the closing join): two edge-scale equi-joins attach endpoint
-    degrees and orient each edge low→high (out-degree O(sqrt m) under
-    this orientation, so the wedge relation is O(m^1.5) regardless of
-    hub skew); per-source SORTED adjacency lists generate each wedge
-    map-side as ONE packed BIGINT (x << 32 | y) — no wedge-scale
-    self-join shuffle; the close is a single-long hash join against the
-    packed canonical edge list (shuffles wedge mass once — the honest
-    exact cost; an edge broadcast would die at scale). The adjacency-list
-    relation is node-scale and repartitioned to 3x cores before the
-    explode so partial work spreads.
-
-    The pack requires ids < 2^32. TPC-H partkey = 200000*SF crosses
-    that at SF~21500 (~21 PB), so the device is guarded: a node-scale
-    max(id) probe picks the packed hot path when ids fit, else an
-    equivalent struct-keyed close (same join shape, two-column key —
-    slightly wider shuffle rows, no overflow). Keys never collide in
-    either path.
-
-    a = wedge source (the triangle's min-(degree, id) corner), (b, c) =
-    the closing canonical edge, b < c by id."""
-    # One node-scale probe job: max id (packed-key guard), node count and
-    # Σdeg = 2·|E| (broadcast routes). Checkpointed inputs carry no
-    # stats, so the broadcasts below are explicit probe-gated hints —
-    # local plans go map-side, above-cap graphs keep the shuffled joins.
-    st = deg.agg(
-        F.max("node").alias("max_id"),
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.coalesce(F.sum("degree"), F.lit(0)).alias("two_m"),
-    ).first()
-    max_id = st["max_id"]
-    n_nodes, n_edges = int(st["n_nodes"]), int(st["two_m"]) // 2
-    dega = deg.select(F.col("node").alias("pa"), F.col("degree").alias("da"))
-    degb = deg.select(F.col("node").alias("pb"), F.col("degree").alias("db"))
-    if n_nodes <= _BCAST_NODES:
-        dega, degb = F.broadcast(dega), F.broadcast(degb)
-    e = (
-        edges.join(dega, "pa")
-        .join(degb, "pb")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))),
-                F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-            )
-            .otherwise(F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-            .alias("o")
-        )
-        .select("o.src", "o.dst")
-    )
-    adj = e.groupBy("src").agg(F.array_sort(F.collect_list("dst")).alias("ds"))
-    ids = F.col("ds")
-    fanout = spark.sparkContext.defaultParallelism * 3
-    if max_id is not None and max_id < (1 << 32):
-        packed = F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + 2, F.size(ids)),
-                    lambda y: F.shiftleft(x.cast("long"), 32) + y.cast("long"),
-                ),
-            )
-        )
-        wk = adj.repartition(fanout).select(
-            F.col("src").alias("s"), F.explode(packed).alias("k")
-        )
-        ek = edges.select(
-            (F.shiftleft(F.col("pa").cast("long"), 32) + F.col("pb").cast("long")).alias("k")
-        )
-        if n_edges <= _BCAST_EDGES:
-            # Broadcasting the single-long edge keys keeps the wedge
-            # mass map-side: it streams from the adjacency explode
-            # straight into the closing hash join (and the consumer's
-            # partial agg) without a wedge-scale Exchange.
-            ek = F.broadcast(ek)
-        # Decode with a LOGICAL shift: ids in [2^31, 2^32) pass the guard
-        # but put the high half's top bit in the long's sign bit, so the
-        # arithmetic shiftright would sign-extend and return b - 2^32.
-        # shiftrightunsigned zero-fills; keys themselves are unaffected
-        # (the pack is injective mod 2^64 on both sides of the join).
-        return wk.join(ek, "k").select(
-            F.col("s").alias("a"),
-            F.shiftrightunsigned(F.col("k"), 32).cast("bigint").alias("b"),
-            F.col("k").bitwiseAND(F.lit((1 << 32) - 1)).cast("bigint").alias("c"),
-        )
-    # ids exceed 32 bits: same degree-oriented close, two-column struct key.
-    wedges = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(
-                    x.cast("bigint").alias("b"), y.cast("bigint").alias("c")
-                ),
-            ),
-        )
-    )
-    wk = adj.repartition(fanout).select(
-        F.col("src").alias("s"), F.explode(wedges).alias("k")
-    )
-    ek = edges.select(
-        F.struct(
-            F.col("pa").cast("bigint").alias("b"),
-            F.col("pb").cast("bigint").alias("c"),
-        ).alias("k")
-    )
-    if n_edges <= _BCAST_EDGES:
-        ek = F.broadcast(ek)
-    return wk.join(ek, "k").select(
-        F.col("s").alias("a"), F.col("k.b").alias("b"), F.col("k.c").alias("c")
-    )
 
 
 _EDGES_SQL = """
@@ -245,12 +108,7 @@ def copurchase_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregates.
     """
     edges = _copurchase_edges(spark, sf_dir, checkpoint=True)
-    deg = (
-        edges.select(F.col("pa").alias("node"))
-        .unionAll(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    ).localCheckpoint()
+    deg = degree_census(edges).localCheckpoint()
     # One node-scale probe over the checkpointed degree census yields
     # THREE of the output scalars (n_nodes, n_edges = Σdeg/2, the wedge
     # sum) plus the broadcast-route counts — replacing three separate
@@ -265,30 +123,12 @@ def copurchase_triangle_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).first()
     n_nodes, n_edges = int(st["n_nodes"]), int(st["two_m"]) // 2
     deg_pairs2 = int(st["deg_pairs2"])
-    # Orient each edge from lower (degree, id) to higher (degree, id).
     # Count-only consumer: the wedge self-join pipelines straight into
     # the closing join + count (partial aggs absorb map-side), so the
-    # adjacency-list packed-explode of `_oriented_triangles` buys
-    # nothing here — it pays off only when per-node incidences are
-    # needed (see `clustering_coefficient_census`).
-    dega = deg.select(F.col("node").alias("pa"), F.col("degree").alias("da"))
-    degb = deg.select(F.col("node").alias("pb"), F.col("degree").alias("db"))
-    if n_nodes <= _BCAST_NODES:
-        dega, degb = F.broadcast(dega), F.broadcast(degb)
-    e = (
-        edges.join(dega, "pa")
-        .join(degb, "pb")
-        .select(
-            F.when(
-                (F.col("da") < F.col("db"))
-                | ((F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))),
-                F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-            )
-            .otherwise(F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst")))
-            .alias("o")
-        )
-        .select("o.src", "o.dst")
-    )
+    # adjacency-list keyed explode of `oriented_triangles` buys nothing
+    # here — it pays off only when per-node incidences are needed (see
+    # `clustering_coefficient_census`).
+    e = orient_by_degree(edges, deg, n_nodes)
     # Wedges from a common source; canonical closing pair is (min, max)
     # by id because the undirected edge list is canonical by id.
     w1 = e.select(F.col("src").alias("s"), F.col("dst").alias("x"))
@@ -337,13 +177,7 @@ def part_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: the edge census (equi-join + distinct), one partial
     agg per endpoint onto node keys, one partial agg onto the ≤max-
     degree histogram grid. Linear in edges; integer-exact output."""
-    edges = _copurchase_edges(spark, sf_dir)
-    deg = (
-        edges.select(F.col("pa").alias("node"))
-        .unionAll(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    deg = degree_census(_copurchase_edges(spark, sf_dir))
     return (
         deg.groupBy("degree")
         .agg(F.count(F.lit(1)).alias("n_parts"))
@@ -414,17 +248,12 @@ def pagerank_copurchase_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     the edge relation partitioning reused. Top-20 is
     TakeOrderedAndProject, no global sort."""
     edges = _copurchase_edges(spark, sf_dir, checkpoint=True)
-    deg = (
-        edges.select(F.col("pa").alias("node"))
-        .unionAll(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    ).localCheckpoint()
+    deg = degree_census(edges).localCheckpoint()
     sym = (
-        edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .unionAll(edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
+        symmetrize(edges)
         .join(deg.select(F.col("node").alias("src"), "degree"), "src")
-    ).localCheckpoint()
+        .localCheckpoint()
+    )
     n_nodes = deg.count()  # one scalar; bounds every rank expression
     if n_nodes == 0:
         return deg.select(
@@ -524,9 +353,7 @@ def kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sym stays a lazy union PROJECTION of the checkpointed edge list —
     # it is only ever scanned map-side below, so materializing it would
     # just double the edge bytes held in the block manager.
-    sym = edges.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionAll(
-        edges.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
-    )
+    sym = symmetrize(edges, "u", "v")
     n_edges = edges.count() * 2
     # Round-11 loop shape (guide §1.2 step 1): incremental simultaneous
     # peel. The former loop re-counted degrees from, and semi-filtered,
@@ -842,9 +669,7 @@ def bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             census, "dist int, n_nodes bigint, node_share double"
         )
     edges = _copurchase_edges(spark, sf_dir, checkpoint=True)
-    sym = edges.select(F.col("pa").alias("src"), F.col("pb").alias("dst")).unionAll(
-        edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    sym = symmetrize(edges)
     bcast = n_parts <= _BCAST_NODES
     visited = seeds.withColumn("dist", F.lit(0))
     frontier = seeds
@@ -1175,11 +1000,7 @@ def bellman_ford_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pa", "pb",
         (F.lit(1) + (F.col("pa") * 31 + F.col("pb") * 17) % 9).alias("w"),
     )
-    sym = wedges.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst"), "w"
-    ).unionAll(
-        wedges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"), "w")
-    )
+    sym = symmetrize(wedges)
     dist = (
         table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") % 97 == 0)
@@ -1255,9 +1076,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else is 1-row algebra. At 100 TB: same posture as the
     triangle census — edges are corpus-linear, degrees are a census."""
     edges = _copurchase_edges(spark, sf_dir, checkpoint=True)
-    sym = edges.select(
-        F.col("pa").alias("u"), F.col("pb").alias("v")
-    ).unionAll(edges.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
+    sym = symmetrize(edges, "u", "v")
     deg = (
         sym.groupBy(F.col("u").alias("node"))
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -1345,22 +1164,17 @@ def clustering_coefficient_census(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Plan shape: the shared edge census (localCheckpointed, consumed by
     degree + wedge subtrees), then the DEGREE-ORDERED wedge enumeration
-    of `_oriented_triangles` (out-degree O(sqrt m) under the
-    orientation, so the wedge relation is O(m^1.5) regardless of hub
-    skew — the id-ordered oracle form blows up on the hottest node at
-    scale), wedges emitted map-side as packed BIGINTs from sorted
-    adjacency lists and closed by one single-long hash join; each
+    of `operators/graph.py::oriented_triangles` (out-degree O(sqrt m)
+    under the orientation, so the wedge relation is O(m^1.5) regardless
+    of hub skew — the id-ordered oracle form blows up on the hottest
+    node at scale), wedges emitted map-side as packed BIGINTs from
+    sorted adjacency lists and closed by one single-long hash join; each
     triangle is found exactly once under either orientation, so the
     per-node incidence counts match the id-ordered oracle row for
     row."""
     edges = _copurchase_edges(spark, sf_dir, checkpoint=True)
-    deg = (
-        edges.select(F.col("pa").alias("node"))
-        .unionAll(edges.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    ).localCheckpoint()
-    tri = _oriented_triangles(spark, edges, deg)
+    deg = degree_census(edges).localCheckpoint()
+    tri = oriented_triangles(edges, deg)
     # ONE pass over the triangle relation: union-of-three-selects made
     # Spark build the whole wedge-explode + close subtree once per
     # branch (3x the wedge mass, verified in the AQE final plan);

@@ -35,8 +35,6 @@ Scale postures (per query, also in each docstring):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -490,9 +488,7 @@ def token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SSJ_T = 0.5
 #: Confirm-side broadcast ceiling (docs in the checkpointed panel);
 #: above it the confirm joins stay shuffled (the 100-TB path).
-_SSJ_BROADCAST_DOCS = int(
-    os.environ.get("SPARK_GRAFT_SSJ_BROADCAST_DOCS", "500000")
-)
+_SSJ_BROADCAST_DOCS = 500_000
 
 _SSJ_ORACLE = f"""
 WITH d AS (
@@ -564,8 +560,8 @@ def prefix_filter_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound, and Jaccard unchanged, so the result is bit-identical; the
     surrogate never reaches the output. The confirm side is
     broadcast when the checkpointed doc panel is small enough
-    (`SPARK_GRAFT_SSJ_BROADCAST_DOCS`, default 500k docs — the probe→
-    route device of `_wedge_pair_census`); above it, the unchanged
+    (`_SSJ_BROADCAST_DOCS`, 500k docs — the probe→route device of
+    `operators/graph.py::wedge_pair_census`); above it, the unchanged
     shuffled join runs."""
     d = _docs_tokens(spark, sf_dir, spread=True).filter(F.size("arr") >= 3)
     doc_sh = d.select(

@@ -13,6 +13,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.graph import (
+    link_scores,
+    sorted_adjacency,
+    wedge_pair_census,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- RANGE frame: peak 30-day customer spend ---------------------------------
@@ -441,235 +446,31 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     combining map-side. The census then anti-joins the edge list and
     TakeOrderedAndProject picks the 20 (never a global sort). The
     Adamic-Adar and Jaccard scores are computed ONLY for those 20
-    pairs in a post-pass: broadcast the 20 keys against the
-    degree-annotated adjacency lists (localCheckpointed once), and
-    Σ 1/ln(deg_w) runs over the array intersection per pair — 20 rows
-    of list algebra instead of 288 M decimal additions. The ENFORCED
-    hub cap lives in the twin `link_prediction_capped` (the 100-TB
-    shape: Σ min(deg,64)² wedge mass + exact confirm on survivors);
-    this exact version is its recall yardstick and rides SPREAD_ONLY
-    in the bench."""
+    pairs in a post-pass (`operators/graph.py::link_scores`): broadcast
+    the 20 keys against the sorted adjacency lists (localCheckpointed
+    once), and Σ 1/ln(deg_w) runs over the array intersection per pair
+    — 20 rows of list algebra instead of 288 M decimal additions. The
+    ENFORCED hub cap lives in the twin `link_prediction_capped` (the
+    100-TB shape: Σ min(deg,64)² wedge mass + exact confirm on
+    survivors); this exact version is its recall yardstick and rides
+    SPREAD_ONLY in the bench."""
     from ocean_data_pipeline_spark.queries.graph_ops import _copurchase_edges
 
     edges = _copurchase_edges(spark, sf_dir, checkpoint=True)
-    sym = edges.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionByName(
-        edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
     # LEAN adjacency (round 11): sorted plain-long neighbor lists — no
     # per-neighbor degree struct and no pre-groupBy broadcast-deg join
     # (half the collect_list shuffle bytes; the wedge explode reads the
     # long array directly). degree(w) == size(ids of w), so the 20-pair
     # post-pass recovers Adamic-Adar degrees from a node-scale
-    # projection of the same checkpoint; decimal term sums are exactly
-    # associative, so the values are identical in any order.
-    adj = (
-        sym.groupBy(F.col("src").alias("w"))
-        .agg(F.array_sort(F.collect_list("dst")).alias("ids"))
-        .localCheckpoint()
-    )
-    # _wedge_pair_census sizes BOTH census shuffles by the measured
-    # wedge mass (~3 M pairs/task): the map side repartitions the
-    # NODE-scale list relation before the explode so each partial
-    # aggregation's hash table stays resident (9 M keys/task falls
-    # back to sort+spill, 53 s vs 21 s at sf0.1), and the reduce side
-    # repartitions the exploded pairs BY KEY to the same width — the
-    # fixed-32-reducer layout probed 12.0x super-linear at 10x data
-    # (see the helper's docstring).
-    # the non-edge subtraction happens inside the helper's key space
-    # (broadcast-routed) so the pair-scale census output feeds the
-    # top-k directly — see _wedge_pair_census's minus_edges contract
-    census = _wedge_pair_census(
-        spark, adj, F.col("ids"), "cn", minus_edges=edges
-    )
+    # projection of the same checkpoint.
+    adj = sorted_adjacency(edges).localCheckpoint()
+    # wedge_pair_census sizes both census shuffles by the measured wedge
+    # mass and subtracts the edges inside key space (broadcast-routed),
+    # so the pair-scale census output feeds the top-k directly
+    census = wedge_pair_census(adj, F.col("ids"), "cn", minus_edges=edges)
     top20 = census.orderBy(F.desc("cn"), F.asc("a"), F.asc("c")).limit(20)
-    # post-pass: scores for exactly 20 pairs from the adjacency lists
-    na = adj.select(F.col("w").alias("a"), F.col("ids").alias("ids_a"))
-    nc = adj.select(F.col("w").alias("c"), F.col("ids").alias("ids_c"))
-    common = F.array_intersect("ids_a", "ids_c")
-    base = (
-        F.broadcast(na.join(F.broadcast(top20), "a"))
-        .join(nc, "c")
-        .select(
-            "a",
-            "c",
-            "cn",
-            F.size("ids_a").alias("da"),
-            F.size("ids_c").alias("dc"),
-            common.alias("common"),
-        )
-    )
-    degs = adj.select(F.col("w").alias("wid"), F.size("ids").alias("wdeg"))
-    aa_sum = F.coalesce(
-        F.sum(
-            F.round(1.0 / F.log(F.col("wdeg").cast("double")), 9).cast(
-                "decimal(28,9)"
-            )
-        ),
-        F.lit(0).cast("decimal(28,9)"),
-    ).cast("double")
-    return (
-        base.select(
-            "a", "c", "cn", "da", "dc",
-            F.explode_outer("common").alias("wid"),
-        )
-        .join(F.broadcast(degs), "wid", "left")
-        .groupBy("a", "c", "cn", "da", "dc")
-        .agg(aa_sum.alias("aa"))
-        .select(
-            F.col("a").alias("part_a"),
-            F.col("c").alias("part_b"),
-            F.col("cn").alias("common_neighbors"),
-            F.round(
-                F.col("cn").cast("double")
-                / (F.col("da") + F.col("dc") - F.col("cn")),
-                6,
-            ).alias("jaccard"),
-            F.round(F.col("aa"), 6).alias("adamic_adar"),
-        )
-        .orderBy(F.desc("common_neighbors"), F.asc("part_a"), F.asc("part_b"))
-    )
-
-
-def _wedge_pair_census(spark, adj, ids, count_alias: str, minus_edges=None):
-    """Ordered-pair census over per-node sorted neighbor-id lists: one
-    output row per distinct wedge endpoint pair (a, c) with its
-    common-neighbor count, columns (a, c, <count_alias>).
-
-    `minus_edges` (optional): a CANONICAL (pa < pb) edge relation —
-    ideally localCheckpointed — whose pairs are anti-joined away
-    INSIDE key space, before the decode (round 11, guide §3.1): the
-    edge keys pack/struct exactly like the census keys, and when the
-    measured edge count fits `SPARK_GRAFT_GRAPH_BCAST_EDGES` the anti
-    side is broadcast, so the pair-scale census output never crosses
-    the extra anti-join Exchange the callers used to pay. Above the
-    cap the anti-join stays shuffled (the 100-TB path). Wedge pairs
-    satisfy a < c (sorted-list suffix slices), edges satisfy pa < pb,
-    and both packs are injective below 2^32 (struct equality above),
-    so the subtraction is identical to the callers' former
-    (a = pa AND c = pb) left_anti.
-
-    Hot path emits each pair as ONE packed BIGINT (a << 32 | c) so the
-    wedge-mass aggregate is a bare count on a single long key. The
-    pack requires ids < 2^32 (TPC-H partkey crosses that at SF~21500),
-    so a node-scale max-id probe routes big-id graphs onto an
-    equivalent two-field struct key — same explode, same join shape,
-    slightly wider shuffle rows, no aliasing. The packed decode uses a
-    LOGICAL shift: ids in [2^31, 2^32) pass the guard but put the high
-    half's top bit in the long's sign bit, and the arithmetic
-    shiftright would sign-extend them back as a - 2^32 (ADVICE r09).
-    Join keys themselves never collide in either path.
-
-    `adj` must be node-scale with the node id in column `w` (every
-    node with degree >= 1 appears); `ids` is the per-row array of
-    neighbor ids to wedge over (full or capped prefix).
-
-    Shuffle sizing: the node-scale probe job also measures the exact
-    wedge mass (Σ C(|ids|, 2)) and sizes BOTH sides of the census to
-    ~3 M pairs per task (measured at sf0.1: 9 M/task falls back to
-    sort+spill, 3 M stays hash-resident). The reduce side repartitions
-    BY KEY to that width instead of inheriting the fixed
-    spark.sql.shuffle.partitions — the 10x scale probe measured 12.0x
-    super-linear with 32 fixed reducers (~13 M near-unique keys each,
-    all spilling); map-side combine loses nothing because pair
-    multiplicity is tiny, and AQE coalesces the width back down when
-    the mass is small."""
-    from ocean_data_pipeline_spark.queries.graph_ops import _BCAST_EDGES
-
-    sz = F.size(ids).cast("long")
-    stats = adj.agg(
-        F.max("w").alias("max_id"),
-        F.sum(sz * (sz - 1) / 2).cast("long").alias("mass"),
-    ).first()
-    max_id, mass = stats["max_id"], int(stats["mass"] or 0)
-    n_minus = minus_edges.count() if minus_edges is not None else None
-    fanout = max(
-        spark.sparkContext.defaultParallelism * 3, -(-mass // 3_000_000)
-    )
-    if max_id is not None and max_id < (1 << 32):
-        packed = F.flatten(
-            F.transform(
-                ids,
-                lambda x, i: F.transform(
-                    F.slice(ids, i + 2, F.size(ids)),
-                    lambda y: F.shiftleft(x.cast("long"), 32) + y.cast("long"),
-                ),
-            )
-        )
-        exploded = adj.repartition(fanout).select(F.explode(packed).alias("k"))
-        post_anti = None
-        if minus_edges is not None:
-            ek = minus_edges.select(
-                (
-                    F.shiftleft(F.col("pa").cast("long"), 32)
-                    + F.col("pb").cast("long")
-                ).alias("k")
-            )
-            if n_minus <= _BCAST_EDGES:
-                # MAP-SIDE subtraction, before the census shuffle: a
-                # wedge row whose endpoints form an edge (a triangle
-                # wedge — a large share of the mass on a clustered
-                # graph) never crosses the Exchange. Removing rows
-                # with k ∈ E before the group-by removes exactly the
-                # groups the post-agg anti-join removed: the group key
-                # IS k, so surviving groups and counts are identical.
-                exploded = exploded.join(F.broadcast(ek), "k", "left_anti")
-            else:
-                # shuffled fallback: anti-join the PAIR-scale census
-                # output, never the raw wedge mass (the 100-TB path)
-                post_anti = ek
-        census = (
-            exploded.repartition(fanout, "k")
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).cast("bigint").alias(count_alias))
-        )
-        if post_anti is not None:
-            census = census.join(post_anti, "k", "left_anti")
-        return census.select(
-            F.shiftrightunsigned(F.col("k"), 32).cast("bigint").alias("a"),
-            F.col("k")
-            .bitwiseAND(F.lit((1 << 32) - 1))
-            .cast("bigint")
-            .alias("c"),
-            count_alias,
-        )
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids)),
-                lambda y: F.struct(
-                    x.cast("bigint").alias("a"), y.cast("bigint").alias("c")
-                ),
-            ),
-        )
-    )
-    exploded = adj.repartition(fanout).select(F.explode(pairs).alias("k"))
-    post_anti = None
-    if minus_edges is not None:
-        ek = minus_edges.select(
-            F.struct(
-                F.col("pa").cast("bigint").alias("a"),
-                F.col("pb").cast("bigint").alias("c"),
-            ).alias("k")
-        )
-        if n_minus <= _BCAST_EDGES:
-            # map-side subtraction before the census shuffle — see the
-            # packed path above; group-key filtering commutes with the
-            # group-by, so the census is identical
-            exploded = exploded.join(F.broadcast(ek), "k", "left_anti")
-        else:
-            post_anti = ek
-    census = (
-        exploded.repartition(fanout, "k")
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).cast("bigint").alias(count_alias))
-    )
-    if post_anti is not None:
-        census = census.join(post_anti, "k", "left_anti")
-    return census.select(
-        F.col("k.a").alias("a"), F.col("k.c").alias("c"), count_alias
+    return link_scores(adj, top20, lambda common: F.col("cn")).orderBy(
+        F.desc("common_neighbors"), F.asc("part_a"), F.asc("part_b")
     )
 
 
@@ -766,87 +567,29 @@ def link_prediction_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms round ONCE into DECIMAL(28,9) before the sum; every ORDER BY
     is a total order over integers.
 
-    Plan shape: identical skeleton to the exact twin — node-scale
-    sorted adjacency lists (localCheckpointed once, reused by census
-    and confirm), packed-BIGINT map-side wedge explode over the CAPPED
-    prefix, bare-count aggregate, anti-join against the edge list,
+    Plan shape: identical skeleton to the exact twin, from the same
+    `operators/graph.py` devices — node-scale sorted adjacency lists
+    (localCheckpointed once, reused by census and confirm),
+    packed-BIGINT map-side wedge explode over the CAPPED prefix,
+    bare-count aggregate, anti-join against the edge list,
     TakeOrderedAndProject for the survivors, broadcast post-pass for
     the exact scores. At sf0.1 the cap cuts the wedge mass ~7×
     (Σ deg² ≈ 288 M → Σ min(deg,64)² ≈ 41 M ordered pairs)."""
     from ocean_data_pipeline_spark.queries.graph_ops import _copurchase_edges
 
     edges = _copurchase_edges(spark, sf_dir, checkpoint=True)
-    sym = edges.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionByName(
-        edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
-    # Round 11: LEAN adjacency — sorted plain-long neighbor lists (no
-    # per-neighbor degree struct, no pre-groupBy broadcast-deg join):
-    # half the collect_list shuffle bytes, and the wedge explode slices
-    # the long array directly. degree(w) == size(ids of w), so the
-    # 20-pair post-pass recovers Adamic-Adar degrees from a node-scale
-    # projection of the same checkpoint (decimal term sums are exactly
-    # associative — identical values in any order).
-    adj = (
-        sym.groupBy(F.col("src").alias("w"))
-        .agg(F.array_sort(F.collect_list("dst")).alias("ids"))
-        .localCheckpoint()
-    )
+    # the exact twin's LEAN adjacency, reused by census and confirm
+    adj = sorted_adjacency(edges).localCheckpoint()
     # capped prefix of the id-sorted list == the oracle's rank-by-id cap
     capped_ids = F.slice(F.col("ids"), 1, _LP_CAP)
-    census = _wedge_pair_census(
-        spark, adj, capped_ids, "cn_capped", minus_edges=edges
-    )
+    census = wedge_pair_census(adj, capped_ids, "cn_capped", minus_edges=edges)
     survivors = census.orderBy(
         F.desc("cn_capped"), F.asc("a"), F.asc("c")
     ).limit(_LP_SURVIVORS)
-    # exact confirm: full-list intersection per survivor pair; the
-    # common-neighbor degrees ride a broadcast node-scale join on the
-    # exploded (≤ _LP_SURVIVORS × |common|) relation
-    na = adj.select(F.col("w").alias("a"), F.col("ids").alias("ids_a"))
-    nc = adj.select(F.col("w").alias("c"), F.col("ids").alias("ids_c"))
-    common = F.array_intersect("ids_a", "ids_c")
-    base = (
-        F.broadcast(na.join(F.broadcast(survivors), "a"))
-        .join(nc, "c")
-        .select(
-            "a",
-            "c",
-            "cn_capped",
-            F.size(common).cast("bigint").alias("cn"),
-            F.size("ids_a").alias("da"),
-            F.size("ids_c").alias("dc"),
-            common.alias("common"),
-        )
-    )
-    degs = adj.select(F.col("w").alias("wid"), F.size("ids").alias("wdeg"))
-    aa_sum = F.coalesce(
-        F.sum(
-            F.round(1.0 / F.log(F.col("wdeg").cast("double")), 9).cast(
-                "decimal(28,9)"
-            )
-        ),
-        F.lit(0).cast("decimal(28,9)"),
-    ).cast("double")
+    # exact confirm: full-list intersection per survivor pair
     return (
-        base.select(
-            "a", "c", "cn_capped", "cn", "da", "dc",
-            F.explode_outer("common").alias("wid"),
-        )
-        .join(F.broadcast(degs), "wid", "left")
-        .groupBy("a", "c", "cn_capped", "cn", "da", "dc")
-        .agg(aa_sum.alias("aa"))
-        .select(
-            F.col("a").alias("part_a"),
-            F.col("c").alias("part_b"),
-            "cn_capped",
-            F.col("cn").alias("common_neighbors"),
-            F.round(
-                F.col("cn").cast("double") / (F.col("da") + F.col("dc") - F.col("cn")),
-                6,
-            ).alias("jaccard"),
-            F.round(F.col("aa"), 6).alias("adamic_adar"),
+        link_scores(
+            adj, survivors, lambda common: F.size(common).cast("bigint").alias("cn")
         )
         .orderBy(F.desc("common_neighbors"), F.asc("part_a"), F.asc("part_b"))
         .limit(20)

@@ -12,8 +12,8 @@ row.
 
 Methodology mirrors the registered query pair exactly
 (`queries/wave27_ops.py`): same adjacency build, same
-`_wedge_pair_census` device for both the full and the capped-prefix
-census, same anti-join + (cn desc, a, c) ranking, and the capped
+`operators/graph.py::wedge_pair_census` device for both the full and
+the capped-prefix census, same anti-join + (cn desc, a, c) ranking, and the capped
 top-20 re-ranks the top-100 survivors by EXACT common-neighbor count
 (the confirm stage), identical tie-breaks. Survivor sets are
 prefix-nested (one ordering), so the 100 / 2000 containment columns
@@ -34,11 +34,14 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from ocean_data_pipeline_spark.operators.graph import (  # noqa: E402
+    symmetrize,
+    wedge_pair_census,
+)
 from ocean_data_pipeline_spark.operators.synthetic import powerlaw_edges  # noqa: E402
 from ocean_data_pipeline_spark.queries.wave27_ops import (  # noqa: E402
     _LP_CAP,
     _LP_SURVIVORS,
-    _wedge_pair_census,
 )
 from ocean_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -48,11 +51,7 @@ def main() -> None:
     t0 = time.perf_counter()
     edges = powerlaw_edges(spark).localCheckpoint()
 
-    sym = edges.select(
-        F.col("pa").alias("src"), F.col("pb").alias("dst")
-    ).unionByName(
-        edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-    )
+    sym = symmetrize(edges)
     deg = sym.groupBy(F.col("dst").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -87,13 +86,13 @@ def main() -> None:
             .limit(k)
         )
 
-    census_exact = _wedge_pair_census(spark, adj, ids, "cn")
+    census_exact = wedge_pair_census(adj, ids, "cn")
     exact20 = [
         (r["a"], r["c"]) for r in ranked(census_exact, "cn", 20).collect()
     ]
 
     capped_ids = F.slice(ids, 1, _LP_CAP)
-    census_cap = _wedge_pair_census(spark, adj, capped_ids, "cn_capped")
+    census_cap = wedge_pair_census(adj, capped_ids, "cn_capped")
     surv2000 = [
         (r["a"], r["c"])
         for r in ranked(census_cap, "cn_capped", 2000).collect()

@@ -25,6 +25,13 @@ sys.path.insert(0, REPO)
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from ocean_data_pipeline_spark.catalog import table  # noqa: E402
+from ocean_data_pipeline_spark.operators.graph import (  # noqa: E402
+    copurchase_edges,
+    degree_census,
+    orient_by_degree,
+    symmetrize,
+    wedge_pair_census,
+)
 from ocean_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -332,21 +339,8 @@ def main() -> None:
 
     def edge_orient(li):
         def build():
-            pl = li.select("l_orderkey", "l_partkey").distinct()
-            a = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-            b = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-            edges = (
-                a.join(b, "k")
-                .filter(F.col("pa") < F.col("pb"))
-                .select("pa", "pb")
-                .distinct()
-            )
-            deg = (
-                edges.select(F.col("pa").alias("node"))
-                .unionAll(edges.select(F.col("pb").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("degree"))
-            )
+            edges = copurchase_edges(li)
+            deg = degree_census(edges)
             return edges.join(
                 deg.select(F.col("node").alias("pa"), F.col("degree").alias("da")), "pa"
             ).groupBy().count()
@@ -469,18 +463,8 @@ def main() -> None:
 
     def kcore_probe(li):
         def build():
-            pl = li.select("l_orderkey", "l_partkey").distinct()
-            a = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-            b = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-            edges = (
-                a.join(b, "k")
-                .filter(F.col("pa") < F.col("pb"))
-                .select("pa", "pb")
-                .distinct()
-            )
-            sym = edges.select(
-                F.col("pa").alias("u"), F.col("pb").alias("v")
-            ).unionAll(edges.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
+            edges = copurchase_edges(li)
+            sym = symmetrize(edges, "u", "v")
             survivors = (
                 sym.groupBy("u")
                 .agg(F.count(F.lit(1)).alias("deg"))
@@ -1069,43 +1053,9 @@ def main() -> None:
             # close — the clustering_coefficient / triangle-census core
             # (graph copies are disjoint, so wedge mass scales exactly
             # with the data and the ratio isolates plan behavior)
-            pl = li.select("l_orderkey", "l_partkey").distinct()
-            a = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-            b = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-            edges = (
-                a.join(b, "k")
-                .filter(F.col("pa") < F.col("pb"))
-                .select("pa", "pb")
-                .distinct()
-            )
-            deg = (
-                edges.select(F.col("pa").alias("node"))
-                .unionAll(edges.select(F.col("pb").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("degree"))
-            )
-            e = (
-                edges.join(
-                    deg.select(F.col("node").alias("pa"), F.col("degree").alias("da")),
-                    "pa",
-                )
-                .join(
-                    deg.select(F.col("node").alias("pb"), F.col("degree").alias("db")),
-                    "pb",
-                )
-                .select(
-                    F.when(
-                        (F.col("da") < F.col("db"))
-                        | ((F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))),
-                        F.struct(F.col("pa").alias("src"), F.col("pb").alias("dst")),
-                    )
-                    .otherwise(
-                        F.struct(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-                    )
-                    .alias("o")
-                )
-                .select("o.src", "o.dst")
-            )
+            edges = copurchase_edges(li)
+            deg = degree_census(edges)
+            e = orient_by_degree(edges, deg, None)  # unmeasured: shuffled joins
             w1 = e.select(F.col("src").alias("s"), F.col("dst").alias("x"))
             w2 = e.select(F.col("src").alias("s"), F.col("dst").alias("y"))
             wedges = (
@@ -1122,24 +1072,12 @@ def main() -> None:
             # the link_prediction_capped census core: per-node sorted
             # adjacency lists truncated to the 64 lowest-id neighbors,
             # packed-BIGINT map-side wedge explode, bare-count aggregate
-            # (queries/wave27_ops.py::_wedge_pair_census) — Σ min(deg,64)²
+            # (operators/graph.py::wedge_pair_census) — Σ min(deg,64)²
             # wedge mass, bounded per node no matter how hot the hub
-            pl = li.select("l_orderkey", "l_partkey").distinct()
-            a = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-            b = pl.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-            edges = (
-                a.join(b, "k")
-                .filter(F.col("pa") < F.col("pb"))
-                .select("pa", "pb")
-                .distinct()
-            )
-            sym = edges.select(
-                F.col("pa").alias("src"), F.col("pb").alias("dst")
-            ).unionByName(
-                edges.select(F.col("pb").alias("src"), F.col("pa").alias("dst"))
-            )
+            edges = copurchase_edges(li)
             adj = (
-                sym.groupBy(F.col("src").alias("w"))
+                symmetrize(edges)
+                .groupBy(F.col("src").alias("w"))
                 .agg(
                     F.slice(
                         F.sort_array(F.collect_list("dst")), 1, 64
@@ -1147,13 +1085,7 @@ def main() -> None:
                 )
                 .localCheckpoint()  # the shipped queries checkpoint adj too
             )
-            from ocean_data_pipeline_spark.queries.wave27_ops import (
-                _wedge_pair_census,
-            )
-
-            return _wedge_pair_census(
-                adj.sparkSession, adj, F.col("ids"), "cn"
-            ).groupBy().count()
+            return wedge_pair_census(adj, F.col("ids"), "cn").groupBy().count()
 
         return build
 
@@ -1495,7 +1427,7 @@ def main() -> None:
         # cc_dsu_route: the probe-routed connected-components — 1x
         # (~600 K bipartite order-part edges) routes to the single-task
         # union-find fast path, 10x (~6 M edges, disjoint copies)
-        # crosses SPARK_GRAFT_CC_LOCAL_EDGES=1M and routes to the
+        # crosses components._CC_LOCAL_EDGE_CAP=1M and routes to the
         # iterative min-label loop; the ratio prices the HANDOFF, i.e.
         # what the threshold protects the local path from.
         "cc_dsu_route(lineitem)": (
