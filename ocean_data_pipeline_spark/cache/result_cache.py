@@ -8,7 +8,6 @@ nearby-coordinates range lookup (cache_manager.py:34-337). Here the
 cache is an ordinary parquet table and every operation is a DataFrame
 transformation:
 
-- lookup   = TTL-filtered broadcast semi/inner join on the key
 - upsert   = unionByName + keep-latest window dedup + atomic bucket swap
 - cleanup  = per-bucket census (rows, expired rows) in one aggregate,
              then a liveness-filter rewrite of only the buckets that
@@ -178,23 +177,6 @@ class ResultCache:
             self._read_buckets(manifest, [query_hash[:2]])
             .filter(F.col("query_hash") == query_hash)
             .filter(F.col("expires_at") > now)
-        )
-
-    def lookup(self, probes: DataFrame, now: F.Column | None = None) -> DataFrame:
-        """Batch lookup: prune to the probed buckets (≤256, driver-side
-        metadata), then broadcast the probe keys and inner-join."""
-        now = F.current_timestamp() if now is None else now
-        buckets = [
-            r["b"]
-            for r in probes.select(
-                F.substring("query_hash", 1, 2).alias("b")
-            ).distinct().collect()
-        ]
-        manifest = self._read_manifest()
-        return (
-            self._read_buckets(manifest, buckets)
-            .filter(F.col("expires_at") > now)
-            .join(F.broadcast(probes.select("query_hash")), "query_hash", "inner")
         )
 
     def nearby(

@@ -71,6 +71,24 @@ _FRONT: tuple[str, ...] = (
     "clustering_coefficient_census",
     "link_prediction_scores",
     "link_prediction_capped",
+    "acf_monthly_revenue",
+    "mann_kendall_trend",
+    "seasonal_indices_monthly",
+    "yule_walker_ar2_forecast",
+    "rolling_ols_trend",
+    "pacf_durbin_levinson",
+    "ljung_box_monthly",
+    "seasonal_mann_kendall",
+    "adf_unit_root_lite",
+    "newey_west_se",
+    "fisher_exact_monthly",
+    "sax_monthly_revenue",
+    "page_hinkley_revenue",
+    "imr_control_chart",
+    "theta_method_forecast",
+    "haar_energy_monthly",
+    "binseg_changepoint_monthly",
+    "trend_seasonal_strength",
 )
 
 

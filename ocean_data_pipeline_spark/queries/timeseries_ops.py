@@ -22,6 +22,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.monthly import (
+    MONTH_INDEX,
+    autocorrelations,
+    autocorrelations_sql,
+    month_index,
+    monthly_revenue,
+    monthly_revenue_sql,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- exponentially-weighted moving average ----------------------------
@@ -341,48 +349,12 @@ def stream_ewma_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- autocorrelation function (ACF) -----------------------------------
 
-_ACF_ORACLE = """
-WITH m AS (
-  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS t,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1
-),
-g AS (
-  -- the (19,2) casts force DuckDB's INT128 decimal kernel: monthly
-  -- revenue squared overflows the int64 kernel that (18,2)x(18,2)
-  -- binds to; Spark's (18,2) product is already exact at (37,4).
-  -- The VARCHAR hop makes the decimal->double cast CORRECTLY ROUNDED:
-  -- DuckDB's direct cast double-rounds (int128->double, then /10^s),
-  -- off by an ulp for products past 2^53; strtod and Spark's
-  -- BigDecimal.doubleValue both round the exact value once.
-  SELECT count(*) AS n,
-         CAST(sum(x) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS sxx
-  FROM m
-),
-lags AS (SELECT * FROM (VALUES (1),(2),(3),(4),(5),(6)) l(k)),
-p AS (
-  SELECT l.k,
-         count(*) AS npairs,
-         CAST(CAST(sum(CAST(a.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS spk,
-         CAST(sum(a.x) AS DOUBLE) AS shead,
-         CAST(sum(b.x) AS DOUBLE) AS stail
-  FROM lags l
-  JOIN m a ON true
-  JOIN m b ON b.t = a.t + l.k
-  GROUP BY l.k
-)
-SELECT p.k,
-       CAST(p.npairs AS BIGINT) AS npairs,
-       CASE WHEN g.sxx - g.n * (g.sx / g.n) * (g.sx / g.n) <> 0 THEN
-         (p.spk - (g.sx / g.n) * p.shead - (g.sx / g.n) * p.stail
-          + p.npairs * (g.sx / g.n) * (g.sx / g.n))
-         / (g.sxx - g.n * (g.sx / g.n) * (g.sx / g.n))
-       END AS acf
-FROM p CROSS JOIN g
-ORDER BY p.k
+_ACF_ORACLE = f"""
+WITH m AS ({monthly_revenue_sql(MONTH_INDEX)}),
+ac AS ({autocorrelations_sql("m", 6)})
+SELECT k, npairs, r_k AS acf
+FROM ac
+ORDER BY k
 """
 
 
@@ -390,62 +362,15 @@ ORDER BY p.k
 def acf_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation function of monthly revenue at lags 1-6 — the
     seasonality/persistence diagnostic that decides whether a series
-    needs differencing before forecasting. Computed WITHOUT centering
-    the series first: r_k expands algebraically into five exact-DECIMAL
-    sums (Σx·x₊ₖ, head/tail sums, pair count, plus global Σx, Σx²), so
-    ONE aggregation per lag over the month-count-sized relation gives
-    the exact statistic — no per-element (x-μ) pass whose accumulation
-    order could drift.
+    needs differencing before forecasting. r_k is the no-centering
+    exact-DECIMAL expansion of `operators/monthly.py`, emitted
+    unrounded.
 
     Scale: the fact scan reduces to O(months) partials map-side; the
     lag self-join and all ACF arithmetic run on that calendar-sized
-    relation (84 rows × 6 lags). Determinism: every sum is exact
-    DECIMAL; μ and the r_k chain are the identical IEEE tree on both
-    engines (den=0 guarded for the ANSI path), emitted unrounded."""
-    orders = table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(18,2)")
-        .alias("x")
-    )
-    g = m.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-    )
-    lags = spark.range(1, 7).select(F.col("id").cast("int").alias("k"))
-    a = m.select(F.col("t").alias("ta"), F.col("x").alias("xa"))
-    b = m.select(F.col("t").alias("tb"), F.col("x").alias("xb"))
-    p = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("tb") == F.col("ta") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("npairs"),
-            F.sum(F.col("xa") * F.col("xb")).cast("double").alias("spk"),
-            F.sum("xa").cast("double").alias("shead"),
-            F.sum("xb").cast("double").alias("stail"),
-        )
-    )
-    mu = F.col("sx") / F.col("n")
-    den = F.col("sxx") - F.col("n") * mu * mu
-    acf = F.when(
-        den != 0,
-        (
-            F.col("spk")
-            - mu * F.col("shead")
-            - mu * F.col("stail")
-            + F.col("npairs") * mu * mu
-        )
-        / den,
-    )
-    return (
-        p.crossJoin(F.broadcast(g))
-        .select("k", F.col("npairs").cast("bigint").alias("npairs"), acf.alias("acf"))
-        .orderBy("k")
-    )
+    relation (84 rows × 6 lags)."""
+    m = monthly_revenue(table(spark, sf_dir, "orders"), month_index())
+    return autocorrelations(m, 6).select("k", "npairs", F.col("r_k").alias("acf")).orderBy("k")
 
 
 # --- CUSUM changepoint scan -------------------------------------------
@@ -530,12 +455,8 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Mann-Kendall trend test + Theil-Sen slope ------------------------
 
-_MANN_KENDALL_ORACLE = """
-WITH m AS (
-  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS t,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1
-),
+_MANN_KENDALL_ORACLE = f"""
+WITH m AS ({monthly_revenue_sql(MONTH_INDEX)}),
 idx AS (
   SELECT x, row_number() OVER (ORDER BY t) AS i FROM m
 ),
@@ -588,14 +509,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(n²) pair join runs on the calendar-sized relation (84 rows →
     3.5k pairs). For multi-decade daily series, swap the pair join
     for the O(n log n) inversion-count formulation."""
-    orders = table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(18,2)")
-        .alias("x")
-    )
+    m = monthly_revenue(table(spark, sf_dir, "orders"), month_index())
     idx = m.select("x", F.row_number().over(Window.orderBy("t")).alias("i"))
     a = idx.select(F.col("i").alias("ia"), F.col("x").alias("xa"))
     b = idx.select(F.col("i").alias("ib"), F.col("x").alias("xb"))
@@ -647,13 +561,8 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- classical seasonal indices ---------------------------------------
 
-_SEASONAL_ORACLE = """
-WITH m AS (
-  SELECT year(o_orderdate) AS yr, month(o_orderdate) AS mo,
-         year(o_orderdate) * 12 + month(o_orderdate) AS t,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1, 2, 3
-),
+_SEASONAL_ORACLE = f"""
+WITH m AS ({monthly_revenue_sql("year(o_orderdate) AS yr", "month(o_orderdate) AS mo", MONTH_INDEX)}),
 f AS (
   SELECT mo, x,
          count(*)  OVER w11 AS n11,
@@ -713,15 +622,11 @@ def seasonal_indices_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(18,12) so the per-month averages are order-free exact
     sums, not float reductions. Raw aggregation happens map-side onto
     O(months) rows before any window runs."""
-    orders = table(spark, sf_dir, "orders")
-    m = orders.groupBy(
+    m = monthly_revenue(
+        table(spark, sf_dir, "orders"),
         F.year("o_orderdate").alias("yr"),
         F.month("o_orderdate").alias("mo"),
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t"),
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(18,2)")
-        .alias("x")
+        month_index(),
     )
     w = Window.orderBy("t")
     w11 = w.rowsBetween(-5, 5)
@@ -861,44 +766,14 @@ def leadlag_crosscorr_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Yule-Walker AR(2) one-step forecast ------------------------------
 
-_YW_ORACLE = """
-WITH m AS (
-  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS t,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1
-),
-g AS (
-  -- (19,2) casts + VARCHAR hop: the int128 decimal kernel and the
-  -- correctly-rounded decimal->double cast (see _ACF_ORACLE's note).
-  SELECT count(*) AS n,
-         CAST(sum(x) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS sxx
-  FROM m
-),
-p AS (
-  SELECT k.k,
-         count(*) AS npairs,
-         CAST(CAST(sum(CAST(a.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS spk,
-         CAST(sum(a.x) AS DOUBLE) AS shead,
-         CAST(sum(b.x) AS DOUBLE) AS stail
-  FROM (SELECT 1 AS k UNION ALL SELECT 2) k
-  JOIN m a ON true
-  JOIN m b ON b.t = a.t + k.k
-  GROUP BY k.k
-),
+_YW_ORACLE = f"""
+WITH m AS ({monthly_revenue_sql(MONTH_INDEX)}),
+ac AS ({autocorrelations_sql("m", 2)}),
 r AS (
-  SELECT g.n, g.sx / g.n AS mu,
-         max(CASE WHEN p.k = 1 THEN
-           (p.spk - (g.sx / g.n) * p.shead - (g.sx / g.n) * p.stail
-            + p.npairs * (g.sx / g.n) * (g.sx / g.n))
-           / (g.sxx - g.n * (g.sx / g.n) * (g.sx / g.n)) END) AS r1,
-         max(CASE WHEN p.k = 2 THEN
-           (p.spk - (g.sx / g.n) * p.shead - (g.sx / g.n) * p.stail
-            + p.npairs * (g.sx / g.n) * (g.sx / g.n))
-           / (g.sxx - g.n * (g.sx / g.n) * (g.sx / g.n)) END) AS r2
-  FROM p, g GROUP BY g.n, g.sx, g.sxx
+  SELECT n, sx / n AS mu,
+         max(CASE WHEN k = 1 THEN r_k END) AS r1,
+         max(CASE WHEN k = 2 THEN r_k END) AS r2
+  FROM ac GROUP BY n, sx
 ),
 lastv AS (
   SELECT max(CASE WHEN rn = 1 THEN CAST(x AS DOUBLE) END) AS x_last,
@@ -922,9 +797,9 @@ FROM r, lastv
 def yule_walker_ar2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AR(2) fit by the Yule-Walker equations over monthly revenue:
     phi1 = r1(1-r2)/(1-r1^2), phi2 = (r2-r1^2)/(1-r1^2) from the exact
-    lag-1/lag-2 autocorrelations (the same no-centering DECIMAL-sum
-    expansion as `acf_monthly_revenue`), then the one-step mean-
-    reverting forecast mu + phi1(x_n - mu) + phi2(x_{n-1} - mu).
+    lag-1/lag-2 autocorrelations (`operators/monthly.py`), then the
+    one-step mean-reverting forecast mu + phi1(x_n - mu) +
+    phi2(x_{n-1} - mu).
 
     Determinism: every input to the phi/forecast chain is either an
     exact DECIMAL sum cast to double once or a fixed IEEE expression of
@@ -933,51 +808,15 @@ def yule_walker_ar2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: the fact scan collapses map-side to the month relation;
     lag joins, the rank-2 linear solve, and the forecast all run on
     calendar-sized data. At 100 TB only the first aggregate scales."""
-    orders = table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(18,2)")
-        .alias("x")
+    m = monthly_revenue(
+        table(spark, sf_dir, "orders"), month_index()
     ).localCheckpoint()  # consumed by 3 subtrees (global sums, lag pairs, tail)
-    g = m.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
+    r = autocorrelations(m, 2).groupBy("n", "sx").agg(
+        F.max(F.when(F.col("k") == 1, F.col("r_k"))).alias("r1"),
+        F.max(F.when(F.col("k") == 2, F.col("r_k"))).alias("r2"),
     )
-    lags = spark.range(1, 3).select(F.col("id").cast("int").alias("k"))
-    a = m.select(F.col("t").alias("ta"), F.col("x").alias("xa"))
-    b = m.select(F.col("t").alias("tb"), F.col("x").alias("xb"))
-    p = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("tb") == F.col("ta") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("npairs"),
-            F.sum(F.col("xa") * F.col("xb")).cast("double").alias("spk"),
-            F.sum("xa").cast("double").alias("shead"),
-            F.sum("xb").cast("double").alias("stail"),
-        )
-    )
-    mu = F.col("sx") / F.col("n")
-    den = F.col("sxx") - F.col("n") * mu * mu
-    acf_k = (
-        F.col("spk") - mu * F.col("shead") - mu * F.col("stail")
-        + F.col("npairs") * mu * mu
-    ) / den
-    r = (
-        p.crossJoin(F.broadcast(g))
-        .groupBy("n", "sx", "sxx")
-        .agg(
-            F.max(F.when(F.col("k") == 1, acf_k)).alias("r1"),
-            F.max(F.when(F.col("k") == 2, acf_k)).alias("r2"),
-        )
-    )
-    from pyspark.sql import Window as W
-
     ranked = m.select(
-        "x", F.row_number().over(W.orderBy(F.desc("t"))).alias("rn")
+        "x", F.row_number().over(Window.orderBy(F.desc("t"))).alias("rn")
     ).filter(F.col("rn") <= 2)
     lastv = ranked.agg(
         F.max(F.when(F.col("rn") == 1, F.col("x").cast("double"))).alias("x_last"),
@@ -1005,12 +844,8 @@ def yule_walker_ar2_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- rolling OLS trend slope ------------------------------------------
 
-_ROLL_OLS_ORACLE = """
-WITH m AS (
-  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS t,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1
-),
+_ROLL_OLS_ORACLE = f"""
+WITH m AS ({monthly_revenue_sql(MONTH_INDEX)}),
 f AS (
   SELECT t, x,
          count(*) OVER w AS n,
@@ -1049,14 +884,7 @@ def rolling_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE month-ordered window pass computes every frame sum. At 100 TB
     only the first aggregate is row-scale — the window runs on the
     calendar."""
-    orders = table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(18,2)")
-        .alias("x")
-    )
+    m = monthly_revenue(table(spark, sf_dir, "orders"), month_index())
     w = Window.orderBy("t").rowsBetween(-5, 0)
     td = F.col("t").cast("decimal(19,0)")
     xd = F.col("x").cast("decimal(19,2)")
@@ -1416,46 +1244,15 @@ def periodogram_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- PACF via Durbin–Levinson -------------------------------------------
 
-_PACF_ORACLE = """
-WITH m AS (
-  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS t,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1
-),
-g AS (  -- see acf_monthly_revenue for the (19,2)/VARCHAR-hop rationale
-  SELECT count(*) AS n,
-         CAST(sum(x) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS sxx
-  FROM m
-),
-lags AS (SELECT * FROM (VALUES (1),(2),(3)) l(k)),
-p AS (
-  SELECT l.k,
-         count(*) AS npairs,
-         CAST(CAST(sum(CAST(a.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS spk,
-         CAST(sum(a.x) AS DOUBLE) AS shead,
-         CAST(sum(b.x) AS DOUBLE) AS stail
-  FROM lags l
-  JOIN m a ON true
-  JOIN m b ON b.t = a.t + l.k
-  GROUP BY l.k
-),
-acfs AS (
-  SELECT p.k,
-         (p.spk - (g.sx / g.n) * p.shead - (g.sx / g.n) * p.stail
-          + p.npairs * (g.sx / g.n) * (g.sx / g.n))
-         / (g.sxx - g.n * (g.sx / g.n) * (g.sx / g.n)) AS acf,
-         g.n AS n
-  FROM p CROSS JOIN g
-),
+_PACF_ORACLE = f"""
+WITH m AS ({monthly_revenue_sql(MONTH_INDEX)}),
+ac AS ({autocorrelations_sql("m", 3)}),
 wide AS (
   SELECT max(n) AS n,
-         max(CASE WHEN k = 1 THEN acf END) AS r1,
-         max(CASE WHEN k = 2 THEN acf END) AS r2,
-         max(CASE WHEN k = 3 THEN acf END) AS r3
-  FROM acfs
+         max(CASE WHEN k = 1 THEN r_k END) AS r1,
+         max(CASE WHEN k = 2 THEN r_k END) AS r2,
+         max(CASE WHEN k = 3 THEN r_k END) AS r3
+  FROM ac
 ),
 dl AS (  -- Durbin-Levinson closed forms for levels 1..3
   SELECT n, r1, r2, r3,
@@ -1493,67 +1290,19 @@ def pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     `yule_walker_ar2_forecast`, with the +/-1.96/sqrt(n) significance
     band.
 
-    Determinism: the autocorrelations reuse the ACF query's exact-
-    decimal sum-of-products identity (same INT128/VARCHAR-hop
-    discipline); the DL chain is one fixed IEEE tree per lag over
-    those three doubles.
+    Determinism: the autocorrelations are `operators/monthly.py`'s
+    exact-decimal sums; the DL chain is one fixed IEEE tree per lag
+    over those three doubles.
 
     Plan shape: facts collapse to ~80 month rows; three self-joins on
     the month spine; everything after is 1-row algebra. At 100 TB the
     only corpus-scale work is the first aggregate."""
-    m = (
-        table(spark, sf_dir, "orders")
-        .groupBy((F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("x")
-        )
-    )
-    x19 = F.col("x").cast("decimal(19,2)")
-    g = m.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum(x19 * x19).cast("string").cast("double").alias("sxx"),
-    )
-    lags = spark.range(1, 4).select(F.col("id").cast("int").alias("k"))
-    a = m.select(F.col("t").alias("ta"), F.col("x").alias("xa"))
-    b = m.select(F.col("t").alias("tb"), F.col("x").alias("xb"))
-    p = (
-        F.broadcast(lags)
-        .join(a, F.lit(True))
-        .join(b, F.col("tb") == F.col("ta") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("npairs"),
-            F.sum(F.col("xa").cast("decimal(19,2)") * F.col("xb").cast("decimal(19,2)"))
-            .cast("string")
-            .cast("double")
-            .alias("spk"),
-            F.sum("xa").cast("double").alias("shead"),
-            F.sum("xb").cast("double").alias("stail"),
-        )
-    )
-    mu = F.col("sx") / F.col("n")
-    denom = F.col("sxx") - F.col("n") * mu * mu
-    acfs = p.crossJoin(F.broadcast(g)).select(
-        "k",
-        "n",
-        (
-            (
-                F.col("spk")
-                - mu * F.col("shead")
-                - mu * F.col("stail")
-                + F.col("npairs") * mu * mu
-            )
-            / denom
-        ).alias("acf"),
-    )
-    wide = acfs.groupBy().agg(
+    m = monthly_revenue(table(spark, sf_dir, "orders"), month_index())
+    wide = autocorrelations(m, 3).groupBy().agg(
         F.max("n").alias("n"),
-        F.max(F.when(F.col("k") == 1, F.col("acf"))).alias("r1"),
-        F.max(F.when(F.col("k") == 2, F.col("acf"))).alias("r2"),
-        F.max(F.when(F.col("k") == 3, F.col("acf"))).alias("r3"),
+        F.max(F.when(F.col("k") == 1, F.col("r_k"))).alias("r1"),
+        F.max(F.when(F.col("k") == 2, F.col("r_k"))).alias("r2"),
+        F.max(F.when(F.col("k") == 3, F.col("r_k"))).alias("r3"),
     )
     r1, r2, r3 = F.col("r1"), F.col("r2"), F.col("r3")
     phi11 = r1

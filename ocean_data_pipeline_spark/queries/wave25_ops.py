@@ -17,6 +17,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.monthly import (
+    MONTH_INDEX,
+    YEAR_MONTH,
+    autocorrelations,
+    autocorrelations_sql,
+    month_index,
+    monthly_revenue,
+    monthly_revenue_sql,
+    year_month,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- Ljung-Box portmanteau test on monthly revenue ---------------------
@@ -24,44 +34,14 @@ from ocean_data_pipeline_spark.queries import register
 _LB_LAGS = 6
 
 _LJUNG_BOX_ORACLE = f"""
-WITH m AS (
-  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS t,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1
-),
-g AS (
-  SELECT count(*) AS n,
-         CAST(sum(x) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS sxx
-  FROM m
-),
-lags AS (SELECT unnest(generate_series(1, {_LB_LAGS})) AS k),
-p AS (
-  SELECT l.k,
-         count(*) AS npairs,
-         CAST(CAST(sum(CAST(a.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS spk,
-         CAST(sum(a.x) AS DOUBLE) AS shead,
-         CAST(sum(b.x) AS DOUBLE) AS stail
-  FROM lags l
-  JOIN m a ON true
-  JOIN m b ON b.t = a.t + l.k
-  GROUP BY l.k
-),
-rho AS (
-  SELECT p.k, g.n,
-         (p.spk - (g.sx / g.n) * p.shead - (g.sx / g.n) * p.stail
-          + p.npairs * (g.sx / g.n) * (g.sx / g.n))
-         / (g.sxx - g.n * (g.sx / g.n) * (g.sx / g.n)) AS r
-  FROM p CROSS JOIN g
-),
+WITH m AS ({monthly_revenue_sql(MONTH_INDEX)}),
+ac AS ({autocorrelations_sql("m", _LB_LAGS)}),
 q AS (
   SELECT max(n) AS n,
          CAST(n AS DOUBLE) * (n + 2)
-           * CAST(sum(CAST(round(r * r / (n - k), 12) AS DECIMAL(28,12)))
+           * CAST(sum(CAST(round(r_k * r_k / (n - k), 12) AS DECIMAL(28,12)))
                   AS DOUBLE) AS q_stat
-  FROM rho GROUP BY n
+  FROM ac GROUP BY n
 )
 SELECT CAST(n AS BIGINT) AS n_months,
        {_LB_LAGS} AS df,
@@ -81,53 +61,20 @@ def ljung_box_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail has the closed even-dof form exp(−Q/2)(1 + Q/2 + Q²/8), a
     fixed IEEE chain on both engines — no gamma approximation.
 
-    Determinism: ρ_k reuses `acf_monthly_revenue`'s no-centering
-    algebra (exact DECIMAL pair/power sums, VARCHAR-hop casts); each
-    ρ_k²/(n−k) term rounds ONCE into DECIMAL(28,12) before the 6-term
-    sum.
+    Determinism: ρ_k is `operators/monthly.py`'s no-centering algebra
+    (exact DECIMAL pair/power sums); each ρ_k²/(n−k) term rounds ONCE
+    into DECIMAL(28,12) before the 6-term sum.
 
     Plan shape: facts collapse to ~84 month rows map-side; the lag
     self-join, ρ algebra, and the 1-row Q reduce all run on the
     calendar-sized relation."""
-    m = (
-        table(spark, sf_dir, "orders")
-        .groupBy((F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("x")
-        )
-    )
-    g = m.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("string").cast("double").alias("sxx"),
-    )
-    lags = spark.range(1, _LB_LAGS + 1).select(F.col("id").cast("int").alias("k"))
-    a = m.select(F.col("t").alias("ta"), F.col("x").alias("xa"))
-    b = m.select(F.col("t").alias("tb"), F.col("x").alias("xb"))
-    p = (
-        a.crossJoin(F.broadcast(lags))
-        .join(b, F.col("tb") == F.col("ta") + F.col("k"))
-        .groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("npairs"),
-            F.sum(F.col("xa") * F.col("xb")).cast("string").cast("double").alias("spk"),
-            F.sum("xa").cast("double").alias("shead"),
-            F.sum("xb").cast("double").alias("stail"),
-        )
-    )
-    mu = F.col("sx") / F.col("n")
-    r = (
-        F.col("spk") - mu * F.col("shead") - mu * F.col("stail")
-        + F.col("npairs") * mu * mu
-    ) / (F.col("sxx") - F.col("n") * mu * mu)
-    rho = p.crossJoin(F.broadcast(g)).select("k", "n", r.alias("r"))
-    q = rho.groupBy("n").agg(
+    m = monthly_revenue(table(spark, sf_dir, "orders"), month_index())
+    r = F.col("r_k")
+    q = autocorrelations(m, _LB_LAGS).groupBy("n").agg(
         (
             F.col("n").cast("double") * (F.col("n") + 2)
             * F.sum(
-                F.round(F.col("r") * F.col("r") / (F.col("n") - F.col("k")), 12)
+                F.round(r * r / (F.col("n") - F.col("k")), 12)
                 .cast("decimal(28,12)")
             ).cast("double")
         ).alias("q_stat")
@@ -630,11 +577,7 @@ def _smk_oracle() -> str:
     from ocean_data_pipeline_spark.queries.audits import _PHI_TAIL
 
     return f"""
-WITH m AS (
-  SELECT year(o_orderdate) AS y, month(o_orderdate) AS mo,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1, 2
-),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 pairs AS (  -- within each calendar month, all year pairs a.y < b.y
   SELECT a.mo,
          CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END AS sgn
@@ -683,18 +626,7 @@ def seasonal_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side (~84 rows); the within-month pairwise join, variance, and
     z are calendar-sized. At 100 TB only the first aggregate sees
     data."""
-    m = (
-        table(spark, sf_dir, "orders")
-        .groupBy(
-            F.year("o_orderdate").alias("y"), F.month("o_orderdate").alias("mo")
-        )
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("x")
-        )
-        .localCheckpoint()
-    )
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month()).localCheckpoint()
     a = m.select(F.col("mo"), F.col("y").alias("ya"), F.col("x").alias("xa"))
     b = m.select(
         F.col("mo").alias("mob"), F.col("y").alias("yb"), F.col("x").alias("xb")

@@ -33,32 +33,26 @@ from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
 from ocean_data_pipeline_spark.operators.irls import irls_fit, irls_sql, null_fit
+from ocean_data_pipeline_spark.operators.monthly import (
+    MONTH_INDEX,
+    month_index,
+    monthly_revenue,
+    monthly_revenue_sql,
+    vh,
+)
 from ocean_data_pipeline_spark.queries import register
-
-# --- shared SQL fragments ------------------------------------------------
-
-_M_REV = """
-  SELECT year(o_orderdate) * 12 + month(o_orderdate) AS t,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1
-"""
-
-#: DuckDB correctly-rounded decimal->double (the ACF VARCHAR-hop device)
-def _vh(expr: str) -> str:
-    return f"CAST(CAST({expr} AS VARCHAR) AS DOUBLE)"
-
 
 # --- ADF (Dickey-Fuller) unit-root t-statistic ---------------------------
 
 _ADF_ORACLE = f"""
-WITH m AS ({_M_REV}),
+WITH m AS ({monthly_revenue_sql(MONTH_INDEX)}),
 p AS (  -- lag-1 pairs: a = level at t, b = level at t+1
   SELECT count(*) AS n,
          CAST(sum(a.x) AS DOUBLE) AS sa,
          CAST(sum(b.x) AS DOUBLE) AS sb,
-         {_vh("sum(CAST(a.x AS DECIMAL(19,2)) * CAST(a.x AS DECIMAL(19,2)))")} AS saa,
-         {_vh("sum(CAST(b.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))")} AS sbb,
-         {_vh("sum(CAST(a.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))")} AS sab
+         {vh("sum(CAST(a.x AS DECIMAL(19,2)) * CAST(a.x AS DECIMAL(19,2)))")} AS saa,
+         {vh("sum(CAST(b.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))")} AS sbb,
+         {vh("sum(CAST(a.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))")} AS sab
   FROM m a JOIN m b ON b.t = a.t + 1
 ),
 s AS (
@@ -107,14 +101,7 @@ def adf_unit_root_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one map-side-combining aggregate to the month census,
     one self-join at lag 1 on the ≤84-row census, one 1-row solve. At
     100 TB only the first aggregate scales."""
-    orders = table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(18,2)")
-        .alias("x")
-    )
+    m = monthly_revenue(table(spark, sf_dir, "orders"), month_index())
     a = m.select(F.col("t").alias("ta"), F.col("x").alias("xa"))
     b = m.select(F.col("t").alias("tb"), F.col("x").alias("xb"))
     p = a.join(b, F.col("tb") == F.col("ta") + 1).agg(
@@ -251,14 +238,14 @@ def ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NW_L = 3  # Bartlett truncation
 
 _NW_ORACLE = f"""
-WITH m AS ({_M_REV}),
+WITH m AS ({monthly_revenue_sql(MONTH_INDEX)}),
 g AS (
   SELECT count(*) AS n,
          CAST(sum(t) AS DOUBLE) AS sz,
          CAST(sum(CAST(t AS BIGINT) * CAST(t AS BIGINT)) AS DOUBLE) AS szz,
          CAST(sum(x) AS DOUBLE) AS sy,
-         {_vh("sum(CAST(t AS DECIMAL(19,0)) * x)")} AS szy,
-         {_vh("sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))")} AS syy
+         {vh("sum(CAST(t AS DECIMAL(19,0)) * x)")} AS szy,
+         {vh("sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))")} AS syy
   FROM m
 ),
 coef AS (
@@ -323,14 +310,7 @@ def newey_west_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides a broadcast 1-row coefficient frame, a 4-lag grid joins the
     census to itself, a 1-row combine. At 100 TB only the first
     aggregate scales."""
-    orders = table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("t")
-    ).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(18,2)")
-        .alias("x")
-    )
+    m = monthly_revenue(table(spark, sf_dir, "orders"), month_index())
     g = m.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("t").cast("double").alias("sz"),

@@ -37,6 +37,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.monthly import (
+    YEAR_MONTH,
+    monthly_revenue,
+    monthly_revenue_sql,
+    year_month,
+)
 from ocean_data_pipeline_spark.queries import register
 from ocean_data_pipeline_spark.queries.graph_ops import (
     _EDGES_SQL,
@@ -46,29 +52,6 @@ from ocean_data_pipeline_spark.queries.wave29_ops import (
     robust_line_fit,
     robust_line_oracle,
 )
-
-# --- shared fragments ------------------------------------------------------
-
-_M_CENSUS = """
-  SELECT year(o_orderdate) AS y, month(o_orderdate) AS mo,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
-  FROM orders GROUP BY 1, 2
-"""
-
-
-def _month_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        table(spark, sf_dir, "orders")
-        .groupBy(
-            F.year("o_orderdate").alias("y"), F.month("o_orderdate").alias("mo")
-        )
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("x")
-        )
-    )
-
 
 # --- Newman modularity of the brand partition ------------------------------
 
@@ -202,7 +185,7 @@ _LNC_SQL = """(
 )"""
 
 _FISHER_ORACLE = f"""
-WITH m AS ({_M_CENSUS}),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 mu AS (
   SELECT CAST(sum(x) AS DOUBLE) / count(*) AS mu FROM m
 ),
@@ -258,7 +241,7 @@ def fisher_exact_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     2x2, then a ≤84-element sequence explode with all combinatorics
     as per-row expression chains. Nothing beyond the first aggregate
     scales with data."""
-    m = _month_census(spark, sf_dir)
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month())
     mu = m.agg((F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"))
     late = F.col("y") >= 1996
     high = F.col("x").cast("double") > F.col("mu")
@@ -465,7 +448,7 @@ _SAX_SEGS = 12
 _SAX_BP = (-0.6745, 0.0, 0.6745)
 
 _SAX_ORACLE = f"""
-WITH m AS ({_M_CENSUS}),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 stats AS (
   SELECT count(*) AS n,
          CAST(sum(x) AS DOUBLE) / count(*) AS mu,
@@ -518,7 +501,7 @@ def sax_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-less window is row_number over that ≤84-row census
     (PLANS.md bound class: calendar). The word assembles via an
     ordered in-group string agg on the 12-row PAA relation."""
-    m = _month_census(spark, sf_dir)
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month())
     stats = m.agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum("x").cast("double") / F.count(F.lit(1))).alias("mu"),
@@ -577,7 +560,7 @@ def sax_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PH_DELTA = 0.0
 
 _PH_ORACLE = f"""
-WITH m AS ({_M_CENSUS}),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 r AS (
   SELECT row_number() OVER (ORDER BY y, mo) AS t, y, mo,
          CAST(x AS DOUBLE) AS x,
@@ -636,7 +619,7 @@ def page_hinkley_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one fact aggregate to the ≤84-row month census; all
     windows (prefix sums, running min, argmax rank) are partition-less
     but census-bounded (PLANS.md: calendar class)."""
-    m = _month_census(spark, sf_dir)
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month())
     w = Window.orderBy("y", "mo").rowsBetween(Window.unboundedPreceding, 0)
     t_rn = F.row_number().over(Window.orderBy("y", "mo"))
     r = m.select(

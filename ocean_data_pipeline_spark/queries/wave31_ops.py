@@ -33,8 +33,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.monthly import (
+    YEAR_MONTH,
+    monthly_revenue,
+    monthly_revenue_sql,
+    year_month,
+)
 from ocean_data_pipeline_spark.queries import register
-from ocean_data_pipeline_spark.queries.wave30_ops import _M_CENSUS, _month_census
 
 # --- Friedman test: month blocks x top-5 nations ----------------------------
 
@@ -505,7 +510,7 @@ def process_capability_cpk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IMR_K = 2.66  # Shewhart individuals-chart constant (3/d2, d2 = 1.128)
 
 _IMR_ORACLE = f"""
-WITH m AS ({_M_CENSUS}),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 r AS (
   SELECT y, mo, CAST(x AS DOUBLE) AS x,
          abs(CAST(x AS DOUBLE)
@@ -551,7 +556,7 @@ def imr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one fact aggregate to the ≤84-row month census; lag +
     the out-of-control recount run on that census (calendar-bounded
     window, PLANS.md class)."""
-    m = _month_census(spark, sf_dir)
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month())
     r = m.select(
         "y", "mo",
         F.col("x").cast("double").alias("xd"),

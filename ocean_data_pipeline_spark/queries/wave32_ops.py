@@ -31,18 +31,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.monthly import (
+    YEAR_MONTH,
+    monthly_revenue,
+    monthly_revenue_sql,
+    vh,
+    year_month,
+)
 from ocean_data_pipeline_spark.queries import register
-from ocean_data_pipeline_spark.queries.wave30_ops import _M_CENSUS, _month_census
-
-_VH = "CAST(CAST({x} AS VARCHAR) AS DOUBLE)"
-
 
 # --- Theta method forecast ---------------------------------------------------
 
 _THETA_ALPHA = 0.5
 
 _THETA_ORACLE = f"""
-WITH m AS ({_M_CENSUS}),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 r AS (
   SELECT CAST(x AS DOUBLE) AS x,
          row_number() OVER (ORDER BY y, mo) AS t
@@ -102,7 +105,7 @@ def theta_method_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one fact aggregate to the ≤84-row month census, one
     trend aggregate, one weighted aggregate against the broadcast
     1-row (a, b, n) frame. Only the first aggregate scales."""
-    m = _month_census(spark, sf_dir)
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month())
     r = m.select(
         F.col("x").cast("double").alias("x"),
         F.row_number().over(Window.orderBy("y", "mo")).alias("t"),
@@ -156,7 +159,7 @@ def theta_method_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HAAR_N = 64  # first 64 months (6 dyadic levels)
 
 _HAAR_ORACLE = f"""
-WITH m AS ({_M_CENSUS}),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 r AS (  -- revenue in MILLIONS: keeps every later rounding digit far
         -- above the double's ulp (raw sums ~1e13 made round(.,4)
         -- a sub-ulp knife edge)
@@ -213,7 +216,7 @@ def haar_energy_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast grid, one (level, block)-keyed partial agg (≤126 cells),
     one 6-row total. The only partition-less window is the census
     row_number (calendar class)."""
-    m = _month_census(spark, sf_dir)
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month())
     # revenue in MILLIONS — see the oracle comment on ulp headroom
     r = (
         m.select(
@@ -272,7 +275,7 @@ def haar_energy_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- binary-segmentation changepoint ----------------------------------------
 
 _BINSEG_ORACLE = f"""
-WITH m AS ({_M_CENSUS}),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 r AS (
   SELECT y, mo, CAST(x AS DOUBLE) AS x,
          row_number() OVER (ORDER BY y, mo) AS t,
@@ -329,7 +332,7 @@ def binseg_changepoint_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one fact aggregate to the month census; candidate
     gains come from ONE cumulative window + a broadcast 1-row total
     (calendar-bounded); argmax is a census-sized rank."""
-    m = _month_census(spark, sf_dir)
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month())
     w = Window.orderBy("y", "mo").rowsBetween(Window.unboundedPreceding, 0)
     r = m.select(
         "y", "mo",
@@ -483,14 +486,14 @@ def cohens_kappa_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MOM3_SQL = f"""
   SELECT count(*) AS n,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-         {_VH.format(x="sum(CAST(round(CAST(l_extendedprice AS DOUBLE) / 10000, 9) AS DECIMAL(38,9)))")} AS sy,
+         {vh("sum(CAST(round(CAST(l_extendedprice AS DOUBLE) / 10000, 9) AS DECIMAL(38,9)))")} AS sy,
          CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sz,
-         {_VH.format(x="sum(CAST(l_quantity AS DECIMAL(19,2)) * CAST(l_quantity AS DECIMAL(19,2)))")} AS sxx,
-         {_VH.format(x="sum(CAST(round(CAST(l_extendedprice AS DOUBLE) / 10000 * (CAST(l_extendedprice AS DOUBLE) / 10000), 9) AS DECIMAL(38,9)))")} AS syy,
-         {_VH.format(x="sum(CAST(l_discount AS DECIMAL(19,2)) * CAST(l_discount AS DECIMAL(19,2)))")} AS szz,
-         {_VH.format(x="sum(CAST(round(CAST(l_quantity AS DOUBLE) * (CAST(l_extendedprice AS DOUBLE) / 10000), 9) AS DECIMAL(38,9)))")} AS sxy,
-         {_VH.format(x="sum(CAST(l_quantity AS DECIMAL(19,2)) * CAST(l_discount AS DECIMAL(19,2)))")} AS sxz,
-         {_VH.format(x="sum(CAST(round(CAST(l_discount AS DOUBLE) * (CAST(l_extendedprice AS DOUBLE) / 10000), 9) AS DECIMAL(38,9)))")} AS syz
+         {vh("sum(CAST(l_quantity AS DECIMAL(19,2)) * CAST(l_quantity AS DECIMAL(19,2)))")} AS sxx,
+         {vh("sum(CAST(round(CAST(l_extendedprice AS DOUBLE) / 10000 * (CAST(l_extendedprice AS DOUBLE) / 10000), 9) AS DECIMAL(38,9)))")} AS syy,
+         {vh("sum(CAST(l_discount AS DECIMAL(19,2)) * CAST(l_discount AS DECIMAL(19,2)))")} AS szz,
+         {vh("sum(CAST(round(CAST(l_quantity AS DOUBLE) * (CAST(l_extendedprice AS DOUBLE) / 10000), 9) AS DECIMAL(38,9)))")} AS sxy,
+         {vh("sum(CAST(l_quantity AS DECIMAL(19,2)) * CAST(l_discount AS DECIMAL(19,2)))")} AS sxz,
+         {vh("sum(CAST(round(CAST(l_discount AS DOUBLE) * (CAST(l_extendedprice AS DOUBLE) / 10000), 9) AS DECIMAL(38,9)))")} AS syz
   FROM lineitem
 """
 

@@ -28,8 +28,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.monthly import (
+    YEAR_MONTH,
+    monthly_revenue,
+    monthly_revenue_sql,
+    year_month,
+)
 from ocean_data_pipeline_spark.queries import register
-from ocean_data_pipeline_spark.queries.wave30_ops import _M_CENSUS, _month_census
 
 # --- absorbing Markov chain: expected steps to conversion ---------------------
 
@@ -232,7 +237,7 @@ def absorbing_chain_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- strength of trend / seasonality ------------------------------------------
 
 _TSS_ORACLE = f"""
-WITH m AS ({_M_CENSUS}),
+WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 r AS (
   SELECT y, mo, CAST(x AS DOUBLE) AS x,
          row_number() OVER (ORDER BY y, mo) AS t,
@@ -308,7 +313,7 @@ def trend_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one fact aggregate to the month census; all windows
     are calendar-bounded (the 2x12 MA is two ROWS frames over ≤84
     rows); group censuses are month-of-year-sized."""
-    m = _month_census(spark, sf_dir)
+    m = monthly_revenue(table(spark, sf_dir, "orders"), *year_month())
     wn = Window.orderBy("y", "mo")
     r = m.select(
         "mo",

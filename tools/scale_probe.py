@@ -32,6 +32,10 @@ from ocean_data_pipeline_spark.operators.graph import (  # noqa: E402
     symmetrize,
     wedge_pair_census,
 )
+from ocean_data_pipeline_spark.operators.monthly import (  # noqa: E402
+    monthly_revenue,
+    year_month,
+)
 from ocean_data_pipeline_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -1170,22 +1174,17 @@ def main() -> None:
 
     def month_device_probe(o):
         # the Theta / Haar / trend-strength shared device: fact scan ->
-        # calendar census agg; the global window runs over the <=84-row
-        # census, so 10x data only grows the scan+partial-agg stage
+        # (y, mo) census agg (operators/monthly.py); the global window
+        # runs over the <=84-row census, so 10x data only grows the
+        # scan+partial-agg stage
         def build():
-            m = (
-                o.select(
-                    F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-                    F.col("o_totalprice").cast("decimal(18,2)").alias("x"),
-                )
-                .groupBy("month")
-                .agg(F.sum("x").cast("double").alias("rev"))
-            )
-            w = W.orderBy("month")
+            m = monthly_revenue(o, *year_month())
+            w = W.orderBy("y", "mo")
             return m.select(
-                "month",
+                "y",
+                "mo",
                 F.row_number().over(w).alias("t"),
-                F.avg("rev").over(w.rowsBetween(-11, 0)).alias("ma12"),
+                F.avg("x").over(w.rowsBetween(-11, 0)).alias("ma12"),
             )
 
         return build
