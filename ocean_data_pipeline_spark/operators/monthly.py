@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocean_data_pipeline_spark.operators.portable import vh
+
 #: SQL month keys: the month index, and the (year, month) pair.
 MONTH_INDEX = "year(o_orderdate) * 12 + month(o_orderdate) AS t"
 YEAR_MONTH = ("year(o_orderdate) AS y", "month(o_orderdate) AS mo")
@@ -40,16 +42,6 @@ def month_index() -> Column:
 def year_month() -> tuple[Column, Column]:
     """The engine twin of `YEAR_MONTH`."""
     return F.year("o_orderdate").alias("y"), F.month("o_orderdate").alias("mo")
-
-
-def vh(x: str) -> str:
-    """DuckDB's correctly-rounded decimal->double cast: the VARCHAR hop.
-
-    DuckDB's direct cast double-rounds (int128->double, then /10^s),
-    off by an ulp for values past 2^53; strtod and Spark's decimal->
-    double cast both round the exact value once. Spark needs no hop.
-    """
-    return f"CAST(CAST({x} AS VARCHAR) AS DOUBLE)"
 
 
 def monthly_revenue(orders: DataFrame, *keys: Column) -> DataFrame:

@@ -89,6 +89,18 @@ _FRONT: tuple[str, ...] = (
     "haar_energy_monthly",
     "binseg_changepoint_monthly",
     "trend_seasonal_strength",
+    "conformal_interval_calibration",
+    "cv_fold_stability",
+    "diff_in_diff_estimator",
+    "logrank_test",
+    "calibration_reliability_bins",
+    "train_test_split_deterministic",
+    "stratified_sample_events",
+    "split_leakage_audit",
+    "training_example_pipeline",
+    "epoch_shuffle_balance",
+    "contamination_ngram_census",
+    "sql_funnel_conversion",
 )
 
 

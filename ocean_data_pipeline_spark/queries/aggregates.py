@@ -130,7 +130,11 @@ def describe_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").alias("count"),
         F.round(F.col("sm") / F.col("cnt"), 3).alias("mean"),
         F.round(
-            F.sqrt((F.col("smsq") - F.col("sm") * F.col("sm") / F.col("cnt")) / (F.col("cnt") - 1)),
+            F.sqrt(
+                F.try_divide(
+                    F.col("smsq") - F.col("sm") * F.col("sm") / F.col("cnt"), F.col("cnt") - 1
+                )
+            ),
             3,
         ).alias("stddev"),
         F.col("mn").alias("min"),
@@ -315,14 +319,14 @@ def value_ranges_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
         F.count(oob).alias("oob_value"),
     )
-    completeness = F.col("n_value").cast("double") / F.col("n_rows")
+    completeness = F.try_divide(F.col("n_value").cast("double"), F.col("n_rows"))
     has_issue = F.when(F.col("oob_value") > 0, F.lit(1)).otherwise(F.lit(0))
     return s.select(
         "n_rows",
         "n_value",
         "min_value",
         "max_value",
-        F.round(F.col("sum_value") / F.col("n_value"), 3).alias("mean_value"),
+        F.round(F.try_divide(F.col("sum_value"), F.col("n_value")), 3).alias("mean_value"),
         "oob_value",
         F.round(completeness, 3).alias("completeness"),
         F.round(F.least(F.lit(1.0), completeness * (1 - 0.1 * has_issue)), 3).alias(

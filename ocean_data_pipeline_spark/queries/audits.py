@@ -21,6 +21,7 @@ from ocean_data_pipeline_spark.operators.irls import (
     irls_sql,
     null_fit,
 )
+from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql, vd, vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- constraint-violation census (expectation suite) ------------------
@@ -486,7 +487,11 @@ def anova_oneway_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(ssb, 4).alias("ss_between"),
         F.round(ssw, 4).alias("ss_within"),
         F.round(
-            (ssb / (F.col("k") - 1)) / (ssw / (F.col("n_total") - F.col("k"))), 6
+            F.try_divide(
+                F.try_divide(ssb, F.col("k") - 1),
+                F.try_divide(ssw, F.col("n_total") - F.col("k")),
+            ),
+            6,
         ).alias("f_stat"),
     )
 
@@ -589,7 +594,7 @@ def mannwhitney_u_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_b",
         F.round(rank_sum_a, 1).alias("rank_sum_a"),
         F.round(u_a, 1).alias("u_a"),
-        F.round(u_a / (1.0 * F.col("n_a") * F.col("n_b")), 6).alias("auc"),
+        F.round(F.try_divide(u_a, 1.0 * F.col("n_a") * F.col("n_b")), 6).alias("auc"),
     )
 
 
@@ -703,9 +708,9 @@ def ols_price_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = m.select(
         "n", "sy", "s1y", "s2y", "syy",
-        (det0 / det).alias("b0"),
-        (det1 / det).alias("b1"),
-        (det2 / det).alias("b2"),
+        F.try_divide(det0, det).alias("b0"),
+        F.try_divide(det1, det).alias("b1"),
+        F.try_divide(det2, det).alias("b2"),
     )
     b0, b1, b2 = F.col("b0"), F.col("b1"), F.col("b2")
     return d.select(
@@ -1045,7 +1050,7 @@ def decision_stump_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Spearman rank correlation (level-based midranks) -----------------
 
-_SPEARMAN_ORACLE = """
+_SPEARMAN_ORACLE = f"""
 WITH cells AS (
   SELECT CAST(round(l_quantity) AS BIGINT) AS q,
          CAST(round(l_discount * 100) AS BIGINT) AS d,
@@ -1068,12 +1073,9 @@ s AS (
   SELECT sum(c.cnt) AS n,
          sum(CAST(c.cnt AS DECIMAL(19,0)) * CAST(rq.dq AS DECIMAL(19,0))) AS sx,
          sum(CAST(c.cnt AS DECIMAL(19,0)) * CAST(rd.dd AS DECIMAL(19,0))) AS sy,
-         CAST(CAST(sum(CAST(c.cnt * rq.dq AS DECIMAL(19,0))
-                       * CAST(rq.dq AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS sxx,
-         CAST(CAST(sum(CAST(c.cnt * rd.dd AS DECIMAL(19,0))
-                       * CAST(rd.dd AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS syy,
-         CAST(CAST(sum(CAST(c.cnt * rq.dq AS DECIMAL(19,0))
-                       * CAST(rd.dd AS DECIMAL(19,0))) AS VARCHAR) AS DOUBLE) AS sxy
+         {vh("sum(CAST(c.cnt * rq.dq AS DECIMAL(19,0)) * CAST(rq.dq AS DECIMAL(19,0)))")} AS sxx,
+         {vh("sum(CAST(c.cnt * rd.dd AS DECIMAL(19,0)) * CAST(rd.dd AS DECIMAL(19,0)))")} AS syy,
+         {vh("sum(CAST(c.cnt * rq.dq AS DECIMAL(19,0)) * CAST(rd.dd AS DECIMAL(19,0)))")} AS sxy
   FROM cells c JOIN rq USING (q) JOIN rd USING (d)
 )
 SELECT CAST(n AS BIGINT) AS n,
@@ -1156,7 +1158,7 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- CUPED variance reduction -----------------------------------------
 
-_CUPED_ORACLE = """
+_CUPED_ORACLE = f"""
 WITH per_cust AS (
   SELECT o_custkey,
          sum(CASE WHEN year(o_orderdate) < 1998
@@ -1174,12 +1176,9 @@ s AS (
          count(*) AS n,
          CAST(sum(xc) AS DOUBLE) AS sx,
          CAST(sum(yc) AS DOUBLE) AS sy,
-         CAST(CAST(sum(CAST(xc AS DECIMAL(19,0)) * CAST(xc AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS sxx,
-         CAST(CAST(sum(CAST(yc AS DECIMAL(19,0)) * CAST(yc AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS syy,
-         CAST(CAST(sum(CAST(xc AS DECIMAL(19,0)) * CAST(yc AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS sxy
+         {vh("sum(CAST(xc AS DECIMAL(19,0)) * CAST(xc AS DECIMAL(19,0)))")} AS sxx,
+         {vh("sum(CAST(yc AS DECIMAL(19,0)) * CAST(yc AS DECIMAL(19,0)))")} AS syy,
+         {vh("sum(CAST(xc AS DECIMAL(19,0)) * CAST(yc AS DECIMAL(19,0)))")} AS sxy
   FROM tagged GROUP BY segment
 )
 SELECT segment,
@@ -1310,10 +1309,7 @@ def wilson_proportion_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- difference-in-differences ----------------------------------------
 
-_DID_U_SQL = """(CAST(('0x' || substr(sha256('did_' || CAST(o_custkey AS VARCHAR)),
-      1, 8)) AS BIGINT) + 1) / 4294967297.0"""
-_DID_U_SPARK = """(CAST(conv(substr(sha2(concat('did_', CAST(o_custkey AS STRING)), 256),
-      1, 8), 16, 10) AS BIGINT) + 1) / 4294967297.0"""
+_DID_U_SQL = uniform_sql("'did_' || CAST(o_custkey AS VARCHAR)")
 
 _DID_ORACLE = f"""
 WITH cells AS (
@@ -1352,10 +1348,11 @@ def diff_in_diff_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one map-side-combining aggregate to 4 cells; at 100 TB
     this is the cheapest causal-inference primitive there is."""
+    draw = uniform(F.concat(F.lit("did_"), F.col("o_custkey").cast("string")))
     cells = (
         table(spark, sf_dir, "orders")
         .groupBy(
-            F.when(F.expr(_DID_U_SPARK) < 0.5, 1).otherwise(0).alias("treated"),
+            F.when(draw < 0.5, 1).otherwise(0).alias("treated"),
             F.when(F.year("o_orderdate") >= 1997, 1).otherwise(0).alias("post"),
         )
         .agg(
@@ -1402,9 +1399,8 @@ WITH s AS (
   SELECT o_orderpriority AS priority,
          count(*) AS n,
          CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE) AS s1,
-         CAST(CAST(sum(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS DECIMAL(19,0))
-                       * CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS s2
+         {vh("sum(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS DECIMAL(19,0))"
+             " * CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS DECIMAL(19,0)))")} AS s2
   FROM orders GROUP BY 1
 )
 SELECT priority,
@@ -1545,7 +1541,7 @@ def cochran_armitage_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Mantel-Haenszel pooled odds ratio --------------------------------
 
-_MH_ORACLE = """
+_MH_ORACLE = f"""
 WITH t AS (
   SELECT c.c_mktsegment AS segment,
          CASE WHEN o.o_totalprice > 200000 THEN 1 ELSE 0 END AS exposed,
@@ -1561,15 +1557,11 @@ cells AS (
   FROM t GROUP BY segment
 ),
 terms AS (  -- per-stratum rational terms quantized ONCE into DECIMAL
-            -- via their shortest string reprs (round(double, 12)
-            -- splits across engines at boundary cases; the VARCHAR
-            -- hop is bit-deterministic) so the cross-stratum sums are
-            -- exactly associative
+            -- (round(double, 12) splits across engines at boundary
+            -- cases) so the cross-stratum sums are exactly associative
   SELECT segment, a, b, c, d, a + b + c + d AS n,
-         CAST(CAST(CAST(a AS DOUBLE) * d / (a + b + c + d) AS VARCHAR)
-              AS DECIMAL(28,12)) AS ad_n,
-         CAST(CAST(CAST(b AS DOUBLE) * c / (a + b + c + d) AS VARCHAR)
-              AS DECIMAL(28,12)) AS bc_n
+         {vd("CAST(a AS DOUBLE) * d / (a + b + c + d)", 28, 12)} AS ad_n,
+         {vd("CAST(b AS DOUBLE) * c / (a + b + c + d)", 28, 12)} AS bc_n
   FROM cells
 ),
 pooled AS (
@@ -1585,9 +1577,7 @@ SELECT CAST(ta AS BIGINT) AS exposed_cases,
             THEN (CAST(ta AS DOUBLE) * td) / (CAST(tb AS DOUBLE) * tc) END
          AS crude_odds_ratio,
        CASE WHEN CAST(s_bc AS DOUBLE) <> 0
-            THEN CAST(CAST(CAST(CAST(CAST(s_ad AS VARCHAR) AS DOUBLE)
-                                 / CAST(CAST(s_bc AS VARCHAR) AS DOUBLE)
-                            AS VARCHAR) AS DECIMAL(28,12)) AS DOUBLE) END
+            THEN CAST({vd(f'{vh("s_ad")} / {vh("s_bc")}', 28, 12)} AS DOUBLE) END
          AS mh_odds_ratio
 FROM pooled
 """
@@ -1681,7 +1671,7 @@ def mantel_haenszel_or(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Kendall's tau-b ---------------------------------------------------
 
-_KENDALL_ORACLE = """
+_KENDALL_ORACLE = f"""
 WITH cells AS (
   SELECT CAST(round(l_quantity) AS BIGINT) AS q,
          CAST(round(l_discount * 100) AS BIGINT) AS d,
@@ -1700,18 +1690,15 @@ pairs AS (  -- concordant/discordant pair mass over the cell census
 ),
 ties AS (
   SELECT sum(cnt) AS n,
-         CAST(CAST(sum(CAST(cnt AS DECIMAL(19,0)) * CAST(cnt AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS scell2
+         {vh("sum(CAST(cnt AS DECIMAL(19,0)) * CAST(cnt AS DECIMAL(19,0)))")} AS scell2
   FROM cells
 ),
 tx AS (  -- pairs tied on q
-  SELECT CAST(CAST(sum(CAST(cq AS DECIMAL(19,0)) * CAST(cq AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS sq2
+  SELECT {vh("sum(CAST(cq AS DECIMAL(19,0)) * CAST(cq AS DECIMAL(19,0)))")} AS sq2
   FROM (SELECT q, sum(cnt) AS cq FROM cells GROUP BY q)
 ),
 ty AS (
-  SELECT CAST(CAST(sum(CAST(cd AS DECIMAL(19,0)) * CAST(cd AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS sd2
+  SELECT {vh("sum(CAST(cd AS DECIMAL(19,0)) * CAST(cd AS DECIMAL(19,0)))")} AS sd2
   FROM (SELECT d, sum(cnt) AS cd FROM cells GROUP BY d)
 )
 SELECT CAST(t.n AS BIGINT) AS n,
@@ -1919,7 +1906,7 @@ def kruskal_wallis_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nD = F.col("n").cast("double")
     h = 12.0 / (nD * (F.col("n") + 1)) * F.col("sum_terms") - 3.0 * (F.col("n") + 1)
-    c = 1.0 - F.col("tie_mass") / (nD * F.col("n") * F.col("n") - F.col("n"))
+    c = 1.0 - F.try_divide(F.col("tie_mass"), nD * F.col("n") * F.col("n") - F.col("n"))
     return (
         ties.crossJoin(F.broadcast(k_cnt))
         .crossJoin(F.broadcast(terms))
@@ -1928,7 +1915,7 @@ def kruskal_wallis_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").alias("n_total"),
             F.round(h, 6).alias("h_stat"),
             F.round(c, 9).alias("tie_correction"),
-            F.round(h / c, 6).alias("h_adj"),
+            F.round(F.try_divide(h, c), 6).alias("h_adj"),
         )
     )
 
@@ -2023,8 +2010,9 @@ def bh_fdr_segment_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m_cnt = seg.agg(F.count(F.lit(1)).alias("m"))
     p0 = F.col("neg_all") / F.col("n_all")
-    z = (F.col("neg").cast("double") / F.col("n") - p0) / F.sqrt(
-        p0 * (1 - p0) / F.col("n")
+    z = F.try_divide(
+        F.col("neg").cast("double") / F.col("n") - p0,
+        F.sqrt(p0 * (1 - p0) / F.col("n")),
     )
     zd = (
         seg.crossJoin(F.broadcast(glob))
@@ -2292,14 +2280,12 @@ def logistic_glm_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- empirical-Bayes shrinkage of segment means ----------------------------
 
-_EB_ORACLE = """
+_EB_ORACLE = f"""
 WITH seg AS (
   SELECT c_mktsegment AS segment,
          count(*) AS n,
          CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-         CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(19,2))
-                       * CAST(c_acctbal AS DECIMAL(19,2))) AS VARCHAR)
-              AS DOUBLE) AS s2
+         {vh("sum(CAST(c_acctbal AS DECIMAL(19,2)) * CAST(c_acctbal AS DECIMAL(19,2)))")} AS s2
   FROM customer GROUP BY 1
 ),
 stats AS (
@@ -2406,8 +2392,10 @@ def eb_shrinkage_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         "mean_se2",
         F.greatest(
-            (F.col("sxb2") - F.col("k") * F.col("gmean") * F.col("gmean"))
-            / (F.col("k") - 1)
+            F.try_divide(
+                F.col("sxb2") - F.col("k") * F.col("gmean") * F.col("gmean"),
+                F.col("k") - 1,
+            )
             - F.col("mean_se2"),
             F.lit(0.0),
         ).alias("tau2"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql
 from ocean_data_pipeline_spark.queries import register
 
 # --- Isotonic regression via the minimax identity ---------------------
@@ -218,16 +219,8 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Reliability-diagram binning --------------------------------------
 
-#: Salted sha256 → uniform, the engine-portable RNG (same device as
-#: sketch_ops._KMV_U_SQL): u < 0.5 routes an order to the train fold.
-_CAL_U_SQL = """(CAST(('0x' || substr(sha256('cal_' || CAST(o_orderkey AS VARCHAR)),
-      1, 8)) AS BIGINT) + 1) / 4294967297.0"""
-
-#: The same uniform in Spark SQL dialect (sha2/conv instead of
-#: DuckDB's sha256/'0x' cast) — the two strings compute the identical
-#: 32-bit integer, hence the identical double.
-_CAL_U_SPARK = """(CAST(conv(substr(sha2(concat('cal_', CAST(o_orderkey AS STRING)), 256),
-      1, 8), 16, 10) AS BIGINT) + 1) / 4294967297.0"""
+#: u < 0.5 routes an order to the train fold.
+_CAL_U_SQL = uniform_sql("'cal_' || CAST(o_orderkey AS VARCHAR)")
 
 _CAL_BIN_SQL = "CAST(least(9, floor(o_totalprice / 40000.0)) AS INT)"
 
@@ -277,9 +270,10 @@ def calibration_reliability_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional partial aggs on the bin (map-side combine), tiny join.
     At 100 TB: a single fact pass, no per-row state — reliability
     monitoring at full-corpus scale."""
+    draw = uniform(F.concat(F.lit("cal_"), F.col("o_orderkey").cast("string")))
     folds = table(spark, sf_dir, "orders").select(
         F.expr(_CAL_BIN_SQL).alias("bin"),
-        F.when(F.expr(_CAL_U_SPARK) < 0.5, 1).otherwise(0).alias("is_train"),
+        F.when(draw < 0.5, 1).otherwise(0).alias("is_train"),
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
     )
     train = (

@@ -22,16 +22,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import hash_int, hash_int_sql
 from ocean_data_pipeline_spark.operators.similarity import dot
 from ocean_data_pipeline_spark.queries import register
 
 # --- benchmark contamination census ------------------------------------
 
-_CONTAMINATION_ORACLE = """
+_CONTAMINATION_ORACLE = f"""
 WITH grams AS (
   SELECT doc_id,
-         ('0x' || substring(sha256('split:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
-           % 100 < 10 AS is_test,
+         {hash_int_sql("'split:' || CAST(doc_id AS VARCHAR)", 6)} % 100 < 10 AS is_test,
          unnest(list_distinct(list_transform(
            generate_series(1, greatest(1, length(text) - 7)),
            i -> substr(text, i, 8)))) AS gram
@@ -74,16 +74,7 @@ def contamination_ngram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     one task otherwise (cluster no-op)."""
     docs = table(spark, sf_dir, "documents", spread=True)
     is_test = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 256),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
+        hash_int(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 6) % 100
         < 10
     )
     grams = docs.select(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql, vd
 from ocean_data_pipeline_spark.queries import register
 
 # --- ordered funnel conversion ----------------------------------------
@@ -93,11 +94,11 @@ def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_viewed",
             "n_clicked",
             "n_purchased",
-            F.round(F.col("n_clicked").cast("double") / F.col("n_viewed"), 4).alias(
-                "click_through"
-            ),
             F.round(
-                F.col("n_purchased").cast("double") / F.col("n_clicked"), 4
+                F.try_divide(F.col("n_clicked").cast("double"), F.col("n_viewed")), 4
+            ).alias("click_through"),
+            F.round(
+                F.try_divide(F.col("n_purchased").cast("double"), F.col("n_clicked")), 4
             ).alias("purchase_through"),
         )
     )
@@ -321,24 +322,19 @@ def event_type_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # --- day-of-week × hour activity heatmap ------------------------------
 
-_HEATMAP_ORACLE = """
+_HEATMAP_ORACLE = f"""
 SELECT CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7
             AS BIGINT) AS dow,
        CAST(extract(hour FROM ts) AS BIGINT) AS hour_of_day,
        count(*) AS n_events,
-       round(CAST(CAST(
-               CAST(sum(CAST(round(value, 2) AS DECIMAL(18,2))) AS DOUBLE)
-               / count(*) AS VARCHAR) AS DECIMAL(38,15)), 2) AS avg_value
+       round({vd("CAST(sum(CAST(round(value, 2) AS DECIMAL(18,2))) AS DOUBLE)"
+                 " / count(*)", 38, 15)}, 2) AS avg_value
 FROM events
 GROUP BY 1, 2 ORDER BY 1, 2
 """
-# ^ avg_value rounds through the double's shortest decimal repr
-# (varchar -> decimal -> half-up) to replicate Spark's round(double)
-# semantics: a cents-exact sum over a small cell count lands exactly on
-# .xx5 (caught live by the sf0.001 parity sweep: 95.02 vs 95.03), where
-# Spark and a binary-value round disagree. The inputs to the division
-# are bit-identical on both engines, so the aligned rounding closes the
-# gap at any scale. Same device as the EWMA oracles (timeseries_ops).
+# ^ avg_value rounds through `vd`, Spark's round(double) semantics: a
+# cents-exact sum over a small cell count lands exactly on .xx5 (caught
+# live by the sf0.001 parity sweep: 95.02 vs 95.03).
 
 
 @register("events_hourly_heatmap", oracle=_HEATMAP_ORACLE)
@@ -1306,10 +1302,7 @@ def rmst_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- log-rank test ----------------------------------------------------
 
-_LR_U_SQL = """(CAST(('0x' || substr(sha256('lr_' || CAST(user_id AS VARCHAR)),
-      1, 8)) AS BIGINT) + 1) / 4294967297.0"""
-_LR_U_SPARK = """(CAST(conv(substr(sha2(concat('lr_', CAST(user_id AS STRING)), 256),
-      1, 8), 16, 10) AS BIGINT) + 1) / 4294967297.0"""
+_LR_U_SQL = uniform_sql("'lr_' || CAST(user_id AS VARCHAR)")
 
 _LOGRANK_ORACLE = f"""
 WITH u AS (
@@ -1404,9 +1397,10 @@ def logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = table(spark, sf_dir, "events")
+    draw = uniform(F.concat(F.lit("lr_"), F.col("user_id").cast("string")))
     u = ev.groupBy("user_id").agg(F.min("ts").alias("t0")).select(
         "user_id", "t0",
-        F.when(F.expr(_LR_U_SPARK) < 0.5, 1).otherwise(0).alias("grp"),
+        F.when(draw < 0.5, 1).otherwise(0).alias("grp"),
     )
     p = (
         ev.filter(F.col("event_type") == "purchase")

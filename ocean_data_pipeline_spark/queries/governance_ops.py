@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- Benford first-digit census ---------------------------------------
@@ -100,21 +101,15 @@ def benford_digit_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Mahalanobis multivariate outliers --------------------------------
 
-_MAHALANOBIS_ORACLE = """
+_MAHALANOBIS_ORACLE = f"""
 WITH m AS (
   SELECT count(*) AS n,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-         -- VARCHAR hop: correctly-rounded decimal->double for sums
-         -- past 2^53 (DuckDB's direct cast double-rounds; Spark's
-         -- BigDecimal.doubleValue and strtod round the exact value
-         -- once) — see acf_monthly_revenue
-         CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))
-                  * CAST(l_quantity AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sxx,
-         CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                  * CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS syy,
-         CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))
-                  * CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS sxy
+         {vh("sum(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2)))")} AS sxx,
+         {vh("sum(CAST(l_extendedprice AS DECIMAL(18,2))"
+             " * CAST(l_extendedprice AS DECIMAL(18,2)))")} AS syy,
+         {vh("sum(CAST(l_quantity AS DECIMAL(18,2)) * CAST(l_extendedprice AS DECIMAL(18,2)))")} AS sxy
   FROM lineitem
 ),
 cov AS (

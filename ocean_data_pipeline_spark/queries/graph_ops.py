@@ -30,6 +30,7 @@ from ocean_data_pipeline_spark.operators.graph import (
     oriented_triangles,
     symmetrize,
 )
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 
 
@@ -1044,10 +1045,8 @@ ends AS (
 s AS (
   SELECT count(*) AS m,
          CAST(sum(ja) AS DOUBLE) AS sj,
-         CAST(CAST(sum(CAST(ja AS DECIMAL(19,0)) * CAST(ja AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS sjj,
-         CAST(CAST(sum(CAST(ja AS DECIMAL(19,0)) * CAST(jb AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS sjk
+         {vh("sum(CAST(ja AS DECIMAL(19,0)) * CAST(ja AS DECIMAL(19,0)))")} AS sjj,
+         {vh("sum(CAST(ja AS DECIMAL(19,0)) * CAST(jb AS DECIMAL(19,0)))")} AS sjk
   FROM ends
 )
 SELECT CAST(m / 2 AS BIGINT) AS n_edges,

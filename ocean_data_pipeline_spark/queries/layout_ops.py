@@ -572,6 +572,6 @@ def zonemap_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             1.0 - F.col("files_scanned").cast("double") / F.col("n_files"), 6
         ).alias("prune_fraction"),
         F.round(
-            F.col("rows_scanned").cast("double") / F.col("matching_rows"), 4
+            F.try_divide(F.col("rows_scanned").cast("double"), F.col("matching_rows")), 4
         ).alias("scan_amplification"),
     ).orderBy("layout")

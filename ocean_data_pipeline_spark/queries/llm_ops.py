@@ -13,6 +13,7 @@ from ocean_data_pipeline_spark.operators.dedup import (
     jaccard_pairs,
     mllib_minhash_pairs,
 )
+from ocean_data_pipeline_spark.operators.portable import hash_int, hash_int_sql, vd
 from ocean_data_pipeline_spark.operators.similarity import cosine_topk, lsh_topk
 from ocean_data_pipeline_spark.operators.text import (
     STOPWORDS,
@@ -2138,7 +2139,7 @@ def multimodal_av_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- source-mixture distribution drift (Jensen-Shannon) ---------------
 
-_JSD_ORACLE = """
+_JSD_ORACLE = f"""
 WITH toks AS (
   SELECT source, tok
   FROM (
@@ -2180,7 +2181,7 @@ terms AS (
 )
 SELECT source,
        CAST(min(n_s) AS BIGINT) AS n_tokens,
-       CAST(sum(CAST(CAST(term AS VARCHAR) AS DECIMAL(18,12))) AS DOUBLE)
+       CAST(sum({vd("term", 18, 12)}) AS DOUBLE)
          AS jsd_vs_rest
 FROM terms
 GROUP BY source
@@ -2225,9 +2226,9 @@ def token_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
     )
     p_s = F.col("n_st").cast("double") / F.col("n_s").cast("double")
-    p_r = (F.col("n_t") - F.col("n_st")).cast("double") / (
-        F.col("n") - F.col("n_s")
-    ).cast("double")
+    p_r = F.try_divide(
+        (F.col("n_t") - F.col("n_st")).cast("double"), (F.col("n") - F.col("n_s")).cast("double")
+    )
     m = F.lit(0.5) * (p_s + p_r)
     term = (
         F.when(F.col("n_st") > 0, F.lit(0.5) * p_s * F.log(p_s / m)).otherwise(0.0)
@@ -2250,13 +2251,13 @@ def token_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- deterministic hyperplane LSH (oracle-backed) ----------------------
 
-_HPLSH_ORACLE = """
+_HPLSH_ORACLE = f"""
 WITH dims AS (SELECT CAST(unnest(generate_series(1, 64)) AS INT) AS d),
 planes AS (SELECT CAST(unnest(generate_series(0, 7)) AS INT) AS p),
 weights AS (
   SELECT p.p, dm.d,
-         CAST(('0x' || substr(sha256('hp:' || CAST(p.p AS VARCHAR) || ':'
-                || CAST(dm.d AS VARCHAR)), 1, 6)) AS BIGINT) - 8388608 AS w
+         {hash_int_sql("'hp:' || CAST(p.p AS VARCHAR) || ':' || CAST(dm.d AS VARCHAR)", 6)}
+           - 8388608 AS w
   FROM planes p CROSS JOIN dims dm
 ),
 comps AS (
@@ -2305,23 +2306,15 @@ def hyperplane_lsh_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p",
         "d",
         (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(
-                            F.lit("hp:"),
-                            F.col("p").cast("string"),
-                            F.lit(":"),
-                            F.col("d").cast("string"),
-                        ),
-                        256,
-                    ),
-                    1,
-                    6,
+            hash_int(
+                F.concat(
+                    F.lit("hp:"),
+                    F.col("p").cast("string"),
+                    F.lit(":"),
+                    F.col("d").cast("string"),
                 ),
-                16,
-                10,
-            ).cast("bigint")
+                6,
+            )
             - F.lit(8388608)
         ).alias("w"),
     )

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- exact skewness / kurtosis ----------------------------------------
@@ -302,16 +303,14 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Gaussian KDE on a fixed grid ------------------------------------------
 
-_KDE_ORACLE = """
+_KDE_ORACLE = f"""
 WITH base AS (
   SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders
 ),
 mom AS (  -- exact decimal moments for sigma (the skew_kurtosis device)
   SELECT count(*) AS n,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-         CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(19,2))
-                       * CAST(o_totalprice AS DECIMAL(19,2))) AS VARCHAR)
-              AS DOUBLE) AS s2
+         {vh("sum(CAST(o_totalprice AS DECIMAL(19,2)) * CAST(o_totalprice AS DECIMAL(19,2)))")} AS s2
   FROM orders
 ),
 band AS (
@@ -401,7 +400,7 @@ def gaussian_kde_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     base = o.select(F.col("o_totalprice").cast("double").alias("x"))
-    u = (F.col("gx") - F.col("x")) / F.col("h")
+    u = F.try_divide(F.col("gx") - F.col("x"), F.col("h"))
     # picounit-BIGINT kernel terms (the embedding_isotropy_audit
     # device): round(k*1e12) of the identical double on both engines,
     # summed as exact integers — ~2x cheaper than per-term

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql
 from ocean_data_pipeline_spark.operators.text import (
     bpe_token_count,
     token_count,
@@ -732,12 +733,10 @@ def nucleus_vocab_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- deterministic weighted sampling (Efraimidis–Spirakis A-ES) -------
 
-_WEIGHTED_SAMPLE_ORACLE = """
+_WEIGHTED_SAMPLE_ORACLE = f"""
 WITH keyed AS (
   SELECT doc_id, source, n_chars,
-         round(-ln((CAST(('0x' || substr(sha256('samp_' || CAST(doc_id
-                    AS VARCHAR)), 1, 8)) AS BIGINT) + 1)
-                   / 4294967297.0)
+         round(-ln({uniform_sql("'samp_' || CAST(doc_id AS VARCHAR)")})
                / n_chars, 12) AS es_key
   FROM documents
 ),
@@ -773,14 +772,7 @@ def weighted_sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame
     pins). Keys round to 12 decimals and tie-break on doc_id, so the
     rank-50 boundary is engine-stable."""
     docs = table(spark, sf_dir, "documents")
-    u = (
-        F.conv(
-            F.substring(F.sha2(F.concat(F.lit("samp_"), F.col("doc_id").cast("string")), 256), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        + 1
-    ) / F.lit(4294967297.0)
+    u = uniform(F.concat(F.lit("samp_"), F.col("doc_id").cast("string")))
     keyed = docs.select(
         "doc_id",
         "source",

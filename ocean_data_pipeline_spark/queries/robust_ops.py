@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql, vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- exact trimmed / winsorized means ---------------------------------
@@ -143,10 +144,7 @@ def winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- split-conformal prediction intervals -----------------------------
 
-_CONF_U_SQL = """(CAST(('0x' || substr(sha256('conf_' || CAST(o_orderkey AS VARCHAR)),
-      1, 8)) AS BIGINT) + 1) / 4294967297.0"""
-_CONF_U_SPARK = """(CAST(conv(substr(sha2(concat('conf_', CAST(o_orderkey AS STRING)), 256),
-      1, 8), 16, 10) AS BIGINT) + 1) / 4294967297.0"""
+_CONF_U_SQL = uniform_sql("'conf_' || CAST(o_orderkey AS VARCHAR)")
 
 _CONF_ORACLE = f"""
 WITH folds AS (
@@ -210,10 +208,11 @@ def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     level-relation window for selection. At 100 TB: one fact pass plus
     level-census selection — conformal calibration is cheap enough to
     run per release."""
+    draw = uniform(F.concat(F.lit("conf_"), F.col("o_orderkey").cast("string")))
     folds = table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("priority"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        F.when(F.expr(_CONF_U_SPARK) < 0.5, 1).otherwise(0).alias("is_train"),
+        F.when(draw < 0.5, 1).otherwise(0).alias("is_train"),
     ).localCheckpoint()  # consumed by train fit + calibration residuals
     pred = (
         folds.filter(F.col("is_train") == 1)
@@ -268,9 +267,8 @@ WITH s AS (
   SELECT c_mktsegment AS segment,
          count(*) AS nh,
          CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS DOUBLE) AS s1,
-         CAST(CAST(sum(CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS DECIMAL(19,0))
-                       * CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS s2
+         {vh("sum(CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS DECIMAL(19,0))"
+             " * CAST(CAST(round(c_acctbal * 100) AS BIGINT) AS DECIMAL(19,0)))")} AS s2
   FROM customer GROUP BY 1
 ),
 w AS (  -- N_h * sigma_h, rounded ONCE into DECIMAL so the total is exact
@@ -374,10 +372,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- K-fold stability of a statistic ----------------------------------
 
-_CV_U_SQL = """(CAST(('0x' || substr(sha256('cvf_' || CAST(o_orderkey AS VARCHAR)),
-      1, 8)) AS BIGINT) + 1) / 4294967297.0"""
-_CV_U_SPARK = """(CAST(conv(substr(sha2(concat('cvf_', CAST(o_orderkey AS STRING)), 256),
-      1, 8), 16, 10) AS BIGINT) + 1) / 4294967297.0"""
+_CV_U_SQL = uniform_sql("'cvf_' || CAST(o_orderkey AS VARCHAR)")
 
 _CV_ORACLE = f"""
 WITH folds AS (
@@ -399,8 +394,7 @@ dec AS (  -- fold means rounded ONCE into micro-unit INTEGERS: exact
 tot AS (
   SELECT count(*) AS k,
          CAST(sum(md6) AS DOUBLE) AS sm,
-         CAST(CAST(sum(CAST(md6 AS DECIMAL(19,0)) * CAST(md6 AS DECIMAL(19,0)))
-              AS VARCHAR) AS DOUBLE) AS sm2
+         {vh("sum(CAST(md6 AS DECIMAL(19,0)) * CAST(md6 AS DECIMAL(19,0)))")} AS sm2
   FROM dec
 )
 SELECT d.fold,
@@ -428,8 +422,9 @@ def cv_fold_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one conditional-agg shuffle to 5 fold rows; the
     stability algebra is 5-row arithmetic. At 100 TB: one pass."""
+    draw = uniform(F.concat(F.lit("cvf_"), F.col("o_orderkey").cast("string")))
     folds = table(spark, sf_dir, "orders").select(
-        F.least(F.lit(4), F.floor(F.expr(_CV_U_SPARK) * 5).cast("int")).alias("fold"),
+        F.least(F.lit(4), F.floor(draw * 5).cast("int")).alias("fold"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
     )
     per_fold = folds.groupBy("fold").agg(

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import vd, vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- RFM segmentation --------------------------------------------------
@@ -136,7 +137,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Gini coefficient --------------------------------------------------
 
-_GINI_ORACLE = """
+_GINI_ORACLE = f"""
 WITH spend AS (
   SELECT o_custkey,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS x
@@ -148,8 +149,7 @@ ranked AS (
 g AS (
   SELECT count(*) AS n,
          CAST(sum(x) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(i AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS six
+         {vh("sum(CAST(i AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,2)))")} AS six
   FROM ranked
 )
 SELECT CAST(n AS BIGINT) AS n_customers,
@@ -167,8 +167,7 @@ def gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank formula G = 2·Σi·x_(i)/(n·Σx) − (n+1)/n over the ascending
     spend ranking. Σi·x_(i) accumulates in exact DECIMAL (rank ×
     cents-exact spend), so the whole statistic is one fixed IEEE
-    chain; the VARCHAR hop keeps the big decimal→double cast
-    correctly rounded on both engines.
+    chain (`vh` on the DuckDB side).
 
     Scale: facts reduce to O(customers) first; the total-order rank
     (custkey tiebreak pins ties) rides the distributed exact-rank
@@ -213,7 +212,7 @@ def gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Herfindahl-Hirschman concentration --------------------------------
 
-_HHI_ORACLE = """
+_HHI_ORACLE = f"""
 WITH rev AS (
   SELECT s.s_nationkey, l.l_suppkey,
          CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
@@ -225,8 +224,7 @@ agg AS (
   SELECT s_nationkey,
          count(*) AS n_suppliers,
          CAST(sum(x) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS sxx,
+         {vh("sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))")} AS sxx,
          CAST(max(x) AS DOUBLE) AS xmax
   FROM rev GROUP BY s_nationkey
 )
@@ -385,7 +383,7 @@ def abc_pareto_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- population stability index (PSI) ----------------------------------
 
-_PSI_ORACLE = """
+_PSI_ORACLE = f"""
 WITH ref AS (
   SELECT o_totalprice AS x FROM orders WHERE year(o_orderdate) = 1995
 ),
@@ -432,7 +430,7 @@ terms AS (
 ),
 terms2 AS (
   SELECT bin, n_ref, n_cur,
-         CAST(CAST(CAST(psi_term_raw AS VARCHAR) AS DECIMAL(28,12)) AS DOUBLE)
+         CAST({vd("psi_term_raw", 28, 12)} AS DOUBLE)
            AS psi_term
   FROM terms
 ),
@@ -543,7 +541,7 @@ def psi_drift_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- weight of evidence / information value ----------------------------
 
-_WOE_ORACLE = """
+_WOE_ORACLE = f"""
 WITH pop AS (
   SELECT o_totalprice AS x,
          CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -582,10 +580,9 @@ terms AS (
   SELECT rc.bin,
          CAST(rc.n_pos AS BIGINT) AS n_pos,
          CAST(rc.n_neg AS BIGINT) AS n_neg,
-         CAST(CAST(CAST(CASE WHEN rc.n_pos > 0 AND rc.n_neg > 0 THEN
-           ln((CAST(rc.n_pos AS DOUBLE) / t.t_pos)
-              / (CAST(rc.n_neg AS DOUBLE) / t.t_neg))
-         END AS VARCHAR) AS DECIMAL(18,12)) AS DOUBLE) AS woe,
+         CAST({vd("CASE WHEN rc.n_pos > 0 AND rc.n_neg > 0 THEN"
+                  " ln((CAST(rc.n_pos AS DOUBLE) / t.t_pos)"
+                  " / (CAST(rc.n_neg AS DOUBLE) / t.t_neg)) END", 18, 12)} AS DOUBLE) AS woe,
          CASE WHEN rc.n_pos > 0 AND rc.n_neg > 0 THEN
            (CAST(rc.n_pos AS DOUBLE) / t.t_pos
             - CAST(rc.n_neg AS DOUBLE) / t.t_neg)
@@ -595,7 +592,7 @@ terms AS (
   FROM rc CROSS JOIN tots t
 ),
 total AS (
-  SELECT CAST(sum(CAST(CAST(iv_term AS VARCHAR) AS DECIMAL(18,12)))
+  SELECT CAST(sum({vd("iv_term", 18, 12)})
               AS DOUBLE) AS iv
   FROM terms
 )
@@ -909,27 +906,21 @@ w0 AS MATERIALIZED (
 rm{k} AS (SELECT seg, sum(w) AS ms FROM {prev} GROUP BY seg),
 wr{k} AS MATERIALIZED (
   SELECT p.seg, p.region, p.n,
-         CAST(CAST(CAST(CAST(p.w AS VARCHAR) AS DOUBLE)
-                    * ((t.big_n / t.n_seg)
-                       / CAST(CAST(m.ms AS VARCHAR) AS DOUBLE)) AS VARCHAR)
-              AS DECIMAL(28,12)) AS w
+         {vd(f'{vh("p.w")} * ((t.big_n / t.n_seg) / {vh("m.ms")})', 28, 12)} AS w
   FROM {prev} p JOIN rm{k} m ON m.seg = p.seg CROSS JOIN tot t
 ),
 cm{k} AS (SELECT region, sum(w) AS ms FROM wr{k} GROUP BY region),
 w{k} AS MATERIALIZED (
   SELECT p.seg, p.region, p.n,
-         CAST(CAST(CAST(CAST(p.w AS VARCHAR) AS DOUBLE)
-                    * ((t.big_n / t.n_reg)
-                       / CAST(CAST(m.ms AS VARCHAR) AS DOUBLE)) AS VARCHAR)
-              AS DECIMAL(28,12)) AS w
+         {vd(f'{vh("p.w")} * ((t.big_n / t.n_reg) / {vh("m.ms")})', 28, 12)} AS w
   FROM wr{k} p JOIN cm{k} m ON m.region = p.region CROSS JOIN tot t
 )""")
         prev = f"w{k}"
     return (
         "WITH " + ",".join(steps) + f"""
 SELECT seg, region, CAST(n AS BIGINT) AS n,
-       CAST(CAST(w AS VARCHAR) AS DOUBLE) AS raked_weight,
-       CAST(CAST(w AS VARCHAR) AS DOUBLE) / n AS weight_factor
+       {vh("w")} AS raked_weight,
+       {vh("w")} / n AS weight_factor
 FROM {prev}
 ORDER BY seg, region
 """

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql
 from ocean_data_pipeline_spark.queries import register
 
 #: Three pairwise-independent-enough multiplicative mixes (Knuth's
@@ -125,13 +126,13 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: K minimum values kept per group.
 _KMV_K = 64
-#: Salted sha256 → uniform in (0, 1], the engine-portable RNG
-#: replacement (same device as `weighted_sample_deterministic`).
-#: The group is part of the salt, so each group draws an INDEPENDENT
-#: uniform realization — with a shared hash, groups containing the same
-#: keys would report correlated (even identical) estimates.
-_KMV_U_SQL = """(CAST(('0x' || substr(sha256('kmv_' || o_orderpriority || '_'
-      || CAST(o_custkey AS VARCHAR)), 1, 8)) AS BIGINT) + 1) / 4294967297.0"""
+#: The group is part of the salt of the draw, so each group draws an
+#: INDEPENDENT uniform realization — with a shared hash, groups
+#: containing the same keys would report correlated (even identical)
+#: estimates.
+_KMV_U_SQL = uniform_sql(
+    "'kmv_' || o_orderpriority || '_' || CAST(o_custkey AS VARCHAR)"
+)
 
 _KMV_ORACLE = f"""
 WITH keys AS (
@@ -189,28 +190,13 @@ def kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderpriority", "o_custkey")
         .distinct()
     )
-    u = (
-        (
-            F.conv(
-                F.substring(
-                    F.sha2(
-                        F.concat(
-                            F.lit("kmv_"),
-                            F.col("o_orderpriority"),
-                            F.lit("_"),
-                            F.col("o_custkey").cast("string"),
-                        ),
-                        256,
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            + 1
+    u = uniform(
+        F.concat(
+            F.lit("kmv_"),
+            F.col("o_orderpriority"),
+            F.lit("_"),
+            F.col("o_custkey").cast("string"),
         )
-        / F.lit(4294967297.0)
     ).alias("u")
     from pyspark.sql import Window
 
@@ -342,9 +328,9 @@ _POIS_CUM = (
 )
 
 
-def _boot_u_sql() -> str:
-    return """(CAST(('0x' || substr(sha256('boot_' || CAST(o_orderkey AS VARCHAR)
-        || '_' || CAST(b AS VARCHAR)), 1, 8)) AS BIGINT) + 1) / 4294967297.0"""
+_BOOT_U_SQL = uniform_sql(
+    "'boot_' || CAST(o_orderkey AS VARCHAR) || '_' || CAST(b AS VARCHAR)"
+)
 
 
 _BOOT_ORACLE = f"""
@@ -360,7 +346,7 @@ weighted AS (
               WHEN u <= {_POIS_CUM[3]} THEN 3
               WHEN u <= {_POIS_CUM[4]} THEN 4
               ELSE 5 END AS w
-  FROM (SELECT b, price, {_boot_u_sql()} AS u FROM reps)
+  FROM (SELECT b, price, {_BOOT_U_SQL} AS u FROM reps)
 ),
 rep_means AS (
   -- a replicate whose weights all drew 0 carries no information:
@@ -423,26 +409,14 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "price",
         F.explode(F.sequence(F.lit(1), F.lit(_BOOT_B))).alias("b"),
     )
-    uu = (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(
-                        F.lit("boot_"),
-                        F.col("o_orderkey").cast("string"),
-                        F.lit("_"),
-                        F.col("b").cast("string"),
-                    ),
-                    256,
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        + 1
-    ) / F.lit(4294967297.0)
+    uu = uniform(
+        F.concat(
+            F.lit("boot_"),
+            F.col("o_orderkey").cast("string"),
+            F.lit("_"),
+            F.col("b").cast("string"),
+        )
+    )
     cums = [float(c) for c in _POIS_CUM]
     wexpr = (
         F.when(F.col("u") <= cums[0], 0)
@@ -505,8 +479,7 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: Set-op sketches must share ONE hash (unlike the per-group salts of
 #: `kmv_distinct_estimate`): x contributes the same uniform to every
 #: sketch, which is what makes bottom-k sets comparable and mergeable.
-_KMVSET_U = """(CAST(('0x' || substr(sha256('kmvset_' || CAST(o_custkey AS VARCHAR)),
-      1, 8)) AS BIGINT) + 1) / 4294967297.0"""
+_KMVSET_U = uniform_sql("'kmvset_' || CAST(o_custkey AS VARCHAR)")
 
 _KMVSET_ORACLE = f"""
 WITH m AS (
@@ -583,21 +556,7 @@ def kmv_set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("in_b"),
         )
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(F.lit("kmvset_"), F.col("o_custkey").cast("string")),
-                    256,
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        + 1
-    ) / F.lit(4294967297.0)
+    u = uniform(F.concat(F.lit("kmvset_"), F.col("o_custkey").cast("string")))
     keyed = m.select("o_custkey", "in_a", "in_b", u.alias("u")).localCheckpoint()
 
     def bottomk(df, flag):

@@ -113,7 +113,8 @@ def sql_top_spenders_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTEs, each gating on STRICTLY-LATER timestamps, plus scalar
 # subqueries for the stage counts — exercises CTE resolution, scalar
 # subquery planning, and correlated-free aggregation in one string
-# that both engines accept verbatim.
+# that both engines accept verbatim. nullif gives Spark's ANSI division
+# DuckDB's NULL on an empty stage.
 _SQL_FUNNEL = """
 WITH v AS (
   SELECT user_id, min(ts) AS t_view FROM events
@@ -130,15 +131,17 @@ p AS (
   FROM events e JOIN c ON e.user_id = c.user_id
   WHERE e.event_type = 'purchase' AND e.ts > c.t_click
   GROUP BY e.user_id
+),
+n AS (
+  SELECT (SELECT count(DISTINCT user_id) FROM events) AS n_users,
+         (SELECT count(*) FROM v) AS n_viewed,
+         (SELECT count(*) FROM c) AS n_clicked,
+         (SELECT count(*) FROM p) AS n_purchased
 )
-SELECT (SELECT count(DISTINCT user_id) FROM events) AS n_users,
-       (SELECT count(*) FROM v) AS n_viewed,
-       (SELECT count(*) FROM c) AS n_clicked,
-       (SELECT count(*) FROM p) AS n_purchased,
-       round(CAST((SELECT count(*) FROM c) AS DOUBLE)
-             / (SELECT count(*) FROM v), 4) AS click_through,
-       round(CAST((SELECT count(*) FROM p) AS DOUBLE)
-             / (SELECT count(*) FROM c), 4) AS purchase_through
+SELECT n_users, n_viewed, n_clicked, n_purchased,
+       round(CAST(n_clicked AS DOUBLE) / nullif(n_viewed, 0), 4) AS click_through,
+       round(CAST(n_purchased AS DOUBLE) / nullif(n_clicked, 0), 4) AS purchase_through
+FROM n
 """
 
 

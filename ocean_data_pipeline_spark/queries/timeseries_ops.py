@@ -30,11 +30,12 @@ from ocean_data_pipeline_spark.operators.monthly import (
     monthly_revenue,
     monthly_revenue_sql,
 )
+from ocean_data_pipeline_spark.operators.portable import vd, vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- exponentially-weighted moving average ----------------------------
 
-_EWMA_ORACLE = """
+_EWMA_ORACLE = f"""
 WITH m AS (
   SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m-01') AS month,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
@@ -54,13 +55,11 @@ s AS (
 )
 SELECT month,
        round(rev, 2) AS revenue,
-       round(CAST(CAST(0.3 * pow(0.7, rn) * (prefix - r1 * pow(0.7, -1))
-                       + pow(0.7, rn - 1) * r1 AS VARCHAR)
-                  AS DECIMAL(38,15)), 2) AS ewma
+       round({vd("0.3 * pow(0.7, rn) * (prefix - r1 * pow(0.7, -1))"
+                 " + pow(0.7, rn - 1) * r1", 38, 15)}, 2) AS ewma
 FROM s ORDER BY month
 """
-# ^ ewma rounds through the double's SHORTEST DECIMAL REPR (varchar →
-# decimal → half-up), replicating Spark's round(double) semantics: the
+# ^ ewma rounds through `vd`, Spark's round(double) semantics: the
 # exact-cents recursion makes early terms land exactly on .xx5 (e_2 has
 # 3 decimals), where Spark rounds the repr ".225" up but a binary-value
 # round sees .2249999... and rounds down. Revenue needs no such care —
@@ -214,7 +213,7 @@ def daily_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: prefix sum can land on the other side of a .xx5 rounding boundary
 #: (observed: one cent at smoke scale). Same relation, different
 #: but exactly-matched float associativity.
-_STREAM_EWMA_ORACLE = """
+_STREAM_EWMA_ORACLE = f"""
 WITH RECURSIVE m AS (
   SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m-01') AS month,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS rev,
@@ -230,10 +229,10 @@ rec AS (
   FROM m JOIN rec ON m.rn = rec.rn + 1
 )
 SELECT month, round(rev, 2) AS revenue,
-       round(CAST(CAST(e AS VARCHAR) AS DECIMAL(38,15)), 2) AS ewma
+       round({vd("e", 38, 15)}, 2) AS ewma
 FROM rec ORDER BY month
 """
-# ^ same shortest-repr rounding path as the batch oracle (see above):
+# ^ the same `vd` rounding as the batch oracle (see above):
 # with bit-identical recursion doubles on both sides, identical strings
 # → identical decimals → identical half-up rounding at any scale.
 
@@ -576,10 +575,8 @@ r AS (
   -- classical 2x12 centered MA; FULL frames only (all 13 inputs
   -- present), the round-5 full-frame-only device
   SELECT mo,
-         CAST(CAST(CAST(x AS DOUBLE)
-              / ((CAST(s11 AS DOUBLE)
-                  + (CAST(x_m6 AS DOUBLE) + CAST(x_p6 AS DOUBLE)) / 2) / 12)
-              AS VARCHAR) AS DECIMAL(18,12)) AS ratio
+         {vd("CAST(x AS DOUBLE) / ((CAST(s11 AS DOUBLE)"
+             " + (CAST(x_m6 AS DOUBLE) + CAST(x_p6 AS DOUBLE)) / 2) / 12)", 18, 12)} AS ratio
   FROM f
   WHERE n11 = 11 AND x_m6 IS NOT NULL AND x_p6 IS NOT NULL
     AND (CAST(s11 AS DOUBLE)
@@ -590,12 +587,9 @@ idx AS (
          CAST(sum(ratio) AS DOUBLE) / count(*) AS raw_index
   FROM r GROUP BY mo
 ),
--- normalizer: each index rounds ONCE into DECIMAL(18,12) THROUGH ITS
--- SHORTEST STRING REPR before the sum — order-free reduction AND a
--- correctly-rounded double->decimal step on both engines (direct
--- double->decimal casts double-round: scaled-float in DuckDB vs
--- BigDecimal in Spark)
-tot AS (SELECT CAST(sum(CAST(CAST(raw_index AS VARCHAR) AS DECIMAL(18,12)))
+-- normalizer: each index rounds ONCE into DECIMAL(18,12) before the
+-- sum, an order-free reduction
+tot AS (SELECT CAST(sum({vd("raw_index", 18, 12)})
                     AS DOUBLE) AS s
         FROM idx)
 SELECT idx.mo AS month,
@@ -852,8 +846,7 @@ f AS (
          sum(CAST(t AS DECIMAL(19,0))) OVER w AS st,
          sum(CAST(t AS DECIMAL(19,0)) * CAST(t AS DECIMAL(19,0))) OVER w AS stt,
          sum(CAST(x AS DECIMAL(19,2))) OVER w AS sx,
-         CAST(CAST(sum(CAST(t AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,2)))
-                   OVER w AS VARCHAR) AS DOUBLE) AS stx
+         {vh("sum(CAST(t AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,2))) OVER w")} AS stx
   FROM m
   WINDOW w AS (ORDER BY t ROWS BETWEEN 5 PRECEDING AND CURRENT ROW)
 )
@@ -877,8 +870,7 @@ def rolling_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     window sibling of `rolling_avg_monthly`). All five frame sums are
     exact DECIMALs over the month frame (month indices and cents-exact
     revenue), the slope is the fixed Cramer chain, and the Σt·x sum
-    crosses to double through the VARCHAR hop (the ACF device) so
-    DuckDB's int128→double cast cannot double-round.
+    crosses to double through `vh` on the DuckDB side.
 
     Plan shape: the fact scan collapses map-side to the month relation;
     ONE month-ordered window pass computes every frame sum. At 100 TB

@@ -11,10 +11,16 @@ corpus surface is a single climatology table (SURVEY.md §2-J).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.portable import (
+    hash_int,
+    hash_int_sql,
+    uniform,
+    uniform_sql,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- sliding-window chunking ------------------------------------------
@@ -54,11 +60,20 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- deterministic split ----------------------------------------------
 
-_SPLIT_ORACLE = """
+#: A document's split bucket in 0..99, test iff < 10: the 6-digit draw
+#: of 'split:' || doc_id (`contamination_ngram_census` draws it too).
+_SPLIT_BUCKET_SQL = hash_int_sql("'split:' || CAST(doc_id AS VARCHAR)", 6) + " % 100"
+
+
+def _split_bucket() -> Column:
+    """The engine twin of `_SPLIT_BUCKET_SQL`."""
+    return hash_int(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 6) % 100
+
+
+_SPLIT_ORACLE = f"""
 WITH b AS (
   SELECT doc_id, source, n_chars,
-         ('0x' || substring(sha256('split:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
-           % 100 AS bucket
+         {_SPLIT_BUCKET_SQL} AS bucket
   FROM documents
 )
 SELECT CASE WHEN bucket < 10 THEN 'test' ELSE 'train' END AS split,
@@ -82,18 +97,7 @@ def train_test_split_deterministic(spark: SparkSession, sf_dir: str) -> DataFram
     assignment of the same ids. Map-side expression + one tiny
     aggregate; no shuffle of the corpus itself."""
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 256),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = _split_bucket()
     return (
         docs.withColumn("bucket", bucket)
         .select(
@@ -176,11 +180,10 @@ def pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: down-sample the abundant classes.
 SAMPLE_RATES = {"error": 100, "signup": 25, "purchase": 50, "view": 10, "click": 10}
 
-_STRATIFIED_ORACLE = """
+_STRATIFIED_ORACLE = f"""
 WITH b AS (
   SELECT event_type,
-         ('0x' || substring(sha256('sample:' || CAST(event_id AS VARCHAR)), 1, 6))::BIGINT
-           % 100 AS bucket
+         {hash_int_sql("'sample:' || CAST(event_id AS VARCHAR)", 6)} % 100 AS bucket
   FROM events
 )
 SELECT event_type,
@@ -205,15 +208,7 @@ def stratified_sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tiny aggregate; the corpus itself never shuffles."""
     ev = table(spark, sf_dir, "events")
     bucket = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("sample:"), F.col("event_id").cast("string")), 256),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        hash_int(F.concat(F.lit("sample:"), F.col("event_id").cast("string")), 6)
         % 100
     )
     rate = F.lit(10)
@@ -232,11 +227,10 @@ def stratified_sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- split leakage audit ----------------------------------------------
 
-_LEAKAGE_ORACLE = """
+_LEAKAGE_ORACLE = f"""
 WITH docs AS (
   SELECT doc_id, text,
-         CASE WHEN ('0x' || substring(sha256('split:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
-                   % 100 < 10
+         CASE WHEN {_SPLIT_BUCKET_SQL} < 10
               THEN 'test' ELSE 'train' END AS split
   FROM documents WHERE length(trim(text)) > 0
 ),
@@ -330,18 +324,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents", spread=True).filter(
         F.length(F.trim(F.col("text"))) > 0
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 256),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = _split_bucket()
     split = docs.select(
         "doc_id", F.when(bucket < 10, "test").otherwise("train").alias("split")
     )
@@ -415,7 +398,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- end-to-end training-example pipeline ------------------------------
 
-_TRAIN_E2E_ORACLE = """
+_TRAIN_E2E_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t,
          len(regexp_split_to_array(trim(text), '\\s+')) AS n
@@ -430,8 +413,7 @@ chunks AS (
 ),
 tagged AS (
   SELECT *,
-         CASE WHEN ('0x' || substring(sha256('split:' || CAST(doc_id AS VARCHAR)), 1, 6))::BIGINT
-                   % 100 < 10
+         CASE WHEN {_SPLIT_BUCKET_SQL} < 10
               THEN 'test' ELSE 'train' END AS split,
          row_number() OVER (PARTITION BY chunk_text
                             ORDER BY doc_id, chunk_id) AS dup_rn
@@ -480,18 +462,7 @@ def training_example_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.trim(F.col("text"))) > 0
     )
     chunks = chunk_by_tokens(docs, window=32, stride=32)
-    bucket = (
-        F.conv(
-            F.substring(
-                F.sha2(F.concat(F.lit("split:"), F.col("doc_id").cast("string")), 256),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = _split_bucket()
     w_dup = Window.partitionBy("chunk_text").orderBy("doc_id", "chunk_id")
     tagged = chunks.withColumn(
         "split", F.when(bucket < 10, "test").otherwise("train")
@@ -562,10 +533,8 @@ comp AS (
 ),
 assign AS (
   SELECT vec_id, component,
-         (CAST(('0x' || substr(sha256('gsplit_' || CAST(component AS VARCHAR)),
-                1, 8)) AS BIGINT) + 1) / 4294967297.0 AS ug,
-         (CAST(('0x' || substr(sha256('gsplit_' || CAST(vec_id AS VARCHAR)),
-                1, 8)) AS BIGINT) + 1) / 4294967297.0 AS ud
+         {uniform_sql("'gsplit_' || CAST(component AS VARCHAR)")} AS ug,
+         {uniform_sql("'gsplit_' || CAST(vec_id AS VARCHAR)")} AS ud
   FROM comp
 ),
 splits AS (
@@ -628,12 +597,6 @@ def leakage_safe_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def _u(salted: F.Column) -> F.Column:
-        return (
-            F.conv(F.substring(F.sha2(salted, 256), 1, 8), 16, 10).cast("bigint")
-            + 1
-        ) / F.lit(4294967297.0)
-
     def _split(u: F.Column) -> F.Column:
         return (
             F.when(u <= _GSPLIT_TRAIN, "train")
@@ -645,10 +608,10 @@ def leakage_safe_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "component",
         _split(
-            _u(F.concat(F.lit("gsplit_"), F.col("component").cast("string")))
+            uniform(F.concat(F.lit("gsplit_"), F.col("component").cast("string")))
         ).alias("split"),
         _split(
-            _u(F.concat(F.lit("gsplit_"), F.col("vec_id").cast("string")))
+            uniform(F.concat(F.lit("gsplit_"), F.col("vec_id").cast("string")))
         ).alias("naive_split"),
     ).localCheckpoint()  # closes the components loop; reused by 2 aggs
     leaky = (
@@ -859,11 +822,10 @@ def length_bucketing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- per-epoch hash-shuffle shard balance --------------------------------
 
-_EPOCH_SHUFFLE_ORACLE = """
+_EPOCH_SHUFFLE_ORACLE = f"""
 WITH assign AS (
   SELECT e.epoch, d.doc_id,
-         ('0x' || substring(sha256('epoch' || CAST(e.epoch AS VARCHAR)
-                                   || ':' || CAST(d.doc_id AS VARCHAR)), 1, 6))::BIGINT
+         {hash_int_sql("'epoch' || CAST(e.epoch AS VARCHAR) || ':' || CAST(d.doc_id AS VARCHAR)", 6)}
            % 16 AS shard
   FROM documents d
   CROSS JOIN (SELECT unnest([0, 1, 2]) AS epoch) e
@@ -920,23 +882,15 @@ def epoch_shuffle_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id")
     epochs = spark.range(3).select(F.col("id").cast("int").alias("epoch"))
     shard = (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat(
-                        F.lit("epoch"),
-                        F.col("epoch").cast("string"),
-                        F.lit(":"),
-                        F.col("doc_id").cast("string"),
-                    ),
-                    256,
-                ),
-                1,
-                6,
+        hash_int(
+            F.concat(
+                F.lit("epoch"),
+                F.col("epoch").cast("string"),
+                F.lit(":"),
+                F.col("doc_id").cast("string"),
             ),
-            16,
-            10,
-        ).cast("bigint")
+            6,
+        )
         % 16
     )
     per_shard = (
@@ -975,7 +929,8 @@ def epoch_shuffle_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("min_shard") > 0,
             F.round(F.col("max_shard").cast("double") / F.col("min_shard"), 6),
         ).alias("balance_ratio"),
-        F.round((F.col("sum_sq") - nD * F.col("n_docs") / F.col("n_shards")) / expected, 6).alias(
-            "chi_sq_uniform"
-        ),
+        F.round(
+            F.try_divide(F.col("sum_sq") - nD * F.col("n_docs") / F.col("n_shards"), expected),
+            6,
+        ).alias("chi_sq_uniform"),
     ).orderBy("epoch")

@@ -27,6 +27,7 @@ from ocean_data_pipeline_spark.operators.monthly import (
     monthly_revenue_sql,
     year_month,
 )
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- Ljung-Box portmanteau test on monthly revenue ---------------------
@@ -93,7 +94,7 @@ def ljung_box_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Jarque-Bera normality test ----------------------------------------
 
-_JB_ORACLE = """
+_JB_ORACLE = f"""
 WITH c AS (
   SELECT CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS DECIMAL(19,0)) AS cw
   FROM orders
@@ -107,9 +108,9 @@ p AS (
 s AS (
   SELECT count(*) AS n,
          CAST(sum(c) AS DOUBLE) AS s1,
-         CAST(CAST(sum(c2) AS VARCHAR) AS DOUBLE) AS s2,
-         CAST(CAST(sum(c3) AS VARCHAR) AS DOUBLE) AS s3,
-         CAST(CAST(sum(c4) AS VARCHAR) AS DOUBLE) AS s4
+         {vh("sum(c2)")} AS s2,
+         {vh("sum(c3)")} AS s3,
+         {vh("sum(c4)")} AS s4
   FROM p
 ),
 mom AS (
@@ -319,10 +320,10 @@ def brown_forsythe_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("sb_mass"),
     )
-    ms_b = (F.col("sb_mass") - F.col("sz_all") * F.col("sz_all") / F.col("n")) / (
-        F.col("k") - 1
+    ms_b = F.try_divide(
+        F.col("sb_mass") - F.col("sz_all") * F.col("sz_all") / F.col("n"), F.col("k") - 1
     )
-    ms_w = (F.col("szz_all") - F.col("sb_mass")) / (F.col("n") - F.col("k"))
+    ms_w = F.try_divide(F.col("szz_all") - F.col("sb_mass"), F.col("n") - F.col("k"))
     return tot.select(
         F.col("k").cast("bigint").alias("n_groups"),
         F.col("n").alias("n_values"),

@@ -473,8 +473,10 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(chi, 6).alias("chi_sq"),
             F.round(
                 F.sqrt(
-                    F.greatest(chi, F.lit(0.0))
-                    / (F.col("n") * F.least(F.col("r") - 1, F.col("c") - 1))
+                    F.try_divide(
+                        F.greatest(chi, F.lit(0.0)),
+                        F.col("n") * F.least(F.col("r") - 1, F.col("c") - 1),
+                    )
                 ),
                 6,
             ).alias("cramers_v"),
@@ -674,8 +676,9 @@ def length_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_s").cast("bigint").alias("n_source"),
             (F.col("n") - F.col("n_s")).cast("bigint").alias("n_rest"),
             F.round(
-                F.col("d_num").cast("double")
-                / (F.col("n_s") * (F.col("n") - F.col("n_s"))),
+                F.try_divide(
+                    F.col("d_num").cast("double"), F.col("n_s") * (F.col("n") - F.col("n_s"))
+                ),
                 6,
             ).alias("d_stat"),
         )

@@ -18,6 +18,7 @@ from ocean_data_pipeline_spark.operators.graph import (
     sorted_adjacency,
     wedge_pair_census,
 )
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- RANGE frame: peak 30-day customer spend ---------------------------------
@@ -192,7 +193,7 @@ def lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- inter-event burstiness census --------------------------------------------
 
-_BURSTINESS_ORACLE = """
+_BURSTINESS_ORACLE = f"""
 WITH gaps AS (
   SELECT user_id,
          epoch_us(ts) - lag(epoch_us(ts))
@@ -202,8 +203,7 @@ WITH gaps AS (
 per_user AS (
   SELECT user_id, count(*) AS n,
          CAST(sum(CAST(g AS DECIMAL(19,0))) AS DOUBLE) AS s1,
-         CAST(CAST(sum(CAST(g AS DECIMAL(19,0)) * CAST(g AS DECIMAL(19,0)))
-                   AS VARCHAR) AS DOUBLE) AS s2
+         {vh("sum(CAST(g AS DECIMAL(19,0)) * CAST(g AS DECIMAL(19,0)))")} AS s2
   FROM gaps WHERE g IS NOT NULL
   GROUP BY user_id HAVING count(*) >= 2
 ),
@@ -367,10 +367,10 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_chars",
             F.col("median_chars").cast("bigint").alias("median_chars"),
             F.round(
-                F.col("n_short").cast("double") / F.col("n_docs"), 6
+                F.try_divide(F.col("n_short").cast("double"), F.col("n_docs")), 6
             ).alias("short_doc_share"),
             F.round(
-                1.0 - F.col("n_unique").cast("double") / F.col("n_docs"), 6
+                1.0 - F.try_divide(F.col("n_unique").cast("double"), F.col("n_docs")), 6
             ).alias("exact_dup_rate"),
         )
     )

@@ -137,18 +137,18 @@ def ridge_price_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             sy * (a11 * a22 - s12 * s12)
             - s1 * (s1y * a22 - s12 * s2y)
             + s2 * (s1y * s12 - a11 * s2y)
-        ) / det
+        )
         b1 = (
             n * (s1y * a22 - s12 * s2y)
             - sy * (s1 * a22 - s12 * s2)
             + s2 * (s1 * s2y - s1y * s2)
-        ) / det
+        )
         b2 = (
             n * (a11 * s2y - s1y * s12)
             - s1 * (s1 * s2y - s1y * s2)
             + sy * (s1 * s12 - a11 * s2)
-        ) / det
-        return b0, b1, b2
+        )
+        return tuple(F.try_divide(b, det) for b in (b0, b1, b2))
 
     rb0, rb1, rb2 = solve(F.col("s11") + lam, F.col("s22") + lam)
     _, ob1, ob2 = solve(F.col("s11"), F.col("s22"))

@@ -38,8 +38,8 @@ from ocean_data_pipeline_spark.operators.monthly import (
     month_index,
     monthly_revenue,
     monthly_revenue_sql,
-    vh,
 )
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- ADF (Dickey-Fuller) unit-root t-statistic ---------------------------
@@ -140,7 +140,7 @@ def adf_unit_root_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- cross-correlation (lead/lag) -----------------------------------------
 
-_CCF_ORACLE = """
+_CCF_ORACLE = f"""
 WITH m AS (
   SELECT year(o_orderdate) * 12 + month(o_orderdate) AS t,
          CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS rev,
@@ -153,11 +153,9 @@ p AS (  -- rev at t+lag vs cnt at t
          count(*) AS n,
          CAST(sum(a.rev) AS DOUBLE) AS sx,
          CAST(sum(b.cnt) AS DOUBLE) AS sy,
-         CAST(CAST(sum(CAST(a.rev AS DECIMAL(19,2)) * CAST(a.rev AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) AS sxx,
+         {vh("sum(CAST(a.rev AS DECIMAL(19,2)) * CAST(a.rev AS DECIMAL(19,2)))")} AS sxx,
          CAST(sum(b.cnt * b.cnt) AS DOUBLE) AS syy,
-         CAST(CAST(sum(a.rev * CAST(b.cnt AS DECIMAL(19,0)))
-                   AS VARCHAR) AS DOUBLE) AS sxy
+         {vh("sum(a.rev * CAST(b.cnt AS DECIMAL(19,0)))")} AS sxy
   FROM k JOIN m b ON true
   JOIN m a ON a.t = b.t + k.lag
   GROUP BY k.lag
@@ -422,9 +420,7 @@ z AS (
 bs AS (  -- exact per-block moments straight from the DECIMAL levels
   SELECT b.s, b.blk,
          CAST(sum(b.x) AS DOUBLE) / b.s AS m,
-         sqrt(CAST(CAST(sum(CAST(b.x AS DECIMAL(19,2))
-                            * CAST(b.x AS DECIMAL(19,2))) AS VARCHAR)
-                   AS DOUBLE) / b.s
+         sqrt({vh("sum(CAST(b.x AS DECIMAL(19,2)) * CAST(b.x AS DECIMAL(19,2)))")} / b.s
               - (CAST(sum(b.x) AS DOUBLE) / b.s)
                 * (CAST(sum(b.x) AS DOUBLE) / b.s)) AS sd
   FROM blocks b JOIN complete c ON c.s = b.s AND c.blk = b.blk

@@ -43,6 +43,7 @@ from ocean_data_pipeline_spark.operators.monthly import (
     monthly_revenue_sql,
     year_month,
 )
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 from ocean_data_pipeline_spark.queries.graph_ops import (
     _EDGES_SQL,
@@ -452,8 +453,7 @@ WITH m AS ({monthly_revenue_sql(*YEAR_MONTH)}),
 stats AS (
   SELECT count(*) AS n,
          CAST(sum(x) AS DOUBLE) / count(*) AS mu,
-         sqrt(CAST(CAST(sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))
-                   AS VARCHAR) AS DOUBLE) / count(*)
+         sqrt({vh("sum(CAST(x AS DECIMAL(19,2)) * CAST(x AS DECIMAL(19,2)))")} / count(*)
               - (CAST(sum(x) AS DOUBLE) / count(*))
                 * (CAST(sum(x) AS DOUBLE) / count(*))) AS sd
   FROM m
@@ -528,7 +528,7 @@ def sax_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("sd").alias("sd"),
         F.max("n").alias("n"),
     )
-    z = (F.col("paa_mean") - F.col("mu")) / F.col("sd")
+    z = F.try_divide(F.col("paa_mean") - F.col("mu"), F.col("sd"))
     sym = paa.select(
         "seg", "n",
         F.when(z < _SAX_BP[0], "a")
@@ -691,21 +691,16 @@ def page_hinkley_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- exact 2x2 PCA over (quantity, price) -----------------------------------
 
-_PCA_ORACLE = """
+_PCA_ORACLE = f"""
 WITH s AS (
   SELECT count(*) AS n,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(round(CAST(l_extendedprice AS DOUBLE) / 10000, 9)
-                       AS DECIMAL(38,9))) AS VARCHAR) AS DOUBLE) AS sy,
-         CAST(CAST(sum(CAST(l_quantity AS DECIMAL(19,2))
-                       * CAST(l_quantity AS DECIMAL(19,2))) AS VARCHAR)
-              AS DOUBLE) AS sxx,
-         CAST(CAST(sum(CAST(round(CAST(l_extendedprice AS DOUBLE) / 10000
-                                  * (CAST(l_extendedprice AS DOUBLE) / 10000),
-                            9) AS DECIMAL(38,9))) AS VARCHAR) AS DOUBLE) AS syy,
-         CAST(CAST(sum(CAST(round(CAST(l_quantity AS DOUBLE)
-                                  * (CAST(l_extendedprice AS DOUBLE) / 10000),
-                            9) AS DECIMAL(38,9))) AS VARCHAR) AS DOUBLE) AS sxy
+         {vh("sum(CAST(round(CAST(l_extendedprice AS DOUBLE) / 10000, 9) AS DECIMAL(38,9)))")} AS sy,
+         {vh("sum(CAST(l_quantity AS DECIMAL(19,2)) * CAST(l_quantity AS DECIMAL(19,2)))")} AS sxx,
+         {vh("sum(CAST(round(CAST(l_extendedprice AS DOUBLE) / 10000"
+             " * (CAST(l_extendedprice AS DOUBLE) / 10000), 9) AS DECIMAL(38,9)))")} AS syy,
+         {vh("sum(CAST(round(CAST(l_quantity AS DOUBLE)"
+             " * (CAST(l_extendedprice AS DOUBLE) / 10000), 9) AS DECIMAL(38,9)))")} AS sxy
   FROM lineitem
 ),
 c AS (

@@ -39,6 +39,7 @@ from ocean_data_pipeline_spark.operators.monthly import (
     monthly_revenue_sql,
     year_month,
 )
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- Friedman test: month blocks x top-5 nations ----------------------------
@@ -330,8 +331,7 @@ bm AS (
 s AS (
   SELECT count(*) AS n,
          CAST(sum(mx) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(mx AS DECIMAL(19,2)) * CAST(mx AS DECIMAL(19,2)))
-              AS VARCHAR) AS DOUBLE) AS sxx,
+         {vh("sum(CAST(mx AS DECIMAL(19,2)) * CAST(mx AS DECIMAL(19,2)))")} AS sxx,
          CAST(max(mx) AS DOUBLE) AS obs_max
   FROM bm
 ),
@@ -429,9 +429,7 @@ _CPK_ORACLE = f"""
 WITH s AS (
   SELECT count(*) AS n,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-         CAST(CAST(sum(CAST(l_quantity AS DECIMAL(19,2))
-                       * CAST(l_quantity AS DECIMAL(19,2))) AS VARCHAR)
-              AS DOUBLE) AS sxx,
+         {vh("sum(CAST(l_quantity AS DECIMAL(19,2)) * CAST(l_quantity AS DECIMAL(19,2)))")} AS sxx,
          CAST(sum(CASE WHEN CAST(l_quantity AS DOUBLE) < {_CPK_LSL}
                          OR CAST(l_quantity AS DOUBLE) > {_CPK_USL}
                        THEN 1 ELSE 0 END) AS BIGINT) AS n_out

@@ -35,9 +35,9 @@ from ocean_data_pipeline_spark.operators.monthly import (
     YEAR_MONTH,
     monthly_revenue,
     monthly_revenue_sql,
-    vh,
     year_month,
 )
+from ocean_data_pipeline_spark.operators.portable import vh
 from ocean_data_pipeline_spark.queries import register
 
 # --- Theta method forecast ---------------------------------------------------
@@ -120,7 +120,7 @@ def theta_method_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(d6(F.col("t") * F.col("x"))).alias("stx"),
     )
     n, st, stt = F.col("n"), F.col("st"), F.col("stt")
-    b = (n * F.col("stx") - st * F.col("sx")) / (n * stt - st * st)
+    b = F.try_divide(n * F.col("stx") - st * F.col("sx"), n * stt - st * st)
     coef = ols.select(
         "n",
         b.cast("double").alias("b"),

@@ -34,6 +34,7 @@ from ocean_data_pipeline_spark.operators.monthly import (
     monthly_revenue_sql,
     year_month,
 )
+from ocean_data_pipeline_spark.operators.portable import hash_int, hash_int_sql
 from ocean_data_pipeline_spark.queries import register
 
 # --- absorbing Markov chain: expected steps to conversion ---------------------
@@ -635,9 +636,8 @@ obs AS (
 ),
 draws AS (
   SELECT b.event_id, b.value, t.b,
-         CASE WHEN (CAST(('0x' || substr(sha256(
-                CAST(b.event_id AS VARCHAR) || ':' || CAST(t.b AS VARCHAR)),
-                1, 6)) AS BIGINT) % 2) = 1 THEN 1 ELSE 0 END AS gp
+         CASE WHEN ({hash_int_sql("CAST(b.event_id AS VARCHAR) || ':' || CAST(t.b AS VARCHAR)", 6)}
+                    % 2) = 1 THEN 1 ELSE 0 END AS gp
   FROM base b, (SELECT unnest(generate_series(1, {_PERM_B})) AS b) t
 ),
 per_draw AS (
@@ -704,22 +704,10 @@ def permutation_test_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bs = spark.range(1, _PERM_B + 1).select(F.col("id").alias("b"))
     gp = (
-        F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat_ws(
-                        ":",
-                        F.col("event_id").cast("string"),
-                        F.col("b").cast("string"),
-                    ),
-                    256,
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        hash_int(
+            F.concat_ws(":", F.col("event_id").cast("string"), F.col("b").cast("string")),
+            6,
+        )
         % 2
     )
     per_draw = (

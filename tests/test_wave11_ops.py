@@ -268,13 +268,14 @@ def test_trimmed_winsorized_match_numpy(spark):
 def test_conformal_coverage_guarantee(spark):
     """The defining property: >= 90% of calibration residuals fall
     within the radius (finite-sample, distribution-free)."""
-    from ocean_data_pipeline_spark.queries.robust_ops import _CONF_U_SPARK
+    from ocean_data_pipeline_spark.operators.portable import uniform
 
+    u = uniform(F.concat(F.lit("conf_"), F.col("o_orderkey").cast("string")))
     rows = REGISTRY["conformal_interval_calibration"].fn(spark, SF_ORACLE).collect()
     orders = table(spark, SF_ORACLE, "orders").select(
         F.col("o_orderpriority").alias("priority"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("yc"),
-        F.when(F.expr(_CONF_U_SPARK) < 0.5, 1).otherwise(0).alias("is_train"),
+        F.when(u < 0.5, 1).otherwise(0).alias("is_train"),
     )
     cal = orders.filter(F.col("is_train") == 0).toPandas()
     for r in rows:

@@ -4,7 +4,8 @@ changes (join strategy, exchange count, pushdown) rather than
 expression-id churn.
 
 Normalization: `#123` expression ids → `#N`, `plan_id=456` → `plan_id=N`,
-absolute sf-dir paths → `<SF>`. A plan regression (new Exchange, lost
+absolute sf-dir paths → `<SF>`, RDD ids and localCheckpoint call sites →
+`[N]` and `<SITE>`. A plan regression (new Exchange, lost
 PushedFilters, broadcast→SMJ flip) then shows up as a one-line `git
 diff plans/` — the cheapest possible cross-round plan review.
 
@@ -33,7 +34,7 @@ SKIP = {"near_dup_components", "near_dup_components_star", "dedup_pipeline_end2e
         "stream_file_session_cache", "stream_dedup_keys", "stream_funnel_stages",
         "semantic_dedup_cells",
         # round 6: driver-side iteration loops / streaming runs
-        "kcore_copurchase", "leakage_safe_group_split",
+        "leakage_safe_group_split",
         "stream_countmin_user_events",
         "stream_hll_registers",
         "er_pipeline_end2end",  # components driver loop
@@ -55,6 +56,9 @@ def normalize(plan: str) -> str:
     # localCheckpoint/parallelize RDD names embed run-specific ids
     plan = re.sub(r"ParallelCollectionRDD\[\d+\]", "ParallelCollectionRDD[N]", plan)
     plan = re.sub(r"MapPartitionsRDD\[\d+\]", "MapPartitionsRDD[N]", plan)
+    # ...and the call site Spark records for them, which depends on how
+    # the session was driven (py4j reflection vs a direct call)
+    plan = re.sub(r"localCheckpoint at [^\s,]+:\d+", "localCheckpoint at <SITE>", plan)
     return plan
 
 
