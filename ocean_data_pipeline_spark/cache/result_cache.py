@@ -5,9 +5,11 @@ The reference caches query results in SQLite keyed by a SHA-256 of
 normalized parameters, with 24 h TTL, a 100 MB admission guard, upsert
 (INSERT OR REPLACE), expired-row cleanup, stats aggregates, and a
 nearby-coordinates range lookup (cache_manager.py:34-337). Here the
-cache is an ordinary parquet table and every operation is a DataFrame
-transformation:
+cache is an ordinary parquet table. A point read is served on the
+driver; every other operation is a DataFrame transformation:
 
+- get      = one bucket file read with pyarrow on the driver, wrapped as
+             a local relation, TTL-filtered there (no Spark job)
 - upsert   = unionByName + keep-latest window dedup + atomic bucket swap
 - cleanup  = per-bucket census (rows, expired rows) in one aggregate,
              then a liveness-filter rewrite of only the buckets that
@@ -39,20 +41,24 @@ files into its new version directory (no byte rewritten), so the
 version directories that puts accumulate collapse back into one.
 
 Deployment contract: `path` must be a LOCAL filesystem path — the
-manifest flip (os.replace), vacuum (os.listdir/shutil.rmtree) and
-cleanup's relink (os.link) are local-FS operations. On an object store
-or HDFS, use a real table format with a commit log (Delta/Iceberg)
-instead; this class is the single-node/NFS twin of that design.
+manifest flip (os.replace), vacuum (os.listdir/shutil.rmtree),
+cleanup's relink (os.link) and get's driver-side read are local-FS
+operations. On an object store or HDFS, use a real table format with a
+commit log (Delta/Iceberg) instead; this class is the single-node/NFS
+twin of that design.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import json
 import os
 import shutil
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -82,11 +88,15 @@ class ResultCache:
     path: str
     ttl_hours: int = DEFAULT_TTL_HOURS
 
+    @functools.cached_property
+    def _arrow_schema(self) -> pa.Schema:
+        """CACHE_SCHEMA as Arrow; the DDL parse is a JVM call, so once."""
+        return to_arrow_schema(StructType.fromDDL(CACHE_SCHEMA))
+
     def _empty(self) -> DataFrame:
         """Zero-row cache frame built from an empty Arrow table: a local
         relation, so a miss scans no Python RDD (no Python workers)."""
-        schema = to_arrow_schema(StructType.fromDDL(CACHE_SCHEMA))
-        return self.spark.createDataFrame(schema.empty_table())
+        return self.spark.createDataFrame(self._arrow_schema.empty_table())
 
     # -- manifest (the commit log) -------------------------------------
 
@@ -169,15 +179,35 @@ class ResultCache:
         return self.read().filter(F.col("expires_at") > now)
 
     def get(self, query_hash: str, now: F.Column | None = None) -> DataFrame:
-        """Point lookup by key — reads ONE bucket directory (manifest
-        pruning), then filters within it."""
+        """Point lookup by key, served on the driver: the manifest names
+        the key's one bucket directory, pyarrow reads the key's rows from
+        it (the key filter is pushed into the parquet scan), and the rows
+        become a local relation. The TTL test `expires_at > now` stays a
+        Spark filter, so `now` may be any Column and a NULL expiry is not
+        live; Catalyst folds it into the local relation, so get() plus
+        collect() starts no Spark job.
+
+        The frame is an eager snapshot: a later put or cleanup that
+        vacuums the bucket's directory does not change what it returns.
+
+        Spark writes the timestamps as INT96; they are read as naive
+        microsecond UTC instants (nanoseconds would overflow past 2262)
+        and cast to the schema's UTC type, which keeps their instant
+        under any session time zone."""
         now = F.current_timestamp() if now is None else now
+        bucket = query_hash[:2]
         manifest = self._read_manifest()
-        return (
-            self._read_buckets(manifest, [query_hash[:2]])
-            .filter(F.col("query_hash") == query_hash)
-            .filter(F.col("expires_at") > now)
-        )
+        schema = self._arrow_schema
+        if bucket in manifest:
+            rows = pq.read_table(
+                os.path.join(self.path, manifest[bucket], f"key_bucket={bucket}"),
+                columns=schema.names,
+                filters=[("query_hash", "=", query_hash)],
+                coerce_int96_timestamp_unit="us",
+            ).cast(schema)
+        else:
+            rows = schema.empty_table()
+        return self.spark.createDataFrame(rows).filter(F.col("expires_at") > now)
 
     def nearby(
         self, lat: float, lon: float, radius: float, now: F.Column | None = None

@@ -101,6 +101,7 @@ _FRONT: tuple[str, ...] = (
     "epoch_shuffle_balance",
     "contamination_ngram_census",
     "sql_funnel_conversion",
+    "lineitem_corr_stats",
 )
 
 

@@ -626,15 +626,24 @@ GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
+def _corr(x: str, y: str):
+    """Pearson r from its moments, divided with `try_divide`: a zero
+    variance gives NULL, as DuckDB's `corr` does. The built-in `corr`
+    divides inside the aggregate and raises DIVIDE_BY_ZERO there under
+    ANSI."""
+    return F.try_divide(F.covar_pop(x, y), F.sqrt(F.var_pop(x) * F.var_pop(y)))
+
+
 @register("lineitem_corr_stats", oracle=_CORR_STATS_ORACLE)
 def lineitem_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped correlation / covariance profile — the bivariate
-    descriptive-statistics family (corr, covar_samp, stddev_samp as
-    single-pass JVM aggregates; both engines use the numerically
-    stable streaming formulation, and results round to 4/2 before
-    compare). Quantity should correlate strongly with extended price
-    (price ≈ qty × unit price); discount should not — the sanity
-    profile a feature-engineering pass runs before model fitting.
+    descriptive-statistics family (corr from covar_pop and var_pop,
+    covar_samp and stddev_samp as single-pass JVM aggregates; both
+    engines use the numerically stable streaming formulation, and
+    results round to 4/2 before compare). Quantity should correlate
+    strongly with extended price (price ≈ qty × unit price); discount
+    should not — the sanity profile a feature-engineering pass runs
+    before model fitting. A zero-variance group gets a NULL r.
 
     Plan shape: ONE partial-agg shuffle onto the 3-row flag grid; all
     moments accumulate map-side."""
@@ -643,10 +652,10 @@ def lineitem_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.corr("l_quantity", "l_extendedprice"), 4).alias(
+            F.round(_corr("l_quantity", "l_extendedprice"), 4).alias(
                 "corr_qty_price"
             ),
-            F.round(F.corr("l_discount", "l_extendedprice"), 4).alias(
+            F.round(_corr("l_discount", "l_extendedprice"), 4).alias(
                 "corr_disc_price"
             ),
             F.round(F.covar_samp("l_quantity", "l_extendedprice"), 2).alias(

@@ -5,7 +5,8 @@ expression-id churn.
 
 Normalization: `#123` expression ids → `#N`, `plan_id=456` → `plan_id=N`,
 absolute sf-dir paths → `<SF>`, RDD ids and localCheckpoint call sites →
-`[N]` and `<SITE>`. A plan regression (new Exchange, lost
+`[N]` and `<SITE>`, PySpark lambda variables `x_7` → `x_N`, Catalyst's
+`_common_expr_3` → `_common_expr_N`. A plan regression (new Exchange, lost
 PushedFilters, broadcast→SMJ flip) then shows up as a one-line `git
 diff plans/` — the cheapest possible cross-round plan review.
 
@@ -59,6 +60,11 @@ def normalize(plan: str) -> str:
     # ...and the call site Spark records for them, which depends on how
     # the session was driven (py4j reflection vs a direct call)
     plan = re.sub(r"localCheckpoint at [^\s,]+:\d+", "localCheckpoint at <SITE>", plan)
+    # PySpark lambda variables and Catalyst's common-subexpression
+    # aliases are numbered by process-wide counters, so they depend on
+    # what the same process built before this query
+    plan = re.sub(r"lambda (\w+)_\d+\b", r"lambda \1_N", plan)
+    plan = re.sub(r"_common_expr_\d+\b", "_common_expr_N", plan)
     return plan
 
 
