@@ -66,7 +66,8 @@ from pyspark.sql.types import StructType
 
 from ocean_data_pipeline_spark.operators.merge import merge_keep_latest
 
-#: Reference config.py:58-63.
+#: Reference config.py:58-63: the TTL a writer stamps into `expires_at`
+#: (the cache itself only compares `expires_at` with `now`).
 DEFAULT_TTL_HOURS = 24
 MAX_ENTRY_BYTES = 100 * 1024 * 1024  # admission guard, cache_manager.py:148-150
 
@@ -86,7 +87,6 @@ class ResultCache:
 
     spark: SparkSession
     path: str
-    ttl_hours: int = DEFAULT_TTL_HOURS
 
     @functools.cached_property
     def _arrow_schema(self) -> pa.Schema:

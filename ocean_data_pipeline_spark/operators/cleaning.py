@@ -16,9 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Canonical cleaned schema of the reference's `sea_surface` table
-#: (reference data/clean/sea_surface_clean.csv:1, run_pipeline.py:89-90).
-CANONICAL_COLUMNS = ("time", "depth", "latitude", "longitude", "temperature", "salinity")
 NUMERIC_COLUMNS = ("temperature", "salinity", "depth", "latitude", "longitude")
 KEY_MEASURES = ("temperature", "salinity")
 #: Unit labels ERDDAP emits as CSV row 0 (reference pipeline/extract.py:199-201).

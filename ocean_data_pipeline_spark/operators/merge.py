@@ -1,13 +1,12 @@
-"""Row-level MERGE INTO semantics as plain DataFrame transforms
-(SURVEY.md §2-A sink-cache; reference cache_manager.py:153-157
-INSERT OR REPLACE generalized to Delta-style clauses).
+"""Row-level MERGE INTO as a plain DataFrame transform (SURVEY.md §2-A
+sink-cache; reference cache_manager.py:153-157 INSERT OR REPLACE
+generalized to a Delta-style conditional update).
 
-Spark's parquet sink has no MERGE, so the three clause shapes are
-expressed as anti-join + union — deliberately NOT a full-outer join
-with per-column coalesce: the anti-join plan broadcasts the (small)
-source key set against the target and never widens the row, while a
-full outer join shuffles both sides on the key and rebuilds every
-column. Same semantics, one-sided shuffle.
+Spark's parquet sink has no MERGE. The one clause shape the result
+cache needs (update a matched row only if the source row is newer,
+insert an unmatched one) is a union of the two sides and a newest-row-
+per-key window: one shuffle on the key, and no row is widened, where a
+full outer join with per-column coalesce would rebuild every column.
 
 At 100 TB the caller bounds `target` to the touched partitions first
 (ResultCache.put does: key-prefix buckets of the incoming keys), so
@@ -19,32 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def _dedup_source(source: DataFrame, keys: list[str], order_col: str | None) -> DataFrame:
-    """One row per key from the source side: max(order_col) wins, or an
-    arbitrary-but-deterministic first row (all-column sort) if no order
-    column is given — MERGE requires a unique source row per key."""
-    if order_col is None:
-        ordering = [F.asc(c) for c in source.columns if c not in keys]
-    else:
-        ordering = [F.desc(order_col)]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
-    return source.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-def merge_upsert(
-    target: DataFrame,
-    source: DataFrame,
-    keys: list[str],
-    order_col: str | None = None,
-) -> DataFrame:
-    """WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *: source
-    rows replace matched target rows unconditionally; unmatched source
-    rows are inserted."""
-    src = _dedup_source(source, keys, order_col)
-    untouched = target.join(F.broadcast(src.select(*keys)), keys, "left_anti")
-    return untouched.unionByName(src)
 
 
 def merge_keep_latest(
@@ -60,8 +33,3 @@ def merge_keep_latest(
     w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
     return merged.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
-
-def merge_delete(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
-    """WHEN MATCHED DELETE: matched target rows are removed; the source
-    contributes nothing else (tombstone application)."""
-    return target.join(F.broadcast(source.select(*keys).distinct()), keys, "left_anti")

@@ -1,17 +1,31 @@
 """Embedding similarity search (SURVEY.md §2-J sim-search).
 
-Baseline: brute-force cosine top-k — probes broadcast against the
-corpus, dot products as JVM array expressions (zip_with + left-fold
-aggregate; verified bit-identical to DuckDB's list_dot_product), top-k
-per probe via window. Linear scan of the corpus per probe batch: the
-right baseline at any scale when probe count is small (it's one pass).
+Every top-k operator here has one shape: generate candidate
+(probe, neighbor) pairs, rerank them by exact cosine, keep the top k
+per probe. Only the candidate step differs between operators:
 
-Scale path: BucketedRandomProjectionLSH (random-hyperplane buckets) so
-candidate sets shrink from |corpus| to bucket occupancy; rows-only
-check (bucket boundaries are model-internal).
+- `cosine_topk`: every corpus vector (a broadcast nested-loop join);
+- `ivf_topk`: the probe's argmax-|dim| cell;
+- `ivf_topk_multiprobe`: the probe's two largest-|dim| cells;
+- `ivf_topk_frozen`: the probe's nearest cells of a frozen k-means
+  codebook;
+- `lsh_topk`: random-projection LSH buckets (MLlib, rows-only);
+- `pq_topk_frozen`: a full scan ranked by the product-quantized
+  asymmetric distance instead of cosine.
+
+The shared steps are written once: `side` projects a corpus or probe
+frame (id alias, array<double> cast, precomputed norm), `rerank`
+scores the pairs with `cosine_pre`, and `topk` is the per-probe
+row_number tail. Dot products are JVM array expressions (zip_with +
+left-fold aggregate), bit-identical to DuckDB's list_dot_product.
+
+The DuckDB twins `norm_sql`, `cosine_sql` and `topk_sql` sit next to
+their engine forms, so the oracles spell the same expressions once.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -49,6 +63,94 @@ def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return dot(a, b) / (na * nb)
 
 
+def norm_sql(v: str) -> str:
+    """The DuckDB twin of `norm`."""
+    return f"sqrt(list_dot_product({v}, {v}))"
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """The DuckDB twin of `cosine`."""
+    return f"list_dot_product({a}, {b}) / ({norm_sql(a)} * {norm_sql(b)})"
+
+
+# --- the shared steps: side, rerank, top-k ----------------------------
+
+#: Column names of a side: (id, vector, norm).
+CORPUS = ("neighbor_id", "cv", "cn")
+PROBES = ("probe_id", "pv", "pn")
+
+
+def side(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    names: tuple[str, str, str],
+    cell: Callable[[Column], Column] | None = None,
+    carry: tuple[Column, ...] = (),
+) -> DataFrame:
+    """One side of the search: `id_col` and `vec_col` (cast to
+    array<double>) renamed to `names`, the `carry` select items, the
+    optional ``cell`` column (a function of the vector) and the norm,
+    folded once per row so each pair costs one dot product."""
+    ident, v, n = names
+    out = df.select(
+        F.col(id_col).alias(ident), F.col(vec_col).cast("array<double>").alias(v), *carry
+    )
+    if cell is not None:
+        out = out.withColumn("cell", cell(F.col(v)))
+    return out.withColumn(n, norm(F.col(v)))
+
+
+def cell_pairs(corpus: DataFrame, probes: DataFrame) -> DataFrame:
+    """Candidates of an inverted file: the corpus rows in each probe's
+    cells, by one broadcast equi-join on ``cell``, self-matches out."""
+    return corpus.join(F.broadcast(probes), "cell").filter(
+        F.col("neighbor_id") != F.col("probe_id")
+    )
+
+
+def rerank(pairs: DataFrame) -> DataFrame:
+    """Exact cosine over candidate pairs of a `CORPUS` and a `PROBES`
+    side: (probe_id, neighbor_id, cosine_sim)."""
+    return pairs.select(
+        "probe_id",
+        "neighbor_id",
+        cosine_pre(F.col("pv"), F.col("cv"), F.col("pn"), F.col("cn")).alias("cosine_sim"),
+    )
+
+
+def topk(scored: DataFrame, k: int, order: Column) -> DataFrame:
+    """The per-probe top-k: a ``rank`` by `order` (ties to the lower
+    neighbor_id) within each probe, rank <= k, sorted by probe and
+    rank. The only wide step after the candidate join."""
+    w = Window.partitionBy("probe_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .orderBy("probe_id", "rank")
+    )
+
+
+def topk_sql(scored: str, k: int, order: str) -> str:
+    """The DuckDB twin of `topk` for a ``WITH`` whose relation `scored`
+    has (probe_id, neighbor_id, score): the ``ranked`` CTE and the final
+    select, the score (the first word of `order`) rounded to 6."""
+    col = order.split()[0]
+    return f"""ranked AS (
+  SELECT probe_id, neighbor_id, {col},
+         row_number() OVER (PARTITION BY probe_id
+                            ORDER BY {order}, neighbor_id) AS rank
+  FROM {scored}
+)
+SELECT probe_id, neighbor_id, round({col}, 6) AS {col}, rank
+FROM ranked WHERE rank <= {k}
+ORDER BY probe_id, rank
+"""
+
+
+# --- operators: candidate generation ----------------------------------
+
+
 def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -58,32 +160,13 @@ def cosine_topk(
 ) -> DataFrame:
     """Top-k cosine neighbors per probe (excluding self-matches).
 
-    Plan: broadcast probes → one corpus scan computes all pair scores →
-    rank window partitioned by probe. Output: (probe_id, neighbor_id,
-    cosine_sim, rank).
+    Candidates: every corpus row, probes broadcast against one corpus
+    scan. Output: (probe_id, neighbor_id, cosine_sim, rank).
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
-    ).withColumn("cn", norm(F.col("cv")))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).cast("array<double>").alias("pv")
-    ).withColumn("pn", norm(F.col("pv")))
-    scored = (
-        c.join(F.broadcast(p), F.col("neighbor_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            cosine_pre(
-                F.col("pv"), F.col("cv"), F.col("pn"), F.col("cn")
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("probe_id", "rank")
-    )
+    c = side(corpus, id_col, vec_col, CORPUS)
+    p = side(probes, id_col, vec_col, PROBES)
+    pairs = c.join(F.broadcast(p), F.col("neighbor_id") != F.col("probe_id"))
+    return topk(rerank(pairs), k, F.desc("cosine_sim"))
 
 
 def cosine_near_dup_pairs(
@@ -100,10 +183,7 @@ def cosine_near_dup_pairs(
     them); norms are precomputed once per side so each pair costs one
     dot product. Output: (id_a, id_b, cosine_sim).
     """
-    base = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).withColumn("nrm", norm(F.col("v")))
+    base = side(vectors, id_col, vec_col, ("id", "v", "nrm"))
     a = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
     return (
@@ -111,7 +191,7 @@ def cosine_near_dup_pairs(
         .select(
             "id_a",
             "id_b",
-            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("cosine_sim"),
+            cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb")).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
@@ -150,39 +230,9 @@ def ivf_topk_multiprobe(
     fans out, so the explode is O(|probes|·n_probe) — negligible next
     to the corpus. Join remains a broadcast of the exploded probes.
     """
-    c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        .withColumn("cell", argmax_dim(F.col("cv")))
-        .withColumn("cn", norm(F.col("cv")))
-    )
-    p = (
-        probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).cast("array<double>").alias("pv"),
-        )
-        .withColumn("cell", F.explode(top2_cells(F.col("pv"))))
-        .withColumn("pn", norm(F.col("pv")))
-    )
-    scored = (
-        c.join(F.broadcast(p), "cell")
-        .filter(F.col("neighbor_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            cosine_pre(
-                F.col("pv"), F.col("cv"), F.col("pn"), F.col("cn")
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("probe_id", "rank")
-    )
+    c = side(corpus, id_col, vec_col, CORPUS, cell=argmax_dim)
+    p = side(probes, id_col, vec_col, PROBES, cell=lambda v: F.explode(top2_cells(v)))
+    return topk(rerank(cell_pairs(c, p)), k, F.desc("cosine_sim"))
 
 
 def ivf_topk(
@@ -194,130 +244,23 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF-style approximate neighbors with a deterministic coarse
     quantizer: cell = argmax-|dim| of the vector (an inverted file of
-    dim-dominant cells; a trained k-means codebook drops into the same
-    plan as a broadcast centroid join).
+    dim-dominant cells; a trained codebook drops into the same plan as
+    `ivf_topk_frozen` shows).
 
     Candidates shrink from |corpus| to one cell's occupancy (~|corpus|/
     dims for isotropic data); the cell equi-join shuffles on cell id,
     then exact cosine re-ranks within the cell. Fully SQL-expressible →
     DuckDB-oracle-checkable, unlike model-internal LSH buckets.
     """
-    c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        )
-        .withColumn("cell", argmax_dim(F.col("cv")))
-        .withColumn("cn", norm(F.col("cv")))
-    )
-    p = (
-        probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.col(vec_col).cast("array<double>").alias("pv"),
-        )
-        .withColumn("cell", argmax_dim(F.col("pv")))
-        .withColumn("pn", norm(F.col("pv")))
-    )
-    scored = (
-        c.join(F.broadcast(p), "cell")
-        .filter(F.col("neighbor_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            cosine_pre(
-                F.col("pv"), F.col("cv"), F.col("pn"), F.col("cn")
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("probe_id", "rank")
-    )
+    c = side(corpus, id_col, vec_col, CORPUS, cell=argmax_dim)
+    p = side(probes, id_col, vec_col, PROBES, cell=argmax_dim)
+    return topk(rerank(cell_pairs(c, p)), k, F.desc("cosine_sim"))
 
 
 def l2_sq(a: Column, b: Column) -> Column:
     """Squared L2 distance as a fold (same codegen posture as `dot`)."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def ivf_topk_kmeans(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """True IVF: a TRAINED k-means codebook (MLlib KMeans, kmeans||
-    init) replaces the deterministic argmax-dim quantizer of
-    `ivf_topk`. Centroids adapt to the data distribution, so cell
-    occupancy is balanced even when the corpus is anisotropic — the
-    case where argmax-dim cells collapse onto a few dominant axes.
-
-    Plan shape per the IVF contract: the codebook is tiny (n_cells
-    rows) and BROADCAST; corpus rows are assigned once (nearest
-    centroid at index time); probes rank centroids and fan out to
-    their nearest `n_probes` cells; candidates shrink to the probed
-    cells' occupancy, exact cosine re-ranks. At 100 TB the fit runs on
-    a sample (KMeans cost is per-iteration linear in rows) and the
-    assignment is the one full pass — exactly how production IVF
-    indexes are built.
-
-    Rows-only check (k-means internals are not SQL-expressible);
-    recall gates live in tests/test_ivf_recall.py.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c_feat = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(c_feat)
-    spark = corpus.sparkSession
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
-        "cell int, center array<double>",
-    )
-    c = model.transform(c_feat).select(
-        "neighbor_id", "cv", F.col("prediction").alias("cell")
-    ).withColumn("cn", norm(F.col("cv")))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-    )
-    w_cells = Window.partitionBy("probe_id").orderBy(F.asc("d2"), F.asc("cell"))
-    probe_cells = (
-        p.crossJoin(F.broadcast(cents))
-        .withColumn("d2", l2_sq(F.col("pv"), F.col("center")))
-        .withColumn("cell_rank", F.row_number().over(w_cells))
-        .filter(F.col("cell_rank") <= n_probes)
-        .select("probe_id", "pv", "cell")
-        .withColumn("pn", norm(F.col("pv")))
-    )
-    scored = (
-        c.join(F.broadcast(probe_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            cosine_pre(
-                F.col("pv"), F.col("cv"), F.col("pn"), F.col("cn")
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("probe_id", "rank")
     )
 
 
@@ -338,16 +281,9 @@ def lsh_topk(
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    ).withColumn("cn", norm(F.col("cv")))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    ).withColumn("pn", norm(F.col("pv")))
+    features = (array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),)
+    c = side(corpus, id_col, vec_col, CORPUS, carry=features)
+    p = side(probes, id_col, vec_col, PROBES, carry=features)
     lsh = BucketedRandomProjectionLSH(
         inputCol="features", outputCol="hashes", bucketLength=bucket_length,
         numHashTables=num_tables, seed=42,
@@ -363,26 +299,15 @@ def lsh_topk(
             F.lit(None).cast("int").alias("rank"),
         )
     model = lsh.fit(c)
-    cand = (
+    pairs = (
         model.approxSimilarityJoin(p, c, float("inf"), distCol="l2")
         .filter(F.col("datasetA.probe_id") != F.col("datasetB.neighbor_id"))
         .select(
-            F.col("datasetA.probe_id").alias("probe_id"),
-            F.col("datasetB.neighbor_id").alias("neighbor_id"),
-            cosine_pre(
-                F.col("datasetA.pv"),
-                F.col("datasetB.cv"),
-                F.col("datasetA.pn"),
-                F.col("datasetB.cn"),
-            ).alias("cosine_sim"),
+            *(F.col(f"datasetA.{x}").alias(x) for x in PROBES),
+            *(F.col(f"datasetB.{x}").alias(x) for x in CORPUS),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("probe_id", "rank")
-    )
+    return topk(rerank(pairs), k, F.desc("cosine_sim"))
 
 
 def _sql_double(x: float) -> str:
@@ -447,44 +372,25 @@ def ivf_topk_frozen(
         from ocean_data_pipeline_spark.operators.ivf_codebook import FROZEN_CENTROIDS
 
         centroids = FROZEN_CENTROIDS
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    c_d2 = _frozen_cell_distances(F.col("cv"), centroids)
-    # argmin with lowest-cell tie-break: array_position finds the FIRST
-    # occurrence of the minimum (1-based → -1)
-    assigned = c.withColumn(
-        "cell", (F.array_position(c_d2, F.array_min(c_d2)) - 1).cast("int")
-    ).withColumn("cn", norm(F.col("cv")))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-    )
-    p_d2 = _frozen_cell_distances(F.col("pv"), centroids)
-    ranked_cells = F.array_sort(
-        F.transform(p_d2, lambda d, i: F.struct(d.alias("d2"), i.alias("cell")))
-    )
-    probe_cells = p.withColumn(
-        "cell", F.explode(F.slice(ranked_cells, 1, n_probes).getField("cell"))
-    ).withColumn("pn", norm(F.col("pv")))
-    scored = (
-        assigned.join(F.broadcast(probe_cells), "cell")
-        .filter(F.col("neighbor_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "neighbor_id",
-            cosine_pre(
-                F.col("pv"), F.col("cv"), F.col("pn"), F.col("cn")
-            ).alias("cosine_sim"),
+
+    def assign(v: Column) -> Column:
+        # argmin with lowest-cell tie-break: array_position finds the
+        # FIRST occurrence of the minimum (1-based → -1)
+        d2 = _frozen_cell_distances(v, centroids)
+        return (F.array_position(d2, F.array_min(d2)) - 1).cast("int")
+
+    def route(v: Column) -> Column:
+        ranked_cells = F.array_sort(
+            F.transform(
+                _frozen_cell_distances(v, centroids),
+                lambda d, i: F.struct(d.alias("d2"), i.alias("cell")),
+            )
         )
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("probe_id", "rank")
-    )
+        return F.explode(F.slice(ranked_cells, 1, n_probes).getField("cell"))
+
+    c = side(corpus, id_col, vec_col, CORPUS, cell=assign)
+    p = side(probes, id_col, vec_col, PROBES, cell=route)
+    return topk(rerank(cell_pairs(c, p)), k, F.desc("cosine_sim"))
 
 
 def pq_encode(v: Column, codebooks: list[list[list[float]]]) -> Column:
@@ -539,23 +445,18 @@ def pq_topk_frozen(
     inlines the same literals.
 
     Distances are rounded to 6 decimals BEFORE ranking on both engines
-    so rank order never hinges on sub-ulp summation-order drift.
+    so rank order never hinges on sub-ulp summation-order drift. The
+    sides' norms go unused (no cosine here), so the optimizer prunes
+    them.
     """
     if codebooks is None:
         from ocean_data_pipeline_spark.operators.pq_codebook import PQ_CODEBOOKS
 
         codebooks = PQ_CODEBOOKS
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
-    )
-    encoded = c.select(
+    encoded = side(corpus, id_col, vec_col, CORPUS).select(
         "neighbor_id", pq_encode(F.col("cv"), codebooks).alias("codes")
     ).withColumn("xhat", pq_reconstruct(F.col("codes"), codebooks))
-    p = probes.select(
-        F.col(id_col).alias("probe_id"),
-        F.col(vec_col).cast("array<double>").alias("pv"),
-    )
+    p = side(probes, id_col, vec_col, PROBES)
     scored = (
         encoded.crossJoin(F.broadcast(p))
         .filter(F.col("neighbor_id") != F.col("probe_id"))
@@ -565,9 +466,4 @@ def pq_topk_frozen(
             F.round(l2_sq(F.col("pv"), F.col("xhat")), 6).alias("approx_d2"),
         )
     )
-    w = Window.partitionBy("probe_id").orderBy(F.asc("approx_d2"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("probe_id", "rank")
-    )
+    return topk(scored, k, F.asc("approx_d2"))

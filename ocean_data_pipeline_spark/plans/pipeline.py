@@ -33,10 +33,8 @@ from pyspark.sql import functions as F
 from ocean_data_pipeline_spark.operators.cleaning import clean_raw
 from ocean_data_pipeline_spark.sources.csv_source import read_raw_csv
 
-#: Canonical cleaned schema (reference data/clean/sea_surface_clean.csv
-#: header; run_pipeline.py:89-90 requires time/temperature/salinity).
+#: Columns the cleaned schema must carry (reference run_pipeline.py:89-90).
 REQUIRED_COLUMNS = ("time", "temperature", "salinity")
-CANONICAL_COLUMNS = ("time", "depth", "latitude", "longitude", "temperature", "salinity")
 
 #: Physical plausibility bounds (reference QUALITY_CONFIG, config.py:66-71).
 MEASURE_BOUNDS = {"temperature": (-5.0, 35.0), "salinity": (0.0, 45.0)}

@@ -102,6 +102,7 @@ _FRONT: tuple[str, ...] = (
     "contamination_ngram_census",
     "sql_funnel_conversion",
     "lineitem_corr_stats",
+    "embedding_isotropy_audit",
 )
 
 

@@ -23,7 +23,13 @@ from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
 from ocean_data_pipeline_spark.operators.portable import hash_int, hash_int_sql
-from ocean_data_pipeline_spark.operators.similarity import dot
+from ocean_data_pipeline_spark.operators.similarity import (
+    cosine,
+    cosine_pre,
+    cosine_sql,
+    dot,
+    norm,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- benchmark contamination census ------------------------------------
@@ -117,7 +123,7 @@ def contamination_ngram_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Matryoshka prefix quality ------------------------------------------
 
-_MATRYOSHKA_ORACLE = """
+_MATRYOSHKA_ORACLE = f"""
 WITH corpus AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
 ),
@@ -139,10 +145,7 @@ full_top1 AS (
     SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
            row_number() OVER (
              PARTITION BY p.vec_id
-             ORDER BY list_dot_product(p.v, c.v)
-                      / (sqrt(list_dot_product(p.v, p.v))
-                         * sqrt(list_dot_product(c.v, c.v))) DESC,
-                      c.vec_id) AS rnk
+             ORDER BY {cosine_sql("p.v", "c.v")} DESC, c.vec_id) AS rnk
     FROM probes p JOIN corpus c ON c.vec_id != p.vec_id
   ) WHERE rnk = 1
 ),
@@ -151,12 +154,8 @@ prefix_top1 AS (
     SELECT w.width, p.vec_id AS probe_id, c.vec_id AS neighbor_id,
            row_number() OVER (
              PARTITION BY w.width, p.vec_id
-             ORDER BY list_dot_product(list_slice(p.v, 1, w.width),
-                                       list_slice(c.v, 1, w.width))
-                      / (sqrt(list_dot_product(list_slice(p.v, 1, w.width),
-                                               list_slice(p.v, 1, w.width)))
-                         * sqrt(list_dot_product(list_slice(c.v, 1, w.width),
-                                                 list_slice(c.v, 1, w.width)))) DESC,
+             ORDER BY {cosine_sql("list_slice(p.v, 1, w.width)",
+                                  "list_slice(c.v, 1, w.width)")} DESC,
                       c.vec_id) AS rnk
     FROM probes p JOIN corpus c ON c.vec_id != p.vec_id
     CROSS JOIN widths w
@@ -234,8 +233,7 @@ def matryoshka_prefix_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sqrt-of-fold expression, and the division keeps cos's exact
     # na*nb order, so every similarity is bit-identical.
     def _pnorm(col: str, w: int | None):
-        sl = F.col(col) if w is None else F.slice(F.col(col), 1, w)
-        return F.sqrt(dot(sl, sl))
+        return norm(F.col(col) if w is None else F.slice(F.col(col), 1, w))
 
     probes = (
         emb.filter(F.col("vec_id") < 20)
@@ -270,7 +268,7 @@ def matryoshka_prefix_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.select(
             "probe_id",
             "neighbor_id",
-            (dot(F.col("pv"), F.col("cv")) / (F.col("pn") * F.col("cn"))).alias(
+            cosine_pre(F.col("pv"), F.col("cv"), F.col("pn"), F.col("cn")).alias(
                 "full_sim"
             ),
         )
@@ -287,9 +285,11 @@ def matryoshka_prefix_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "width",
             "probe_id",
             "neighbor_id",
-            (
-                dot(pref(F.col("pv"), F.col("width")), pref(F.col("cv"), F.col("width")))
-                / (_pick("pn") * _pick("cn"))
+            cosine_pre(
+                pref(F.col("pv"), F.col("width")),
+                pref(F.col("cv"), F.col("width")),
+                _pick("pn"),
+                _pick("cn"),
             ).alias("pref_sim"),
         )
         .withColumn("rnk", F.row_number().over(w_pref))
@@ -321,7 +321,7 @@ def matryoshka_prefix_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- int8 scalar quantization error ------------------------------------
 
-_QUANT_ORACLE = """
+_QUANT_ORACLE = f"""
 WITH corpus AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
 ),
@@ -346,9 +346,7 @@ per_row AS (
                  list_transform(generate_series(1, len(v)), i -> v[i] - d[i]),
                  list_transform(generate_series(1, len(v)), i -> v[i] - d[i]))
                / len(v), 12) AS DECIMAL(28,12)) AS mse,
-         CAST(round(list_dot_product(v, d)
-               / (sqrt(list_dot_product(v, v)) * sqrt(list_dot_product(d, d))),
-               12) AS DECIMAL(28,12)) AS cos_sim
+         CAST(round({cosine_sql("v", "d")}, 12) AS DECIMAL(28,12)) AS cos_sim
   FROM deq
 )
 SELECT label,
@@ -405,11 +403,7 @@ def embedding_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(dot(diff, diff) / F.size("v"), 12)
         .cast("decimal(28,12)")
         .alias("mse"),
-        F.round(
-            dot(F.col("v"), F.col("d"))
-            / (F.sqrt(dot(F.col("v"), F.col("v"))) * F.sqrt(dot(F.col("d"), F.col("d")))),
-            12,
-        )
+        F.round(cosine(F.col("v"), F.col("d")), 12)
         .cast("decimal(28,12)")
         .alias("cos_sim"),
     )
@@ -463,10 +457,7 @@ ranked AS (
          CASE WHEN c.label = p.label THEN 1 ELSE 0 END AS rel,
          row_number() OVER (
            PARTITION BY p.vec_id
-           ORDER BY list_dot_product(p.v, c.v)
-                    / (sqrt(list_dot_product(p.v, p.v))
-                       * sqrt(list_dot_product(c.v, c.v))) DESC,
-                    c.vec_id) AS rnk
+           ORDER BY {cosine_sql("p.v", "c.v")} DESC, c.vec_id) AS rnk
   FROM probes p JOIN corpus c ON c.vec_id != p.vec_id
 ),
 top10 AS (SELECT * FROM ranked WHERE rnk <= 10),
@@ -527,9 +518,7 @@ def retrieval_metrics_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cnt") - 1).alias("n_rel"),
         )
     )
-    cos = dot(F.col("pv"), F.col("cv")) / (
-        F.sqrt(dot(F.col("pv"), F.col("pv"))) * F.sqrt(dot(F.col("cv"), F.col("cv")))
-    )
+    cos = cosine(F.col("pv"), F.col("cv"))
     ranked = (
         F.broadcast(probes)
         .join(
@@ -633,7 +622,8 @@ cells AS (  -- exact cross-moment sums over the 64x64 grid: each term
 ),
 mu AS (
   SELECT pos, CAST(sum(CAST(round(val, 12) AS DECIMAL(28,12))) AS DOUBLE)
-                / max(n) AS m
+                / max(n) AS m,
+         min(val) = max(val) AS flat
   FROM (
     SELECT unnest(v) AS val, unnest(generate_series(1, len(v))) AS pos,
            (SELECT count(*) FROM corpus) AS n
@@ -642,13 +632,15 @@ mu AS (
 ),
 cov AS (
   SELECT c.i, c.j, c.n,
-         c.s_ij / c.n - mi.m * mj.m AS c_ij
+         CASE WHEN mi.flat OR mj.flat THEN CAST(0 AS DOUBLE)
+              ELSE c.s_ij / c.n - mi.m * mj.m END AS c_ij
   FROM cells c JOIN mu mi ON mi.pos = c.i JOIN mu mj ON mj.pos = c.j
 ),
 diag AS (SELECT i, c_ij AS var_i FROM cov WHERE i = j),
 corr AS (
   SELECT c.i, c.j, c.n, c.c_ij,
-         c.c_ij / sqrt(di.var_i * dj.var_i) AS rho
+         CASE WHEN di.var_i > 0 AND dj.var_i > 0
+              THEN c.c_ij / sqrt(di.var_i * dj.var_i) END AS rho
   FROM cov c JOIN diag di ON di.i = c.i JOIN diag dj ON dj.i = c.j
   WHERE c.i <> c.j
 ),
@@ -672,8 +664,10 @@ top AS (
 SELECT CAST(s.n AS BIGINT) AS n_vectors,
        64 AS dims,
        round(s.trace, 6) AS total_variance,
-       round(s.max_var / s.trace, 6) AS max_dim_var_share,
-       round(s.off_frob2 / (s.off_frob2 + s.diag_frob2), 6)
+       round(CASE WHEN s.trace > 0 THEN s.max_var / s.trace END, 6)
+         AS max_dim_var_share,
+       round(CASE WHEN s.off_frob2 + s.diag_frob2 > 0
+                  THEN s.off_frob2 / (s.off_frob2 + s.diag_frob2) END, 6)
          AS offdiag_frob_share,
        round(s.mean_abs_corr, 6) AS mean_abs_corr_offdiag,
        t.i AS top_corr_i, t.j AS top_corr_j,
@@ -696,6 +690,13 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     masses, |corr| mean) rounds ONCE into DECIMAL before aggregation;
     covariance/correlation are fixed IEEE chains on those exact sums;
     the top pair breaks ties by (i, j).
+
+    Totality: a constant dimension (min = max, so every dimension of a
+    single vector) has covariance exactly 0 rather than the rounding
+    noise of its sums. A correlation needs both variances positive and
+    a share a positive total, or it is NULL on both engines: never a
+    division by zero (Spark, ANSI) nor the square root of a
+    rounding-negative variance (DuckDB).
 
     Plan shape: one scan expands to the 64x64 cross-moment cells
     (map-side partial aggregate -> 4096-row shuffle), one 64-row mean
@@ -758,18 +759,27 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.sum(F.round(F.col("val"), 12).cast("decimal(28,12)")).cast("double")
                 / F.count(F.lit(1))
-            ).alias("m")
+            ).alias("m"),
+            (F.min("val") == F.max("val")).alias("flat"),
         )
         .localCheckpoint(eager=True)
     )
-    mi = mu.select(F.col("pos").alias("i"), F.col("m").alias("m_i"))
-    mj = mu.select(F.col("pos").alias("j"), F.col("m").alias("m_j"))
+    mi = mu.select(
+        F.col("pos").alias("i"), F.col("m").alias("m_i"), F.col("flat").alias("flat_i")
+    )
+    mj = mu.select(
+        F.col("pos").alias("j"), F.col("m").alias("m_j"), F.col("flat").alias("flat_j")
+    )
+    # a covariance with a constant dimension is exactly 0, not the
+    # rounding noise of its picounit sums
     cov = (
         cells.join(F.broadcast(mi), "i")
         .join(F.broadcast(mj), "j")
         .select(
             "i", "j", "n",
-            (F.col("s_ij") / F.col("n") - F.col("m_i") * F.col("m_j")).alias("c_ij"),
+            F.when(F.col("flat_i") | F.col("flat_j"), F.lit(0.0))
+            .otherwise(F.col("s_ij") / F.col("n") - F.col("m_i") * F.col("m_j"))
+            .alias("c_ij"),
         )
     )
     diag = cov.filter(F.col("i") == F.col("j")).select(
@@ -783,7 +793,10 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(dj), "j")
         .select(
             "i", "j", "n", "c_ij",
-            (F.col("c_ij") / F.sqrt(F.col("var_a") * F.col("var_b"))).alias("rho"),
+            F.when(
+                (F.col("var_a") > 0) & (F.col("var_b") > 0),
+                F.col("c_ij") / F.sqrt(F.col("var_a") * F.col("var_b")),
+            ).alias("rho"),
         )
     )
     diag_agg = diag.agg(
@@ -814,6 +827,7 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rho").alias("top_rho"),
         )
     )
+    frob2 = F.col("off_frob2") + F.col("diag_frob2")
     return (
         summary.crossJoin(F.broadcast(diag_agg))
         .crossJoin(F.broadcast(top))
@@ -821,9 +835,11 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n").cast("bigint").alias("n_vectors"),
             F.lit(64).alias("dims"),
             F.round("trace", 6).alias("total_variance"),
-            F.round(F.col("max_var") / F.col("trace"), 6).alias("max_dim_var_share"),
             F.round(
-                F.col("off_frob2") / (F.col("off_frob2") + F.col("diag_frob2")), 6
+                F.when(F.col("trace") > 0, F.col("max_var") / F.col("trace")), 6
+            ).alias("max_dim_var_share"),
+            F.round(
+                F.when(frob2 > 0, F.col("off_frob2") / frob2), 6
             ).alias("offdiag_frob_share"),
             F.round("mean_abs_corr", 6).alias("mean_abs_corr_offdiag"),
             "top_corr_i",
@@ -835,22 +851,17 @@ def embedding_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- reciprocal nearest-neighbor pairs ------------------------------------
 
-_RNN_ORACLE = """
+_RNN_ORACLE = f"""
 WITH corpus AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
 ),
 top1 AS (
   SELECT vec_id, nb, sim FROM (
     SELECT a.vec_id, b.vec_id AS nb,
-           list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v))
-                * sqrt(list_dot_product(b.v, b.v))) AS sim,
+           {cosine_sql("a.v", "b.v")} AS sim,
            row_number() OVER (
              PARTITION BY a.vec_id
-             ORDER BY list_dot_product(a.v, b.v)
-                      / (sqrt(list_dot_product(a.v, a.v))
-                         * sqrt(list_dot_product(b.v, b.v))) DESC,
-                      b.vec_id) AS rnk
+             ORDER BY {cosine_sql("a.v", "b.v")} DESC, b.vec_id) AS rnk
     FROM corpus a JOIN corpus b ON b.vec_id != a.vec_id
   ) WHERE rnk = 1
 ),
@@ -900,7 +911,7 @@ def reciprocal_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vn = emb.select(
         "vec_id",
         "v",
-        F.sqrt(dot(F.col("v"), F.col("v"))).alias("nrm"),
+        norm(F.col("v")).alias("nrm"),
     )
     a = vn.select(
         F.col("vec_id").alias("ia"), F.col("v").alias("va"), F.col("nrm").alias("na")
@@ -908,7 +919,7 @@ def reciprocal_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = vn.select(
         F.col("vec_id").alias("ib"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
     )
-    cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = cosine_pre(F.col("va"), F.col("vb"), F.col("na"), F.col("nb"))
     # argmax by (sim desc, ib asc) == max of the (sim, -ib) struct:
     # struct comparison is lexicographic, so ties on sim pick the
     # larger -ib, i.e. the smaller neighbor id — same total order the

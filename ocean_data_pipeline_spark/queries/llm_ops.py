@@ -14,7 +14,13 @@ from ocean_data_pipeline_spark.operators.dedup import (
     mllib_minhash_pairs,
 )
 from ocean_data_pipeline_spark.operators.portable import hash_int, hash_int_sql, vd
-from ocean_data_pipeline_spark.operators.similarity import cosine_topk, lsh_topk
+from ocean_data_pipeline_spark.operators.similarity import (
+    cosine_sql,
+    cosine_topk,
+    lsh_topk,
+    norm_sql,
+    topk_sql,
+)
 from ocean_data_pipeline_spark.operators.text import (
     STOPWORDS,
     bpe_token_count,
@@ -385,27 +391,26 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- embedding similarity --------------------------------------------
 
-_SIM_ORACLE = """
+
+def _sim_rows(out: DataFrame) -> DataFrame:
+    """A cosine top-k operator's rows, the similarity rounded to 6
+    decimals as `topk_sql` rounds it on the oracle side."""
+    return out.select(
+        "probe_id", "neighbor_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank"
+    ).orderBy("probe_id", "rank")
+
+
+_SIM_ORACLE = f"""
 WITH corpus AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
 ),
 probes AS (SELECT vec_id, v FROM corpus WHERE vec_id < 3),
 scored AS (
   SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         list_dot_product(p.v, c.v)
-           / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.v, c.v))) AS cosine_sim
+         {cosine_sql('p.v', 'c.v')} AS cosine_sim
   FROM probes p JOIN corpus c ON c.vec_id != p.vec_id
 ),
-ranked AS (
-  SELECT probe_id, neighbor_id, cosine_sim,
-         row_number() OVER (PARTITION BY probe_id
-                            ORDER BY cosine_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT probe_id, neighbor_id, round(cosine_sim, 6) AS cosine_sim, rank
-FROM ranked WHERE rank <= 5
-ORDER BY probe_id, rank
-"""
+{topk_sql("scored", 5, "cosine_sim DESC")}"""
 
 
 @register("sim_topk_bruteforce", oracle=_SIM_ORACLE)
@@ -415,10 +420,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sequential fold, doubles); rounded to 6 for rank-boundary safety."""
     emb = table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 3)
-    out = cosine_topk(emb, probes, k=5)
-    return out.select(
-        "probe_id", "neighbor_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank"
-    ).orderBy("probe_id", "rank")
+    return _sim_rows(cosine_topk(emb, probes, k=5))
 
 
 # --- embeddings metadata / array ops ---------------------------------
@@ -762,10 +764,10 @@ def winnow_robust_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- embedding-cosine near-dup ---------------------------------------
 
-_EMB_NEAR_DUP_ORACLE = """
+_EMB_NEAR_DUP_ORACLE = f"""
 WITH c AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+         {norm_sql('embedding::DOUBLE[]')} AS nrm
   FROM embeddings WHERE vec_id < 500
 )
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -796,7 +798,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- IVF-style similarity (deterministic coarse quantizer) ------------
 
-_SIM_IVF_ORACLE = """
+_SIM_IVF_ORACLE = f"""
 WITH c AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
          list_position(list_transform(embedding::DOUBLE[], x -> abs(x)),
@@ -806,20 +808,10 @@ WITH c AS (
 probes AS (SELECT vec_id, v, cell FROM c WHERE vec_id < 3),
 scored AS (
   SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         list_dot_product(p.v, c.v)
-           / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.v, c.v))) AS cosine_sim
+         {cosine_sql('p.v', 'c.v')} AS cosine_sim
   FROM probes p JOIN c ON c.cell = p.cell AND c.vec_id != p.vec_id
 ),
-ranked AS (
-  SELECT probe_id, neighbor_id, cosine_sim,
-         row_number() OVER (PARTITION BY probe_id
-                            ORDER BY cosine_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT probe_id, neighbor_id, round(cosine_sim, 6) AS cosine_sim, rank
-FROM ranked WHERE rank <= 3
-ORDER BY probe_id, rank
-"""
+{topk_sql("scored", 3, "cosine_sim DESC")}"""
 
 
 @register("sim_topk_ivf", oracle=_SIM_IVF_ORACLE)
@@ -832,15 +824,12 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 3)
-    out = ivf_topk(emb, probes, k=3)
-    return out.select(
-        "probe_id", "neighbor_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank"
-    ).orderBy("probe_id", "rank")
+    return _sim_rows(ivf_topk(emb, probes, k=3))
 
 
 # --- IVF multi-probe (nearest-2 cells) --------------------------------
 
-_SIM_IVF_MP_ORACLE = """
+_SIM_IVF_MP_ORACLE = f"""
 WITH c AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
          list_transform(embedding::DOUBLE[], x -> abs(x)) AS mags
@@ -864,20 +853,10 @@ probe_cells AS (
 ),
 scored AS (
   SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         list_dot_product(p.v, c.v)
-           / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.v, c.v))) AS cosine_sim
+         {cosine_sql('p.v', 'c.v')} AS cosine_sim
   FROM probe_cells p JOIN cells c ON c.cell1 = p.cell AND c.vec_id != p.vec_id
 ),
-ranked AS (
-  SELECT probe_id, neighbor_id, cosine_sim,
-         row_number() OVER (PARTITION BY probe_id
-                            ORDER BY cosine_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT probe_id, neighbor_id, round(cosine_sim, 6) AS cosine_sim, rank
-FROM ranked WHERE rank <= 3
-ORDER BY probe_id, rank
-"""
+{topk_sql("scored", 3, "cosine_sim DESC")}"""
 
 
 @register("sim_topk_ivf_multiprobe", oracle=_SIM_IVF_MP_ORACLE)
@@ -891,10 +870,7 @@ def sim_topk_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 3)
-    out = ivf_topk_multiprobe(emb, probes, k=3)
-    return out.select(
-        "probe_id", "neighbor_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank"
-    ).orderBy("probe_id", "rank")
+    return _sim_rows(ivf_topk_multiprobe(emb, probes, k=3))
 
 
 def _kmeans_frozen_oracle() -> str:
@@ -929,21 +905,11 @@ cells AS (SELECT vec_id, v, cell FROM assigned WHERE rn = 1),
 probe_cells AS (SELECT vec_id, v, cell FROM assigned WHERE vec_id < 3 AND rn <= 2),
 scored AS (
   SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,
-         list_dot_product(p.v, c.v)
-           / (sqrt(list_dot_product(p.v, p.v)) * sqrt(list_dot_product(c.v, c.v))) AS cosine_sim
+         {cosine_sql('p.v', 'c.v')} AS cosine_sim
   FROM probe_cells p
   JOIN cells c ON c.cell = p.cell AND c.vec_id != p.vec_id
 ),
-ranked AS (
-  SELECT probe_id, neighbor_id, cosine_sim,
-         row_number() OVER (PARTITION BY probe_id
-                            ORDER BY cosine_sim DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT probe_id, neighbor_id, round(cosine_sim, 6) AS cosine_sim, rank
-FROM ranked WHERE rank <= 3
-ORDER BY probe_id, rank
-"""
+{topk_sql("scored", 3, "cosine_sim DESC")}"""
 
 
 @register("sim_topk_ivf_kmeans", oracle=_kmeans_frozen_oracle())
@@ -958,16 +924,13 @@ def sim_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ivf_recall.py). Freezing makes the pipeline
     deterministic across engines, so the query now carries a full
     DuckDB oracle (same literals inlined) instead of a rows-only
-    check; the live-training path remains available as
-    operators.similarity.ivf_topk_kmeans."""
+    check. Retraining is offline: tools/freeze_codebook.py rewrites
+    the literals."""
     from ocean_data_pipeline_spark.operators.similarity import ivf_topk_frozen
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     probes = emb.filter(F.col("vec_id") < 3)
-    out = ivf_topk_frozen(emb, probes, k=3, n_probes=2)
-    return out.select(
-        "probe_id", "neighbor_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank"
-    ).orderBy("probe_id", "rank")
+    return _sim_rows(ivf_topk_frozen(emb, probes, k=3, n_probes=2))
 
 
 # --- tf-idf (exact, SQL-expressible twin of MLlib HashingTF+IDF) ------
@@ -1039,11 +1002,11 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- near-dup clustering: connected components ------------------------
 
-_COMPONENTS_ORACLE = """
+_COMPONENTS_ORACLE = f"""
 WITH RECURSIVE
 c AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+         {norm_sql('embedding::DOUBLE[]')} AS nrm
   FROM embeddings WHERE vec_id < 500
 ),
 pairs AS (
@@ -1510,16 +1473,7 @@ scored AS (
   FROM probes p CROSS JOIN xhat x
   WHERE x.vec_id != p.probe_id
 ),
-ranked AS (
-  SELECT probe_id, neighbor_id, approx_d2,
-         row_number() OVER (PARTITION BY probe_id
-                            ORDER BY approx_d2, neighbor_id) AS rank
-  FROM scored
-)
-SELECT probe_id, neighbor_id, approx_d2, rank
-FROM ranked WHERE rank <= 5
-ORDER BY probe_id, rank
-"""
+{topk_sql("scored", 5, "approx_d2")}"""
 
 
 @register("sim_topk_pq", oracle=_pq_frozen_oracle())
@@ -2352,7 +2306,7 @@ def hyperplane_lsh_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- hard-negative mining (contrastive training pairs) ----------------
 
-_HARD_NEG_ORACLE = """
+_HARD_NEG_ORACLE = f"""
 WITH corpus AS (
   SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings
 ),
@@ -2360,9 +2314,7 @@ anchors AS (SELECT vec_id, label, v FROM corpus WHERE vec_id < 200),
 scored AS (
   SELECT a.vec_id AS anchor_id, a.label AS anchor_label,
          c.vec_id AS negative_id, c.label AS negative_label,
-         list_dot_product(a.v, c.v)
-           / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v)))
-           AS cosine_sim
+         {cosine_sql('a.v', 'c.v')} AS cosine_sim
   FROM anchors a JOIN corpus c ON c.label != a.label
 ),
 ranked AS (

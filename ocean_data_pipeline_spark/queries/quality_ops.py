@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
 from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql
+from ocean_data_pipeline_spark.operators.similarity import cosine_sql
 from ocean_data_pipeline_spark.operators.text import (
     bpe_token_count,
     token_count,
@@ -1209,9 +1210,7 @@ dups AS (
   SELECT a.cell, a.vec_id AS id_a, b.vec_id AS id_b
   FROM cells a JOIN cells b
     ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE round(list_dot_product(a.v, b.v)
-              / (sqrt(list_dot_product(a.v, a.v))
-                 * sqrt(list_dot_product(b.v, b.v))), 6) >= 0.30
+  WHERE round({cosine_sql("a.v", "b.v")}, 6) >= 0.30
 ),
 dup_vecs AS (
   SELECT cell, id_a AS vec_id FROM dups

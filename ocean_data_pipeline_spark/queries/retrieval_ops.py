@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.similarity import cosine, cosine_sql
 from ocean_data_pipeline_spark.queries import register
 
 #: BM25 free parameters (the Robertson/Okapi defaults).
@@ -231,10 +232,7 @@ probe AS (SELECT v FROM corpus WHERE vec_id = 0),
 dense_ranked AS (
   SELECT c.vec_id,
          row_number() OVER (
-           ORDER BY list_dot_product(p.v, c.v)
-                    / (sqrt(list_dot_product(p.v, p.v))
-                       * sqrt(list_dot_product(c.v, c.v))) DESC,
-                    c.vec_id) AS r_dense
+           ORDER BY {cosine_sql("p.v", "c.v")} DESC, c.vec_id) AS r_dense
   FROM corpus c CROSS JOIN probe p
 ),
 fused AS (
@@ -275,7 +273,6 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocean_data_pipeline_spark.operators.ranks import (
         with_global_row_number,
     )
-    from ocean_data_pipeline_spark.operators.similarity import dot
 
     # both corpus-wide rankings ride the fixed-width rank device —
     # BM25 scores are log-bounded (unit buckets), cosines live in
@@ -294,10 +291,7 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     probe = emb.filter(F.col("vec_id") == 0).select(v.alias("pv"))
-    cos = dot(F.col("pv"), F.col("cv")) / (
-        F.sqrt(dot(F.col("pv"), F.col("pv")))
-        * F.sqrt(dot(F.col("cv"), F.col("cv")))
-    )
+    cos = cosine(F.col("pv"), F.col("cv"))
     dense = with_global_row_number(
         emb.select(F.col("vec_id"), v.alias("cv"))
         .crossJoin(F.broadcast(probe))
@@ -661,12 +655,6 @@ _MMR_LAMBDA = 0.7
 _MMR_POOL = 12
 _MMR_K = 4
 
-_COS_SQL = (
-    "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-    " * sqrt(list_dot_product({b}, {b})))"
-)
-
-
 def _mmr_oracle() -> str:
     """Unrolled MMR selection: one MATERIALIZED CTE per round (the
     AS MATERIALIZED discipline from `ipf_survey_raking` — DuckDB
@@ -676,13 +664,13 @@ def _mmr_oracle() -> str:
 WITH corpus AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT v FROM corpus WHERE vec_id = 0),
 cand AS MATERIALIZED (
-  SELECT c.vec_id, c.v, {_COS_SQL.format(a='q.v', b='c.v')} AS sim_q
+  SELECT c.vec_id, c.v, {cosine_sql('q.v', 'c.v')} AS sim_q
   FROM corpus c, q WHERE c.vec_id != 0
   ORDER BY sim_q DESC, c.vec_id LIMIT {_MMR_POOL}
 ),
 pairs AS MATERIALIZED (
   SELECT a.vec_id AS ia, b.vec_id AS ib,
-         {_COS_SQL.format(a='a.v', b='b.v')} AS sim_ab
+         {cosine_sql('a.v', 'b.v')} AS sim_ab
   FROM cand a JOIN cand b ON a.vec_id != b.vec_id
 ),
 s1 AS MATERIALIZED (
@@ -739,15 +727,11 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= {pool} rows. At 100 TB only the first scan is corpus-scale —
     the greedy loop runs on a fixed-size candidate relation (same
     bounded-iteration posture as `ipf_survey_raking`)."""
-    from ocean_data_pipeline_spark.operators.similarity import dot
-
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     q = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    cos_q = dot(F.col("qv"), F.col("v")) / (
-        F.sqrt(dot(F.col("qv"), F.col("qv"))) * F.sqrt(dot(F.col("v"), F.col("v")))
-    )
+    cos_q = cosine(F.col("qv"), F.col("v"))
     cand = (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -758,9 +742,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = cand.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
     b = cand.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-    cos_ab = dot(F.col("va"), F.col("vb")) / (
-        F.sqrt(dot(F.col("va"), F.col("va"))) * F.sqrt(dot(F.col("vb"), F.col("vb")))
-    )
+    cos_ab = cosine(F.col("va"), F.col("vb"))
     pairs = (
         a.join(b, F.col("ia") != F.col("ib"))
         .select("ia", "ib", cos_ab.alias("sim_ab"))

@@ -21,6 +21,7 @@ from ocean_data_pipeline_spark.operators.portable import (
     uniform,
     uniform_sql,
 )
+from ocean_data_pipeline_spark.operators.similarity import norm_sql
 from ocean_data_pipeline_spark.queries import register
 
 # --- sliding-window chunking ------------------------------------------
@@ -508,7 +509,7 @@ _GSPLIT_ORACLE = f"""
 WITH RECURSIVE
 c AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
-         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+         {norm_sql("embedding::DOUBLE[]")} AS nrm
   FROM embeddings WHERE vec_id < 500
 ),
 pairs AS (

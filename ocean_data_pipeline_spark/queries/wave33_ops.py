@@ -38,13 +38,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
-from ocean_data_pipeline_spark.operators.similarity import cosine_pre, dot, norm
+from ocean_data_pipeline_spark.operators.similarity import cosine_pre, cosine_sql, norm
 from ocean_data_pipeline_spark.queries import register
-
-_COS_SQL = (
-    "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-    " * sqrt(list_dot_product({b}, {b})))"
-)
 
 # --- kNN label-noise audit ---------------------------------------------------
 
@@ -62,7 +57,7 @@ scored AS (
          c.label AS nbr_label,
          row_number() OVER (
            PARTITION BY p.vec_id
-           ORDER BY {_COS_SQL.format(a="p.v", b="c.v")} DESC, c.vec_id
+           ORDER BY {cosine_sql("p.v", "c.v")} DESC, c.vec_id
          ) AS rk
   FROM probes p JOIN emb c ON c.vec_id <> p.vec_id
 ),
@@ -169,7 +164,7 @@ WITH emb AS (
 ),
 probes AS (SELECT * FROM emb WHERE vec_id < {_BQ_PROBES}),
 pairs AS (
-  SELECT {_COS_SQL.format(a="p.v", b="c.v")} AS cos,
+  SELECT {cosine_sql("p.v", "c.v")} AS cos,
          len(list_filter(list_zip(p.v, c.v),
              z -> (z[1] >= 0) <> (z[2] >= 0))) AS ham
   FROM probes p JOIN emb c ON c.vec_id > p.vec_id

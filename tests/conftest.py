@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -55,3 +57,35 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
+
+
+_job_groups = itertools.count()
+
+
+@contextmanager
+def job_ids(spark):
+    """The ids of the Spark jobs started inside the block: a list, filled
+    when the block exits (each use runs under its own job group)."""
+    sc = spark.sparkContext
+    group = f"tests_job_ids_{next(_job_groups)}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@contextmanager
+def confs(spark, kv: dict[str, str]):
+    """Set session confs for the block; the previous values come back
+    on exit."""
+    orig = {k: spark.conf.get(k) for k in kv}
+    for k, v in kv.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in orig.items():
+            spark.conf.set(k, v)

@@ -7,22 +7,9 @@ lowered to fire at test scale; production uses the defaults.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
-
-
-@contextmanager
-def _confs(spark, kv: dict[str, str]):
-    orig = {k: spark.conf.get(k) for k in kv}
-    for k, v in kv.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in orig.items():
-            spark.conf.set(k, v)
+from tests.conftest import confs
 
 
 def _run_and_plan(df) -> str:
@@ -48,7 +35,7 @@ def test_aqe_splits_skewed_join_partition(spark):
     other = spark.range(0, 2_000).select(
         (F.col("id") % 200).alias("k"), F.col("id").alias("rhs")
     )
-    with _confs(
+    with confs(
         spark,
         {
             "spark.sql.adaptive.enabled": "true",
@@ -73,7 +60,7 @@ def test_aqe_coalesces_small_shuffle_partitions(spark):
     inverse scale problem: a plan tuned for 100 TB must not launch
     32 000 near-empty reducers on a 1 GB day-partition."""
     df = spark.range(0, 10_000).select((F.col("id") % 50).alias("k"))
-    with _confs(
+    with confs(
         spark,
         {
             "spark.sql.adaptive.enabled": "true",
@@ -124,7 +111,7 @@ def test_aqe_splits_measured_skew_from_testdata(spark):
     assert hot_share > 0.15  # derived key: one partition dominates
 
     diag = spark.range(0, 5_000).select(F.col("id").alias("k"), F.col("id").alias("d"))
-    with _confs(
+    with confs(
         spark,
         {
             "spark.sql.adaptive.enabled": "true",

@@ -15,7 +15,7 @@ import pytest
 
 from ocean_data_pipeline_spark.catalog import table
 from ocean_data_pipeline_spark.queries import graph_ops, load_all
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, job_ids
 from tools.verify_local import compare, duckdb_conn
 
 REGISTRY = load_all()
@@ -126,13 +126,8 @@ def test_local_route_job_budget_and_no_leak(spark):
     """At sf0.01 the local route is two counts and one Arrow task: at
     most 6 jobs for fn() + collect, and no persisted RDD left behind."""
     assert table(spark, SF_ORACLE, "lineitem").count() <= graph_ops._CC_LOCAL_EDGE_CAP
-    sc = spark.sparkContext
     before = _persisted(spark)
-    sc.setJobGroup("bfs_local_route", "bfs_reachability job budget")
-    try:
+    with job_ids(spark) as jobs:
         BFS.fn(spark, SF_ORACLE).collect()
-        jobs = sc.statusTracker().getJobIdsForGroup("bfs_local_route")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert 0 < len(jobs) <= 6
     assert _persisted(spark) <= before

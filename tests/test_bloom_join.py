@@ -10,30 +10,16 @@ production scale the defaults fire on their own.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, confs
 
 
 def _plan(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
-
-
-@contextmanager
-def _confs(spark, kv: dict[str, str]):
-    orig = {k: spark.conf.get(k) for k in kv}
-    for k, v in kv.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in orig.items():
-            spark.conf.set(k, v)
 
 
 def _join(spark):
@@ -57,7 +43,7 @@ BLOOM_ON = {
 
 
 def test_bloom_filter_injected_on_fact_scan(spark):
-    with _confs(spark, BLOOM_ON):
+    with confs(spark, BLOOM_ON):
         plan = _plan(spark, _join(spark))
     assert "might_contain" in plan, plan
     assert "bloom_filter_agg" in plan
@@ -67,6 +53,6 @@ def test_bloom_filter_injected_on_fact_scan(spark):
 
 def test_bloom_filter_preserves_results(spark):
     want = [tuple(r) for r in _join(spark).collect()]
-    with _confs(spark, BLOOM_ON):
+    with confs(spark, BLOOM_ON):
         got = [tuple(r) for r in _join(spark).collect()]
     assert got == want and len(want) > 0

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.cache.result_cache import ResultCache
+from tests.conftest import job_ids
 from tests.test_cache_merge import _entries_df, _entry
 
 AA = ["aa" + c * 14 for c in "0123"]  # live, expired, NULL expiry, micro
@@ -100,15 +101,11 @@ def test_get_keeps_instants_under_any_session_time_zone(spark, tmp_path):
 def test_get_starts_no_job(spark, tmp_path):
     cache = ResultCache(spark, str(tmp_path / "cache"))
     _puts(spark, cache)
-    sc = spark.sparkContext
-    sc.setJobGroup("cache_get", "cache_get")
-    try:
+    with job_ids(spark) as jobs:
         hit = cache.get(AA[0], _ts(NOWS[1]))
         miss = cache.get("zz" + "0" * 14, F.current_timestamp())
         assert len(hit.collect()) == 1 and miss.collect() == []
-        assert sc.statusTracker().getJobIdsForGroup("cache_get") == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
     assert "PythonRDD" not in hit._jdf.queryExecution().toRdd().toDebugString()
 
 

@@ -10,22 +10,11 @@ import os
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.cache.result_cache import CACHE_SCHEMA, ResultCache
-from ocean_data_pipeline_spark.operators.merge import (
-    merge_delete,
-    merge_keep_latest,
-    merge_upsert,
-)
+from ocean_data_pipeline_spark.operators.merge import merge_keep_latest
 
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "k string, v long, ver long")
-
-
-def test_merge_upsert_source_wins_and_inserts(spark):
-    target = _df(spark, [("a", 1, 10), ("b", 2, 10)])
-    source = _df(spark, [("b", 99, 5), ("c", 3, 5)])  # b older but still wins
-    got = {r["k"]: (r["v"], r["ver"]) for r in merge_upsert(target, source, ["k"]).collect()}
-    assert got == {"a": (1, 10), "b": (99, 5), "c": (3, 5)}
 
 
 def test_merge_keep_latest_is_replay_safe(spark):
@@ -36,13 +25,6 @@ def test_merge_keep_latest_is_replay_safe(spark):
         for r in merge_keep_latest(target, stale_retry, ["k"], "ver").collect()
     }
     assert got == {"a": (1, 10), "b": (2, 10), "c": (3, 5)}
-
-
-def test_merge_delete_tombstones(spark):
-    target = _df(spark, [("a", 1, 1), ("b", 2, 1), ("c", 3, 1)])
-    tombstones = _df(spark, [("b", 0, 0), ("zz", 0, 0)])
-    got = sorted(r["k"] for r in merge_delete(target, tombstones, ["k"]).collect())
-    assert got == ["a", "c"]
 
 
 def _entry(

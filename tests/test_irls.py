@@ -12,6 +12,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.operators.irls import irls_fit, irls_sql, null_fit
+from tests.conftest import job_ids
 
 
 def _poisson_step(b0, b1):
@@ -90,13 +91,9 @@ def test_constant_x_keeps_seed_without_ansi_error(spark):
 
 def test_zero_rounds_return_seed_without_a_job(spark):
     base = _frame(spark, np.arange(5.0), np.arange(5.0))
-    sc = spark.sparkContext
-    sc.setJobGroup("irls_zero_rounds", "irls_zero_rounds")
-    try:
+    with job_ids(spark) as jobs:
         assert irls_fit(base, 1.25, 0, _lad_step) == (1.25, 0.0)
-        assert sc.statusTracker().getJobIdsForGroup("irls_zero_rounds") == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
 
 
 def test_engine_and_oracle_rounds_agree_exactly(spark):

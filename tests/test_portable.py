@@ -3,7 +3,8 @@
 The engine forms and their DuckDB twins must agree bit for bit: the
 salted-SHA-256 draw on any key (NULL, negative, past 2^32, multi-part
 salts), and `vh` on a DECIMAL sum where DuckDB's direct cast is an ulp
-off. A source guard keeps the devices from being re-derived elsewhere.
+off. A source guard keeps the devices of `operators/` (these and the
+similarity device's cosine) from being re-derived elsewhere.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import re
 from decimal import Decimal
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DecimalType,
@@ -158,17 +160,33 @@ def test_vd_matches_spark_where_duckdb_direct_cast_is_off(spark):
     assert direct == Decimal("-4.689882485302")
 
 
-def test_devices_are_not_rewritten_outside_portable():
-    """Regrowth guard: the draw's scaling constant and the VARCHAR hops
-    live only in `operators/portable.py`."""
-    banned = ("4294967297", "AS VARCHAR) AS DOUBLE", "AS VARCHAR) AS DECIMAL")
+#: (device module, spellings that re-derive its device): the draw's
+#: scaling constant and the VARCHAR hops live in `portable.py`; the
+#: cosine quotient (the oracle's and the engine's inline norm) in
+#: `similarity.py`, whose `cosine`, `cosine_pre`, `norm` and SQL twins
+#: everything else calls.
+_DEVICES = {
+    "portable": (
+        os.path.join("operators", "portable.py"),
+        ("4294967297", "AS VARCHAR) AS DOUBLE", "AS VARCHAR) AS DECIMAL"),
+    ),
+    "similarity": (
+        os.path.join("operators", "similarity.py"),
+        ("/ (sqrt(list_dot_product(", "F.sqrt(dot("),
+    ),
+}
+
+
+@pytest.mark.parametrize("device", sorted(_DEVICES))
+def test_devices_are_not_rewritten_outside_their_module(device):
+    """Regrowth guard: each device is spelled only in its own module
+    (whitespace-normalized, so a re-wrapped copy still matches)."""
+    module, banned = _DEVICES[device]
     offenders = []
     for root, _, files in os.walk(PKG):
         for name in files:
             path = os.path.join(root, name)
-            if not name.endswith(".py") or path.endswith(
-                os.path.join("operators", "portable.py")
-            ):
+            if not name.endswith(".py") or path.endswith(module):
                 continue
             text = re.sub(r"\s+", " ", open(path, encoding="utf-8").read())
             offenders += [(os.path.relpath(path, PKG), b) for b in banned if b in text]
