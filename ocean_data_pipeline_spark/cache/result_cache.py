@@ -10,7 +10,9 @@ driver; every other operation is a DataFrame transformation:
 
 - get      = one bucket file read with pyarrow on the driver, wrapped as
              a local relation, TTL-filtered there (no Spark job)
-- upsert   = unionByName + keep-latest window dedup + atomic bucket swap
+- upsert   = one observed `noop` write that persists the batch and
+             returns its buckets, then unionByName + keep-latest window
+             dedup + atomic bucket swap
 - cleanup  = per-bucket census (rows, expired rows) in one aggregate,
              then a liveness-filter rewrite of only the buckets that
              hold expired rows
@@ -59,7 +61,7 @@ from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -239,9 +241,12 @@ class ResultCache:
         admission-rejected (cache_manager.py:148-150).
 
         The input is read ONCE: the admitted rows are persisted for the
-        commit (the bucket probe fills the cache, the merge write reads
-        it) and released on the way out, so a caller's Python-backed
-        frame or a streaming micro-batch is not recomputed per job.
+        commit. One write to Spark's `noop` sink fills the persisted
+        blocks, and an Observation on that write returns the touched
+        buckets from the same job. The merge write reads the persisted
+        rows; they are released on the way out, so a caller's
+        Python-backed frame or a streaming micro-batch is not
+        recomputed per job.
 
         Commit protocol: merge the touched buckets' current data with
         the incoming rows, write the result ONCE into a fresh version
@@ -250,12 +255,11 @@ class ResultCache:
         any point leaves the previous manifest authoritative."""
         admitted = entries.filter(F.col("file_size_bytes") <= MAX_ENTRY_BYTES).persist()
         try:
-            buckets = [
-                r["key_bucket"]
-                for r in admitted.select(
-                    F.substring("query_hash", 1, 2).alias("key_bucket")
-                ).distinct().collect()
-            ]
+            seen = Observation()
+            admitted.observe(
+                seen, F.collect_set(F.substring("query_hash", 1, 2)).alias("buckets")
+            ).write.format("noop").mode("overwrite").save()
+            buckets = seen.get["buckets"]
             if not buckets:
                 return
             manifest = self._read_manifest()

@@ -9,6 +9,20 @@ handling), shuffle partitions sized to the cluster (32 locally, set
 higher on a real cluster), UTC session timezone so timestamp semantics
 match the reference's tz-aware-UTC contract (pipeline/extract.py:207-208
 in the reference) and the DuckDB oracle.
+
+Python workers: a session `get_spark` builds on a local master runs its
+Python workers under the engine's daemon (`worker_daemon`), which stops
+each task from re-reading Spark's own archives (pyspark.zip, the py4j
+zip, the spark-core jar) in `importlib.invalidate_caches()`: about
+200 ms of setup per Python task. Only those archives are frozen,
+because only they are known not to change while the daemon runs; the
+SparkFiles directory and the zips `addPyFile` adds still invalidate.
+The daemon module is a static conf and the workers must import it from
+the package root, which is known only where they run beside the
+driver. On a cluster the executors' Python environment is the
+deployment's, so the stock daemon stays; a driver-provided session was
+built before it reaches the engine, so it cannot take a static conf and
+keeps the stock daemon too.
 """
 
 from __future__ import annotations
@@ -92,10 +106,25 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    if master is None and "SPARK_MASTER" not in os.environ:
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif "SPARK_MASTER" not in os.environ:
-        builder = builder.master(f"local[{cpus}]")
+        if master.startswith("local"):
+            builder = _engine_daemon(builder)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune_for_oracle(spark)
+
+
+def _engine_daemon(builder: SparkSession.Builder) -> SparkSession.Builder:
+    """Run Python workers under `worker_daemon`, importable from any
+    working directory: `spark.executorEnv.PYTHONPATH` is the package
+    root. This replaces any value configured elsewhere (spark-defaults,
+    PYSPARK_SUBMIT_ARGS), which is not readable before the JVM starts;
+    Spark still adds the driver's `PYTHONPATH` environment variable to
+    the workers' path."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return builder.config(
+        "spark.python.daemon.module", "ocean_data_pipeline_spark.worker_daemon"
+    ).config("spark.executorEnv.PYTHONPATH", root)

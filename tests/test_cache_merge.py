@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.cache.result_cache import CACHE_SCHEMA, ResultCache
 from ocean_data_pipeline_spark.operators.merge import merge_keep_latest
+from tests.conftest import job_ids
 
 
 def _df(spark, rows):
@@ -245,3 +246,36 @@ def test_empty_frame_has_no_python_rdd(spark, tmp_path):
     assert empty.schema == spark.createDataFrame([], CACHE_SCHEMA).schema
     assert "PythonRDD" not in empty._jdf.queryExecution().toRdd().toDebugString()
     assert empty.count() == 0
+
+
+def test_one_row_put_runs_three_jobs(spark, tmp_path):
+    """A miss's put of a list-built one-row frame: one observed `noop`
+    write, then the keep-latest merge's map job and write, whether its
+    bucket is new or stored."""
+    cache = ResultCache(spark, str(tmp_path / "cache"))
+    cache.put(_entries_df(spark, [_entry("aa" + "0" * 14)]))
+    new_key = _entries_df(spark, [_entry("bb" + "0" * 14)])
+    with job_ids(spark) as new_bucket:
+        cache.put(new_key)
+    refresh = _entries_df(spark, [_entry("bb" + "0" * 14, "2024-02-01 00:00:00")])
+    with job_ids(spark) as stored_bucket:
+        cache.put(refresh)
+    assert len(new_bucket) <= 3 and len(stored_bucket) <= 3
+    rows = {r["query_hash"]: r["fetched_at"].isoformat() for r in cache.read().collect()}
+    assert rows == {"aa" + "0" * 14: "2024-01-01T00:00:00", "bb" + "0" * 14: "2024-02-01T00:00:00"}
+
+
+def test_put_keeps_the_newest_row(spark, tmp_path):
+    """Store an older row for key K, then put a batch holding two rows
+    for K (neither the oldest) and one for a new key L in the same
+    bucket: the newest row per key is kept."""
+    k, l = "aa" + "0" * 14, "aa" + "1" * 14
+    cache = ResultCache(spark, str(tmp_path / "cache"))
+    cache.put(_entries_df(spark, [_entry(k, "2024-01-01 00:00:00")]))
+    cache.put(_entries_df(spark, [
+        _entry(k, "2024-03-01 00:00:00"),
+        _entry(k, "2024-02-01 00:00:00"),
+        _entry(l, "2024-02-15 00:00:00"),
+    ]))
+    fetched = {r["query_hash"]: r["fetched_at"].isoformat() for r in cache.read().collect()}
+    assert fetched == {k: "2024-03-01T00:00:00", l: "2024-02-15T00:00:00"}
