@@ -15,6 +15,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.events import (
+    HORIZON_H,
+    at_risk,
+    at_risk_sql,
+    lifetimes,
+    lifetimes_sql,
+    sessions,
+    sessions_sql,
+)
 from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql, vd
 from ocean_data_pipeline_spark.queries import register
 
@@ -423,50 +432,9 @@ def daily_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Kaplan–Meier survival --------------------------------------------
 
-#: Fixed follow-up horizon: each user is observed for this many hours
-#: after their first event; users who have not purchased by then are
-#: ADMINISTRATIVELY CENSORED at the horizon.
-_KM_HORIZON_H = 48
-
 _KM_ORACLE = f"""
-WITH u AS (
-  SELECT user_id, min(ts) AS t0 FROM events GROUP BY user_id
-),
-p AS (
-  SELECT user_id, min(ts) AS tp FROM events
-  WHERE event_type = 'purchase' GROUP BY user_id
-),
-life AS (
-  SELECT u.user_id,
-         -- integer microseconds -> exact doubles (< 2^53): identical
-         -- floor on both engines by construction
-         CASE WHEN p.tp IS NOT NULL
-               AND floor(date_diff('microsecond', u.t0, p.tp)
-                         / 3600000000.0) < {_KM_HORIZON_H}
-              THEN CAST(floor(date_diff('microsecond', u.t0, p.tp)
-                              / 3600000000.0) AS BIGINT)
-              ELSE {_KM_HORIZON_H} END AS dur_h,
-         CASE WHEN p.tp IS NOT NULL
-               AND floor(date_diff('microsecond', u.t0, p.tp)
-                         / 3600000000.0) < {_KM_HORIZON_H}
-              THEN 0 ELSE 1 END AS censored
-  FROM u LEFT JOIN p ON p.user_id = u.user_id
-),
-n_total AS (SELECT count(*) AS n FROM life),
-by_h AS (
-  SELECT dur_h,
-         count(*) AS n_leaving,
-         CAST(sum(1 - censored) AS BIGINT) AS n_events,
-         CAST(sum(censored) AS BIGINT) AS n_censored
-  FROM life GROUP BY dur_h
-),
-risk AS (
-  SELECT dur_h, n_events, n_censored,
-         nt.n - coalesce(sum(n_leaving) OVER (ORDER BY dur_h
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                         0) AS n_risk
-  FROM by_h CROSS JOIN n_total nt
-),
+WITH {lifetimes_sql()},
+{at_risk_sql()},
 deaths AS (
   SELECT dur_h, n_risk, n_events, n_censored,
          CASE WHEN n_events < n_risk
@@ -509,47 +477,13 @@ def kaplan_meier_user_lifetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines exponentiate the identical double; a dᵢ=nᵢ terminal
     step short-circuits to exact 0 instead of ln(0).
 
-    Plan shape: two keyed aggs fold each user to (duration, censored);
-    everything after runs on the ≤48-row hour relation (conditional
-    agg, one at-risk running sum, one log-space running sum). At
+    Plan shape: the life table of `operators/events.py` (two keyed
+    aggs fold each user to (duration, censored), then the ≤49-row
+    at-risk relation); this query adds one log-space running sum. At
     100 TB of events this is scan + keyed aggs — the curve itself is
     horizon-sized, not data-sized."""
-    from pyspark.sql import Window
-
     ev = table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    u = ev.groupBy("user_id").agg(F.min("ts").alias("t0"))
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("tp"))
-    )
-    # integer microseconds -> exact doubles (< 2^53): identical floor
-    # on both engines by construction
-    hours = F.floor(
-        (F.unix_micros("tp") - F.unix_micros("t0")) / F.lit(3600000000.0)
-    )
-    converted = F.col("tp").isNotNull() & (hours < _KM_HORIZON_H)
-    life = u.join(p, "user_id", "left").select(
-        F.when(converted, hours.cast("bigint"))
-        .otherwise(F.lit(_KM_HORIZON_H))
-        .alias("dur_h"),
-        F.when(converted, 0).otherwise(1).alias("censored"),
-    )
-    n_total = life.agg(F.count(F.lit(1)).alias("n"))
-    by_h = life.groupBy("dur_h").agg(
-        F.count(F.lit(1)).alias("n_leaving"),
-        F.sum(1 - F.col("censored")).cast("bigint").alias("n_events"),
-        F.sum("censored").cast("bigint").alias("n_censored"),
-    )
-    w_prev = Window.orderBy("dur_h").rowsBetween(Window.unboundedPreceding, -1)
-    risk = by_h.crossJoin(F.broadcast(n_total)).select(
-        "dur_h",
-        "n_events",
-        "n_censored",
-        (
-            F.col("n") - F.coalesce(F.sum("n_leaving").over(w_prev), F.lit(0))
-        ).alias("n_risk"),
-    )
+    risk = at_risk(lifetimes(ev))
     deaths = risk.filter(F.col("n_events") > 0).select(
         "dur_h",
         "n_risk",
@@ -691,22 +625,8 @@ def attribution_credit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- session path mining ----------------------------------------------
 
-_SESSION_PATH_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-sessions AS (
-  SELECT user_id, event_id, ts, event_type,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_seq
-  FROM flagged
-),
+_SESSION_PATH_ORACLE = f"""
+WITH {sessions_sql("event_type")},
 numbered AS (
   SELECT *, row_number() OVER (PARTITION BY user_id, session_seq
                                ORDER BY ts, event_id) AS rn
@@ -728,11 +648,11 @@ LIMIT 15
 
 @register("session_path_topn", oracle=_SESSION_PATH_ORACLE)
 def session_path_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-15 user-journey paths: sessions (30-min gap, identical
-    construction to `sessionize_events`) rendered as ordered
-    event-type strings ('view>click>purchase'), truncated to the
-    first 8 events so path cardinality stays bounded, then counted —
-    the navigation-pattern mining behind funnel design.
+    """Top-15 user-journey paths: the 30-min gap sessions of
+    `operators/events.py` rendered as ordered event-type strings
+    ('view>click>purchase'), truncated to the first 8 events so path
+    cardinality stays bounded, then counted — the navigation-pattern
+    mining behind funnel design.
 
     The path string is built from `array_sort(collect_list(struct(ts,
     event_id, event_type)))` — membership AND order come from the
@@ -740,18 +660,7 @@ def session_path_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect_list's arrival order (the `nation_top_balances_array`
     rule). All three windows and the path agg share one (user_id)
     exchange; the final path count is a low-cardinality groupBy."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(gap.isNull() | (gap > 30 * 60), F.lit(1)).otherwise(F.lit(0)),
-    )
-    sessions = flagged.withColumn(
-        "session_seq",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    numbered = sessions.withColumn(
+    numbered = sessions(table(spark, sf_dir, "events")).withColumn(
         "rn",
         F.row_number().over(
             Window.partitionBy("user_id", "session_seq").orderBy("ts", "event_id")
@@ -1003,41 +912,8 @@ def entropy_rate_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Nelson-Aalen cumulative hazard -----------------------------------
 
 _NA_ORACLE = f"""
-WITH u AS (
-  SELECT user_id, min(ts) AS t0 FROM events GROUP BY user_id
-),
-p AS (
-  SELECT user_id, min(ts) AS tp FROM events
-  WHERE event_type = 'purchase' GROUP BY user_id
-),
-life AS (
-  SELECT u.user_id,
-         CASE WHEN p.tp IS NOT NULL
-               AND floor(date_diff('microsecond', u.t0, p.tp)
-                         / 3600000000.0) < {_KM_HORIZON_H}
-              THEN CAST(floor(date_diff('microsecond', u.t0, p.tp)
-                              / 3600000000.0) AS BIGINT)
-              ELSE {_KM_HORIZON_H} END AS dur_h,
-         CASE WHEN p.tp IS NOT NULL
-               AND floor(date_diff('microsecond', u.t0, p.tp)
-                         / 3600000000.0) < {_KM_HORIZON_H}
-              THEN 0 ELSE 1 END AS censored
-  FROM u LEFT JOIN p ON p.user_id = u.user_id
-),
-n_total AS (SELECT count(*) AS n FROM life),
-by_h AS (
-  SELECT dur_h,
-         count(*) AS n_leaving,
-         CAST(sum(1 - censored) AS BIGINT) AS n_events
-  FROM life GROUP BY dur_h
-),
-risk AS (
-  SELECT dur_h, n_events,
-         nt.n - coalesce(sum(n_leaving) OVER (ORDER BY dur_h
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                         0) AS n_risk
-  FROM by_h CROSS JOIN n_total nt
-),
+WITH {lifetimes_sql()},
+{at_risk_sql()},
 terms AS (
   SELECT dur_h, n_risk, n_events,
          CAST(CAST(n_events AS DOUBLE) / n_risk AS DECIMAL(28,12)) AS dh,
@@ -1067,45 +943,10 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     running sums are exact decimal prefix sums over the ordered event
     times — the KM log-space-product discipline, additively.
 
-    Plan shape: two per-user aggs (first event, first purchase), one
-    shuffle to the duration-level relation (<= horizon+1 rows), then
-    windows over that tiny relation. At 100 TB only the per-user aggs
-    are row-scale."""
-    from pyspark.sql import Window
-
-    ev = table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(F.min("ts").alias("t0"))
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("tp"))
-    )
-    hours = F.floor(
-        (F.unix_micros("tp") - F.unix_micros("t0")) / 3600000000.0
-    )
-    converted = F.col("tp").isNotNull() & (hours < _KM_HORIZON_H)
-    life = u.join(p, "user_id", "left").select(
-        F.when(converted, hours.cast("bigint"))
-        .otherwise(F.lit(_KM_HORIZON_H))
-        .alias("dur_h"),
-        F.when(converted, 0).otherwise(1).alias("censored"),
-    )
-    n_total = life.agg(F.count(F.lit(1)).alias("n"))
-    by_h = life.groupBy("dur_h").agg(
-        F.count(F.lit(1)).alias("n_leaving"),
-        F.sum(1 - F.col("censored")).cast("bigint").alias("n_events"),
-    )
-    wprev = Window.orderBy("dur_h").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    risk = by_h.crossJoin(F.broadcast(n_total)).select(
-        "dur_h",
-        "n_events",
-        (
-            F.col("n")
-            - F.coalesce(F.sum("n_leaving").over(wprev), F.lit(0))
-        ).alias("n_risk"),
-    )
+    Plan shape: the life table of `operators/events.py`, then
+    windows over its horizon-sized at-risk relation. At 100 TB only
+    the per-user aggs are row-scale."""
+    risk = at_risk(lifetimes(table(spark, sf_dir, "events")))
     terms = risk.filter(F.col("n_events") > 0).select(
         "dur_h",
         "n_risk",
@@ -1133,40 +974,8 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- restricted mean survival time ------------------------------------
 
 _RMST_ORACLE = f"""
-WITH u AS (
-  SELECT user_id, min(ts) AS t0 FROM events GROUP BY user_id
-),
-p AS (
-  SELECT user_id, min(ts) AS tp FROM events
-  WHERE event_type = 'purchase' GROUP BY user_id
-),
-life AS (
-  SELECT u.user_id,
-         CASE WHEN p.tp IS NOT NULL
-               AND floor(date_diff('microsecond', u.t0, p.tp)
-                         / 3600000000.0) < {_KM_HORIZON_H}
-              THEN CAST(floor(date_diff('microsecond', u.t0, p.tp)
-                              / 3600000000.0) AS BIGINT)
-              ELSE {_KM_HORIZON_H} END AS dur_h,
-         CASE WHEN p.tp IS NOT NULL
-               AND floor(date_diff('microsecond', u.t0, p.tp)
-                         / 3600000000.0) < {_KM_HORIZON_H}
-              THEN 0 ELSE 1 END AS censored
-  FROM u LEFT JOIN p ON p.user_id = u.user_id
-),
-n_total AS (SELECT count(*) AS n FROM life),
-by_h AS (
-  SELECT dur_h, count(*) AS n_leaving,
-         CAST(sum(1 - censored) AS BIGINT) AS n_events
-  FROM life GROUP BY dur_h
-),
-risk AS (
-  SELECT dur_h, n_events,
-         nt.n - coalesce(sum(n_leaving) OVER (ORDER BY dur_h
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                         0) AS n_risk
-  FROM by_h CROSS JOIN n_total nt
-),
+WITH {lifetimes_sql()},
+{at_risk_sql()},
 terms AS (
   SELECT dur_h, n_risk, n_events,
          CASE WHEN n_events < n_risk
@@ -1185,7 +994,7 @@ surv AS (  -- S just after each event time; round-6 into DECIMAL so the
 ),
 area AS (
   SELECT dur_h, n_risk, n_events, s_after,
-         lead(dur_h, 1, {_KM_HORIZON_H}) OVER (ORDER BY dur_h) AS next_t
+         lead(dur_h, 1, {HORIZON_H}) OVER (ORDER BY dur_h) AS next_t
   FROM surv
 ),
 first_seg AS (SELECT min(dur_h) AS t1 FROM area)
@@ -1212,39 +1021,9 @@ def rmst_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     (step width × step height, no float running sum); rmst_through_h
     is the running area including the all-alive first segment.
 
-    Plan shape: identical row-scale stages to `kaplan_meier_user_
-    lifetime`; the area is one more window over the horizon-sized
-    relation."""
-    from pyspark.sql import Window
-
-    ev = table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(F.min("ts").alias("t0"))
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("tp"))
-    )
-    hours = F.floor((F.unix_micros("tp") - F.unix_micros("t0")) / 3600000000.0)
-    converted = F.col("tp").isNotNull() & (hours < _KM_HORIZON_H)
-    life = u.join(p, "user_id", "left").select(
-        F.when(converted, hours.cast("bigint"))
-        .otherwise(F.lit(_KM_HORIZON_H))
-        .alias("dur_h"),
-        F.when(converted, 0).otherwise(1).alias("censored"),
-    )
-    n_total = life.agg(F.count(F.lit(1)).alias("n"))
-    by_h = life.groupBy("dur_h").agg(
-        F.count(F.lit(1)).alias("n_leaving"),
-        F.sum(1 - F.col("censored")).cast("bigint").alias("n_events"),
-    )
-    wprev = Window.orderBy("dur_h").rowsBetween(Window.unboundedPreceding, -1)
-    risk = by_h.crossJoin(F.broadcast(n_total)).select(
-        "dur_h",
-        "n_events",
-        (
-            F.col("n") - F.coalesce(F.sum("n_leaving").over(wprev), F.lit(0))
-        ).alias("n_risk"),
-    )
+    Plan shape: the life table of `operators/events.py`; the area is
+    one more window over the horizon-sized relation."""
+    risk = at_risk(lifetimes(table(spark, sf_dir, "events")))
     terms = risk.filter(F.col("n_events") > 0).select(
         "dur_h",
         "n_risk",
@@ -1277,7 +1056,7 @@ def rmst_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_risk",
         "n_events",
         "s_after",
-        F.lead("dur_h", 1, _KM_HORIZON_H).over(wlead).alias("next_t"),
+        F.lead("dur_h", 1, HORIZON_H).over(wlead).alias("next_t"),
     )
     first_seg = area.agg(F.min("dur_h").alias("t1"))
     return (
@@ -1305,34 +1084,16 @@ def rmst_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LR_U_SQL = uniform_sql("'lr_' || CAST(user_id AS VARCHAR)")
 
 _LOGRANK_ORACLE = f"""
-WITH u AS (
-  SELECT user_id, min(ts) AS t0,
-         CASE WHEN {_LR_U_SQL} < 0.5 THEN 1 ELSE 0 END AS grp
-  FROM events GROUP BY user_id
+WITH {lifetimes_sql()},
+cohorts AS (
+  SELECT CASE WHEN {_LR_U_SQL} < 0.5 THEN 1 ELSE 0 END AS grp, dur_h, censored
+  FROM life
 ),
-p AS (
-  SELECT user_id, min(ts) AS tp FROM events
-  WHERE event_type = 'purchase' GROUP BY user_id
-),
-life AS (
-  SELECT u.grp,
-         CASE WHEN p.tp IS NOT NULL
-               AND floor(date_diff('microsecond', u.t0, p.tp)
-                         / 3600000000.0) < {_KM_HORIZON_H}
-              THEN CAST(floor(date_diff('microsecond', u.t0, p.tp)
-                              / 3600000000.0) AS BIGINT)
-              ELSE {_KM_HORIZON_H} END AS dur_h,
-         CASE WHEN p.tp IS NOT NULL
-               AND floor(date_diff('microsecond', u.t0, p.tp)
-                         / 3600000000.0) < {_KM_HORIZON_H}
-              THEN 0 ELSE 1 END AS censored
-  FROM u LEFT JOIN p ON p.user_id = u.user_id
-),
-gt AS (SELECT grp, count(*) AS n_g FROM life GROUP BY grp),
+gt AS (SELECT grp, count(*) AS n_g FROM cohorts GROUP BY grp),
 by_tg AS (
   SELECT dur_h, grp, count(*) AS leaving,
          CAST(sum(1 - censored) AS BIGINT) AS d
-  FROM life GROUP BY dur_h, grp
+  FROM cohorts GROUP BY dur_h, grp
 ),
 grid AS (  -- every (event time x group), zero-filled
   SELECT t.dur_h, g.grp,
@@ -1390,31 +1151,13 @@ def logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-time O-E and V terms round ONCE into DECIMAL(28,12) → exact
     cross-time sums; the chi2 is a fixed chain.
 
-    Plan shape: the same two per-user aggregates as KM, a zero-filled
-    (time x group) grid (horizon-bounded), per-group cumulative risk
-    windows, one 1-row reduce. At 100 TB only the per-user aggs are
-    row-scale."""
-    from pyspark.sql import Window
-
-    ev = table(spark, sf_dir, "events")
+    Plan shape: the per-user lifetimes of `operators/events.py` with
+    the cohort draw on top, a zero-filled (time x group) grid
+    (horizon-bounded), per-group cumulative risk windows, one 1-row
+    reduce. At 100 TB only the per-user aggs are row-scale."""
     draw = uniform(F.concat(F.lit("lr_"), F.col("user_id").cast("string")))
-    u = ev.groupBy("user_id").agg(F.min("ts").alias("t0")).select(
-        "user_id", "t0",
-        F.when(draw < 0.5, 1).otherwise(0).alias("grp"),
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("tp"))
-    )
-    hours = F.floor((F.unix_micros("tp") - F.unix_micros("t0")) / 3600000000.0)
-    converted = F.col("tp").isNotNull() & (hours < _KM_HORIZON_H)
-    life = u.join(p, "user_id", "left").select(
-        "grp",
-        F.when(converted, hours.cast("bigint"))
-        .otherwise(F.lit(_KM_HORIZON_H))
-        .alias("dur_h"),
-        F.when(converted, 0).otherwise(1).alias("censored"),
+    life = lifetimes(table(spark, sf_dir, "events")).select(
+        F.when(draw < 0.5, 1).otherwise(0).alias("grp"), "dur_h", "censored"
     )
     gt = life.groupBy("grp").agg(F.count(F.lit(1)).alias("n_g")).localCheckpoint()
     by_tg = life.groupBy("dur_h", "grp").agg(

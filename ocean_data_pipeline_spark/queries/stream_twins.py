@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.events import sessions_sql
 from ocean_data_pipeline_spark.queries import register
 from ocean_data_pipeline_spark.streaming.windows import (
     session_counts,
@@ -63,35 +64,24 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_counts(ev).orderBy("window_start")
 
 
-_SESSION_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, ts,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-assigned AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS seq
-  FROM flagged
-)
+_SESSION_ORACLE = f"""
+WITH {sessions_sql()}
 SELECT user_id,
        CAST(floor(epoch(min(ts))) AS BIGINT) AS session_start_s,
        count(*) AS n_events
-FROM assigned
-GROUP BY user_id, seq
+FROM sessions
+GROUP BY user_id, session_seq
 ORDER BY user_id, session_start_s
 """
 
 
 @register("stream_session_counts", oracle=_SESSION_ORACLE)
 def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """session_window(gap=30 min) per user vs. the lag/cumsum oracle —
-    same merge semantics, session identity = epoch-second of first
-    event (precision-portable across ns/µs timestamp engines)."""
+    """session_window(gap=30 min) per user vs. the gap sessions of
+    `operators/events.py` as the oracle — same merge semantics (a gap
+    of exactly 30 min stays in one session), session identity =
+    epoch-second of first event (precision-portable across ns/µs
+    timestamp engines)."""
     ev = table(spark, sf_dir, "events")
     out = session_counts(ev)
     return out.select(

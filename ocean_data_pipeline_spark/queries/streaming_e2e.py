@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocean_data_pipeline_spark.operators.events import GAP_SQL, sessions_sql
 from ocean_data_pipeline_spark.queries import register
 
 
@@ -116,28 +117,14 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(sink).orderBy("user_id", "event_type")
 
 
-_SESSION_CACHE_ORACLE = """
-WITH seq AS (
-  SELECT user_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR ts >= lag(ts) OVER w + INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, ts,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS sid
-  FROM seq
-),
+_SESSION_CACHE_ORACLE = f"""
+WITH {sessions_sql()},
 agg AS (
-  SELECT user_id, sid,
+  SELECT user_id, session_seq,
          min(ts) AS s_start,
-         max(ts) + INTERVAL 30 MINUTE AS s_end,
+         max(ts) + {GAP_SQL} AS s_end,
          count(*) AS n
-  FROM sess GROUP BY user_id, sid
+  FROM sessions GROUP BY user_id, session_seq
 ),
 latest AS (
   SELECT * FROM (
@@ -161,12 +148,13 @@ def stream_file_session_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per user = their latest session (keep-latest upsert). The
     returned relation is deterministic for a static input directory;
     tests/test_streaming_e2e.py pins it against the batch twin, and the
-    DuckDB oracle above re-derives it from scratch — lag-gap
-    sessionization mirroring Spark's session_window semantics exactly
-    (a new session starts iff the gap is ≥ 30 min, the window end is
-    last-event + gap, exclusive), latest session per user, and the
-    same sha2 key / second-precision date formatting. Side-effectful
-    streaming with a FULL value oracle."""
+    DuckDB oracle above re-derives it from scratch — the gap sessions
+    of `operators/events.py`, which match Spark's session_window
+    exactly (a new session starts iff the gap exceeds 30 min, so a gap
+    of exactly 30 min stays in one session; the window end is
+    last-event + gap), latest session per user, and the same sha2 key
+    and second-precision date formatting. Side-effectful streaming
+    with a FULL value oracle."""
     from ocean_data_pipeline_spark.cache.result_cache import ResultCache
     from ocean_data_pipeline_spark.streaming.sink import stream_into_cache
     from ocean_data_pipeline_spark.streaming.windows import session_counts

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.events import sessions, sessions_sql
 from ocean_data_pipeline_spark.queries import register
 
 # --- top_orders: sort+limit → TakeOrderedAndProject (topk; reference
@@ -182,22 +183,8 @@ def running_total_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (batch sessionization; the streaming twin uses session_window in
 # streaming/. Gap threshold 30 min on the events stream). --------------
 
-_SESSION_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-sessions AS (
-  SELECT user_id, event_id,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_seq
-  FROM flagged
-)
+_SESSION_ORACLE = f"""
+WITH {sessions_sql()}
 SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq, count(*) AS n_events
 FROM sessions
 GROUP BY user_id, session_seq
@@ -207,23 +194,12 @@ ORDER BY user_id, session_seq
 
 @register("sessionize_events", oracle=_SESSION_ORACLE)
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization: two stacked windows on the same (user_id, ts)
-    sort — Catalyst plans ONE exchange + one sort, reused by both."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # Microsecond gap: a whole-second cast would fold a 30 min + 0.5 s
-    # gap into one session where the oracle's interval compare splits it.
-    gap = F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-    flagged = ev.withColumn(
-        "new_session",
-        F.when(gap.isNull() | (gap > 30 * 60 * 1_000_000), F.lit(1)).otherwise(F.lit(0)),
-    )
-    sessions = flagged.withColumn(
-        "session_seq",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    """Sessionization: the gap sessions of `operators/events.py` (two
+    stacked windows on the same (user_id, ts, event_id) sort — Catalyst
+    plans ONE exchange + one sort, reused by both), counted per session."""
     return (
-        sessions.groupBy("user_id", "session_seq")
+        sessions(table(spark, sf_dir, "events"))
+        .groupBy("user_id", "session_seq")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .orderBy("user_id", "session_seq")
     )
@@ -326,23 +302,8 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- interval sweep-line: concurrent-session profile ------------------
 
-_CONCURRENCY_ORACLE = """
-WITH flagged AS (
-  SELECT user_id, ts,
-         CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   > INTERVAL 30 MINUTE
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-),
-sessions AS (
-  SELECT user_id,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_seq,
-         ts
-  FROM flagged
-),
+_CONCURRENCY_ORACLE = f"""
+WITH {sessions_sql()},
 bounds AS (
   SELECT user_id, session_seq, min(ts) AS s, max(ts) AS e
   FROM sessions GROUP BY user_id, session_seq
@@ -371,8 +332,8 @@ ORDER BY day
 
 @register("session_concurrency_profile", oracle=_CONCURRENCY_ORACLE)
 def session_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-algebra sweep line: gap-sessionize each user (30-min
-    threshold, same contract as `sessionize_events`), reduce sessions
+    """Interval-algebra sweep line: gap-sessionize each user (the
+    30-min gap sessions of `operators/events.py`), reduce sessions
     to [start, end] intervals, then count concurrently-open sessions
     by running-summing +1/-1 boundary deltas in global (ts, start-
     before-end) order — inclusive overlap, O(n log n) where the naive
@@ -391,23 +352,13 @@ def session_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     double well past 2^53). No single-partition window at any scale;
     the boundary stream is already 2 rows/session, orders of magnitude
     smaller than events."""
-    ev = table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    sessions = (
-        ev.withColumn(
-            "new_session",
-            F.when(gap.isNull() | (gap > 30 * 60), F.lit(1)).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "session_seq",
-            F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
+    bounds = (
+        sessions(table(spark, sf_dir, "events"))
         .groupBy("user_id", "session_seq")
         .agg(F.min("ts").alias("s"), F.max("ts").alias("e"))
     )
-    deltas = sessions.select(F.col("s").alias("ts"), F.lit(1).alias("delta")).unionAll(
-        sessions.select(F.col("e").alias("ts"), F.lit(-1).alias("delta"))
+    deltas = bounds.select(F.col("s").alias("ts"), F.lit(1).alias("delta")).unionAll(
+        bounds.select(F.col("e").alias("ts"), F.lit(-1).alias("delta"))
     )
     from ocean_data_pipeline_spark.operators.ranks import with_running_aggs
 

@@ -3,8 +3,9 @@
 The engine forms and their DuckDB twins must agree bit for bit: the
 salted-SHA-256 draw on any key (NULL, negative, past 2^32, multi-part
 salts), and `vh` on a DECIMAL sum where DuckDB's direct cast is an ulp
-off. A source guard keeps the devices of `operators/` (these and the
-similarity device's cosine) from being re-derived elsewhere.
+off. A source guard keeps the devices of `operators/` (these, the
+similarity device's cosine, and the events device's session gap and
+life table) from being re-derived elsewhere.
 """
 
 from __future__ import annotations
@@ -164,7 +165,8 @@ def test_vd_matches_spark_where_duckdb_direct_cast_is_off(spark):
 #: scaling constant and the VARCHAR hops live in `portable.py`; the
 #: cosine quotient (the oracle's and the engine's inline norm) in
 #: `similarity.py`, whose `cosine`, `cosine_pre`, `norm` and SQL twins
-#: everything else calls.
+#: everything else calls; the 30-minute session gap and the hours to
+#: first purchase in `events.py`.
 _DEVICES = {
     "portable": (
         os.path.join("operators", "portable.py"),
@@ -173,6 +175,15 @@ _DEVICES = {
     "similarity": (
         os.path.join("operators", "similarity.py"),
         ("/ (sqrt(list_dot_product(", "F.sqrt(dot("),
+    ),
+    "events": (
+        os.path.join("operators", "events.py"),
+        (
+            "INTERVAL 30 MINUTE",
+            "30 * 60",
+            "date_diff('microsecond', u.t0, p.tp)",
+            'unix_micros("tp")',
+        ),
     ),
 }
 

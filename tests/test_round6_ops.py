@@ -579,7 +579,7 @@ def test_kaplan_meier_matches_python_reference(spark):
     from collections import defaultdict
 
     from ocean_data_pipeline_spark.catalog import table
-    from ocean_data_pipeline_spark.queries.event_analytics import _KM_HORIZON_H
+    from ocean_data_pipeline_spark.operators.events import HORIZON_H
 
     ev = (
         table(spark, SF_SMOKE, "events")
@@ -595,10 +595,10 @@ def test_kaplan_meier_matches_python_reference(spark):
     for uid, start in t0.items():
         if uid in tp:
             h = int((tp[uid] - start).total_seconds() * 1e6 // 3_600_000_000)
-            if h < _KM_HORIZON_H:
+            if h < HORIZON_H:
                 life.append((h, 0))
                 continue
-        life.append((_KM_HORIZON_H, 1))
+        life.append((HORIZON_H, 1))
     by = defaultdict(lambda: [0, 0])  # h -> [leaving, deaths]
     for h, c in life:
         by[h][0] += 1
