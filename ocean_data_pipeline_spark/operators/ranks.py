@@ -30,11 +30,28 @@ data and the bucket merely names which task computes it. Ties on the
 (double-cast) leading column always share a bucket, so a tie block can
 never straddle a boundary.
 
-Sibling device: for statistics that only need ranks of VALUES (not
-rows), aggregate to the value census first and midrank by cumulative
-counts — see `mannwhitney_u_event_values` / `ks_test_price_by_year` in
-queries/audits.py. Use THIS module when per-row ranks are the contract
-(ntile features, Gini's Σi·x_(i), equi-depth bins over levels).
+Value-census order statistics: statistics that need only the ranks of
+VALUES (quantiles, medians, midranks), not of rows, collapse the input
+to a census ``(keys…, v, c)`` first — one row per distinct value ``v``
+of a group, ``c`` its count (or weight) — and select on it:
+
+- `cumulative` adds ``cn``, the running sum of ``c`` in ``v`` order
+  within the group, and ``n``, the group total. It runs as one
+  per-group window pair (global when there are no keys), or, given a
+  ``bucket_width``, on `with_running_aggs` for near-unique values;
+- `kth(v, pos)` is ``min(v | cn >= pos)``, the order statistic at a
+  1-based position;
+- `quantile(v, num, den)` is ``min(v | den·cn >= num·n)``, the exact
+  lower (type-1) quantile at p = num/den, with no division;
+- `midrank2(v, c)` is the doubled midrank of the tie block at ``v``,
+  ``2·cum_before + c + 1``: a pure integer, halved once by the caller.
+
+Each has a DuckDB twin (`cumulative_sql`, `kth_sql`, `quantile_sql`,
+`midrank2_sql`) that the oracles use. The census values are distinct
+within a group, so the running sums' ROWS frame equals the default
+RANGE frame. Use the range-bucketed rank above when per-row ranks are
+the contract (ntile features, Gini's Σi·x_(i), equi-depth bins over
+levels).
 """
 
 from __future__ import annotations
@@ -244,3 +261,81 @@ def percent_rank_from_rank(rank: Column, n: Column) -> Column:
 def cume_dist_from_rank(rank: Column, n: Column) -> Column:
     """cume_dist = rank/n for a TOTAL order."""
     return rank.cast("double") / n.cast("double")
+
+
+def cumulative(
+    census: DataFrame, v: str, c: str, *keys: str, bucket_width: float | None = None
+) -> DataFrame:
+    """The census ``(keys…, v, c)`` plus ``cn`` (running sum of `c` in
+    `v` order within the keys) and ``n`` (the group total).
+
+    Without `bucket_width` both come from one per-group window pair,
+    fine while a group's census is value-domain sized. With it, ``cn``
+    rides `with_running_aggs`' fixed-width coarsening and ``n`` is a
+    broadcast per-group total (DECIMAL sums come back wider, as there)."""
+    if bucket_width is None:
+        w = Window.partitionBy(*keys)
+        run = w.orderBy(v).rowsBetween(Window.unboundedPreceding, 0)
+        return census.select(
+            "*", F.sum(c).over(run).alias("cn"), F.sum(c).over(w).alias("n")
+        )
+    tot = census.groupBy(*keys).agg(F.sum(c).alias("n"))
+    run = with_running_aggs(
+        census, [v], v, {"cn": (c, "sum", True)},
+        partition_by=keys, bucket_width=bucket_width,
+    )
+    if keys:
+        return run.join(F.broadcast(tot), list(keys))
+    return run.crossJoin(F.broadcast(tot))
+
+
+def cumulative_sql(rel: str, v: str, c: str, *keys: str) -> str:
+    """The oracle twin of `cumulative`: a SELECT over `rel` for a
+    ``WITH cum AS (...)``."""
+    part = f"PARTITION BY {', '.join(keys)} " if keys else ""
+    return f"""
+  SELECT *,
+         sum({c}) OVER ({part}ORDER BY {v}
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cn,
+         sum({c}) OVER ({part.rstrip()}) AS n
+  FROM {rel}
+"""
+
+
+def kth(v: str, pos: Column) -> Column:
+    """Aggregate over a `cumulative` census: the smallest `v` whose
+    running count reaches the 1-based position `pos` (NULL past n)."""
+    return F.min(F.when(F.col("cn") >= pos, F.col(v)))
+
+
+def kth_sql(v: str, pos: str) -> str:
+    """The oracle twin of `kth`."""
+    return f"min(CASE WHEN cn >= {pos} THEN {v} END)"
+
+
+def quantile(v: str, num: int, den: int) -> Column:
+    """Aggregate over a `cumulative` census: the exact lower quantile
+    at p = num/den, the smallest `v` with cn >= p·n, cross-multiplied
+    so no division happens (the ⌈p·n⌉-th smallest for n > 0)."""
+    return F.min(F.when(den * F.col("cn") >= num * F.col("n"), F.col(v)))
+
+
+def quantile_sql(v: str, num: int, den: int) -> str:
+    """The oracle twin of `quantile`."""
+    return f"min(CASE WHEN {den} * cn >= {num} * n THEN {v} END)"
+
+
+def midrank2(v: str, c: str) -> Column:
+    """Over a global census ``(v, c)``: the doubled midrank of the tie
+    block at `v`, ``2·cum_before + c + 1`` (its rows hold ranks
+    cum_before+1 … cum_before+c)."""
+    before = Window.orderBy(v).rowsBetween(Window.unboundedPreceding, -1)
+    return 2 * F.coalesce(F.sum(c).over(before), F.lit(0)) + F.col(c) + 1
+
+
+def midrank2_sql(v: str, c: str) -> str:
+    """The oracle twin of `midrank2`."""
+    return (
+        f"2 * coalesce(sum({c}) OVER (ORDER BY {v} ROWS BETWEEN UNBOUNDED"
+        f" PRECEDING AND 1 PRECEDING), 0) + {c} + 1"
+    )

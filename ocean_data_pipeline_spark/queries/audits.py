@@ -22,6 +22,7 @@ from ocean_data_pipeline_spark.operators.irls import (
     null_fit,
 )
 from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql, vd, vh
+from ocean_data_pipeline_spark.operators.ranks import midrank2, midrank2_sql
 from ocean_data_pipeline_spark.queries import register
 
 # --- constraint-violation census (expectation suite) ------------------
@@ -542,7 +543,8 @@ def mannwhitney_u_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism AND scale: a rank statistic is integer arithmetic in
     disguise — the tied block at value v has midrank cum_before(v) +
     (c(v)+1)/2, so the whole test needs only the VALUE CENSUS, never a
-    per-row rank. The doubled midrank 2·cum + c + 1 is a pure integer,
+    per-row rank. The doubled midrank 2·cum_before + c + 1 (`midrank2`
+    of operators/ranks.py) is a pure integer,
     rank sums accumulate in DECIMAL(38,0), and one halving at the end
     reproduces the exact .5 midranks — bitwise identical on both
     engines and partitioning-invariant by construction.
@@ -565,21 +567,11 @@ def mannwhitney_u_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == _MWU_A, 1).otherwise(0).alias("in_a"),
         )
     )
-    from pyspark.sql import Window
-
     lvl = s.groupBy("v").agg(
         F.sum("in_a").alias("a_here"),
         F.count(F.lit(1)).alias("c"),
     )
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    mid2 = lvl.select(
-        "a_here",
-        "c",
-        # doubled midrank of the tie block at v: 2*(cum_before + (c+1)/2)
-        (
-            2 * F.coalesce(F.sum("c").over(w), F.lit(0)) + F.col("c") + 1
-        ).alias("mid2"),
-    )
+    mid2 = lvl.select("a_here", "c", midrank2("v", "c").alias("mid2"))
     agg = mid2.agg(
         F.sum("a_here").cast("bigint").alias("n_a"),
         (F.sum("c") - F.sum("a_here")).cast("bigint").alias("n_b"),
@@ -1064,10 +1056,10 @@ md AS (
   SELECT d, sum(cnt) AS cd FROM cells GROUP BY d
 ),
 rq AS (  -- doubled midrank: 2R = 2*(count below) + count equal + 1
-  SELECT q, 2 * (sum(cq) OVER (ORDER BY q) - cq) + cq + 1 AS dq FROM mq
+  SELECT q, {midrank2_sql("q", "cq")} AS dq FROM mq
 ),
 rd AS (
-  SELECT d, 2 * (sum(cd) OVER (ORDER BY d) - cd) + cd + 1 AS dd FROM md
+  SELECT d, {midrank2_sql("d", "cd")} AS dd FROM md
 ),
 s AS (
   SELECT sum(c.cnt) AS n,
@@ -1095,7 +1087,8 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the monotone-dependence screen that, unlike Pearson, is invariant
     to the marginal distributions. Midranks (average rank over ties)
     are carried DOUBLED so they stay integers: 2R = 2·count_below +
-    count_equal + 1; rho is then Pearson on the doubled ranks (the 2s
+    count_equal + 1 (`midrank2` of operators/ranks.py on each margin);
+    rho is then Pearson on the doubled ranks (the 2s
     cancel), with every sum an exact DECIMAL over the JOINT level
     census — rank statistics are integer arithmetic in disguise, the
     `mannwhitney_u_event_values` discipline extended to two variables.
@@ -1117,14 +1110,8 @@ def spearman_rank_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mq = cells.groupBy("q").agg(F.sum("cnt").alias("cq"))
     md = cells.groupBy("d").agg(F.sum("cnt").alias("cd"))
-    wq = Window.orderBy("q").rowsBetween(Window.unboundedPreceding, 0)
-    wd = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
-    rq = mq.select(
-        "q", (2 * (F.sum("cq").over(wq) - F.col("cq")) + F.col("cq") + 1).alias("dq")
-    )
-    rd = md.select(
-        "d", (2 * (F.sum("cd").over(wd) - F.col("cd")) + F.col("cd") + 1).alias("dd")
-    )
+    rq = mq.select("q", midrank2("q", "cq").alias("dq"))
+    rd = md.select("d", midrank2("d", "cd").alias("dd"))
     dec = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
     s = (
         cells.join(F.broadcast(rq), "q")
@@ -1851,7 +1838,8 @@ def kruskal_wallis_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism AND scale: midranks come from the VALUE CENSUS, never
     per-row ranks — the tie block at value v has doubled midrank
-    2·cum_before(v) + t(v) + 1, a pure integer, so per-group rank sums
+    2·cum_before(v) + t(v) + 1 (`midrank2` of operators/ranks.py), a
+    pure integer, so per-group rank sums
     accumulate exactly in DECIMAL(38,0) and halve once at the end (the
     rewritten `mannwhitney_u_event_values` discipline). Each group's
     R_j²/n_j rounds ONCE into DECIMAL(38,6) before the cross-group sum;
@@ -1868,15 +1856,7 @@ def kruskal_wallis_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", F.col("value").cast("decimal(18,6)").alias("v"))
     )
     vt = s.groupBy("v").agg(F.count(F.lit(1)).alias("t"))
-    w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    mid2 = vt.select(
-        "v",
-        "t",
-        # doubled midrank of the tie block at v: 2*(cum_before + (t+1)/2)
-        (2 * F.coalesce(F.sum("t").over(w), F.lit(0)) + F.col("t") + 1).alias(
-            "mid2"
-        ),
-    )
+    mid2 = vt.select("v", "t", midrank2("v", "t").alias("mid2"))
     lvl = s.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("c_jv"))
     grp = (
         lvl.join(mid2.select("v", "mid2"), "v")

@@ -16,6 +16,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
+from ocean_data_pipeline_spark.operators.ranks import (
+    cumulative,
+    cumulative_sql,
+    quantile,
+    quantile_sql,
+)
 from ocean_data_pipeline_spark.queries import register
 
 #: Target rows per compacted output file (literal so both engines and
@@ -353,27 +359,21 @@ def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- skew salting advisor ---------------------------------------------
 
-_SALT_ORACLE = """
+_SALT_ORACLE = f"""
 WITH freq AS (
   SELECT l_partkey AS k, count(*) AS f FROM lineitem GROUP BY 1
 ),
 ff AS (  -- frequency-of-frequencies: how many keys have each count
   SELECT f, count(*) AS nk FROM freq GROUP BY f
 ),
-cum AS (
-  SELECT f, nk,
-         sum(nk) OVER (ORDER BY f) AS ck,
-         sum(nk) OVER () AS ndv,
-         sum(f * nk) OVER () AS n
-  FROM ff
-),
+cum AS ({cumulative_sql("ff", "f", "nk")}),
 s AS (
-  SELECT max(ndv) AS ndv, max(n) AS n,
+  SELECT max(n) AS ndv, sum(f * nk) AS n_all,
          max(f) AS max_f,
-         min(CASE WHEN 20 * ck >= 19 * ndv THEN f END) AS p95_f
+         {quantile_sql("f", 19, 20)} AS p95_f
   FROM cum
 )
-SELECT CAST(n AS BIGINT) AS n_rows,
+SELECT CAST(n_all AS BIGINT) AS n_rows,
        CAST(ndv AS BIGINT) AS n_keys,
        CAST(max_f AS BIGINT) AS max_key_freq,
        CAST(p95_f AS BIGINT) AS p95_key_freq,
@@ -388,9 +388,10 @@ def skew_salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-frequency census, the max and exact p95 key frequencies and the
     recommended salting factor ceil(max/p95) — the number of salt
     buckets that levels the hottest key down to typical-key load, i.e.
-    the parameter `salted_join_segments` consumes. The p95 is selected
-    on the frequency-of-frequencies relation with a cross-multiplied
-    integer comparison, and the ceil is integer arithmetic
+    the parameter `salted_join_segments` consumes. The p95 is the
+    value-census `quantile` of operators/ranks.py on the
+    frequency-of-frequencies relation (a cross-multiplied integer
+    comparison), and the ceil is integer arithmetic
     ((max + p95 - 1) // p95) — no doubles anywhere.
 
     Plan shape: one shuffle to the key census, one tiny rollup to the
@@ -403,24 +404,14 @@ def skew_salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("f"))
     )
     ff = freq.groupBy("f").agg(F.count(F.lit(1)).alias("nk"))
-    wo = Window.orderBy("f").rowsBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy()
-    cum = ff.select(
-        "f", "nk",
-        F.sum("nk").over(wo).alias("ck"),
-        F.sum("nk").over(wt).alias("ndv"),
-        F.sum(F.col("f") * F.col("nk")).over(wt).alias("n"),
-    )
-    s = cum.agg(
-        F.max("ndv").alias("ndv"),
-        F.max("n").alias("n"),
+    s = cumulative(ff, "f", "nk").agg(
+        F.max("n").alias("ndv"),
+        F.sum(F.col("f") * F.col("nk")).alias("n_all"),
         F.max("f").alias("max_f"),
-        F.min(
-            F.when(20 * F.col("ck") >= 19 * F.col("ndv"), F.col("f"))
-        ).alias("p95_f"),
+        quantile("f", 19, 20).alias("p95_f"),
     )
     return s.select(
-        F.col("n").cast("bigint").alias("n_rows"),
+        F.col("n_all").cast("bigint").alias("n_rows"),
         F.col("ndv").cast("bigint").alias("n_keys"),
         F.col("max_f").cast("bigint").alias("max_key_freq"),
         F.col("p95_f").cast("bigint").alias("p95_key_freq"),

@@ -15,11 +15,17 @@ computing them on cents instead of dollars changes nothing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
 from ocean_data_pipeline_spark.operators.portable import vh
+from ocean_data_pipeline_spark.operators.ranks import (
+    cumulative,
+    cumulative_sql,
+    quantile,
+    quantile_sql,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- exact skewness / kurtosis ----------------------------------------
@@ -126,24 +132,19 @@ def skew_kurtosis_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- exact weighted quantiles -----------------------------------------
 
-_WMED_ORACLE = """
+_WMED_ORACLE = f"""
 WITH lv AS (  -- one row per (flag, price level): summed quantity weight
   SELECT l_returnflag,
          CAST(round(l_extendedprice * 100) AS BIGINT) AS pc,
          CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS w
   FROM lineitem GROUP BY 1, 2
 ),
-cum AS (
-  SELECT l_returnflag, pc, w,
-         sum(w) OVER (PARTITION BY l_returnflag ORDER BY pc) AS cw,
-         sum(w) OVER (PARTITION BY l_returnflag) AS tw
-  FROM lv
-)
+cum AS ({cumulative_sql("lv", "pc", "w", "l_returnflag")})
 SELECT l_returnflag,
-       CAST(max(tw) AS BIGINT) AS total_weight,
-       min(CASE WHEN 4 * cw >= tw     THEN pc END) / 100.0 AS wq25,
-       min(CASE WHEN 2 * cw >= tw     THEN pc END) / 100.0 AS wmedian,
-       min(CASE WHEN 4 * cw >= 3 * tw THEN pc END) / 100.0 AS wq75
+       CAST(max(n) AS BIGINT) AS total_weight,
+       {quantile_sql("pc", 1, 4)} / 100.0 AS wq25,
+       {quantile_sql("pc", 1, 2)} / 100.0 AS wmedian,
+       {quantile_sql("pc", 3, 4)} / 100.0 AS wq75
 FROM cum
 GROUP BY l_returnflag
 ORDER BY l_returnflag
@@ -155,24 +156,21 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact quantity-weighted price quartiles per return flag: the
     weighted q-quantile is the smallest price level whose cumulative
     weight reaches q of the total — selection entirely in integer
-    arithmetic (cents-integer levels, integer weights, the comparison
-    written cross-multiplied as q_den*cw >= q_num*tw so no division
-    ever happens before the final display scaling).
+    arithmetic (cents-integer levels, integer weights: the value-census
+    `quantile` of operators/ranks.py with the weight as the count, so
+    no division ever happens before the final display scaling).
 
     Plan shape: the fact table collapses to DISTINCT price levels per
     group first (one map-side-combining shuffle — levels are value-
-    domain-bounded, far smaller than rows), then the cumulative weight
-    rides the FIXED-WIDTH coarsening mode of the distributed
-    running-sum device (operators/ranks.py bucket_width: bucket =
-    floor(cents / $1000) — a pure expression, so the whole query is
-    ONE lazy plan with no approxQuantile pass or checkpoint; the
-    offset census is bounded by price-domain/$1000 ≈ a few hundred
+    domain-bounded, far smaller than rows), then `cumulative` takes the
+    FIXED-WIDTH coarsening route of the distributed running-sum device
+    (bucket = floor(cents / $1000) — a pure expression, so the whole
+    query is ONE lazy plan with no approxQuantile pass or checkpoint;
+    the offset census is bounded by price-domain/$1000 ≈ a few hundred
     rows; near-unique cents levels would otherwise sort in ONE task).
     At 100 TB the level relation is what makes the exact answer
     tractable; if even levels blow up, this degrades gracefully to the
     same algebra over histogram bins."""
-    from ocean_data_pipeline_spark.operators.ranks import with_running_aggs
-
     lv = (
         table(spark, sf_dir, "lineitem")
         .select(
@@ -183,30 +181,15 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag", "pc")
         .agg(F.sum("q").alias("w"))
     )
-    tot = lv.groupBy("l_returnflag").agg(F.sum("w").alias("tw"))
-    cum = (
-        with_running_aggs(
-            lv,
-            ["pc"],
-            "pc",
-            {"cw": ("w", "sum", True)},
-            partition_by=["l_returnflag"],
-            bucket_width=100_000.0,  # $1000 in cents
-        )
-        .join(F.broadcast(tot), "l_returnflag")
-        .select("l_returnflag", "pc", "cw", "tw")
-    )
-    def pick(num: int, den: int):
-        return F.min(
-            F.when(den * F.col("cw") >= num * F.col("tw"), F.col("pc"))
-        ) / 100.0
+    # $1000 buckets in cents
+    cum = cumulative(lv, "pc", "w", "l_returnflag", bucket_width=100_000.0)
     return (
         cum.groupBy("l_returnflag")
         .agg(
-            F.max("tw").cast("bigint").alias("total_weight"),
-            pick(1, 4).alias("wq25"),
-            pick(1, 2).alias("wmedian"),
-            pick(3, 4).alias("wq75"),
+            F.max("n").cast("bigint").alias("total_weight"),
+            (quantile("pc", 1, 4) / 100.0).alias("wq25"),
+            (quantile("pc", 1, 2) / 100.0).alias("wmedian"),
+            (quantile("pc", 3, 4) / 100.0).alias("wq75"),
         )
         .orderBy("l_returnflag")
     )
@@ -221,12 +204,7 @@ WITH lv AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS pc, count(*) AS cnt
   FROM orders GROUP BY 1
 ),
-cum AS (
-  SELECT pc, cnt,
-         sum(cnt) OVER (ORDER BY pc) AS cn,
-         sum(cnt) OVER () AS n
-  FROM lv
-),
+cum AS ({cumulative_sql("lv", "pc", "cnt")}),
 tagged AS (  -- bin of a level = which decile its LAST row lands in
   SELECT pc, cnt, cn, n,
          least({_EQD_BINS} - 1,
@@ -257,14 +235,12 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     CBO uses for selectivity).
 
     Plan shape: one map-side-combining shuffle to the value-level
-    census, then the cumulative count rides the distributed
-    running-sum device (operators/ranks.py — boundary-bucketed K-way
-    windows + broadcast prefix offsets; near-unique cents levels would
-    otherwise sort in ONE task, VERDICT r06 item 5) over the
-    localCheckpointed level census, one tiny rollup. At 100 TB: exact
+    census, then `cumulative` of operators/ranks.py takes the
+    distributed running-sum route (boundary-bucketed K-way windows +
+    broadcast prefix offsets; near-unique cents levels would otherwise
+    sort in ONE task, VERDICT r06 item 5) over the localCheckpointed
+    level census, one tiny rollup. At 100 TB: exact
     histograms from a single pass plus level-sized post-processing."""
-    from ocean_data_pipeline_spark.operators.ranks import with_running_aggs
-
     lv = (
         table(spark, sf_dir, "orders")
         .select(F.round(F.col("o_totalprice") * 100).cast("bigint").alias("pc"))
@@ -272,17 +248,9 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()
     )
-    n_all = lv.agg(F.sum("cnt").alias("n"))
-    cum = (
-        # fixed-width coarsening ($1000 cents buckets): bounded value
-        # domain, fully lazy — no approxQuantile job (see ranks.py).
-        with_running_aggs(
-            lv, ["pc"], "pc", {"cn": ("cnt", "sum", True)},
-            bucket_width=100_000.0,
-        )
-        .crossJoin(F.broadcast(n_all))
-        .select("pc", "cnt", "cn", "n")
-    )
+    # fixed-width coarsening ($1000 cents buckets): bounded value
+    # domain, fully lazy — no approxQuantile job (see ranks.py).
+    cum = cumulative(lv, "pc", "cnt", bucket_width=100_000.0)
     bin_ = F.least(
         F.lit(_EQD_BINS - 1),
         F.expr(f"({_EQD_BINS} * (cn - 1)) div n"),

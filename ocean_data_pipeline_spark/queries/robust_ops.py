@@ -17,23 +17,19 @@ from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import table
 from ocean_data_pipeline_spark.operators.portable import uniform, uniform_sql, vh
+from ocean_data_pipeline_spark.operators.ranks import cumulative, cumulative_sql, kth, kth_sql
 from ocean_data_pipeline_spark.queries import register
 
 # --- exact trimmed / winsorized means ---------------------------------
 
-_TRIM_ORACLE = """
+_TRIM_ORACLE = f"""
 WITH lv AS (
   SELECT l_returnflag AS flag,
          CAST(round(l_extendedprice * 100) AS BIGINT) AS pc,
          count(*) AS cnt
   FROM lineitem GROUP BY 1, 2
 ),
-cum AS (
-  SELECT flag, pc, cnt,
-         sum(cnt) OVER (PARTITION BY flag ORDER BY pc) AS cn,
-         sum(cnt) OVER (PARTITION BY flag) AS n
-  FROM lv
-),
+cum AS ({cumulative_sql("lv", "pc", "cnt", "flag")}),
 k AS (SELECT flag, pc, cnt, cn, n, n // 20 AS k FROM cum),
 kept AS (
   SELECT flag, n, k,
@@ -44,8 +40,8 @@ kept AS (
 ),
 vals AS (
   SELECT flag,
-         min(CASE WHEN cn >= k + 1 THEN pc END) AS lo_val,
-         min(CASE WHEN cn >= n - k THEN pc END) AS hi_val
+         {kth_sql("pc", "k + 1")} AS lo_val,
+         {kth_sql("pc", "n - k")} AS hi_val
   FROM k GROUP BY flag
 ),
 sums AS (
@@ -75,8 +71,9 @@ def winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative positions [cn-cnt+1, cn], so the trimmed contribution is
     the integer overlap with the kept window [k+1, n-k] — no per-row
     sort, no approximation. Winsorization adds k copies of the order
-    statistics at positions k+1 and n-k, each selected as
-    min(level | cn >= position) in pure integer algebra.
+    statistics at positions k+1 and n-k, each the value-census `kth`
+    of operators/ranks.py, min(level | cn >= position), in pure integer
+    algebra.
 
     Plan shape: one map-side-combining shuffle to the level relation,
     one window pass over levels (value-domain-bounded), a 4-row join.
@@ -92,13 +89,11 @@ def winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("flag", "pc")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    wo = Window.partitionBy("flag").orderBy("pc")
-    wt = Window.partitionBy("flag")
-    cum = lv.select(
-        "flag", "pc", "cnt",
-        F.sum("cnt").over(wo).alias("cn"),
-        F.sum("cnt").over(wt).alias("n"),
-    ).withColumn("k", F.expr("n div 20")).localCheckpoint()  # 2 consumers
+    cum = (
+        cumulative(lv, "pc", "cnt", "flag")
+        .withColumn("k", F.expr("n div 20"))
+        .localCheckpoint()  # 2 consumers
+    )
     kc = F.greatest(
         F.lit(0),
         F.least(F.col("cn"), F.col("n") - F.col("k"))
@@ -111,10 +106,8 @@ def winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(kc.cast("decimal(19,0)") * F.col("pc").cast("decimal(19,0)")).alias("trimmed_sum"),
     )
     vals = cum.groupBy("flag").agg(
-        F.min(F.when(F.col("cn") >= F.col("k") + 1, F.col("pc"))).alias("lo_val"),
-        F.min(F.when(F.col("cn") >= F.col("n") - F.col("k"), F.col("pc"))).alias(
-            "hi_val"
-        ),
+        kth("pc", F.col("k") + 1).alias("lo_val"),
+        kth("pc", F.col("n") - F.col("k")).alias("hi_val"),
     )
     kd = F.col("k").cast("decimal(19,0)")
     return (
@@ -167,16 +160,10 @@ resid AS (
 lv AS (
   SELECT priority, rc, count(*) AS cnt FROM resid GROUP BY 1, 2
 ),
-cum AS (
-  SELECT priority, rc, cnt,
-         sum(cnt) OVER (PARTITION BY priority ORDER BY rc) AS cn,
-         sum(cnt) OVER (PARTITION BY priority) AS n
-  FROM lv
-),
+cum AS ({cumulative_sql("lv", "rc", "cnt", "priority")}),
 q AS (  -- split conformal: the ceil((n+1)*0.9)-th smallest residual
   SELECT priority, max(n) AS n_cal,
-         min(CASE WHEN cn >= least(n, CAST(ceil((n + 1) * 0.9) AS BIGINT))
-                  THEN rc END) AS q90_c
+         {kth_sql("rc", "least(n, CAST(ceil((n + 1) * 0.9) AS BIGINT))")} AS q90_c
   FROM cum GROUP BY priority
 )
 SELECT q.priority,
@@ -197,7 +184,7 @@ def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     integer cent), the calibration fold's absolute residuals yield the
     distribution-free 90% radius — the ceil((n+1)·0.9)-th smallest
     residual, selected EXACTLY on an integer residual-level relation
-    (same selection algebra as `weighted_median_price`), giving the
+    (the value-census `kth` of operators/ranks.py), giving the
     finite-sample coverage guarantee P(|y - pred| <= radius) >= 0.9.
 
     Determinism: residuals are integer cents (prediction rounded once
@@ -232,19 +219,14 @@ def conformal_interval_calibration(spark: SparkSession, sf_dir: str) -> DataFram
         .select("priority", F.abs(F.col("yc") - F.col("pred_c")).alias("rc"))
     )
     lv = resid.groupBy("priority", "rc").agg(F.count(F.lit(1)).alias("cnt"))
-    wo = Window.partitionBy("priority").orderBy("rc")
-    wt = Window.partitionBy("priority")
-    cum = lv.select(
-        "priority", "rc", "cnt",
-        F.sum("cnt").over(wo).alias("cn"),
-        F.sum("cnt").over(wt).alias("n"),
-    )
-    kth = F.least(
-        F.col("n"), F.ceil((F.col("n") + 1) * 0.9).cast("bigint")
-    )
-    q = cum.groupBy("priority").agg(
-        F.max("n").cast("bigint").alias("n_cal"),
-        F.min(F.when(F.col("cn") >= kth, F.col("rc"))).alias("q90_c"),
+    pos = F.least(F.col("n"), F.ceil((F.col("n") + 1) * 0.9).cast("bigint"))
+    q = (
+        cumulative(lv, "rc", "cnt", "priority")
+        .groupBy("priority")
+        .agg(
+            F.max("n").cast("bigint").alias("n_cal"),
+            kth("rc", pos).alias("q90_c"),
+        )
     )
     return (
         q.join(pred, "priority")

@@ -381,18 +381,50 @@ def abc_pareto_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- population stability index (PSI) ----------------------------------
+# --- exact-decile bins (PSI, WOE/IV) -------------------------------------
 
-_PSI_ORACLE = f"""
-WITH ref AS (
-  SELECT o_totalprice AS x FROM orders WHERE year(o_orderdate) = 1995
-),
-cur AS (
-  SELECT o_totalprice AS x FROM orders WHERE year(o_orderdate) = 1997
-),
+
+def _decile_ranges(df: DataFrame) -> DataFrame:
+    """Ten bins ``(bin, lo, hi]`` cut at the exact deciles of ``df.x``
+    (`F.percentile` ↔ quantile_cont, identical fraction literals); bin
+    1 opens at -1e308 and bin 10 closes at 1e308. The bins come from a
+    fixed 1..10 spine, so all ten exist even when edges coincide, and
+    on empty `df` (NULL edges) no row falls in any of them."""
+    bs = df.agg(
+        F.percentile("x", F.array(*[F.lit(k / 10.0) for k in range(1, 10)])).alias(
+            "bs"
+        )
+    )
+    edges = F.concat(F.array(F.lit(-1e308)), F.col("bs"), F.array(F.lit(1e308)))
+    return bs.select(
+        F.explode(F.sequence(F.lit(1), F.lit(10))).alias("bin"), edges.alias("e")
+    ).select(
+        "bin",
+        F.element_at("e", F.col("bin")).alias("lo"),
+        F.element_at("e", F.col("bin") + 1).alias("hi"),
+    )
+
+
+def _binned(ranges: DataFrame, df: DataFrame, *aggs) -> DataFrame:
+    """`aggs` of the `df` rows in each of the `ranges` (a broadcast range
+    join), one row per bin 1..10, zero where a bin holds no row."""
+    counts = (
+        df.crossJoin(F.broadcast(ranges))
+        .filter((F.col("x") > F.col("lo")) & (F.col("x") <= F.col("hi")))
+        .groupBy("bin")
+        .agg(*aggs)
+    )
+    spine = df.sparkSession.range(1, 11).select(F.col("id").cast("int").alias("bin"))
+    return spine.join(F.broadcast(counts), "bin", "left").na.fill(0)
+
+
+def _decile_ranges_sql(rel: str) -> str:
+    """The oracle twin of `_decile_ranges`: the CTEs ``earr``, ``edges``
+    and ``ranges`` over ``{rel}.x``."""
+    return f"""
 earr AS (
   SELECT quantile_cont(x, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS bs
-  FROM ref
+  FROM {rel}
 ),
 edges AS (
   SELECT t.i, earr.bs[t.i] AS b
@@ -405,7 +437,19 @@ ranges AS (
   FROM edges
   UNION ALL
   SELECT 10, (SELECT b FROM edges WHERE i = 9), 1e308
+)"""
+
+
+# --- population stability index (PSI) ----------------------------------
+
+_PSI_ORACLE = f"""
+WITH ref AS (
+  SELECT o_totalprice AS x FROM orders WHERE year(o_orderdate) = 1995
 ),
+cur AS (
+  SELECT o_totalprice AS x FROM orders WHERE year(o_orderdate) = 1997
+),
+{_decile_ranges_sql("ref")},
 rc AS (
   SELECT r.bin,
          (SELECT count(*) FROM ref WHERE ref.x > r.lo AND ref.x <= r.hi)
@@ -471,33 +515,10 @@ def psi_drift_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = orders.filter(F.year("o_orderdate") == 1997).select(
         F.col("o_totalprice").alias("x")
     )
-    earr = ref.agg(
-        F.percentile(
-            "x", F.array(*[F.lit(k / 10.0) for k in range(1, 10)])
-        ).alias("bs")
+    ranges = _decile_ranges(ref)
+    rc = _binned(ranges, ref, F.count(F.lit(1)).alias("n_ref")).join(
+        _binned(ranges, cur, F.count(F.lit(1)).alias("n_cur")), "bin"
     )
-    edges = earr.select(F.posexplode("bs").alias("pos", "b")).select(
-        (F.col("pos") + 1).cast("int").alias("i"), "b"
-    )
-    wlag = Window.orderBy("i")
-    nine = edges.select("i", F.lag("b").over(wlag).alias("lo_raw"), F.col("b").alias("hi"))
-    ranges = nine.select(
-        F.col("i").alias("bin"),
-        F.coalesce("lo_raw", F.lit(-1e308)).alias("lo"),
-        "hi",
-    ).unionAll(
-        edges.filter(F.col("i") == 9).select(
-            F.lit(10).alias("bin"), F.col("b").alias("lo"), F.lit(1e308).alias("hi")
-        )
-    )
-    def binned(df, name):
-        return (
-            df.crossJoin(F.broadcast(ranges))
-            .filter((F.col("x") > F.col("lo")) & (F.col("x") <= F.col("hi")))
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-    rc = binned(ref, "n_ref").join(binned(cur, "n_cur"), "bin", "full")
     tots = ref.agg(F.count(F.lit(1)).alias("t_ref")).crossJoin(
         cur.agg(F.count(F.lit(1)).alias("t_cur"))
     )
@@ -507,8 +528,8 @@ def psi_drift_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         rc.crossJoin(F.broadcast(tots))
         .select(
             "bin",
-            F.coalesce("n_ref", F.lit(0)).cast("bigint").alias("n_ref"),
-            F.coalesce("n_cur", F.lit(0)).cast("bigint").alias("n_cur"),
+            "n_ref",
+            "n_cur",
             # re-quantize each term at 12dp through its shortest string
             # repr (the ipf_survey_raking device, ADVICE r10): ln()
             # differs by 1 ulp between libm implementations for
@@ -548,22 +569,7 @@ WITH pop AS (
               THEN 1 ELSE 0 END AS y
   FROM orders
 ),
-earr AS (
-  SELECT quantile_cont(x, [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS bs
-  FROM pop
-),
-edges AS (
-  SELECT t.i, earr.bs[t.i] AS b
-  FROM earr CROSS JOIN (VALUES (1),(2),(3),(4),(5),(6),(7),(8),(9)) t(i)
-),
-ranges AS (
-  SELECT i AS bin,
-         coalesce(lag(b) OVER (ORDER BY i), -1e308) AS lo,
-         b AS hi
-  FROM edges
-  UNION ALL
-  SELECT 10, (SELECT b FROM edges WHERE i = 9), 1e308
-),
+{_decile_ranges_sql("pop")},
 rc AS (
   SELECT r.bin,
          (SELECT count(*) FROM pop WHERE pop.x > r.lo AND pop.x <= r.hi
@@ -617,35 +623,11 @@ def woe_iv_price_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), F.lit(1)
         ).otherwise(F.lit(0)).alias("y"),
     )
-    earr = pop.agg(
-        F.percentile("x", F.array(*[F.lit(k / 10.0) for k in range(1, 10)])).alias(
-            "bs"
-        )
-    )
-    edges = earr.select(F.posexplode("bs").alias("pos", "b")).select(
-        (F.col("pos") + 1).cast("int").alias("i"), "b"
-    )
-    wlag = Window.orderBy("i")
-    nine = edges.select(
-        "i", F.lag("b").over(wlag).alias("lo_raw"), F.col("b").alias("hi")
-    )
-    ranges = nine.select(
-        F.col("i").alias("bin"),
-        F.coalesce("lo_raw", F.lit(-1e308)).alias("lo"),
-        "hi",
-    ).unionAll(
-        edges.filter(F.col("i") == 9).select(
-            F.lit(10).alias("bin"), F.col("b").alias("lo"), F.lit(1e308).alias("hi")
-        )
-    )
-    rc = (
-        pop.crossJoin(F.broadcast(ranges))
-        .filter((F.col("x") > F.col("lo")) & (F.col("x") <= F.col("hi")))
-        .groupBy("bin")
-        .agg(
-            F.sum("y").cast("bigint").alias("n_pos"),
-            F.sum(F.lit(1) - F.col("y")).cast("bigint").alias("n_neg"),
-        )
+    rc = _binned(
+        _decile_ranges(pop),
+        pop,
+        F.sum("y").cast("bigint").alias("n_pos"),
+        F.sum(F.lit(1) - F.col("y")).cast("bigint").alias("n_neg"),
     )
     tots = pop.agg(
         F.sum("y").alias("t_pos"), F.sum(F.lit(1) - F.col("y")).alias("t_neg")

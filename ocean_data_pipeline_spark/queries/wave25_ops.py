@@ -28,6 +28,12 @@ from ocean_data_pipeline_spark.operators.monthly import (
     year_month,
 )
 from ocean_data_pipeline_spark.operators.portable import vh
+from ocean_data_pipeline_spark.operators.ranks import (
+    cumulative,
+    cumulative_sql,
+    quantile,
+    quantile_sql,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- Ljung-Box portmanteau test on monthly revenue ---------------------
@@ -196,7 +202,7 @@ def jarque_bera_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Brown-Forsythe variance-homogeneity test ---------------------------
 
-_BF_ORACLE = """
+_BF_ORACLE = f"""
 WITH s AS (
   SELECT event_type, CAST(value AS DECIMAL(18,6)) AS v
   FROM events WHERE value IS NOT NULL
@@ -204,14 +210,9 @@ WITH s AS (
 lvl AS (  -- per-group value census for exact lower-median selection
   SELECT event_type, v, count(*) AS c FROM s GROUP BY event_type, v
 ),
-cum AS (
-  SELECT event_type, v, c,
-         sum(c) OVER (PARTITION BY event_type ORDER BY v) AS cw,
-         sum(c) OVER (PARTITION BY event_type) AS n_g
-  FROM lvl
-),
-med AS (  -- smallest level with 2*cum >= n: the exact lower median
-  SELECT event_type, min(CASE WHEN 2 * cw >= n_g THEN v END) AS med
+cum AS ({cumulative_sql("lvl", "v", "c", "event_type")}),
+med AS (
+  SELECT event_type, {quantile_sql("v", 1, 2)} AS med
   FROM cum GROUP BY event_type
 ),
 z AS (
@@ -258,10 +259,9 @@ def brown_forsythe_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     the median center making it robust to the heavy tails the
     Jarque-Bera test flags.
 
-    Determinism AND scale: each group's exact lower median comes from
-    the VALUE CENSUS cumulative-count selection (the
-    `weighted_median_price` discipline — smallest level with
-    2·cum ≥ n; windows run over distinct values per group, never rows);
+    Determinism AND scale: each group's exact lower median is the
+    value-census `quantile` of operators/ranks.py (smallest level with
+    2·cn ≥ n; windows run over distinct values per group, never rows);
     the ANOVA sums round ONCE into DECIMAL per reduction level.
 
     Plan shape: one value-census aggregate + per-group level windows →
@@ -273,23 +273,11 @@ def brown_forsythe_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select("event_type", F.col("value").cast("decimal(18,6)").alias("v"))
     )
-    from pyspark.sql import Window
-
     lvl = s.groupBy("event_type", "v").agg(F.count(F.lit(1)).alias("c"))
-    wo = (
-        Window.partitionBy("event_type")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wt = Window.partitionBy("event_type")
-    cum = lvl.select(
-        "event_type",
-        "v",
-        F.sum("c").over(wo).alias("cw"),
-        F.sum("c").over(wt).alias("n_g"),
-    )
-    med = cum.groupBy("event_type").agg(
-        F.min(F.when(2 * F.col("cw") >= F.col("n_g"), F.col("v"))).alias("med")
+    med = (
+        cumulative(lvl, "v", "c", "event_type")
+        .groupBy("event_type")
+        .agg(quantile("v", 1, 2).alias("med"))
     )
     z = s.join(F.broadcast(med), "event_type").select(
         "event_type",
@@ -417,16 +405,10 @@ WITH lv AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS pc, count(*) AS cnt
   FROM orders GROUP BY 1
 ),
-cum AS (
-  SELECT pc, cnt,
-         sum(cnt) OVER (ORDER BY pc) AS cn,
-         sum(cnt) OVER () AS n
-  FROM lv
-)
+cum AS ({cumulative_sql("lv", "pc", "cnt")})
 SELECT CAST(max(n) AS BIGINT) AS n_orders,
        {", ".join(
-           f"min(CASE WHEN 100 * cn >= {p} * n THEN pc END) / 100.0 AS p{p:02d}"
-           for p in _PCT_CUTS
+           f"{quantile_sql('pc', p, 100)} / 100.0 AS p{p:02d}" for p in _PCT_CUTS
        )}
 FROM cum
 """
@@ -442,13 +424,12 @@ def exact_percentile_cutpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     in pure integer cross-multiplication (100·cum ≥ p·n) — no division,
     no interpolation, no doubles before the display scaling.
 
-    Scale: the cumulative count rides the distributed running-sum
-    device (operators/ranks.py — boundary-bucketed K-way windows +
-    broadcast prefix offsets) over the localCheckpointed level census;
-    near-unique cents levels never sort in one task. One fact pass,
-    level-sized everything after."""
-    from ocean_data_pipeline_spark.operators.ranks import with_running_aggs
-
+    Scale: `cumulative` and `quantile` of operators/ranks.py; the
+    running count takes the distributed running-sum route
+    (boundary-bucketed K-way windows + broadcast prefix offsets) over
+    the localCheckpointed level census, so near-unique cents levels
+    never sort in one task. One fact pass, level-sized everything
+    after."""
     lv = (
         table(spark, sf_dir, "orders")
         .select(F.round(F.col("o_totalprice") * 100).cast("bigint").alias("pc"))
@@ -456,23 +437,12 @@ def exact_percentile_cutpoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()
     )
-    n_all = lv.agg(F.sum("cnt").alias("n"))
-    cum = (
-        # fixed-width coarsening: o_totalprice cents are value-domain
-        # bounded (~[9e4, 6e7]), so $1000 buckets give a few hundred
-        # census rows and a FULLY LAZY plan (no approxQuantile job).
-        with_running_aggs(
-            lv, ["pc"], "pc", {"cn": ("cnt", "sum", True)},
-            bucket_width=100_000.0,
-        )
-        .crossJoin(F.broadcast(n_all))
-    )
+    # fixed-width coarsening: o_totalprice cents are value-domain
+    # bounded (~[9e4, 6e7]), so $1000 buckets give a few hundred
+    # census rows and a FULLY LAZY plan (no approxQuantile job).
+    cum = cumulative(lv, "pc", "cnt", bucket_width=100_000.0)
     aggs = [F.max("n").cast("bigint").alias("n_orders")] + [
-        (
-            F.min(F.when(100 * F.col("cn") >= p * F.col("n"), F.col("pc")))
-            / 100.0
-        ).alias(f"p{p:02d}")
-        for p in _PCT_CUTS
+        (quantile("pc", p, 100) / 100.0).alias(f"p{p:02d}") for p in _PCT_CUTS
     ]
     return cum.agg(*aggs)
 

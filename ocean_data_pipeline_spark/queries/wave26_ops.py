@@ -18,6 +18,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ocean_data_pipeline_spark.catalog import register_views, table
+from ocean_data_pipeline_spark.operators.ranks import (
+    cumulative,
+    cumulative_sql,
+    quantile,
+    quantile_sql,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- open-order backlog at month ends -----------------------------------
@@ -281,24 +287,21 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- grouped exact percentile bands ----------------------------------------
 
-_BANDS_ORACLE = """
+_BANDS = (10, 50, 90)
+
+_BANDS_ORACLE = f"""
 WITH lv AS (
   SELECT o_orderpriority AS priority,
          CAST(round(o_totalprice * 100) AS BIGINT) AS pc,
          count(*) AS cnt
   FROM orders GROUP BY 1, 2
 ),
-cum AS (
-  SELECT priority, pc, cnt,
-         sum(cnt) OVER (PARTITION BY priority ORDER BY pc) AS cn,
-         sum(cnt) OVER (PARTITION BY priority) AS n
-  FROM lv
-)
+cum AS ({cumulative_sql("lv", "pc", "cnt", "priority")})
 SELECT priority,
        CAST(max(n) AS BIGINT) AS n_orders,
-       min(CASE WHEN 100 * cn >= 10 * n THEN pc END) / 100.0 AS p10,
-       min(CASE WHEN 100 * cn >= 50 * n THEN pc END) / 100.0 AS p50,
-       min(CASE WHEN 100 * cn >= 90 * n THEN pc END) / 100.0 AS p90
+       {", ".join(
+           f"{quantile_sql('pc', p, 100)} / 100.0 AS p{p}" for p in _BANDS
+       )}
 FROM cum GROUP BY priority ORDER BY priority
 """
 
@@ -308,8 +311,9 @@ def grouped_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact p10/p50/p90 order-value bands PER PRIORITY — the grouped
     sibling of `exact_percentile_cutpoints` (the per-slice SLA panel:
     "what does a typical vs tail order look like in each lane?").
-    Type-1 quantiles by pure integer rank selection (100·cum ≥ p·n)
-    over the per-group cents-level census.
+    Type-1 quantiles by pure integer rank selection (100·cn ≥ p·n,
+    `quantile` of operators/ranks.py) over the per-group cents-level
+    census.
 
     Plan shape: one map-side-combining shuffle to (priority, level)
     cells; cumulative windows partitioned BY PRIORITY over the level
@@ -324,32 +328,12 @@ def grouped_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("priority", "pc")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    wo = (
-        Window.partitionBy("priority")
-        .orderBy("pc")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wt = Window.partitionBy("priority")
-    cum = lv.select(
-        "priority",
-        "pc",
-        F.sum("cnt").over(wo).alias("cn"),
-        F.sum("cnt").over(wt).alias("n"),
-    )
-
-    def pick(p: int):
-        return (
-            F.min(F.when(100 * F.col("cn") >= p * F.col("n"), F.col("pc")))
-            / 100.0
-        ).alias(f"p{p}")
-
     return (
-        cum.groupBy("priority")
+        cumulative(lv, "pc", "cnt", "priority")
+        .groupBy("priority")
         .agg(
             F.max("n").cast("bigint").alias("n_orders"),
-            pick(10),
-            pick(50),
-            pick(90),
+            *[(quantile("pc", p, 100) / 100.0).alias(f"p{p}") for p in _BANDS],
         )
         .orderBy("priority")
     )

@@ -19,6 +19,12 @@ from ocean_data_pipeline_spark.operators.graph import (
     wedge_pair_census,
 )
 from ocean_data_pipeline_spark.operators.portable import vh
+from ocean_data_pipeline_spark.operators.ranks import (
+    cumulative,
+    cumulative_sql,
+    quantile,
+    quantile_sql,
+)
 from ocean_data_pipeline_spark.queries import register
 
 # --- RANGE frame: peak 30-day customer spend ---------------------------------
@@ -284,7 +290,7 @@ def user_interevent_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- one-row corpus datasheet ---------------------------------------------------
 
-_DATASHEET_ORACLE = """
+_DATASHEET_ORACLE = f"""
 WITH base AS (
   SELECT CAST(count(*) AS BIGINT) AS n_docs,
          CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
@@ -300,10 +306,8 @@ uniq AS (
 ),
 lv AS (SELECT n_chars AS v, count(*) AS c FROM documents GROUP BY n_chars),
 med AS (
-  SELECT min(CASE WHEN 2 * cw >= n THEN v END) AS median_chars
-  FROM (
-    SELECT v, sum(c) OVER (ORDER BY v) AS cw, sum(c) OVER () AS n FROM lv
-  )
+  SELECT {quantile_sql("v", 1, 2)} AS median_chars
+  FROM ({cumulative_sql("lv", "v", "c")})
 )
 SELECT b.n_docs, b.n_sources, b.n_langs, b.total_chars,
        CAST(m.median_chars AS BIGINT) AS median_chars,
@@ -320,7 +324,8 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel): document/source/language counts, total and exact-median
     characters, short-doc share, and the exact-duplicate rate — the
     first table in any dataset card, composed from the same primitives
-    the deep audits use (sha2 dedup, value-census median selection).
+    the deep audits use (sha2 dedup, the value-census `quantile` of
+    operators/ranks.py).
 
     Plan shape: three independent 1-row aggregates (base census, sha2
     distinct, level-census median) cross-joined as broadcast scalars.
@@ -343,20 +348,7 @@ def corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
     lv = docs.groupBy(F.col("n_chars").alias("v")).agg(
         F.count(F.lit(1)).alias("c")
     )
-    wo = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy()
-    med = (
-        lv.select(
-            "v",
-            F.sum("c").over(wo).alias("cw"),
-            F.sum("c").over(wt).alias("n"),
-        )
-        .agg(
-            F.min(F.when(2 * F.col("cw") >= F.col("n"), F.col("v"))).alias(
-                "median_chars"
-            )
-        )
-    )
+    med = cumulative(lv, "v", "c").agg(quantile("v", 1, 2).alias("median_chars"))
     return (
         base.crossJoin(F.broadcast(uniq))
         .crossJoin(F.broadcast(med))

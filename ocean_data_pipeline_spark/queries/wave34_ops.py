@@ -35,6 +35,7 @@ from ocean_data_pipeline_spark.operators.monthly import (
     year_month,
 )
 from ocean_data_pipeline_spark.operators.portable import hash_int, hash_int_sql
+from ocean_data_pipeline_spark.operators.ranks import cumulative, cumulative_sql, kth, kth_sql
 from ocean_data_pipeline_spark.queries import register
 
 # --- absorbing Markov chain: expected steps to conversion ---------------------
@@ -540,16 +541,12 @@ WITH daily AS (
 lv AS (
   SELECT demand, CAST(count(*) AS BIGINT) AS c FROM daily GROUP BY demand
 ),
-cum AS (
-  SELECT demand, sum(c) OVER (ORDER BY demand) AS cum,
-         (SELECT sum(c) FROM lv) AS n
-  FROM lv
-)
+cum AS ({cumulative_sql("lv", "demand", "c")})
 SELECT (SELECT CAST(count(*) AS BIGINT) FROM daily) AS n_days,
        round((SELECT CAST(sum(CAST(demand AS DECIMAL(19,0))) AS DOUBLE)
               / count(*) FROM daily), 4) AS mean_demand,
-       CAST(min(CASE WHEN cum >= ceil({_NV_CU} / ({_NV_CU} + {_NV_CO}) * n)
-                     THEN demand END) AS BIGINT) AS order_up_to_q90,
+       CAST({kth_sql("demand", f"ceil({_NV_CU} / ({_NV_CU} + {_NV_CO}) * n)")}
+            AS BIGINT) AS order_up_to_q90,
        round({_NV_CU} / ({_NV_CU} + {_NV_CO}), 4) AS critical_ratio
 FROM cum
 """
@@ -569,21 +566,15 @@ def newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal) ratio.
 
     Plan shape: one fact aggregate to the ≤2.5k-day census, a demand-
-    LEVEL census, one cumulative window over the value census (the
-    established value-census class — grows with the demand domain,
-    not rows)."""
+    LEVEL census, one cumulative window over the value census
+    (`cumulative` and `kth` of operators/ranks.py — grows with the
+    demand domain, not rows)."""
     daily = (
         table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").alias("d"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("demand"))
     )
     lv = daily.groupBy("demand").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    wc = Window.orderBy("demand").rowsBetween(Window.unboundedPreceding, 0)
-    cum = lv.select(
-        "demand",
-        F.sum("c").over(wc).alias("cum"),
-        F.sum("c").over(Window.partitionBy()).alias("n"),
-    )
     ratio = _NV_CU / (_NV_CU + _NV_CO)
     stats = daily.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_days"),
@@ -593,12 +584,8 @@ def newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("mean_demand"),
     )
-    q = cum.agg(
-        F.min(
-            F.when(
-                F.col("cum") >= F.ceil(F.lit(ratio) * F.col("n")), F.col("demand")
-            )
-        )
+    q = cumulative(lv, "demand", "c").agg(
+        kth("demand", F.ceil(F.lit(ratio) * F.col("n")))
         .cast("bigint")
         .alias("order_up_to_q90")
     )

@@ -38,6 +38,32 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def write_degenerate_tables(spark, out, kind, tables=None):
+    """Write degenerate copies of the smoke tables (`tables`, default all)
+    as ``<out>/<table>.parquet`` and return `out` as a string. `kind`:
+    ``empty`` (zero rows, schema kept), ``single_row`` (the first row)
+    or ``constant`` (fifty identical copies of the first row)."""
+    from ocean_data_pipeline_spark.catalog import TABLES
+
+    for t in tables or TABLES:
+        src = os.path.join(SF_SMOKE, f"{t}.parquet")
+        if not os.path.exists(src):
+            continue
+        df = spark.read.parquet(src)
+        dst = os.path.join(str(out), f"{t}.parquet")
+        if kind == "empty":
+            df.limit(0).write.mode("overwrite").parquet(dst)
+        elif kind == "single_row":
+            df.limit(1).write.mode("overwrite").parquet(dst)
+        else:
+            one = df.limit(1)
+            dup = one
+            for _ in range(49):
+                dup = dup.unionByName(one)
+            dup.coalesce(1).write.mode("overwrite").parquet(dst)
+    return str(out)
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("tests")

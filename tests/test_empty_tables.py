@@ -15,17 +15,14 @@ batch-side expressions already covered by the batch twins.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
-from ocean_data_pipeline_spark.catalog import TABLES
 from ocean_data_pipeline_spark.queries import load_all
 
 # Full-registry sweep (~10 min): builder-cadence layer, skipped in the
 # driver-budget default run (see conftest; SPARK_GRAFT_FULL_TESTS=1).
 pytestmark = pytest.mark.slow
-from tests.conftest import SF_SMOKE
+from tests.conftest import write_degenerate_tables
 
 REGISTRY = load_all()
 
@@ -35,14 +32,7 @@ _STREAMING = {n for n in REGISTRY if n.startswith("stream_")}
 
 @pytest.fixture(scope="module")
 def empty_sf_dir(spark, tmp_path_factory):
-    out = tmp_path_factory.mktemp("sf_empty")
-    for t in TABLES:
-        src = os.path.join(SF_SMOKE, f"{t}.parquet")
-        if not os.path.exists(src):
-            continue
-        df = spark.read.parquet(src)
-        df.limit(0).write.mode("overwrite").parquet(str(out / f"{t}.parquet"))
-    return str(out)
+    return write_degenerate_tables(spark, tmp_path_factory.mktemp("sf_empty"), "empty")
 
 
 @pytest.mark.parametrize(
@@ -58,14 +48,7 @@ def single_row_sf_dir(spark, tmp_path_factory):
     """One-row copies of every table — the n=1 degenerate class
     (N−1 denominators, single-partition windows, self-joins with no
     second row)."""
-    out = tmp_path_factory.mktemp("sf_one")
-    for t in TABLES:
-        src = os.path.join(SF_SMOKE, f"{t}.parquet")
-        if not os.path.exists(src):
-            continue
-        df = spark.read.parquet(src)
-        df.limit(1).write.mode("overwrite").parquet(str(out / f"{t}.parquet"))
-    return str(out)
+    return write_degenerate_tables(spark, tmp_path_factory.mktemp("sf_one"), "single_row")
 
 
 @pytest.mark.parametrize(
@@ -81,17 +64,7 @@ def constant_sf_dir(spark, tmp_path_factory):
     """Fifty identical copies of each table's first row — the
     zero-variance / hot-key degenerate class (stddev 0 denominators,
     single-value distributions, every join key colliding)."""
-    out = tmp_path_factory.mktemp("sf_const")
-    for t in TABLES:
-        src = os.path.join(SF_SMOKE, f"{t}.parquet")
-        if not os.path.exists(src):
-            continue
-        one = spark.read.parquet(src).limit(1)
-        dup = one
-        for _ in range(49):
-            dup = dup.unionByName(one)
-        dup.coalesce(1).write.mode("overwrite").parquet(str(out / f"{t}.parquet"))
-    return str(out)
+    return write_degenerate_tables(spark, tmp_path_factory.mktemp("sf_const"), "constant")
 
 
 @pytest.mark.parametrize(

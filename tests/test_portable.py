@@ -166,7 +166,9 @@ def test_vd_matches_spark_where_duckdb_direct_cast_is_off(spark):
 #: cosine quotient (the oracle's and the engine's inline norm) in
 #: `similarity.py`, whose `cosine`, `cosine_pre`, `norm` and SQL twins
 #: everything else calls; the 30-minute session gap and the hours to
-#: first purchase in `events.py`.
+#: first purchase in `events.py`; the value-census selections (kth,
+#: quantile) and the doubled midrank, engine and SQL spellings, in
+#: `ranks.py`.
 _DEVICES = {
     "portable": (
         os.path.join("operators", "portable.py"),
@@ -183,6 +185,21 @@ _DEVICES = {
             "30 * 60",
             "date_diff('microsecond', u.t0, p.tp)",
             'unix_micros("tp")',
+        ),
+    ),
+    "ranks": (
+        os.path.join("operators", "ranks.py"),
+        (
+            'F.when(F.col("cn") >=',
+            '* F.col("cn") >=',
+            '* F.col("cw") >=',
+            '* F.col("ck") >=',
+            "CASE WHEN cn >=",
+            "* cn >=",
+            "2 * cw >=",
+            "* ck >=",
+            "2 * F.coalesce(F.sum(",
+            "2 * (sum(",
         ),
     ),
 }

@@ -89,6 +89,20 @@ def test_plan_snapshots_name_registered_queries(registry):
     assert not orphans, f"plan snapshots without a registered query: {orphans}"
 
 
+def test_every_snapshot_able_query_has_a_snapshot(registry):
+    """Every registered query outside `tools/plan_snapshot.SKIP` has its
+    ``plans/<name>.txt``, so its plan is reviewed in the diff."""
+    from tools.plan_snapshot import SKIP
+
+    plans = os.path.join(REPO, "plans")
+    missing = sorted(
+        n
+        for n in registry
+        if n not in SKIP and not os.path.exists(os.path.join(plans, f"{n}.txt"))
+    )
+    assert not missing, f"registered queries without a plan snapshot: {missing}"
+
+
 def test_registry_names_unique_and_callable(registry):
     assert len(registry) == len(set(registry))
     for name, rq in registry.items():
