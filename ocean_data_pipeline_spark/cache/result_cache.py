@@ -5,19 +5,27 @@ The reference caches query results in SQLite keyed by a SHA-256 of
 normalized parameters, with 24 h TTL, a 100 MB admission guard, upsert
 (INSERT OR REPLACE), expired-row cleanup, stats aggregates, and a
 nearby-coordinates range lookup (cache_manager.py:34-337). Here the
-cache is an ordinary parquet table. A point read is served on the
-driver; every other operation is a DataFrame transformation:
+cache is an ordinary parquet table. Reads are served on the driver:
+one pyarrow reader (`_scan`) reads the manifest's current bucket
+directories, and the result becomes a local relation, so no read
+starts a Spark job:
 
-- get      = one bucket file read with pyarrow on the driver, wrapped as
-             a local relation, TTL-filtered there (no Spark job)
+- get      = the key's one bucket, key filter pushed into the scan;
+             the TTL test is a Spark filter Catalyst folds into the rows
+- stats    = the six aggregates over three columns, in pyarrow.compute
+- nearby   = the radius test as a batch-wise scan filter, sorted by
+             (l1, query_hash); TTL and distance columns stay Spark
+             expressions, folded the same way
+- cleanup  = its per-bucket census (rows, expired rows)
+
+Writes are Spark jobs:
+
 - upsert   = one observed `noop` write that persists the batch and
              returns its buckets, then unionByName + keep-latest window
              dedup + atomic bucket swap
-- cleanup  = per-bucket census (rows, expired rows) in one aggregate,
-             then a liveness-filter rewrite of only the buckets that
-             hold expired rows
-- stats    = conditional aggregates
-- nearby   = bounded-radius θ-join (operators.joins.nearby_join)
+- cleanup  = a liveness-filter rewrite of only the buckets that hold
+             both expired rows and survivors; the other buckets are
+             dropped or hard-linked
 
 Storage layout — versioned buckets behind a manifest (a minimal
 commit log, the pattern Delta/Iceberg generalize):
@@ -41,10 +49,13 @@ parquet analog of the reference's B-tree index on query_hash,
 cache_manager.py:51-53). Cleanup hard-links the untouched buckets'
 files into its new version directory (no byte rewritten), so the
 version directories that puts accumulate collapse back into one.
+The whole-table reads (stats, nearby, the census) scan every live
+bucket on the driver, but only the columns they use, and nearby keeps
+only its matches.
 
 Deployment contract: `path` must be a LOCAL filesystem path — the
 manifest flip (os.replace), vacuum (os.listdir/shutil.rmtree),
-cleanup's relink (os.link) and get's driver-side read are local-FS
+cleanup's relink (os.link) and the driver-side reads are local-FS
 operations. On an object store or HDFS, use a real table format with a
 commit log (Delta/Iceberg) instead; this class is the single-node/NFS
 twin of that design.
@@ -52,7 +63,6 @@ twin of that design.
 
 from __future__ import annotations
 
-import datetime as dt
 import functools
 import json
 import os
@@ -60,7 +70,8 @@ import shutil
 from dataclasses import dataclass
 
 import pyarrow as pa
-import pyarrow.parquet as pq
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -82,6 +93,19 @@ CACHE_SCHEMA = (
     "expires_at timestamp, file_size_bytes long"
 )
 
+#: stats(): the types of Spark's aggregates (a count is never NULL).
+STATS_SCHEMA = (
+    "total_entries long not null, active_entries long not null, "
+    "expired_entries long not null, total_bytes long, "
+    "oldest_fetch timestamp, newest_fetch timestamp"
+)
+
+#: Spark writes timestamps as INT96; read them as microseconds, since
+#: nanoseconds overflow past 2262.
+_PARQUET = pads.ParquetFileFormat(
+    read_options=pads.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
+
 
 @dataclass
 class ResultCache:
@@ -94,6 +118,10 @@ class ResultCache:
     def _arrow_schema(self) -> pa.Schema:
         """CACHE_SCHEMA as Arrow; the DDL parse is a JVM call, so once."""
         return to_arrow_schema(StructType.fromDDL(CACHE_SCHEMA))
+
+    @functools.cached_property
+    def _stats_schema(self) -> pa.Schema:
+        return to_arrow_schema(StructType.fromDDL(STATS_SCHEMA))
 
     def _empty(self) -> DataFrame:
         """Zero-row cache frame built from an empty Arrow table: a local
@@ -152,20 +180,58 @@ class ResultCache:
                 if sub.startswith("key_bucket=") and (d, sub) not in live:
                     shutil.rmtree(os.path.join(vdir, sub), ignore_errors=True)
 
-    def _read_buckets(self, manifest: dict[str, str], buckets) -> DataFrame:
-        """Scan exactly the requested buckets' current directories.
-
-        The bucket id is directory metadata, not a data column, so no
-        partition-column drop is needed; the explicit schema keeps the
-        scan footer-merge-free."""
-        dirs = [
+    def _dirs(self, manifest: dict[str, str], buckets) -> list[str]:
+        """The requested buckets' current directories (absent ones skipped)."""
+        return [
             os.path.join(self.path, manifest[b], f"key_bucket={b}")
             for b in sorted(set(buckets))
             if b in manifest
         ]
+
+    def _read_buckets(self, manifest: dict[str, str], buckets) -> DataFrame:
+        """Spark scan of exactly the requested buckets' current directories.
+
+        The bucket id is directory metadata, not a data column, so no
+        partition-column drop is needed; the explicit schema keeps the
+        scan footer-merge-free."""
+        dirs = self._dirs(manifest, buckets)
         if not dirs:
             return self._empty()
         return self.spark.read.schema(CACHE_SCHEMA).parquet(*dirs)
+
+    def _scan(
+        self, manifest: dict[str, str], buckets, columns, where: pc.Expression | None = None
+    ) -> pa.Table:
+        """Driver-side read of `columns` from the buckets' current files,
+        keeping the rows that pass `where`. The filter is applied batch
+        by batch, so only matches accumulate. Hidden files (`.crc`,
+        `_SUCCESS`) are skipped, as Spark skips them.
+
+        The INT96 timestamps come back as naive microsecond UTC instants
+        and are cast to the schema's UTC type, which keeps their instant
+        under any session time zone."""
+        schema = pa.schema([self._arrow_schema.field(c) for c in columns])
+        files = [
+            os.path.join(d, name)
+            for d in self._dirs(manifest, buckets)
+            for name in sorted(os.listdir(d))
+            if not name.startswith((".", "_"))
+        ]
+        if not files:
+            return schema.empty_table()
+        return pads.dataset(files, format=_PARQUET).to_table(columns, filter=where).cast(schema)
+
+    def _micros(self, now: F.Column) -> int | None:
+        """`now` as UTC microseconds (None for NULL), evaluated once. The
+        select over a one-row local relation is folded by Catalyst, so
+        it starts no Spark job."""
+        one = self.spark.createDataFrame(pa.table({"one": [1]}))
+        return one.select(F.unix_micros(now)).collect()[0][0]
+
+    def _alive(self, expires_at: pa.ChunkedArray, now: int | None) -> pa.ChunkedArray:
+        """`expires_at > now`, with a NULL on either side not live."""
+        now = pa.scalar(now, self._arrow_schema.field("expires_at").type)
+        return pc.fill_null(pc.greater(expires_at, now), False)
 
     # -- read path -----------------------------------------------------
 
@@ -174,11 +240,6 @@ class ResultCache:
         if not manifest:
             return self._empty()
         return self._read_buckets(manifest, manifest.keys())
-
-    def live(self, now: F.Column | None = None) -> DataFrame:
-        """TTL liveness view (expires_at > now); cache_manager.py:94-95."""
-        now = F.current_timestamp() if now is None else now
-        return self.read().filter(F.col("expires_at") > now)
 
     def get(self, query_hash: str, now: F.Column | None = None) -> DataFrame:
         """Point lookup by key, served on the driver: the manifest names
@@ -190,36 +251,49 @@ class ResultCache:
         collect() starts no Spark job.
 
         The frame is an eager snapshot: a later put or cleanup that
-        vacuums the bucket's directory does not change what it returns.
-
-        Spark writes the timestamps as INT96; they are read as naive
-        microsecond UTC instants (nanoseconds would overflow past 2262)
-        and cast to the schema's UTC type, which keeps their instant
-        under any session time zone."""
+        vacuums the bucket's directory does not change what it returns
+        (the same holds for nearby and stats)."""
         now = F.current_timestamp() if now is None else now
-        bucket = query_hash[:2]
-        manifest = self._read_manifest()
-        schema = self._arrow_schema
-        if bucket in manifest:
-            rows = pq.read_table(
-                os.path.join(self.path, manifest[bucket], f"key_bucket={bucket}"),
-                columns=schema.names,
-                filters=[("query_hash", "=", query_hash)],
-                coerce_int96_timestamp_unit="us",
-            ).cast(schema)
-        else:
-            rows = schema.empty_table()
+        rows = self._scan(
+            self._read_manifest(),
+            [query_hash[:2]],
+            self._arrow_schema.names,
+            pc.field("query_hash") == query_hash,
+        )
         return self.spark.createDataFrame(rows).filter(F.col("expires_at") > now)
 
     def nearby(
         self, lat: float, lon: float, radius: float, now: F.Column | None = None
     ) -> DataFrame:
-        """Range lookup ordered nearest-first (cache_manager.py:295-337)."""
-        live = self.live(now)
+        """Live entries within `radius` on both axes, ordered nearest-first
+        by (l1_distance, query_hash) (cache_manager.py:295-337).
+
+        The radius test `abs(lat - x) < r AND abs(lon - y) < r` is the
+        driver-side scan filter, and the matches are sorted there by the
+        same l1 sum. The TTL filter and the distance columns are Spark
+        expressions over the local relation, folded by Catalyst, so no
+        job runs. IEEE subtraction, abs and + give the same bits on both
+        sides, so the driver's order is the order of l1_distance."""
+        now = F.current_timestamp() if now is None else now
+        a_lat = pc.abs(pc.subtract(pc.field("latitude"), lat))
+        a_lon = pc.abs(pc.subtract(pc.field("longitude"), lon))
+        manifest = self._read_manifest()
+        rows = self._scan(
+            manifest, manifest, self._arrow_schema.names, (a_lat < radius) & (a_lon < radius)
+        )
+        l1 = pc.add(
+            pc.abs(pc.subtract(rows["latitude"], lat)),
+            pc.abs(pc.subtract(rows["longitude"], lon)),
+        )
+        order = pc.sort_indices(
+            rows.append_column("l1", l1),
+            [("l1", "ascending"), ("query_hash", "ascending")],
+        )
         d_lat = F.abs(F.col("latitude") - F.lit(lat))
         d_lon = F.abs(F.col("longitude") - F.lit(lon))
         return (
-            live.filter((d_lat < radius) & (d_lon < radius))
+            self.spark.createDataFrame(rows.take(order))
+            .filter(F.col("expires_at") > now)
             .withColumn("l1_distance", d_lat + d_lon)
             .withColumn(
                 "l2_distance",
@@ -228,7 +302,6 @@ class ResultCache:
                     + F.pow(F.col("longitude") - F.lit(lon), 2)
                 ),
             )
-            .orderBy("l1_distance", "query_hash")
         )
 
     # -- write path ----------------------------------------------------
@@ -299,42 +372,35 @@ class ResultCache:
         """Drop expired rows; returns number removed
         (cache_manager.py:179-196).
 
-        One census aggregate counts rows and expired rows per bucket. A
-        row is expired unless `expires_at > now` holds, so a NULL
-        expires_at counts as expired. Only buckets holding expired rows
-        are rewritten: their survivors are written once into a fresh
-        version, a bucket with no survivors leaves the manifest, and the
-        other buckets are hard-linked into the same version, so the
-        table ends in one version directory. Then the same manifest flip
-        and vacuum as put. `now` defaults to the wall clock, pinned once
-        so the census and the rewrite agree."""
-        if now is None:
-            now = F.lit(dt.datetime.now(dt.timezone.utc))
+        The census of expired and live rows per bucket is read on the
+        driver. A row is expired unless `expires_at > now` holds, so a
+        NULL expires_at counts as expired. Only buckets holding expired
+        rows change: the survivors of such buckets are written once into
+        a fresh version (the one Spark job), a bucket with none leaves
+        the manifest, and the other buckets are hard-linked into the
+        same version, so the table ends in one version directory.
+        Then the same manifest flip and vacuum as put. `now` (default:
+        the current time) is pinned once to an instant, so the census
+        and the rewrite agree."""
         manifest = self._read_manifest()
         if not manifest:
             return 0
-        live = F.coalesce(F.col("expires_at") > now, F.lit(False))
-        census = (
-            self._read_buckets(manifest, manifest.keys())
-            .groupBy(F.substring("query_hash", 1, 2).alias("b"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.count(F.when(~live, F.lit(1))).alias("expired"),
-            )
-            .filter(F.col("expired") > 0)
-            .collect()
-        )
-        if not census and len(set(manifest.values())) == 1:
+        now_us = self._micros(F.current_timestamp() if now is None else now)
+        rows = self._scan(manifest, manifest, ["query_hash", "expires_at"])
+        alive = self._alive(rows["expires_at"], now_us)
+        bucket = pc.utf8_slice_codeunits(rows["query_hash"], 0, 2)
+        dirty = set(pc.unique(bucket.filter(pc.invert(alive))).to_pylist())
+        if not dirty and len(set(manifest.values())) == 1:
             return 0
-        dirty = {r["b"] for r in census}
-        survivors = [r["b"] for r in census if r["rows"] > r["expired"]]
+        survivors = sorted(dirty & set(pc.unique(bucket.filter(alive)).to_pylist()))
         clean = [b for b in manifest if b not in dirty]
         version = self._next_version()
         if survivors:
+            live = F.col("expires_at") > F.timestamp_micros(F.lit(now_us))
             self._write(self._read_buckets(manifest, survivors).filter(live), version)
         self._link(manifest, clean, version)
         self._commit({b: version for b in survivors + clean})
-        return sum(r["expired"] for r in census)
+        return rows.num_rows - pc.sum(alive, min_count=0).as_py()
 
     def clear(self) -> None:
         """Full clear (cache_manager.py:283-293): empty manifest flip,
@@ -344,15 +410,21 @@ class ResultCache:
 
     def stats(self, now: F.Column | None = None) -> DataFrame:
         """Cache stats: total/active/expired counts, bytes, age extremes
-        (cache_manager.py:199-227) — one conditional-aggregate pass."""
-        now = F.current_timestamp() if now is None else now
-        df = self.read()
-        active = F.when(F.col("expires_at") > now, F.lit(1))
-        return df.agg(
-            F.count(F.lit(1)).alias("total_entries"),
-            F.count(active).alias("active_entries"),
-            (F.count(F.lit(1)) - F.count(active)).alias("expired_entries"),
-            F.sum("file_size_bytes").alias("total_bytes"),
-            F.min("fetched_at").alias("oldest_fetch"),
-            F.max("fetched_at").alias("newest_fetch"),
-        )
+        (cache_manager.py:199-227), as a one-row local relation. The
+        aggregates run in pyarrow.compute over three columns read on the
+        driver; bytes and ages are NULL on an empty cache, as Spark's
+        sum, min and max are."""
+        now_us = self._micros(F.current_timestamp() if now is None else now)
+        manifest = self._read_manifest()
+        rows = self._scan(manifest, manifest, ["expires_at", "fetched_at", "file_size_bytes"])
+        active = pc.sum(self._alive(rows["expires_at"], now_us), min_count=0).as_py()
+        fetched = pc.min_max(rows["fetched_at"]).as_py()
+        row = {
+            "total_entries": rows.num_rows,
+            "active_entries": active,
+            "expired_entries": rows.num_rows - active,
+            "total_bytes": pc.sum(rows["file_size_bytes"]).as_py(),
+            "oldest_fetch": fetched["min"],
+            "newest_fetch": fetched["max"],
+        }
+        return self.spark.createDataFrame(pa.Table.from_pylist([row], self._stats_schema))

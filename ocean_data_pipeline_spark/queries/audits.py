@@ -573,13 +573,14 @@ def mannwhitney_u_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mid2 = lvl.select("a_here", "c", midrank2("v", "c").alias("mid2"))
     agg = mid2.agg(
-        F.sum("a_here").cast("bigint").alias("n_a"),
-        (F.sum("c") - F.sum("a_here")).cast("bigint").alias("n_b"),
+        F.coalesce(F.sum("a_here"), F.lit(0)).cast("bigint").alias("n_a"),
+        F.coalesce(F.sum("c") - F.sum("a_here"), F.lit(0)).cast("bigint").alias("n_b"),
         F.sum(F.col("a_here").cast("decimal(20,0)") * F.col("mid2"))
         .cast("decimal(38,0)")
         .alias("rs2"),
     )
-    rank_sum_a = F.col("rs2").cast("double") / 2
+    # with no 'a' row the rank sum is the oracle's sum over no rows: NULL
+    rank_sum_a = F.when(F.col("n_a") > 0, F.col("rs2").cast("double") / 2)
     u_a = rank_sum_a - F.col("n_a") * (F.col("n_a") + 1.0) / 2
     return agg.select(
         "n_a",

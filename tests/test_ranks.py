@@ -353,26 +353,7 @@ def degenerate_sf_dir(request, spark, tmp_path_factory):
     )
 
 
-#: known disagreements outside the device, kept as strict xfails so a
-#: fix shows up as XPASS
-_OPEN = {
-    "mannwhitney_u_event_values": (
-        "the engine sums the census: n_a/n_b are NULL on empty input, and"
-        " with no 'click' row the rank sum is 0, where the oracle reports"
-        " counts of 0 and a NULL rank sum"
-    ),
-}
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
-        pytest.param(n, marks=pytest.mark.xfail(strict=True, reason=_OPEN[n]))
-        if n in _OPEN
-        else n
-        for n in _TOUCHED
-    ],
-)
+@pytest.mark.parametrize("name", _TOUCHED)
 def test_callers_match_their_oracle_on_degenerate_tables(spark, degenerate_sf_dir, name):
     """Empty, one-row and constant tables (built as in
     tests/test_empty_tables.py): each query equals its oracle."""
